@@ -46,12 +46,9 @@ SEED = 100
 SS_ROWS = 200_000
 CS_ROWS = 120_000
 WS_ROWS = 120_000
-BIG_ROWS = 1_200_000
 INV_ITEMS = 2_000
 
-# Fact tables whose generated row count scales with SF. "big" variants
-# are the composite queries' (q64-family) heavier facts, exported
-# lazily because few oracles need them.
+# Fact tables whose generated row count scales with SF.
 CORE_TABLES = (
     "call_center",
     "catalog_page",
@@ -78,12 +75,6 @@ CORE_TABLES = (
     "web_sales",
     "web_site",
 )
-BIG_TABLES = (
-    "catalog_sales_big",
-    "catalog_returns_big",
-    "web_sales_big",
-    "web_returns_big",
-)
 
 
 def scale_for(sf_dir: str) -> int:
@@ -100,11 +91,9 @@ def scale_for(sf_dir: str) -> int:
     return 1
 
 
-def warehouse_tables(
-    spark: SparkSession, scale: int = 1, big: bool = False
-) -> dict[str, DataFrame]:
-    """The canonical 24-table generated warehouse at a fact scale (plus
-    the 4 `_big` facts when ``big``). Single source of truth for sizes:
+def warehouse_tables(spark: SparkSession, scale: int = 1) -> dict[str, DataFrame]:
+    """The canonical 24-table generated warehouse at a fact scale.
+    Single source of truth for sizes:
     the query tier, the SQL-text stress views, and the oracle export
     all build from here."""
     from lakehouse_dba_tools_spark.datagen.generator import gen_store_sales
@@ -136,7 +125,7 @@ def warehouse_tables(
         gen_web_site,
     )
 
-    t = {
+    return {
         "call_center": gen_call_center(spark),
         "catalog_page": gen_catalog_page(spark),
         "catalog_returns": gen_catalog_returns(spark, CS_ROWS * scale, seed=SEED),
@@ -164,12 +153,6 @@ def warehouse_tables(
         "web_sales": gen_web_sales(spark, WS_ROWS * scale, seed=SEED),
         "web_site": gen_web_site(spark),
     }
-    if big:
-        t["catalog_sales_big"] = gen_catalog_sales(spark, BIG_ROWS * scale, seed=SEED)
-        t["catalog_returns_big"] = gen_catalog_returns(spark, BIG_ROWS * scale, seed=SEED)
-        t["web_sales_big"] = gen_web_sales(spark, BIG_ROWS * scale, seed=SEED)
-        t["web_returns_big"] = gen_web_returns(spark, BIG_ROWS * scale, seed=SEED)
-    return t
 
 
 def warehouse_dir(scale: int = 1) -> str:
@@ -225,13 +208,11 @@ def _export(
         warehouse_dir(scale),
         marker,
         names,
-        lambda: warehouse_tables(
-            spark, scale=scale, big=any(n in BIG_TABLES for n in names)
-        ),
+        lambda: warehouse_tables(spark, scale=scale),
     )
 
 
-def ensure_export(spark: SparkSession, scale: int = 1, big: bool = False) -> str:
+def ensure_export(spark: SparkSession, scale: int = 1) -> str:
     """Write the warehouse at ``scale`` to parquet if not already on
     disk; returns the export root. Cheap after the first call (one
     marker stat). Scale 1 is the oracle's gate twin; larger scales
@@ -239,14 +220,12 @@ def ensure_export(spark: SparkSession, scale: int = 1, big: bool = False) -> str
     gives the corpus real scan pushdown instead of re-running
     generator projections per query."""
     _export(spark, CORE_TABLES, "_EXPORT_OK", scale=scale)
-    if big:
-        _export(spark, BIG_TABLES, "_EXPORT_OK_BIG", scale=scale)
     return warehouse_dir(scale)
 
 
-def ensure_gate_export(spark: SparkSession, big: bool = False) -> str:
+def ensure_gate_export(spark: SparkSession) -> str:
     """Gate-scale (sc1) export — the oracle's view of the warehouse."""
-    return ensure_export(spark, scale=1, big=big)
+    return ensure_export(spark, scale=1)
 
 
 def rp(table: str) -> str:

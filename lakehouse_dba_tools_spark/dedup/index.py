@@ -373,7 +373,15 @@ def ingest_batch(
     the INDEX can never resurrect — but the already-signed pair
     report reflects the batch as of signing; callers that persist
     pair reports re-scrub them on their own forget cadence like any
-    other derived table (`operators/forget.py cascade_delete`)."""
+    other derived table (`operators/forget.py cascade_delete`).
+
+    Failure contract: the pair collect runs concurrently with the
+    append, so a call that raises may already have appended the batch
+    to the index. Do not treat the exception as "nothing happened";
+    the safe recovery is to call ``ingest_batch`` again with the SAME
+    batch. The retry excludes the batch's own ids from its pairs (the
+    replay idempotence above), and the duplicate rows fold away at
+    compaction."""
     bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME, path)
     docs = filter_ledgered(docs, path, m["id_col"])
     bk, sh, pinned = _index_rows(

@@ -1,35 +1,40 @@
-"""TPC-DS query tier — the reference's benchmark corpus, Spark-first.
+"""TPC-DS query tier: the official v2.13 texts through ``spark.sql``,
+plus five checked DataFrame composites.
 
-The reference's whole stress harness exists to run the 99 TPC-DS v2.13
-queries against dsdgen-built warehouses
+The reference's stress harness runs the 99 TPC-DS v2.13 queries
+against dsdgen-built warehouses
 (`evaluation_tools/dbstress__Current.py:93-103` loads
-`queries/tpcds_2.13/*.sql`; job params at `:7-15` point it at
-`tpcds_sf100`/`sf1000` databases). This module implements the
-highest-frequency TPC-DS query *shapes* over the Spark-native
-generators in ``datagen/tpcds.py`` (full spec schemas, deterministic by
-construction): the q3/q42/q52/q55 date×item brand/category rollup
-family, the q7 demographics star, the q65 store-item vs store-average
-nested aggregation, and the q98 within-class revenue-ratio window.
+`queries/tpcds_2.13/*.sql`). This module registers nine queries:
 
-Scale design (the 100 TB story):
-- store_sales is the only SF-scaling side; it is never broadcast and
-  every query reduces it with one hash-aggregate after dim filters.
-- date_dim (1826 rows), store (8), promotion (300) are fixed-size dims
-  — AQE/Catalyst broadcasts them from size estimates; no forced
-  ``F.broadcast`` on item (18k at sf1 but SF-scaling per spec, like
-  customer/part in TPC-H) or customer_demographics (1.92M rows fixed
-  but wide enough that the optimizer should decide).
-- Filters land before joins so partition pruning on ss_sold_date_sk
-  (the spec partition key, schemas.TPCDS_PARTITION_KEYS) applies when
-  the fact is a partitioned table rather than a generator.
+- Official texts (``workload/tpcds_corpus.py``; 27 in ``CORPUS`` plus
+  72 in ``CORPUS_EXT``) run through Spark's SQL front end over the
+  24-table warehouse exported as parquet and registered as views:
+  ``tpcds_sqltext_stress`` (the 27 texts through the parallel
+  workload harness), ``tpcds_sqltext_extended`` (the 72 extended
+  texts, once each) and ``tpcds_sqltext_extended_checked`` (a
+  five-text slice of the extended corpus in the checked set). Each
+  oracle is DuckDB executing the same texts over the same export and
+  pinning per-text row counts.
+- Five DataFrame composites keep the checked DataFrame-API coverage of
+  the harder TPC-DS shapes: q7 (demographics star), q16 (EXISTS /
+  NOT EXISTS as semi/anti joins), q4 (three-channel year-over-year
+  growth), q51 (cumulative-window crossover over a full outer join)
+  and q67 (rank over a ROLLUP). Each oracle is DuckDB executing
+  adapted TPC-DS SQL over the exported gate warehouse.
+- ``tpcds_warehouse_build_audit`` writes the 24-table warehouse,
+  reads it back and reports per-table row counts; DuckDB recounts
+  the same files.
 
-Oracles: generated data has no DuckDB-readable twin, so each oracle
-PINS the seed-100 results as VALUES — the generators are pure
-functions of (seed, row id), aggregation stays in exact decimal
-arithmetic until a final round-and-cast, and every ORDER BY carries a
-unique tiebreak key, so the pinned rows are run- and
-partitioning-invariant (pinned across partition counts in
-tests/test_tpcds.py, same argument as `datagen_lineitem_rollup`).
+Scale design:
+- The fact tables are the only SF-scaling sides; they are never
+  broadcast, and every composite reduces each fact with one
+  hash-aggregate after its dimension filters.
+- date_dim, store and promotion are fixed-size dims that AQE/Catalyst
+  broadcast from size estimates; item and customer_demographics are
+  left to the optimizer (no forced ``F.broadcast``).
+- At the gate (sf0.01) ``scale_for`` is 1 and the generators equal the
+  parquet export byte-for-byte, so the composites' oracles see the
+  same rows as the engine.
 """
 
 from __future__ import annotations
@@ -40,20 +45,27 @@ from pyspark.sql import functions as F
 from lakehouse_dba_tools_spark.datagen.generator import gen_store_sales
 from lakehouse_dba_tools_spark.datagen.tpcds import (
     gen_customer_demographics,
+    gen_customer_ds,
     gen_date_dim,
     gen_item,
     gen_promotion,
     gen_store,
 )
+from lakehouse_dba_tools_spark.datagen.tpcds_channels import (
+    gen_catalog_returns,
+    gen_catalog_sales,
+    gen_web_sales,
+)
 from lakehouse_dba_tools_spark.registry import register
 from lakehouse_dba_tools_spark.session import scoped_confs
 
-# Gate fact size: big enough that every group in the checked rollups
-# is multi-row, small enough for the sf0.01 gate. Bench at sf0.1 runs
-# 10× via scale_for(sf_dir) (round-5 directive: the tier's BENCH cost
-# must grow with SF); pins and oracles stay at the gate, where scale
-# is 1 and generator output equals the parquet export byte-for-byte.
+# Gate fact sizes: big enough that every group in the checked
+# composites is multi-row, small enough for the sf0.01 gate. Larger
+# fixtures scale them via scale_for(sf_dir); datagen/export.py writes
+# the gate warehouse with the same sizes.
 SS_ROWS = 200_000
+CS_ROWS = 120_000
+WS_ROWS = 120_000
 
 
 def _sf_scale(sf_dir: str) -> int:
@@ -64,10 +76,6 @@ def _sf_scale(sf_dir: str) -> int:
 
 def _ss(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gen_store_sales(spark, SS_ROWS * _sf_scale(sf_dir), seed=100)
-
-
-def _sr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_store_returns(spark, SS_ROWS * _sf_scale(sf_dir), seed=100)
 
 
 def _cs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,36 +90,6 @@ def _ws(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gen_web_sales(spark, WS_ROWS * _sf_scale(sf_dir), seed=100)
 
 
-def _wr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_web_returns(spark, WS_ROWS * _sf_scale(sf_dir), seed=100)
-
-
-def _cs_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_catalog_sales(spark, CS_BIG * _sf_scale(sf_dir), seed=100)
-
-
-def _cr_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_catalog_returns(spark, CS_BIG * _sf_scale(sf_dir), seed=100)
-
-
-def _ws_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_web_sales(spark, WS_BIG * _sf_scale(sf_dir), seed=100)
-
-
-def _wr_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_web_returns(spark, WS_BIG * _sf_scale(sf_dir), seed=100)
-
-
-def _inv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gen_inventory(
-        spark,
-        n_items=2_000 * _sf_scale(sf_dir),
-        n_warehouses=5,
-        n_weeks=104,
-        seed=100,
-    )
-
-
 def _star(spark: SparkSession, sf_dir: str = ""):
     """The generated TPC-DS star: fact + the dims this tier touches."""
     ss = _ss(spark, sf_dir)
@@ -120,7 +98,7 @@ def _star(spark: SparkSession, sf_dir: str = ""):
     return ss, dd, it
 
 
-def _gate(spark: SparkSession, big: bool = False) -> None:
+def _gate(spark: SparkSession) -> None:
     """Queries with an INDEPENDENT oracle (DuckDB executing real
     adapted TPC-DS SQL over the exported gate warehouse,
     datagen/export.py) must guarantee the export exists before the
@@ -129,15 +107,13 @@ def _gate(spark: SparkSession, big: bool = False) -> None:
     stat)."""
     from lakehouse_dba_tools_spark.datagen.export import ensure_gate_export
 
-    ensure_gate_export(spark, big=big)
+    ensure_gate_export(spark)
 
 
 def _wh_sql(sql: str, *tables: str) -> str:
     """Build an independent oracle: real (adapted) TPC-DS SQL text
-    over the exported parquet warehouse. Replaces the round-5 pinned
-    VALUES blocks (tools/pin_tpcds.py) for converted queries — the
-    oracle now exercises DuckDB's own join/filter/aggregate semantics
-    instead of replaying the engine's output."""
+    over the exported parquet warehouse, so the oracle exercises
+    DuckDB's own join/filter/aggregate semantics."""
     from lakehouse_dba_tools_spark.datagen.export import with_tables
 
     return with_tables(sql, *tables)
@@ -146,55 +122,6 @@ def _wh_sql(sql: str, *tables: str) -> str:
 def _money(col, ndigits: int = 2):
     """Exact-decimal sum → round → double, the hash-stable money path."""
     return F.round(F.sum(col), ndigits).cast("double")
-
-
-@register(
-    "tpcds_q3_brand_rollup",
-    _wh_sql(
-        """
-    SELECT dt.d_year,
-           item.i_brand_id AS i_brand_id,
-           item.i_brand AS i_brand,
-           CAST(round(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS sum_agg
-    FROM date_dim dt,
-         store_sales,
-         item
-    WHERE dt.d_date_sk = store_sales.ss_sold_date_sk
-      AND store_sales.ss_item_sk = item.i_item_sk
-      AND item.i_manufact_id = 43
-      AND dt.d_moy = 11
-    GROUP BY dt.d_year, item.i_brand, item.i_brand_id
-    ORDER BY dt.d_year, sum_agg DESC, i_brand_id
-    LIMIT 10
-    """,
-        "date_dim",
-        "store_sales",
-        "item",
-    ),
-)
-def tpcds_q3_brand_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q3 shape (`evaluation_tools/dbstress__Current.py:103`
-    corpus): November sales of one manufacturer's items by brand and
-    year. Fact filtered through two dim equi-joins, one hash-agg, top-k
-    with deterministic tiebreak. d_moy pushes into date_dim's scan;
-    i_manufact_id into item's — the fact joins only surviving keys.
-
-    INDEPENDENT oracle (round 6): DuckDB executes the real q3 text
-    (adapted: this tier's substitution params i_manufact_id=43 /
-    d_moy=11, exact-decimal money sum, unique-tiebreak LIMIT 10)
-    over the exported gate warehouse — not a pinned replay."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    return (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where((F.col("i_manufact_id") == 43) & (F.col("d_moy") == 11))
-        .groupBy("d_year", "i_brand_id", "i_brand")
-        .agg(_money("ss_ext_sales_price").alias("sum_agg"))
-        .orderBy(F.col("d_year"), F.col("sum_agg").desc(), F.col("i_brand_id"))
-        .limit(10)
-    )
 
 
 @register(
@@ -238,7 +165,7 @@ def tpcds_q7_demographics_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate BEFORE the join (predicate pushdown), so the join-side
     stays small without any forced broadcast.
 
-    INDEPENDENT oracle (round 6): DuckDB executes the real q7 text
+    INDEPENDENT oracle: DuckDB executes the real q7 text
     (adapted: d_year=1998, round(4) doubles, LIMIT 10; i_item_id order
     is unique) over the exported gate warehouse."""
     _gate(spark)
@@ -266,1094 +193,6 @@ def tpcds_q7_demographics_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("i_item_id")
         .limit(10)
-    )
-
-
-@register(
-    "tpcds_q42_category_rollup",
-    _wh_sql(
-        """
-    SELECT dt.d_year,
-           item.i_category_id AS i_category_id,
-           item.i_category AS i_category,
-           CAST(round(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS sum_agg
-    FROM date_dim dt,
-         store_sales,
-         item
-    WHERE dt.d_date_sk = store_sales.ss_sold_date_sk
-      AND store_sales.ss_item_sk = item.i_item_sk
-      AND dt.d_moy = 11
-      AND dt.d_year = 1998
-    GROUP BY dt.d_year, item.i_category_id, item.i_category
-    ORDER BY sum_agg DESC, i_category_id
-    LIMIT 10
-    """,
-        "date_dim",
-        "store_sales",
-        "item",
-    ),
-)
-def tpcds_q42_category_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q42 shape: one month's revenue by item category. The
-    10-category domain makes this the low-cardinality end of the rollup
-    family (map-side partials collapse almost everything)."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    return (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where((F.col("d_moy") == 11) & (F.col("d_year") == 1998))
-        .groupBy("d_year", "i_category_id", "i_category")
-        .agg(_money("ss_ext_sales_price").alias("sum_agg"))
-        .orderBy(F.col("sum_agg").desc(), F.col("i_category_id"))
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q52_brand_monthly",
-    _wh_sql(
-        """
-    SELECT dt.d_year,
-           item.i_brand_id AS i_brand_id,
-           item.i_brand AS i_brand,
-           CAST(round(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS ext_price
-    FROM date_dim dt,
-         store_sales,
-         item
-    WHERE dt.d_date_sk = store_sales.ss_sold_date_sk
-      AND store_sales.ss_item_sk = item.i_item_sk
-      AND dt.d_moy = 12
-      AND dt.d_year = 1998
-    GROUP BY dt.d_year, item.i_brand, item.i_brand_id
-    ORDER BY ext_price DESC, i_brand_id
-    LIMIT 10
-    """,
-        "date_dim",
-        "store_sales",
-        "item",
-    ),
-)
-def tpcds_q52_brand_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q52 shape: December brand revenue leaderboard (q3 without
-    the manufacturer filter — higher fact survival rate, bigger agg)."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    return (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where((F.col("d_moy") == 12) & (F.col("d_year") == 1998))
-        .groupBy("d_year", "i_brand_id", "i_brand")
-        .agg(_money("ss_ext_sales_price").alias("ext_price"))
-        .orderBy(F.col("ext_price").desc(), F.col("i_brand_id"))
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q55_manager_brands",
-    _wh_sql(
-        """
-    SELECT i_brand_id, i_brand,
-           CAST(round(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS ext_price
-    FROM date_dim, store_sales, item
-    WHERE d_date_sk = ss_sold_date_sk
-      AND ss_item_sk = i_item_sk
-      AND i_manager_id = 28
-      AND d_moy = 11
-      AND d_year = 1999
-    GROUP BY i_brand_id, i_brand
-    ORDER BY ext_price DESC, i_brand_id
-    LIMIT 10
-    """,
-        "date_dim",
-        "store_sales",
-        "item",
-    ),
-)
-def tpcds_q55_manager_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q55 shape: one manager's brand revenue for one month."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    return (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where(
-            (F.col("i_manager_id") == 28) & (F.col("d_moy") == 11) & (F.col("d_year") == 1999)
-        )
-        .groupBy("i_brand_id", "i_brand")
-        .agg(_money("ss_ext_sales_price").alias("ext_price"))
-        .orderBy(F.col("ext_price").desc(), F.col("i_brand_id"))
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q65_underperforming_items",
-    _wh_sql(
-        """
-    WITH sa AS (
-      SELECT ss_store_sk, ss_item_sk,
-             sum(CAST(ss_sales_price AS DECIMAL(38,12))) revenue
-      FROM store_sales, date_dim
-      WHERE ss_sold_date_sk = d_date_sk
-        AND d_month_seq BETWEEN 1176 AND 1187
-      GROUP BY ss_store_sk, ss_item_sk),
-    sb AS (
-      SELECT ss_store_sk, avg(revenue) ave
-      FROM sa GROUP BY ss_store_sk)
-    SELECT s_store_name, i_item_desc,
-           CAST(round(revenue, 2) AS DOUBLE) AS revenue,
-           CAST(i_current_price AS DOUBLE) AS i_current_price,
-           CAST(i_wholesale_cost AS DOUBLE) AS i_wholesale_cost,
-           i_brand,
-           i_item_sk AS item_sk
-    FROM sa, sb, store, item
-    WHERE sa.ss_store_sk = sb.ss_store_sk
-      AND sa.revenue <= 0.1 * sb.ave
-      AND sa.ss_store_sk = s_store_sk
-      AND sa.ss_item_sk = i_item_sk
-    ORDER BY s_store_name, item_sk
-    LIMIT 10
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-        "item",
-    ),
-)
-def tpcds_q65_underperforming_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q65 shape: items whose revenue in a store runs under 10%
-    of that store's average item revenue — aggregate, re-aggregate the
-    aggregate, join the two back. The per-(store,item) rollup shuffles
-    once; the per-store average is a rollup OF that result (tiny), so
-    the second join broadcasts it by size without a hint."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    sa = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_month_seq").between(1176, 1187))
-        .groupBy("ss_store_sk", "ss_item_sk")
-        .agg(F.sum("ss_sales_price").alias("revenue"))
-    )
-    sb = sa.groupBy("ss_store_sk").agg(F.avg("revenue").alias("ave"))
-    return (
-        sa.join(sb, "ss_store_sk")
-        .where(F.col("revenue") <= 0.1 * F.col("ave"))
-        .join(st, sa.ss_store_sk == st.s_store_sk)
-        .join(it, sa.ss_item_sk == it.i_item_sk)
-        .select(
-            "s_store_name",
-            "i_item_desc",
-            F.round("revenue", 2).cast("double").alias("revenue"),
-            F.col("i_current_price").cast("double").alias("i_current_price"),
-            F.col("i_wholesale_cost").cast("double").alias("i_wholesale_cost"),
-            "i_brand",
-            F.col("i_item_sk").alias("item_sk"),
-        )
-        .orderBy("s_store_name", "item_sk")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q98_class_revenue_ratio",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_category, i_class,
-           CAST(round(itemrevenue, 2) AS DOUBLE) AS itemrevenue,
-           CAST(round(CAST(itemrevenue AS DOUBLE) * 100
-                      / CAST(sum(itemrevenue) OVER (PARTITION BY i_class)
-                             AS DOUBLE), 4) AS DOUBLE) AS revenueratio
-    FROM (SELECT i_item_id, i_item_desc, i_category, i_class,
-                 i_current_price,
-                 sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) itemrevenue
-          FROM store_sales, item, date_dim
-          WHERE ss_item_sk = i_item_sk
-            AND i_category IN ('Sports', 'Books', 'Home')
-            AND ss_sold_date_sk = d_date_sk
-            AND d_date BETWEEN CAST('1999-02-22' AS DATE)
-                           AND CAST('1999-03-24' AS DATE)
-          GROUP BY i_item_id, i_item_desc, i_category, i_class,
-                   i_current_price) r
-    ORDER BY i_category, i_class, i_item_id
-    LIMIT 20
-    """,
-        "store_sales",
-        "item",
-        "date_dim",
-    ),
-)
-def tpcds_q98_class_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q98 shape: 30-day item revenue with each item's share of
-    its class revenue — a window aggregate OVER a hash aggregate. The
-    window partitions by i_class (16-value domain), so its shuffle
-    moves only the rolled-up rows, never the fact."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    rolled = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where(
-            F.col("i_category").isin("Sports", "Books", "Home")
-            & F.col("d_date").between("1999-02-22", "1999-03-24")
-        )
-        .groupBy("i_item_id", "i_item_desc", "i_category", "i_class", "i_current_price")
-        .agg(F.sum("ss_ext_sales_price").alias("itemrevenue"))
-    )
-    w = Window.partitionBy("i_class")
-    return (
-        rolled.select(
-            "i_item_id",
-            "i_category",
-            "i_class",
-            F.round("itemrevenue", 2).cast("double").alias("itemrevenue"),
-            F.round(
-                F.col("itemrevenue") * 100 / F.sum("itemrevenue").over(w), 4
-            )
-            .cast("double")
-            .alias("revenueratio"),
-        )
-        .orderBy("i_category", "i_class", "i_item_id")
-        .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 expansion: the returns/time/household/address families.
-# Same oracle strategy as above — seed-100 pinned VALUES; every ORDER BY
-# carries a unique tiebreak so the pins are run/partitioning-invariant.
-# ---------------------------------------------------------------------------
-
-from lakehouse_dba_tools_spark.datagen.tpcds import (  # noqa: E402
-    gen_customer_address,
-    gen_customer_ds,
-    gen_household_demographics,
-    gen_income_band,
-    gen_reason,
-    gen_store_returns,
-    gen_time_dim,
-)
-
-
-@register(
-    "tpcds_q96_time_slot_count",
-    _wh_sql(
-        """
-    SELECT CAST(count(*) AS BIGINT) AS cnt
-    FROM store_sales, household_demographics, time_dim, store
-    WHERE ss_sold_time_sk = time_dim.t_time_sk
-      AND ss_hdemo_sk = household_demographics.hd_demo_sk
-      AND ss_store_sk = s_store_sk
-      AND time_dim.t_hour = 20
-      AND time_dim.t_minute >= 30
-      AND household_demographics.hd_dep_count = 7
-      AND store.s_number_employees BETWEEN 200 AND 295
-    """,
-        "store_sales",
-        "household_demographics",
-        "time_dim",
-        "store",
-    ),
-)
-def tpcds_q96_time_slot_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q96 shape: sales volume in one half-hour slot for one
-    demographic at high-traffic stores. Three fixed/spec-fixed-size dims
-    (time_dim 86.4k, household_demographics 7.2k, store 8) — all below
-    any sane autoBroadcastJoinThreshold, so Catalyst broadcasts them
-    from size estimates; the SF-scaling fact never moves."""
-    _gate(spark)
-    ss, _, _ = _star(spark, sf_dir)
-    td = gen_time_dim(spark)
-    hd = gen_household_demographics(spark)
-    st = gen_store(spark)
-    return (
-        ss.join(td, ss.ss_sold_time_sk == td.t_time_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(
-            (F.col("t_hour") == 20)
-            & (F.col("t_minute") >= 30)
-            & (F.col("hd_dep_count") == 7)
-            & (F.col("s_number_employees").between(200, 295))
-        )
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-
-
-@register(
-    "tpcds_q88_time_slot_matrix",
-    _wh_sql(
-        """
-    SELECT CAST(s1.h AS BIGINT) AS h8_30_to_9,
-           CAST(s2.h AS BIGINT) AS h9_to_9_30,
-           CAST(s3.h AS BIGINT) AS h9_30_to_10,
-           CAST(s4.h AS BIGINT) AS h10_to_10_30,
-           CAST(s5.h AS BIGINT) AS h10_30_to_11,
-           CAST(s6.h AS BIGINT) AS h11_to_11_30,
-           CAST(s7.h AS BIGINT) AS h11_30_to_12,
-           CAST(s8.h AS BIGINT) AS h12_to_12_30
-    FROM
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 8 AND t_minute >= 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s1,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 9 AND t_minute < 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s2,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 9 AND t_minute >= 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s3,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 10 AND t_minute < 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s4,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 10 AND t_minute >= 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s5,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 11 AND t_minute < 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s6,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 11 AND t_minute >= 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s7,
-     (SELECT count(*) h
-      FROM store_sales, household_demographics, time_dim, store
-      WHERE ss_sold_time_sk = t_time_sk AND ss_hdemo_sk = hd_demo_sk
-        AND ss_store_sk = s_store_sk
-        AND t_hour = 12 AND t_minute < 30
-        AND ((hd_dep_count = 4 AND hd_vehicle_count <= 6)
-              OR (hd_dep_count = 2 AND hd_vehicle_count <= 4)
-              OR (hd_dep_count = 0 AND hd_vehicle_count <= 2))) s8
-    """,
-        "store_sales",
-        "household_demographics",
-        "time_dim",
-        "store",
-    ),
-)
-def tpcds_q88_time_slot_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q88 shape: eight half-hour traffic counters cross-joined
-    into one row. Each block is an independent scalar aggregate over the
-    filtered fact; the joins stitching them are 1-row broadcasts (the
-    same BNLJ-stamp pattern as the BM25 stats join). At cluster scale
-    the eight scans share the cached fact; here each block's dim filters
-    prune before the fact join."""
-    _gate(spark)
-    ss, _, _ = _star(spark, sf_dir)
-    td = gen_time_dim(spark)
-    hd = gen_household_demographics(spark)
-    st = gen_store(spark)
-    base = (
-        ss.join(td, ss.ss_sold_time_sk == td.t_time_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(
-            (
-                ((F.col("hd_dep_count") == 4) & (F.col("hd_vehicle_count") <= 6))
-                | ((F.col("hd_dep_count") == 2) & (F.col("hd_vehicle_count") <= 4))
-                | ((F.col("hd_dep_count") == 0) & (F.col("hd_vehicle_count") <= 2))
-            )
-            & (F.col("s_store_name") == F.col("s_store_name"))  # spec keeps a store filter; all 8 stores qualify here
-        )
-    ).persist()
-
-    def slot(h: int, first_half: bool, name: str) -> DataFrame:
-        cond = (F.col("t_hour") == h) & (
-            (F.col("t_minute") < 30) if first_half else (F.col("t_minute") >= 30)
-        )
-        return base.where(cond).agg(F.count("*").cast("bigint").alias(name))
-
-    out = (
-        slot(8, False, "h8_30_to_9")
-        .crossJoin(slot(9, True, "h9_to_9_30"))
-        .crossJoin(slot(9, False, "h9_30_to_10"))
-        .crossJoin(slot(10, True, "h10_to_10_30"))
-        .crossJoin(slot(10, False, "h10_30_to_11"))
-        .crossJoin(slot(11, True, "h11_to_11_30"))
-        .crossJoin(slot(11, False, "h11_30_to_12"))
-        .crossJoin(slot(12, True, "h12_to_12_30"))
-    )
-    # materialize the 1-row matrix, then RELEASE the shared fact cache
-    # — a lazy return referencing the persisted base leaks one cache
-    # entry per invocation (the round-11 ADVICE class; r12 leak audit)
-    try:
-        rows = out.collect()
-    finally:
-        base.unpersist()
-    return spark.createDataFrame(rows, out.schema)
-
-
-@register(
-    "tpcds_q19_brand_zip_mismatch",
-    _wh_sql(
-        """
-    SELECT i_brand_id, i_brand, i_manufact_id, i_manufact,
-           CAST(round(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS ext_price
-    FROM date_dim, store_sales, item, customer, customer_address, store
-    WHERE d_date_sk = ss_sold_date_sk
-      AND ss_item_sk = i_item_sk
-      AND i_manager_id = 8
-      AND d_moy = 11
-      AND d_year = 1998
-      AND ss_customer_sk = c_customer_sk
-      AND c_current_addr_sk = ca_address_sk
-      AND substring(ca_zip, 1, 5) <> substring(s_zip, 1, 5)
-      AND ss_store_sk = s_store_sk
-    GROUP BY i_brand_id, i_brand, i_manufact_id, i_manufact
-    ORDER BY ext_price DESC, i_brand_id, i_manufact_id
-    LIMIT 10
-    """,
-        "date_dim",
-        "store_sales",
-        "item",
-        "customer",
-        "customer_address",
-        "store",
-    ),
-)
-def tpcds_q19_brand_zip_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q19 shape: brand revenue from customers who shop OUTSIDE
-    their home zip prefix — the fact chains through customer →
-    customer_address and compares against the store's zip. customer and
-    customer_address are SF-scaling, so neither is force-broadcast; the
-    zip inequality is evaluated post-join (it is not an equi-key)."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark)
-    st = gen_store(spark)
-    return (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .join(cu, ss.ss_customer_sk == cu.c_customer_sk)
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(
-            (F.col("i_manager_id") == 8)
-            & (F.col("d_moy") == 11)
-            & (F.col("d_year") == 1998)
-            & (F.substring("ca_zip", 1, 5) != F.substring("s_zip", 1, 5))
-        )
-        .groupBy("i_brand_id", "i_brand", "i_manufact_id", "i_manufact")
-        .agg(_money("ss_ext_sales_price").alias("ext_price"))
-        .orderBy(F.col("ext_price").desc(), F.col("i_brand_id"), F.col("i_manufact_id"))
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q73_ticket_item_counts",
-    _wh_sql(
-        """
-    SELECT c_last_name, c_first_name, c_salutation, c_preferred_cust_flag,
-           ss_ticket_number, CAST(cnt AS BIGINT) AS cnt
-    FROM (SELECT ss_ticket_number, ss_customer_sk, count(*) cnt
-          FROM store_sales, date_dim, store, household_demographics
-          WHERE store_sales.ss_sold_date_sk = date_dim.d_date_sk
-            AND store_sales.ss_store_sk = store.s_store_sk
-            AND store_sales.ss_hdemo_sk = household_demographics.hd_demo_sk
-            AND date_dim.d_dom BETWEEN 1 AND 2
-            AND (household_demographics.hd_buy_potential = '>10000'
-                 OR household_demographics.hd_buy_potential = 'Unknown')
-            AND household_demographics.hd_vehicle_count > 0
-            AND date_dim.d_year IN (1998, 1999)
-          GROUP BY ss_ticket_number, ss_customer_sk) dj,
-         customer
-    WHERE ss_customer_sk = c_customer_sk
-      AND cnt BETWEEN 1 AND 5
-    ORDER BY cnt DESC, c_last_name, ss_ticket_number
-    LIMIT 15
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-        "household_demographics",
-        "customer",
-    ),
-)
-def tpcds_q73_ticket_item_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q73 shape: per-ticket line counts for one household
-    slice, then the customer lookup AFTER the aggregate — the join
-    input is the rolled-up ticket list, not the fact. cnt is computed
-    before customer attributes attach, the spec's two-phase shape."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    hd = gen_household_demographics(spark)
-    cu = gen_customer_ds(spark)
-    dj = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .where(
-            F.col("d_dom").between(1, 2)
-            & F.col("hd_buy_potential").isin(">10000", "Unknown")
-            & (F.col("hd_vehicle_count") > 0)
-            & F.col("d_year").isin(1998, 1999)
-        )
-        .groupBy("ss_ticket_number", "ss_customer_sk")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .where(F.col("cnt").between(1, 5))
-    )
-    return (
-        dj.join(cu, dj.ss_customer_sk == cu.c_customer_sk)
-        .select(
-            "c_last_name", "c_first_name", "c_salutation", "c_preferred_cust_flag",
-            "ss_ticket_number", "cnt",
-        )
-        .orderBy(
-            F.col("cnt").desc(), F.col("c_last_name"),
-            F.col("ss_ticket_number"),  # unique tiebreak for the pin
-        )
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q68_two_city_tickets",
-    _wh_sql(
-        """
-    SELECT c_last_name, c_first_name, ss_ticket_number, bought_city,
-           extended_price, extended_tax, list_price
-    FROM (SELECT ss_ticket_number, ss_customer_sk, ca_city bought_city,
-                 CAST(round(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) extended_price,
-                 CAST(round(sum(CAST(ss_ext_list_price AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) list_price,
-                 CAST(round(sum(CAST(ss_ext_tax AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) extended_tax
-          FROM store_sales, date_dim, store, household_demographics,
-               customer_address
-          WHERE store_sales.ss_sold_date_sk = date_dim.d_date_sk
-            AND store_sales.ss_store_sk = store.s_store_sk
-            AND store_sales.ss_hdemo_sk = household_demographics.hd_demo_sk
-            AND store_sales.ss_addr_sk = customer_address.ca_address_sk
-            AND date_dim.d_dom BETWEEN 1 AND 2
-            AND (household_demographics.hd_dep_count = 4
-                 OR household_demographics.hd_vehicle_count = 3)
-            AND date_dim.d_year IN (1998, 1999)
-          GROUP BY ss_ticket_number, ss_customer_sk, ca_city) dn,
-         customer,
-         customer_address current_addr
-    WHERE ss_customer_sk = c_customer_sk
-      AND customer.c_current_addr_sk = current_addr.ca_address_sk
-      AND current_addr.ca_city <> bought_city
-    ORDER BY c_last_name, ss_ticket_number
-    LIMIT 15
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-        "household_demographics",
-        "customer_address",
-        "customer",
-    ),
-)
-def tpcds_q68_two_city_tickets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q68 shape: ticket-level spend where the purchase address
-    city differs from the customer's CURRENT address city — the same
-    SF-scaling address dim joins twice under different keys (bought vs
-    current), the spec's double-role-dim pattern."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    hd = gen_household_demographics(spark)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark)
-    bought = ca.select(
-        F.col("ca_address_sk").alias("b_addr_sk"), F.col("ca_city").alias("bought_city")
-    )
-    current = ca.select(
-        F.col("ca_address_sk").alias("cur_addr_sk"), F.col("ca_city").alias("current_city")
-    )
-    dn = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .join(bought, ss.ss_addr_sk == F.col("b_addr_sk"))
-        .where(
-            F.col("d_dom").between(1, 2)
-            & ((F.col("hd_dep_count") == 4) | (F.col("hd_vehicle_count") == 3))
-            & F.col("d_year").isin(1998, 1999)
-        )
-        .groupBy("ss_ticket_number", "ss_customer_sk", "bought_city")
-        .agg(
-            _money("ss_ext_sales_price").alias("extended_price"),
-            _money("ss_ext_list_price").alias("list_price"),
-            _money("ss_ext_tax").alias("extended_tax"),
-        )
-    )
-    return (
-        dn.join(cu, dn.ss_customer_sk == cu.c_customer_sk)
-        .join(current, cu.c_current_addr_sk == F.col("cur_addr_sk"))
-        .where(F.col("current_city") != F.col("bought_city"))
-        .select(
-            "c_last_name", "c_first_name", "ss_ticket_number", "bought_city",
-            "extended_price", "extended_tax", "list_price",
-        )
-        .orderBy("c_last_name", F.col("ss_ticket_number"))
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q79_ticket_profit",
-    _wh_sql(
-        """
-    SELECT c_last_name, c_first_name,
-           substring(s_city, 1, 30) AS city,
-           ss_ticket_number, amt, profit
-    FROM (SELECT ss_ticket_number, ss_customer_sk, store.s_city,
-                 CAST(round(sum(CAST(ss_coupon_amt AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) amt,
-                 CAST(round(sum(CAST(ss_net_profit AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) profit
-          FROM store_sales, date_dim, store, household_demographics
-          WHERE store_sales.ss_sold_date_sk = date_dim.d_date_sk
-            AND store_sales.ss_store_sk = store.s_store_sk
-            AND store_sales.ss_hdemo_sk = household_demographics.hd_demo_sk
-            AND (household_demographics.hd_dep_count = 6
-                 OR household_demographics.hd_vehicle_count > 2)
-            AND date_dim.d_dow = 1
-            AND date_dim.d_year IN (1998, 1999)
-            AND store.s_number_employees BETWEEN 200 AND 295
-          GROUP BY ss_ticket_number, ss_customer_sk, store.s_city) ms,
-         customer
-    WHERE ss_customer_sk = c_customer_sk
-    ORDER BY c_last_name, c_first_name, city, profit DESC, ss_ticket_number
-    LIMIT 15
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-        "household_demographics",
-        "customer",
-    ),
-)
-def tpcds_q79_ticket_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q79 shape: Monday-shopper ticket coupon/profit rollup at
-    big stores, customer attributes attached after the aggregate."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    hd = gen_household_demographics(spark)
-    cu = gen_customer_ds(spark)
-    ms = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .where(
-            ((F.col("hd_dep_count") == 6) | (F.col("hd_vehicle_count") > 2))
-            & (F.col("d_dow") == 1)
-            & F.col("d_year").isin(1998, 1999)
-            & (F.col("s_number_employees").between(200, 295))
-        )
-        .groupBy("ss_ticket_number", "ss_customer_sk", "s_city")
-        .agg(
-            _money("ss_coupon_amt").alias("amt"),
-            _money("ss_net_profit").alias("profit"),
-        )
-    )
-    return (
-        ms.join(cu, ms.ss_customer_sk == cu.c_customer_sk)
-        .select(
-            "c_last_name", "c_first_name",
-            F.substring("s_city", 1, 30).alias("city"),
-            "ss_ticket_number", "amt", "profit",
-        )
-        .orderBy(
-            "c_last_name", "c_first_name", "city", F.col("profit").desc(),
-            F.col("ss_ticket_number"),
-        )
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q1_returning_customers",
-    _wh_sql(
-        """
-    WITH customer_total_return AS (
-      SELECT sr_customer_sk AS ctr_customer_sk,
-             sr_store_sk AS ctr_store_sk,
-             sum(CAST(sr_return_amt AS DECIMAL(38,12))) AS ctr_total_return
-      FROM store_returns, date_dim
-      WHERE sr_returned_date_sk = d_date_sk AND d_year = 1998
-      GROUP BY sr_customer_sk, sr_store_sk)
-    SELECT c_customer_id
-    FROM customer_total_return ctr1, store, customer
-    WHERE ctr1.ctr_total_return >
-        (SELECT avg(ctr_total_return) * 1.2
-         FROM customer_total_return ctr2
-         WHERE ctr1.ctr_store_sk = ctr2.ctr_store_sk)
-      AND s_store_sk = ctr1.ctr_store_sk
-      AND s_state = 'TN'
-      AND ctr1.ctr_customer_sk = c_customer_sk
-    ORDER BY c_customer_id
-    LIMIT 100
-    """,
-        "store_returns",
-        "date_dim",
-        "store",
-        "customer",
-    ),
-)
-def tpcds_q1_returning_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q1 shape: customers whose store-returns total beats 1.2×
-    their store's average — the spec's correlated-average subquery,
-    decorrelated the Spark way: aggregate once per (customer, store),
-    re-aggregate that result per store (tiny), join the two. Same
-    decorrelation pattern as q65/q15; the second side broadcasts by
-    size without a hint."""
-    _gate(spark)
-    sr = _sr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    st = gen_store(spark)
-    cu = gen_customer_ds(spark)
-    ctr = (
-        sr.join(dd, sr.sr_returned_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .groupBy(
-            F.col("sr_customer_sk").alias("ctr_customer_sk"),
-            F.col("sr_store_sk").alias("ctr_store_sk"),
-        )
-        .agg(F.sum("sr_return_amt").alias("ctr_total_return"))
-    )
-    # Cardinality bounded by the store key domain (8 here; ≤ ~2k rows at
-    # the spec's largest SF — store grows sub-linearly), so the hint is
-    # safe by construction; Catalyst's static size estimate for an
-    # aggregate over a generated source is too pessimistic to pick the
-    # broadcast itself.
-    avg_by_store = F.broadcast(
-        ctr.groupBy(F.col("ctr_store_sk").alias("avg_store_sk")).agg(
-            (F.avg("ctr_total_return") * 1.2).alias("bar")
-        )
-    )
-    return (
-        ctr.join(avg_by_store, ctr.ctr_store_sk == F.col("avg_store_sk"))
-        .where(F.col("ctr_total_return") > F.col("bar"))
-        .join(st, ctr.ctr_store_sk == st.s_store_sk)
-        .where(F.col("s_state") == "TN")
-        .join(cu, ctr.ctr_customer_sk == cu.c_customer_sk)
-        .select("c_customer_id")
-        .orderBy("c_customer_id")
-        .limit(100)
-    )
-
-
-@register(
-    "tpcds_q89_monthly_class_deviation",
-    _wh_sql(
-        """
-    WITH rolled AS (
-      SELECT i_category, i_class, i_brand, s_store_name, s_company_name,
-             d_moy, sum(CAST(ss_sales_price AS DECIMAL(38,12))) sum_sales
-      FROM item, store_sales, date_dim, store
-      WHERE ss_item_sk = i_item_sk
-        AND ss_sold_date_sk = d_date_sk
-        AND ss_store_sk = s_store_sk
-        AND d_year = 1998
-        AND ((i_category IN ('Books', 'Electronics', 'Sports')
-              AND i_class IN ('fiction', 'computers', 'fitness'))
-          OR (i_category IN ('Men', 'Jewelry', 'Women')
-              AND i_class IN ('pants', 'bracelets', 'dresses')))
-      GROUP BY i_category, i_class, i_brand, s_store_name, s_company_name,
-               d_moy),
-    y AS (
-      SELECT i_category, i_class, i_brand, s_store_name, d_moy,
-             CAST(round(sum_sales, 2) AS DOUBLE) sum_sales,
-             CAST(round(avg(sum_sales) OVER (PARTITION BY i_category,
-                    i_brand, s_store_name, s_company_name), 4) AS DOUBLE)
-               avg_monthly_sales
-      FROM rolled)
-    SELECT * FROM y
-    WHERE avg_monthly_sales <> 0
-      AND abs(sum_sales - avg_monthly_sales) / avg_monthly_sales > 0.1
-    ORDER BY (sum_sales - avg_monthly_sales), s_store_name, i_brand,
-             i_class, d_moy
-    LIMIT 15
-    """,
-        "item",
-        "store_sales",
-        "date_dim",
-        "store",
-    ),
-)
-def tpcds_q89_monthly_class_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q89 shape: monthly (brand, store) revenue vs that
-    combination's year-average — a window AVG over a hash aggregate,
-    filtering rows that deviate >10%. The window partitions over
-    rolled-up rows only (brand × store × month), never the fact."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    rolled = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(
-            (F.col("d_year") == 1998)
-            & (
-                (
-                    F.col("i_category").isin("Books", "Electronics", "Sports")
-                    & F.col("i_class").isin("fiction", "computers", "fitness")
-                )
-                | (
-                    F.col("i_category").isin("Men", "Jewelry", "Women")
-                    & F.col("i_class").isin("pants", "bracelets", "dresses")
-                )
-            )
-        )
-        .groupBy("i_category", "i_class", "i_brand", "s_store_name", "s_company_name", "d_moy")
-        .agg(F.sum("ss_sales_price").alias("sum_sales"))
-    )
-    w = Window.partitionBy("i_category", "i_brand", "s_store_name", "s_company_name")
-    avg_m = F.avg("sum_sales").over(w)
-    return (
-        rolled.select(
-            "i_category", "i_class", "i_brand", "s_store_name", "d_moy",
-            F.round("sum_sales", 2).cast("double").alias("sum_sales"),
-            F.round(avg_m, 4).cast("double").alias("avg_monthly_sales"),
-        )
-        .where(
-            (F.col("avg_monthly_sales") != 0)
-            & (F.abs(F.col("sum_sales") - F.col("avg_monthly_sales")) / F.col("avg_monthly_sales") > 0.1)
-        )
-        .orderBy(
-            (F.col("sum_sales") - F.col("avg_monthly_sales")),
-            "s_store_name", "i_brand", "i_class", "d_moy",
-        )
-        .limit(15)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cross-channel tier: catalog_sales / web_sales / returns / inventory.
-# With datagen/tpcds_channels.py every one of the reference's 24 TPC-DS
-# tables is generatable (`resources/TPC-datagen-notebook.scala:361-371`);
-# these shapes exercise the channel dims the store-only tier can't.
-# ---------------------------------------------------------------------------
-
-from lakehouse_dba_tools_spark.datagen.tpcds_channels import (  # noqa: E402
-    gen_call_center,
-    gen_catalog_returns,
-    gen_catalog_sales,
-    gen_inventory,
-    gen_ship_mode,
-    gen_warehouse,
-    gen_web_page,
-    gen_web_returns,
-    gen_web_sales,
-    gen_web_site,
-)
-
-
-CS_ROWS = 120_000
-WS_ROWS = 120_000
-
-
-@register(
-    "tpcds_q60_cross_channel_items",
-    _wh_sql(
-        """
-    WITH items AS (SELECT i_item_sk, i_item_id FROM item
-                   WHERE i_category = 'Music'),
-    dates AS (SELECT d_date_sk FROM date_dim
-              WHERE d_year = 1998 AND d_moy = 9),
-    unioned AS (
-      SELECT i_item_id, sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) sales
-      FROM store_sales, dates, items
-      WHERE ss_sold_date_sk = d_date_sk AND ss_item_sk = i_item_sk
-      GROUP BY i_item_id
-      UNION ALL
-      SELECT i_item_id, sum(CAST(cs_ext_sales_price AS DECIMAL(38,12)))
-      FROM catalog_sales, dates, items
-      WHERE cs_sold_date_sk = d_date_sk AND cs_item_sk = i_item_sk
-      GROUP BY i_item_id
-      UNION ALL
-      SELECT i_item_id, sum(CAST(ws_ext_sales_price AS DECIMAL(38,12)))
-      FROM web_sales, dates, items
-      WHERE ws_sold_date_sk = d_date_sk AND ws_item_sk = i_item_sk
-      GROUP BY i_item_id)
-    SELECT i_item_id,
-           CAST(round(sum(sales), 2) AS DOUBLE) AS total_sales
-    FROM unioned
-    GROUP BY i_item_id
-    ORDER BY total_sales DESC, i_item_id
-    LIMIT 15
-    """,
-        "item",
-        "date_dim",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-    ),
-)
-def tpcds_q60_cross_channel_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q60 shape: one category's September revenue per item,
-    summed ACROSS the three sales channels — each channel is rolled up
-    independently (its own dim filters and hash-agg), then the three
-    small per-item results union and re-aggregate. The union never
-    carries fact rows, only rolled-up (item, revenue) pairs, so the
-    cross-channel step is dim-sized at any SF."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    items = it.where(F.col("i_category") == "Music").select("i_item_sk", "i_item_id")
-    dates = dd.where((F.col("d_year") == 1998) & (F.col("d_moy") == 9)).select("d_date_sk")
-
-    def channel(fact, date_col, item_col, price_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(items, F.col(item_col) == F.col("i_item_sk"))
-            .groupBy("i_item_id")
-            .agg(F.sum(price_col).alias("sales"))
-        )
-
-    unioned = (
-        channel(ss, "ss_sold_date_sk", "ss_item_sk", "ss_ext_sales_price")
-        .unionByName(channel(cs, "cs_sold_date_sk", "cs_item_sk", "cs_ext_sales_price"))
-        .unionByName(channel(ws, "ws_sold_date_sk", "ws_item_sk", "ws_ext_sales_price"))
-    )
-    return (
-        unioned.groupBy("i_item_id")
-        .agg(F.round(F.sum("sales"), 2).cast("double").alias("total_sales"))
-        .orderBy(F.col("total_sales").desc(), "i_item_id")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q62_web_ship_latency",
-    _wh_sql(
-        """
-    SELECT w_substr AS warehouse,
-           sm_type,
-           web_name,
-           CAST(sum(CASE WHEN (ws_ship_date_sk - ws_sold_date_sk <= 30)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d30,
-           CAST(sum(CASE WHEN (ws_ship_date_sk - ws_sold_date_sk > 30)
-                          AND (ws_ship_date_sk - ws_sold_date_sk <= 60)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d60,
-           CAST(sum(CASE WHEN (ws_ship_date_sk - ws_sold_date_sk > 60)
-                          AND (ws_ship_date_sk - ws_sold_date_sk <= 90)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d90,
-           CAST(sum(CASE WHEN (ws_ship_date_sk - ws_sold_date_sk > 90)
-                          AND (ws_ship_date_sk - ws_sold_date_sk <= 120)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d120,
-           CAST(sum(CASE WHEN (ws_ship_date_sk - ws_sold_date_sk > 120)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS dmore
-    FROM web_sales,
-      (SELECT substring(w_warehouse_name, 1, 20) w_substr, *
-       FROM warehouse) sq1,
-         ship_mode,
-         web_site,
-         date_dim
-    WHERE d_month_seq BETWEEN 1176 AND 1187
-      AND ws_ship_date_sk = d_date_sk
-      AND ws_warehouse_sk = w_warehouse_sk
-      AND ws_ship_mode_sk = sm_ship_mode_sk
-      AND ws_web_site_sk = web_site_sk
-    GROUP BY w_substr, sm_type, web_name
-    ORDER BY 1, 2, 3
-    LIMIT 20
-    """,
-        "web_sales",
-        "warehouse",
-        "ship_mode",
-        "web_site",
-        "date_dim",
-    ),
-)
-def tpcds_q62_web_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q62 shape: web shipping latency buckets (sold→ship day
-    gap ≤30/60/90/120/120+) per (warehouse, ship mode, web site). The
-    bucketing is pure column algebra on the fact's two date keys — no
-    date_dim join needed for the gap itself (surrogate keys ARE Julian
-    days), one hash-agg, every dim fixed-size.
-
-    INDEPENDENT oracle (round 6): DuckDB runs the real q62 text
-    (adapted: month_seq window 1176-1187, this tier's aliases, LIMIT
-    20 on the unique (warehouse, sm_type, web_name) order) over the
-    exported gate warehouse."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    wh = gen_warehouse(spark)
-    sm = gen_ship_mode(spark)
-    wsite = gen_web_site(spark)
-    gap = F.col("ws_ship_date_sk") - F.col("ws_sold_date_sk")
-
-    def bucket(lo, hi, name):
-        if hi is None:
-            cond = gap > lo
-        elif lo is None:
-            cond = gap <= hi
-        else:
-            cond = (gap > lo) & (gap <= hi)
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(name)
-
-    return (
-        ws.join(dd, ws.ws_ship_date_sk == dd.d_date_sk)
-        .join(wh, ws.ws_warehouse_sk == wh.w_warehouse_sk)
-        .join(sm, ws.ws_ship_mode_sk == sm.sm_ship_mode_sk)
-        .join(wsite, ws.ws_web_site_sk == wsite.web_site_sk)
-        .where(F.col("d_month_seq").between(1176, 1187))
-        .groupBy(
-            F.substring("w_warehouse_name", 1, 20).alias("warehouse"),
-            "sm_type",
-            "web_name",
-        )
-        .agg(
-            bucket(None, 30, "d30"),
-            bucket(30, 60, "d60"),
-            bucket(60, 90, "d90"),
-            bucket(90, 120, "d120"),
-            bucket(120, None, "dmore"),
-        )
-        .orderBy("warehouse", "sm_type", "web_name")
-        .limit(20)
     )
 
 
@@ -1392,7 +231,7 @@ def tpcds_q16_catalog_order_spread(spark: SparkSession, sf_dir: str) -> DataFram
     leftsemi against the >1-warehouse order list and a leftanti against
     catalog_returns. Both probe sides carry only order numbers.
 
-    INDEPENDENT oracle (round 6): DuckDB runs the real q16 text in its
+    INDEPENDENT oracle: DuckDB runs the real q16 text in its
     native correlated EXISTS/NOT-EXISTS form (adapted: this tier's
     1999 date window on the sold-date key, exact-decimal sums) — a
     different relational formulation than the engine's semi/anti
@@ -1424,387 +263,11 @@ def tpcds_q16_catalog_order_spread(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@register(
-    "tpcds_q21_inventory_pivot",
-    _wh_sql(
-        """
-    SELECT w_warehouse_name, i_item_id,
-           CAST(inv_before AS BIGINT) AS inv_before,
-           CAST(inv_after AS BIGINT) AS inv_after
-    FROM (SELECT w_warehouse_name, i_item_id,
-                 sum(CASE WHEN d_date < CAST('1999-06-01' AS DATE)
-                          THEN inv_quantity_on_hand ELSE 0 END) inv_before,
-                 sum(CASE WHEN d_date >= CAST('1999-06-01' AS DATE)
-                          THEN inv_quantity_on_hand ELSE 0 END) inv_after
-          FROM inventory, warehouse, item, date_dim
-          WHERE i_current_price BETWEEN 0.99 AND 1.49
-            AND i_item_sk = inv_item_sk
-            AND inv_warehouse_sk = w_warehouse_sk
-            AND inv_date_sk = d_date_sk
-            AND d_date BETWEEN CAST('1999-05-01' AS DATE)
-                           AND CAST('1999-07-01' AS DATE)
-          GROUP BY w_warehouse_name, i_item_id) x
-    WHERE inv_before > 0
-      AND CAST(inv_after AS DOUBLE) / inv_before >= 2.0 / 3.0
-      AND CAST(inv_after AS DOUBLE) / inv_before <= 3.0 / 2.0
-    ORDER BY w_warehouse_name, i_item_id
-    LIMIT 20
-    """,
-        "inventory",
-        "warehouse",
-        "item",
-        "date_dim",
-    ),
-)
-def tpcds_q21_inventory_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q21 shape: on-hand inventory before vs after a pivot
-    date per (warehouse, item), keeping items whose balance stayed
-    within ±50%. The inventory grid reduces with one hash-agg; the
-    before/after split is a conditional sum, not two scans."""
-    _gate(spark)
-    inv = _inv(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    wh = gen_warehouse(spark)
-    pivot = "1999-06-01"
-    agged = (
-        inv.join(dd, inv.inv_date_sk == dd.d_date_sk)
-        .join(it, inv.inv_item_sk == it.i_item_sk)
-        .join(wh, inv.inv_warehouse_sk == wh.w_warehouse_sk)
-        .where(F.col("d_date").between("1999-05-01", "1999-07-01"))
-        .where(F.col("i_current_price").between(0.99, 1.49))
-        .groupBy("w_warehouse_name", "i_item_id")
-        .agg(
-            F.sum(F.when(F.col("d_date") < pivot, F.col("inv_quantity_on_hand")).otherwise(0))
-            .cast("bigint")
-            .alias("inv_before"),
-            F.sum(F.when(F.col("d_date") >= pivot, F.col("inv_quantity_on_hand")).otherwise(0))
-            .cast("bigint")
-            .alias("inv_after"),
-        )
-    )
-    return (
-        agged.where(
-            (F.col("inv_before") > 0)
-            & (F.col("inv_after") / F.col("inv_before")).between(2.0 / 3.0, 3.0 / 2.0)
-        )
-        .orderBy("w_warehouse_name", "i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q90_web_ampm_ratio",
-    _wh_sql(
-        """
-    WITH base AS (
-      SELECT t_hour
-      FROM web_sales, time_dim, household_demographics, web_page
-      WHERE ws_sold_time_sk = t_time_sk
-        AND ws_ship_hdemo_sk = hd_demo_sk
-        AND ws_web_page_sk = wp_web_page_sk
-        AND hd_dep_count = 6
-        AND wp_char_count BETWEEN 5000 AND 5200),
-    at_shift AS (SELECT CAST(count(*) AS BIGINT) amc FROM base
-                 WHERE t_hour BETWEEN 8 AND 9),
-    pt_shift AS (SELECT CAST(count(*) AS BIGINT) pmc FROM base
-                 WHERE t_hour BETWEEN 19 AND 20)
-    SELECT amc, pmc,
-           CAST(round(CAST(amc AS DOUBLE) / CAST(pmc AS DOUBLE), 4)
-                AS DOUBLE) AS am_pm_ratio
-    FROM at_shift, pt_shift
-    """,
-        "web_sales",
-        "time_dim",
-        "household_demographics",
-        "web_page",
-    ),
-)
-def tpcds_q90_web_ampm_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q90 shape: morning vs evening web traffic ratio for one
-    demographic and page-size band — two independently filtered scalar
-    aggregates joined by a 1-row cross (the BNLJ stats-stamp pattern)."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    td = gen_time_dim(spark)
-    hd = gen_household_demographics(spark)
-    wp = gen_web_page(spark)
-    base = (
-        ws.join(td, ws.ws_sold_time_sk == td.t_time_sk)
-        .join(hd, ws.ws_ship_hdemo_sk == hd.hd_demo_sk)
-        .join(wp, ws.ws_web_page_sk == wp.wp_web_page_sk)
-        .where((F.col("hd_dep_count") == 6) & F.col("wp_char_count").between(5000, 5200))
-    )
-    am = base.where(F.col("t_hour").between(8, 9)).agg(
-        F.count("*").cast("bigint").alias("amc")
-    )
-    pm = base.where(F.col("t_hour").between(19, 20)).agg(
-        F.count("*").cast("bigint").alias("pmc")
-    )
-    return am.crossJoin(pm).select(
-        "amc",
-        "pmc",
-        F.round(F.col("amc") / F.col("pmc"), 4).cast("double").alias("am_pm_ratio"),
-    )
-
-
-@register(
-    "tpcds_q77_channel_profit_report",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk FROM date_dim
-      WHERE d_date BETWEEN CAST('1998-08-04' AS DATE)
-                       AND CAST('1998-09-03' AS DATE)),
-    sales AS (
-      SELECT 'store channel' channel,
-             CAST(coalesce(sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)) amt,
-             CAST(coalesce(sum(CAST(ss_net_profit AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)) prof
-      FROM store_sales, dates WHERE ss_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'catalog channel',
-             CAST(coalesce(sum(CAST(cs_ext_sales_price AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)),
-             CAST(coalesce(sum(CAST(cs_net_profit AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2))
-      FROM catalog_sales, dates WHERE cs_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'web channel',
-             CAST(coalesce(sum(CAST(ws_ext_sales_price AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)),
-             CAST(coalesce(sum(CAST(ws_net_profit AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2))
-      FROM web_sales, dates WHERE ws_sold_date_sk = d_date_sk),
-    returns AS (
-      SELECT 'store channel' channel,
-             CAST(coalesce(sum(CAST(sr_return_amt AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)) returns_amt,
-             CAST(coalesce(sum(CAST(sr_net_loss AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)) net_loss
-      FROM store_returns, dates WHERE sr_returned_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'catalog channel',
-             CAST(coalesce(sum(CAST(cr_return_amount AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)),
-             CAST(coalesce(sum(CAST(cr_net_loss AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2))
-      FROM catalog_returns, dates WHERE cr_returned_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'web channel',
-             CAST(coalesce(sum(CAST(wr_return_amt AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2)),
-             CAST(coalesce(sum(CAST(wr_net_loss AS DECIMAL(38,12))), 0)
-                  AS DECIMAL(17,2))
-      FROM web_returns, dates WHERE wr_returned_date_sk = d_date_sk)
-    SELECT sales.channel AS channel,
-           CAST(round(amt, 2) AS DOUBLE) AS sales,
-           CAST(round(returns_amt, 2) AS DOUBLE) AS returns,
-           CAST(round(prof - net_loss, 2) AS DOUBLE) AS profit
-    FROM sales JOIN returns ON sales.channel = returns.channel
-    ORDER BY channel
-    """,
-        "date_dim",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-        "store_returns",
-        "catalog_returns",
-        "web_returns",
-    ),
-)
-def tpcds_q77_channel_profit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q77 shape: the per-channel P&L — each channel's sales and
-    returns roll up to ONE row (sales, returns, profit), stitched with
-    a by-name union. Six bounded aggregates; no fact ever joins a fact."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    dates = dd.where(F.col("d_date").between("1998-08-04", "1998-09-03")).select("d_date_sk")
-
-    def leg(fact, date_col, channel, sales_col, profit_col, loss=False):
-        agged = fact.join(dates, F.col(date_col) == F.col("d_date_sk")).agg(
-            F.coalesce(F.sum(sales_col), F.lit(0)).alias("amt"),
-            F.coalesce(F.sum(profit_col), F.lit(0)).alias("prof"),
-        )
-        return agged.select(
-            F.lit(channel).alias("channel"),
-            F.col("amt").cast("decimal(17,2)").alias("amt"),
-            F.col("prof").cast("decimal(17,2)").alias("prof"),
-        )
-
-    sales = (
-        leg(ss, "ss_sold_date_sk", "store channel", "ss_ext_sales_price", "ss_net_profit")
-        .unionByName(leg(cs, "cs_sold_date_sk", "catalog channel", "cs_ext_sales_price", "cs_net_profit"))
-        .unionByName(leg(ws, "ws_sold_date_sk", "web channel", "ws_ext_sales_price", "ws_net_profit"))
-    )
-    returns = (
-        leg(sr, "sr_returned_date_sk", "store channel", "sr_return_amt", "sr_net_loss")
-        .unionByName(leg(cr, "cr_returned_date_sk", "catalog channel", "cr_return_amount", "cr_net_loss"))
-        .unionByName(leg(wr, "wr_returned_date_sk", "web channel", "wr_return_amt", "wr_net_loss"))
-    ).select(
-        "channel",
-        F.col("amt").alias("returns_amt"),
-        F.col("prof").alias("net_loss"),
-    )
-    return (
-        sales.join(returns, "channel")
-        .select(
-            "channel",
-            F.round("amt", 2).cast("double").alias("sales"),
-            F.round("returns_amt", 2).cast("double").alias("returns"),
-            F.round(F.col("prof") - F.col("net_loss"), 2).cast("double").alias("profit"),
-        )
-        .orderBy("channel")
-    )
-
-
-@register(
-    "tpcds_q36_margin_rollup",
-    _wh_sql(
-        """
-    WITH rolled AS (
-      SELECT i_category, i_class,
-             CAST(grouping(i_category, i_class) AS INT) AS lochierarchy,
-             round(sum(CAST(ss_net_profit AS DECIMAL(38,12)))
-                   / sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))), 6)
-               AS gross_margin
-      FROM store_sales, date_dim, item, store
-      WHERE ss_sold_date_sk = d_date_sk
-        AND ss_item_sk = i_item_sk
-        AND ss_store_sk = s_store_sk
-        AND d_year = 1998
-        AND s_state IN ('TN', 'TX', 'OH')
-      GROUP BY ROLLUP (i_category, i_class)),
-    ranked AS (
-      SELECT coalesce(i_category, 'ALL') AS i_category,
-             coalesce(i_class, 'ALL') AS i_class,
-             lochierarchy,
-             CAST(gross_margin AS DOUBLE) AS gross_margin,
-             CAST(rank() OVER (PARTITION BY lochierarchy,
-                    CASE WHEN lochierarchy = 1 THEN i_category END
-                    ORDER BY gross_margin ASC) AS INT) AS rank_within_parent
-      FROM rolled)
-    SELECT * FROM ranked
-    ORDER BY lochierarchy DESC, i_category, rank_within_parent, i_class
-    LIMIT 20
-    """,
-        "store_sales",
-        "date_dim",
-        "item",
-        "store",
-    ),
-)
-def tpcds_q36_margin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q36 shape: gross-margin ROLLUP over (category, class)
-    with the rank-within-parent window — the spec's grouping-sets
-    pattern. `.rollup()` emits the three grouping levels in one pass
-    (Spark expands grouping sets inside the single hash-agg shuffle);
-    `grouping_id` labels the level (lochierarchy) and the rank window
-    partitions over rolled-up rows only. Margin stays exact decimal
-    until the final round."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    rolled = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where((F.col("d_year") == 1998) & F.col("s_state").isin("TN", "TX", "OH"))
-        .rollup("i_category", "i_class")
-        .agg(
-            F.sum("ss_net_profit").alias("profit"),
-            F.sum("ss_ext_sales_price").alias("sales"),
-            F.grouping_id().alias("lochierarchy"),
-        )
-        .select(
-            "i_category",
-            "i_class",
-            F.col("lochierarchy").cast("int").alias("lochierarchy"),
-            F.round(F.col("profit") / F.col("sales"), 6).alias("gross_margin"),
-        )
-    )
-    w = Window.partitionBy(
-        "lochierarchy", F.when(F.col("lochierarchy") == 1, F.col("i_category"))
-    ).orderBy(F.col("gross_margin").asc())
-    return (
-        rolled.select(
-            F.coalesce("i_category", F.lit("ALL")).alias("i_category"),
-            F.coalesce("i_class", F.lit("ALL")).alias("i_class"),
-            "lochierarchy",
-            F.col("gross_margin").cast("double").alias("gross_margin"),
-            F.rank().over(w).cast("int").alias("rank_within_parent"),
-        )
-        .orderBy(
-            F.col("lochierarchy").desc(), "i_category", "rank_within_parent", "i_class"
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q38_three_channel_intersect",
-    _wh_sql(
-        """
-    SELECT CAST(count(*) AS BIGINT) AS hot_customers FROM (
-      SELECT DISTINCT ss_customer_sk AS customer_sk
-      FROM store_sales, date_dim
-      WHERE ss_sold_date_sk = d_date_sk AND d_month_seq BETWEEN 1176 AND 1178
-      INTERSECT
-      SELECT DISTINCT cs_bill_customer_sk
-      FROM catalog_sales, date_dim
-      WHERE cs_sold_date_sk = d_date_sk AND d_month_seq BETWEEN 1176 AND 1178
-      INTERSECT
-      SELECT DISTINCT ws_bill_customer_sk
-      FROM web_sales, date_dim
-      WHERE ws_sold_date_sk = d_date_sk AND d_month_seq BETWEEN 1176 AND 1178
-    ) hot
-    """,
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-        "date_dim",
-    ),
-)
-def tpcds_q38_three_channel_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q38 shape: customers active in ALL THREE channels inside
-    one quarter — the spec's INTERSECT chain. Each channel reduces to a
-    distinct customer-key set BEFORE intersecting (Spark plans
-    intersect as a distinct + semi-join ladder), so the set operation
-    never carries fact rows."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    dates = dd.where(F.col("d_month_seq").between(1176, 1178)).select("d_date_sk")
-
-    def channel_customers(fact, date_col, cust_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .select(F.col(cust_col).alias("customer_sk"))
-            .distinct()
-        )
-
-    common = (
-        channel_customers(ss, "ss_sold_date_sk", "ss_customer_sk")
-        .intersect(channel_customers(cs, "cs_sold_date_sk", "cs_bill_customer_sk"))
-        .intersect(channel_customers(ws, "ws_sold_date_sk", "ws_bill_customer_sk"))
-    )
-    return common.agg(F.count("*").cast("bigint").alias("hot_customers"))
-
-
 def _wh_audit_oracle() -> str:
     """Cross-engine oracle for the warehouse-build audit: DuckDB opens
     every Spark-written parquet table of the gate export itself and
-    recounts. Until round 6 this oracle was a pinned-VALUES block (the
-    last one in the tier); now the check is independent — a schema the
-    writer corrupts, a file DuckDB can't parse, or a dropped row fails
-    the hash."""
+    recounts, so a schema the writer corrupts, a file DuckDB can't
+    parse, or a dropped row fails the hash."""
     from lakehouse_dba_tools_spark.datagen.export import CORE_TABLES, rp
 
     units = "\n      UNION ALL\n      ".join(
@@ -1836,7 +299,7 @@ def tpcds_warehouse_build_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = ensure_gate_export(spark)
     # 24 independent read-back counts (column-less parquet scans, one
     # task-wave each — latency-bound metadata jobs) overlapped from
-    # driver threads (guide §2.6; indexio.overlap_jobs). The cap is
+    # driver threads (indexio.overlap_jobs). The cap is
     # raised above the writer-verb default because these jobs occupy
     # almost no executor capacity: measured min-of-3 at gate SF, cap
     # 24 → 1.56s, cap 4 → 2.02s, and a single union-of-aggregates job
@@ -1854,520 +317,6 @@ def tpcds_warehouse_build_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = list(zip(names, counts))
     return spark.createDataFrame(rows, "table_name string, n_rows bigint").orderBy(
         "table_name"
-    )
-
-
-@register(
-    "tpcds_q74_yoy_growth",
-    _wh_sql(
-        """
-    WITH year_total AS (
-      SELECT ss_customer_sk customer_sk, d_year,
-             sum(CAST(ss_net_paid AS DECIMAL(38,12))) year_total,
-             's' sale_type
-      FROM store_sales, date_dim
-      WHERE ss_sold_date_sk = d_date_sk
-      GROUP BY ss_customer_sk, d_year
-      UNION ALL
-      SELECT ws_bill_customer_sk, d_year,
-             sum(CAST(ws_net_paid AS DECIMAL(38,12))), 'w'
-      FROM web_sales, date_dim
-      WHERE ws_sold_date_sk = d_date_sk
-      GROUP BY ws_bill_customer_sk, d_year)
-    SELECT c_customer_id, c_first_name, c_last_name,
-           CAST(round(CAST(t_w_secyear.year_total AS DOUBLE)
-                      / CAST(t_w_firstyear.year_total AS DOUBLE), 6)
-                AS DOUBLE) AS web_ratio
-    FROM year_total t_s_firstyear, year_total t_s_secyear,
-         year_total t_w_firstyear, year_total t_w_secyear, customer
-    WHERE t_s_secyear.customer_sk = t_s_firstyear.customer_sk
-      AND t_s_firstyear.customer_sk = t_w_firstyear.customer_sk
-      AND t_s_firstyear.customer_sk = t_w_secyear.customer_sk
-      AND t_s_firstyear.customer_sk = c_customer_sk
-      AND t_s_firstyear.sale_type = 's' AND t_w_firstyear.sale_type = 'w'
-      AND t_s_secyear.sale_type = 's' AND t_w_secyear.sale_type = 'w'
-      AND t_s_firstyear.d_year = 1998 AND t_s_secyear.d_year = 1999
-      AND t_w_firstyear.d_year = 1998 AND t_w_secyear.d_year = 1999
-      AND t_s_firstyear.year_total > 0
-      AND t_w_firstyear.year_total > 0
-      AND CAST(t_w_secyear.year_total AS DOUBLE)
-          / CAST(t_w_firstyear.year_total AS DOUBLE)
-          > CAST(t_s_secyear.year_total AS DOUBLE)
-            / CAST(t_s_firstyear.year_total AS DOUBLE)
-    ORDER BY c_customer_id
-    LIMIT 15
-    """,
-        "store_sales",
-        "web_sales",
-        "date_dim",
-        "customer",
-    ),
-)
-def tpcds_q74_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q74 shape: customers whose web spending grew FASTER
-    year-over-year than their store spending.
-
-    One pass per channel (the q4/q64 fold): the earlier rollup-then-
-    four-filtered-legs form pushed each leg's (sale_type, d_year)
-    filter below the exchange, so ReuseExchange never fired and every
-    fact pipeline executed twice. With exactly two fixed years the
-    self-join folds into conditional year partials per customer;
-    requiring both partials non-null is the inner self-join's
-    both-years-present semantics (the oracle's >0 / NULL-comparison
-    predicates reject the same rows)."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-
-    def year_pair(fact, date_col, cust_col, paid_col, label):
-        return (
-            fact.join(dd, F.col(date_col) == dd.d_date_sk)
-            .where(F.col("d_year").isin(1998, 1999))
-            .groupBy(F.col(cust_col).alias("customer_sk"))
-            .agg(
-                F.sum(F.when(F.col("d_year") == 1998, F.col(paid_col))).alias(
-                    f"{label}1_total"
-                ),
-                F.sum(F.when(F.col("d_year") == 1999, F.col(paid_col))).alias(
-                    f"{label}2_total"
-                ),
-            )
-            .where(
-                F.col(f"{label}1_total").isNotNull()
-                & F.col(f"{label}2_total").isNotNull()
-            )
-        )
-
-    s = year_pair(ss, "ss_sold_date_sk", "ss_customer_sk", "ss_net_paid", "s")
-    w = year_pair(ws, "ws_sold_date_sk", "ws_bill_customer_sk", "ws_net_paid", "w")
-    joined = (
-        s.join(w, "customer_sk")
-        .where((F.col("s1_total") > 0) & (F.col("w1_total") > 0))
-        .where(
-            (F.col("w2_total") / F.col("w1_total"))
-            > (F.col("s2_total") / F.col("s1_total"))
-        )
-    )
-    return (
-        joined.join(cu, joined.customer_sk == cu.c_customer_sk)
-        .select(
-            "c_customer_id",
-            "c_first_name",
-            "c_last_name",
-            F.round(F.col("w2_total") / F.col("w1_total"), 6).cast("double").alias("web_ratio"),
-        )
-        .orderBy("c_customer_id")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q59_wow_revenue",
-    _wh_sql(
-        """
-    WITH wss AS (
-      SELECT d_week_seq, ss_store_sk,
-             sum(CAST(CASE WHEN d_day_name = 'Sunday'
-                           THEN ss_sales_price END AS DECIMAL(38,12))) sun_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Monday'
-                           THEN ss_sales_price END AS DECIMAL(38,12))) mon_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Friday'
-                           THEN ss_sales_price END AS DECIMAL(38,12))) fri_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Saturday'
-                           THEN ss_sales_price END AS DECIMAL(38,12))) sat_sales
-      FROM store_sales, date_dim
-      WHERE d_date_sk = ss_sold_date_sk
-      GROUP BY d_week_seq, ss_store_sk)
-    SELECT s_store_name,
-           CAST(y.ss_store_sk AS INT) AS store_sk,
-           CAST(y.d_week_seq AS INT) AS week_seq,
-           CAST(round(CAST(x.sun_sales AS DOUBLE)
-                      / CAST(y.sun_sales AS DOUBLE), 6) AS DOUBLE) AS sun_ratio,
-           CAST(round(CAST(x.mon_sales AS DOUBLE)
-                      / CAST(y.mon_sales AS DOUBLE), 6) AS DOUBLE) AS mon_ratio,
-           CAST(round(CAST(x.fri_sales AS DOUBLE)
-                      / CAST(y.fri_sales AS DOUBLE), 6) AS DOUBLE) AS fri_ratio,
-           CAST(round(CAST(x.sat_sales AS DOUBLE)
-                      / CAST(y.sat_sales AS DOUBLE), 6) AS DOUBLE) AS sat_ratio
-    FROM wss y, wss x, store
-    WHERE y.d_week_seq BETWEEN 5113 AND 5164
-      AND x.d_week_seq BETWEEN 5165 AND 5216
-      AND y.ss_store_sk = x.ss_store_sk
-      AND y.d_week_seq = x.d_week_seq - 52
-      AND y.ss_store_sk = s_store_sk
-    ORDER BY s_store_name, store_sk, week_seq
-    LIMIT 15
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-    ),
-)
-def tpcds_q59_wow_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q59 shape: per-store weekly revenue by day-of-week,
-    self-joined one year apart (week_seq vs week_seq - 52) to report
-    week-over-week ratios — the time-shifted self-join on a rolled-up
-    key. Both join inputs are (store, week) grained aggregates; the
-    52-week shift happens in the join condition, never by re-scanning."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    wk = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .groupBy("d_week_seq", F.col("ss_store_sk").alias("store_sk"))
-        .agg(
-            F.sum(F.when(F.col("d_day_name") == "Sunday", F.col("ss_sales_price"))).alias("sun_sales"),
-            F.sum(F.when(F.col("d_day_name") == "Monday", F.col("ss_sales_price"))).alias("mon_sales"),
-            F.sum(F.when(F.col("d_day_name") == "Friday", F.col("ss_sales_price"))).alias("fri_sales"),
-            F.sum(F.when(F.col("d_day_name") == "Saturday", F.col("ss_sales_price"))).alias("sat_sales"),
-        )
-    )
-    # one contiguous year of weeks starting 1998-01-01's week
-    base_week = 5113  # week_seq of 1998-01-01 under the 1900-01-01 epoch convention
-    y1 = wk.where(F.col("d_week_seq").between(base_week, base_week + 51)).select(
-        F.col("store_sk"), F.col("d_week_seq").alias("w1"),
-        F.col("sun_sales").alias("sun1"), F.col("mon_sales").alias("mon1"),
-        F.col("fri_sales").alias("fri1"), F.col("sat_sales").alias("sat1"),
-    )
-    y2 = wk.where(
-        F.col("d_week_seq").between(base_week + 52, base_week + 103)
-    ).select(
-        F.col("store_sk").alias("store_sk2"), (F.col("d_week_seq") - 52).alias("w2"),
-        F.col("sun_sales").alias("sun2"), F.col("mon_sales").alias("mon2"),
-        F.col("fri_sales").alias("fri2"), F.col("sat_sales").alias("sat2"),
-    )
-    joined = y1.join(
-        y2, (y1.store_sk == F.col("store_sk2")) & (y1.w1 == F.col("w2"))
-    ).join(st, y1.store_sk == st.s_store_sk)
-
-    def ratio(a, b, name):
-        # IEEE-double division on BOTH engines (oracle casts its exact
-        # decimal week sums to DOUBLE the same way) — engine decimal
-        # quotient scales differ, doubles don't
-        return (
-            F.round(F.col(a).cast("double") / F.col(b).cast("double"), 6)
-            .cast("double")
-            .alias(name)
-        )
-
-    return (
-        joined.select(
-            "s_store_name",
-            F.col("s_store_sk").cast("int").alias("store_sk"),
-            F.col("w1").cast("int").alias("week_seq"),
-            ratio("sun2", "sun1", "sun_ratio"),
-            ratio("mon2", "mon1", "mon_ratio"),
-            ratio("fri2", "fri1", "fri_ratio"),
-            ratio("sat2", "sat1", "sat_ratio"),
-        )
-        .orderBy("s_store_name", "store_sk", "week_seq")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q97_channel_overlap",
-    _wh_sql(
-        """
-    WITH ssci AS (
-      SELECT DISTINCT ss_customer_sk customer_sk, ss_item_sk item_sk
-      FROM store_sales, date_dim
-      WHERE ss_sold_date_sk = d_date_sk AND d_month_seq BETWEEN 1176 AND 1181),
-    csci AS (
-      SELECT DISTINCT cs_bill_customer_sk customer_sk, cs_item_sk item_sk
-      FROM catalog_sales, date_dim
-      WHERE cs_sold_date_sk = d_date_sk AND d_month_seq BETWEEN 1176 AND 1181)
-    SELECT CAST(sum(CASE WHEN ssci.customer_sk IS NOT NULL
-                          AND csci.customer_sk IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS store_only,
-           CAST(sum(CASE WHEN ssci.customer_sk IS NULL
-                          AND csci.customer_sk IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS catalog_only,
-           CAST(sum(CASE WHEN ssci.customer_sk IS NOT NULL
-                          AND csci.customer_sk IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS store_and_catalog
-    FROM ssci FULL OUTER JOIN csci
-      ON (ssci.customer_sk = csci.customer_sk AND ssci.item_sk = csci.item_sk)
-    """,
-        "store_sales",
-        "catalog_sales",
-        "date_dim",
-    ),
-)
-def tpcds_q97_channel_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q97 shape: classify (customer, item) purchase pairs as
-    store-only / catalog-only / both via a FULL OUTER join of the two
-    channels' DISTINCT key sets — set reconciliation as one outer join
-    over aggregated keys, counted with null-pattern conditionals."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    dates = dd.where(F.col("d_month_seq").between(1176, 1181)).select("d_date_sk")
-    ssci = (
-        ss.join(dates, ss.ss_sold_date_sk == F.col("d_date_sk"))
-        .select(
-            F.col("ss_customer_sk").alias("s_customer_sk"),
-            F.col("ss_item_sk").alias("s_item_sk"),
-        )
-        .distinct()
-    )
-    csci = (
-        cs.join(dates, cs.cs_sold_date_sk == F.col("d_date_sk"))
-        .select(
-            F.col("cs_bill_customer_sk").alias("c_customer_sk"),
-            F.col("cs_item_sk").alias("c_item_sk"),
-        )
-        .distinct()
-    )
-    both = ssci.join(
-        csci,
-        (F.col("s_customer_sk") == F.col("c_customer_sk"))
-        & (F.col("s_item_sk") == F.col("c_item_sk")),
-        "fullouter",
-    )
-    return both.agg(
-        F.sum(
-            F.when(
-                F.col("s_customer_sk").isNotNull() & F.col("c_customer_sk").isNull(), 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("store_only"),
-        F.sum(
-            F.when(
-                F.col("s_customer_sk").isNull() & F.col("c_customer_sk").isNotNull(), 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("catalog_only"),
-        F.sum(
-            F.when(
-                F.col("s_customer_sk").isNotNull() & F.col("c_customer_sk").isNotNull(), 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("store_and_catalog"),
-    )
-
-
-@register(
-    "tpcds_q23_frequent_best_basket",
-    _wh_sql(
-        """
-    WITH frequent_ss_items AS (
-      SELECT DISTINCT item_sk FROM (
-        SELECT ss_item_sk item_sk
-        FROM store_sales, date_dim
-        WHERE ss_sold_date_sk = d_date_sk
-        GROUP BY ss_item_sk, d_year
-        HAVING count(*) > 6)),
-    customer_spend AS (
-      SELECT ss_customer_sk,
-             sum(CAST(ss_quantity * ss_sales_price AS DECIMAL(38,12))) csales
-      FROM store_sales
-      GROUP BY ss_customer_sk),
-    best_ss_customer AS (
-      SELECT ss_customer_sk FROM customer_spend
-      WHERE csales > 0.5 * (SELECT max(csales) FROM customer_spend))
-    SELECT CAST(round(sum(CAST(sales AS DECIMAL(38,12))), 2) AS DOUBLE)
-           AS total_sales
-    FROM (
-      SELECT cs_quantity * cs_sales_price sales
-      FROM catalog_sales, date_dim
-      WHERE d_year = 1999 AND d_moy = 3 AND cs_sold_date_sk = d_date_sk
-        AND cs_item_sk IN (SELECT item_sk FROM frequent_ss_items)
-        AND cs_bill_customer_sk IN (SELECT ss_customer_sk FROM best_ss_customer)
-      UNION ALL
-      SELECT ws_quantity * ws_sales_price sales
-      FROM web_sales, date_dim
-      WHERE d_year = 1999 AND d_moy = 3 AND ws_sold_date_sk = d_date_sk
-        AND ws_item_sk IN (SELECT item_sk FROM frequent_ss_items)
-        AND ws_bill_customer_sk IN (SELECT ss_customer_sk FROM best_ss_customer))
-    """,
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-        "date_dim",
-    ),
-)
-def tpcds_q23_frequent_best_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q23 shape: one month's catalog+web revenue restricted to
-    FREQUENT items (bought >6× in a year) and BEST customers (store
-    spend above half the max customer's) — two derived filter sets
-    reused across both channels, the max threshold a 1-row scalar
-    broadcast. Both sets are aggregates (item- and customer-grained),
-    so the channel facts take two semi-joins, never a fact-fact join."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    frequent_items = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .groupBy("ss_item_sk", "d_year")
-        .agg(F.count("*").alias("cnt"))
-        .where(F.col("cnt") > 6)
-        .select(F.col("ss_item_sk").alias("freq_item_sk"))
-        .distinct()
-    )
-    spend = ss.groupBy("ss_customer_sk").agg(
-        F.sum(F.col("ss_quantity") * F.col("ss_sales_price")).alias("csales")
-    )
-    tpcds_cmax = spend.agg(F.max("csales").alias("tpcds_cmax"))
-    best_customers = (
-        spend.crossJoin(F.broadcast(tpcds_cmax))
-        .where(F.col("csales") > 0.5 * F.col("tpcds_cmax"))
-        .select(F.col("ss_customer_sk").alias("best_cust_sk"))
-    )
-    month = dd.where((F.col("d_year") == 1999) & (F.col("d_moy") == 3)).select("d_date_sk")
-
-    def channel(fact, date_col, cust_col, item_col, qty_col, price_col):
-        return (
-            fact.join(month, F.col(date_col) == F.col("d_date_sk"))
-            .join(frequent_items, F.col(item_col) == F.col("freq_item_sk"), "leftsemi")
-            .join(best_customers, F.col(cust_col) == F.col("best_cust_sk"), "leftsemi")
-            .select((F.col(qty_col) * F.col(price_col)).alias("sales"))
-        )
-
-    unioned = channel(
-        cs, "cs_sold_date_sk", "cs_bill_customer_sk", "cs_item_sk", "cs_quantity", "cs_sales_price"
-    ).unionByName(
-        channel(
-            ws, "ws_sold_date_sk", "ws_bill_customer_sk", "ws_item_sk", "ws_quantity", "ws_sales_price"
-        )
-    )
-    return unioned.agg(_money("sales").alias("total_sales"))
-
-
-@register(
-    "tpcds_q93_net_of_returns",
-    _wh_sql(
-        """
-    SELECT ss_customer_sk,
-           CAST(round(sum(CAST(act_sales AS DECIMAL(38,12))), 2) AS DOUBLE)
-             AS sumsales
-    FROM (SELECT ss_customer_sk, ss_quantity, ss_sales_price,
-                 CASE WHEN sr_return_quantity IS NOT NULL
-                      THEN (ss_quantity - sr_return_quantity) * ss_sales_price
-                      ELSE ss_quantity * ss_sales_price END act_sales
-          FROM store_sales
-          LEFT OUTER JOIN (SELECT * FROM store_returns
-                           WHERE sr_reason_sk = 7) sr
-            ON (sr_item_sk = ss_item_sk
-                AND sr_ticket_number = ss_ticket_number)) t
-    GROUP BY ss_customer_sk
-    ORDER BY sumsales DESC, ss_customer_sk
-    LIMIT 15
-    """,
-        "store_sales",
-        "store_returns",
-    ),
-)
-def tpcds_q93_net_of_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q93 shape: per-customer actual revenue NET of returns —
-    the sales fact LEFT-joins its returns fact on the line key
-    (ticket, item) and each line contributes (qty - returned_qty) ×
-    price when a return matched, else the full amount. The only
-    fact-fact join in the tier, co-keyed on the returns' natural join
-    key; both sides hash the same (ticket, item) so at scale this is
-    the bucketed-join candidate (SCALE.md MERGE notes apply)."""
-    _gate(spark)
-    ss, _, _ = _star(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-    r = sr.where(F.col("sr_reason_sk") == 7).select(
-        "sr_ticket_number", "sr_item_sk", "sr_return_quantity"
-    )
-    joined = ss.join(
-        r,
-        (ss.ss_ticket_number == r.sr_ticket_number) & (ss.ss_item_sk == r.sr_item_sk),
-        "left",
-    )
-    act = joined.select(
-        "ss_customer_sk",
-        F.when(
-            F.col("sr_return_quantity").isNotNull(),
-            (F.col("ss_quantity") - F.col("sr_return_quantity")) * F.col("ss_sales_price"),
-        )
-        .otherwise(F.col("ss_quantity") * F.col("ss_sales_price"))
-        .alias("act_sales"),
-    )
-    return (
-        act.groupBy("ss_customer_sk")
-        .agg(_money("act_sales").alias("sumsales"))
-        .orderBy(F.col("sumsales").desc(), F.col("ss_customer_sk"))
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q69_inactive_channel_demo",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk FROM date_dim
-      WHERE d_year = 1999 AND d_moy BETWEEN 1 AND 3)
-    SELECT cd_gender, cd_marital_status, cd_education_status,
-           CAST(count(*) AS BIGINT) AS cnt
-    FROM customer c, customer_demographics
-    WHERE c.c_current_cdemo_sk = cd_demo_sk
-      AND EXISTS (SELECT * FROM store_sales, dates
-                  WHERE c.c_customer_sk = ss_customer_sk
-                    AND ss_sold_date_sk = d_date_sk)
-      AND NOT EXISTS (SELECT * FROM catalog_sales, dates
-                      WHERE c.c_customer_sk = cs_bill_customer_sk
-                        AND cs_sold_date_sk = d_date_sk)
-      AND NOT EXISTS (SELECT * FROM web_sales, dates
-                      WHERE c.c_customer_sk = ws_bill_customer_sk
-                        AND ws_sold_date_sk = d_date_sk)
-    GROUP BY cd_gender, cd_marital_status, cd_education_status
-    ORDER BY cd_gender, cd_marital_status, cd_education_status
-    LIMIT 20
-    """,
-        "date_dim",
-        "customer",
-        "customer_demographics",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-    ),
-)
-def tpcds_q69_inactive_channel_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q69 shape: demographic profile of customers who bought
-    in-store during a quarter but NOT by catalog or web — one
-    semi-join and two anti-joins against per-channel customer key
-    sets, then the demographics rollup. The probe sides carry only
-    customer keys."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    cd = gen_customer_demographics(spark)
-    dates = dd.where((F.col("d_year") == 1999) & F.col("d_moy").between(1, 3)).select(
-        "d_date_sk"
-    )
-
-    def active(fact, date_col, cust_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .select(F.col(cust_col).alias("active_sk"))
-            .distinct()
-        )
-
-    store_active = active(ss, "ss_sold_date_sk", "ss_customer_sk")
-    cat_active = active(cs, "cs_sold_date_sk", "cs_bill_customer_sk")
-    web_active = active(ws, "ws_sold_date_sk", "ws_bill_customer_sk")
-    chosen = (
-        cu.join(store_active, cu.c_customer_sk == F.col("active_sk"), "leftsemi")
-        .join(cat_active, cu.c_customer_sk == F.col("active_sk"), "leftanti")
-        .join(web_active, cu.c_customer_sk == F.col("active_sk"), "leftanti")
-    )
-    return (
-        chosen.join(cd, chosen.c_current_cdemo_sk == cd.cd_demo_sk)
-        .groupBy("cd_gender", "cd_marital_status", "cd_education_status")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .orderBy("cd_gender", "cd_marital_status", "cd_education_status")
-        .limit(20)
     )
 
 
@@ -2494,1668 +443,6 @@ def tpcds_q51_cumulative_crossover(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 @register(
-    "tpcds_q70_state_profit_ranking",
-    _wh_sql(
-        """
-    WITH dates AS (SELECT d_date_sk FROM date_dim
-                   WHERE d_month_seq BETWEEN 1176 AND 1187),
-    base AS (
-      SELECT s_state, s_county, ss_net_profit
-      FROM store_sales, dates, store
-      WHERE ss_sold_date_sk = d_date_sk AND ss_store_sk = s_store_sk),
-    top_states AS (
-      SELECT rank_state FROM (
-        SELECT s_state rank_state,
-               rank() OVER (ORDER BY sum(CAST(ss_net_profit
-                    AS DECIMAL(38,12))) DESC, s_state) state_r
-        FROM base GROUP BY s_state) r
-      WHERE state_r <= 5),
-    rolled AS (
-      SELECT CAST(round(sum(CAST(ss_net_profit AS DECIMAL(38,12))), 2)
-                  AS DOUBLE) AS total_sum,
-             s_state, s_county,
-             CAST(grouping(s_state) + grouping(s_county) AS INT)
-               AS lochierarchy
-      FROM base
-      WHERE s_state IN (SELECT rank_state FROM top_states)
-      GROUP BY ROLLUP (s_state, s_county))
-    SELECT total_sum, s_state, s_county, lochierarchy,
-           CAST(rank() OVER (PARTITION BY lochierarchy,
-                  CASE WHEN lochierarchy = 0 THEN s_state END
-                  ORDER BY total_sum DESC, s_state NULLS FIRST,
-                           s_county NULLS FIRST) AS INT)
-             AS rank_within_parent
-    FROM rolled
-    ORDER BY lochierarchy DESC, s_state NULLS FIRST,
-             rank_within_parent, s_county NULLS FIRST
-    LIMIT 20
-    """,
-        "date_dim",
-        "store_sales",
-        "store",
-    ),
-)
-def tpcds_q70_state_profit_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q70 shape: store net profit by ROLLUP(state, county),
-    restricted to the top-5 profit states (the spec's nested ranking
-    subquery → here a window rank + left-semi join on state), with
-    ``lochierarchy = grouping(state)+grouping(county)`` and a
-    rank-within-parent window over the rollup output.
-
-    Scale: the fact reduces with one hash-agg before any window; the
-    top-state probe side is a handful of rows (leftsemi broadcast);
-    rollup rows are dim-sized so both windows are trivial."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    dates = dd.where(F.col("d_month_seq").between(1176, 1187)).select("d_date_sk")
-    base = (
-        ss.join(dates, ss.ss_sold_date_sk == F.col("d_date_sk"))
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .select("s_state", "s_county", "ss_net_profit")
-    )
-    state_rank = (
-        base.groupBy(F.col("s_state").alias("rank_state"))
-        .agg(F.sum("ss_net_profit").alias("state_profit"))
-        .select(
-            "rank_state",
-            F.rank()
-            .over(Window.orderBy(F.col("state_profit").desc(), F.col("rank_state")))
-            .alias("state_r"),
-        )
-        .where(F.col("state_r") <= 5)
-        .select("rank_state")
-    )
-    rolled = (
-        base.join(state_rank, base.s_state == F.col("rank_state"), "leftsemi")
-        .rollup("s_state", "s_county")
-        .agg(
-            _money("ss_net_profit").alias("total_sum"),
-            (F.grouping("s_state") + F.grouping("s_county"))
-            .cast("int")
-            .alias("lochierarchy"),
-        )
-    )
-    wr = Window.partitionBy(
-        "lochierarchy",
-        F.when(F.col("lochierarchy") == 0, F.col("s_state")),
-    ).orderBy(F.col("total_sum").desc(), F.col("s_state"), F.col("s_county"))
-    return (
-        rolled.select(
-            "total_sum",
-            "s_state",
-            "s_county",
-            "lochierarchy",
-            F.rank().over(wr).cast("int").alias("rank_within_parent"),
-        )
-        .orderBy(
-            F.col("lochierarchy").desc(),
-            F.col("s_state"),
-            F.col("rank_within_parent"),
-            F.col("s_county"),
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q87_store_only_customers",
-    _wh_sql(
-        """
-    SELECT CAST(count(*) AS BIGINT) AS num_store_only FROM (
-      (SELECT DISTINCT c_last_name, c_first_name, d_date
-       FROM store_sales, date_dim, customer
-       WHERE store_sales.ss_sold_date_sk = date_dim.d_date_sk
-         AND store_sales.ss_customer_sk = customer.c_customer_sk
-         AND d_month_seq BETWEEN 1176 AND 1178)
-      EXCEPT
-      (SELECT DISTINCT c_last_name, c_first_name, d_date
-       FROM catalog_sales, date_dim, customer
-       WHERE catalog_sales.cs_sold_date_sk = date_dim.d_date_sk
-         AND catalog_sales.cs_bill_customer_sk = customer.c_customer_sk
-         AND d_month_seq BETWEEN 1176 AND 1178)
-      EXCEPT
-      (SELECT DISTINCT c_last_name, c_first_name, d_date
-       FROM web_sales, date_dim, customer
-       WHERE web_sales.ws_sold_date_sk = date_dim.d_date_sk
-         AND web_sales.ws_bill_customer_sk = customer.c_customer_sk
-         AND d_month_seq BETWEEN 1176 AND 1178)
-    ) cool_cust
-    """,
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-        "date_dim",
-        "customer",
-    ),
-)
-def tpcds_q87_store_only_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q87 shape: how many distinct (last, first, purchase-date)
-    customer-day triples bought in-store but never by catalog or web
-    that quarter — the spec's double EXCEPT over three channel
-    projections, expressed with ``subtract`` (EXCEPT DISTINCT) so each
-    channel reduces to its distinct triple set first.
-
-    Scale: each leg is (names × day) — already deduplicated before the
-    set difference, so the EXCEPTs shuffle only distinct triples; the
-    fact tables never meet each other directly."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    dates = dd.where(F.col("d_month_seq").between(1176, 1178)).select(
-        "d_date_sk", "d_date"
-    )
-
-    def triples(fact, date_col, cust_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(cu, F.col(cust_col) == cu.c_customer_sk)
-            .select("c_last_name", "c_first_name", "d_date")
-            .distinct()
-        )
-
-    store_t = triples(ss, "ss_sold_date_sk", "ss_customer_sk")
-    cat_t = triples(cs, "cs_sold_date_sk", "cs_bill_customer_sk")
-    web_t = triples(ws, "ws_sold_date_sk", "ws_bill_customer_sk")
-    remaining = store_t.subtract(cat_t).subtract(web_t)
-    return remaining.agg(F.count("*").cast("bigint").alias("num_store_only"))
-
-
-@register(
-    "tpcds_q49_worst_return_ratios",
-    _wh_sql(
-        """
-    WITH dates AS (SELECT d_date_sk FROM date_dim
-                   WHERE d_year = 1999 AND d_moy = 12),
-    web_tmp AS (
-      SELECT ws_item_sk item,
-             sum(coalesce(wr_return_quantity, 0)) ret_qty,
-             sum(ws_quantity) sold_qty,
-             sum(coalesce(CAST(wr_return_amt AS DECIMAL(38,12)), 0)) ret_amt,
-             sum(CAST(ws_net_paid AS DECIMAL(38,12))) paid_amt
-      FROM web_sales
-      JOIN dates ON ws_sold_date_sk = d_date_sk
-      LEFT JOIN web_returns ON ws_item_sk = wr_item_sk AND ws_order_number = wr_order_number
-      WHERE ws_quantity > 0 AND ws_net_paid > 0
-      GROUP BY ws_item_sk),
-    web_rank AS (
-      SELECT 'web' channel, item,
-             CAST(round(CAST(ret_qty AS DOUBLE) / sold_qty, 4) AS DOUBLE)
-               return_ratio,
-             CAST(rank() OVER (ORDER BY CAST(ret_qty AS DOUBLE) / sold_qty
-                  DESC, item) AS INT) return_rank,
-             CAST(rank() OVER (ORDER BY CAST(ret_amt AS DOUBLE)
-                  / CAST(paid_amt AS DOUBLE) DESC, item) AS INT)
-               currency_rank
-      FROM web_tmp),
-    catalog_tmp AS (
-      SELECT cs_item_sk item,
-             sum(coalesce(cr_return_quantity, 0)) ret_qty,
-             sum(cs_quantity) sold_qty,
-             sum(coalesce(CAST(cr_return_amount AS DECIMAL(38,12)), 0)) ret_amt,
-             sum(CAST(cs_net_paid AS DECIMAL(38,12))) paid_amt
-      FROM catalog_sales
-      JOIN dates ON cs_sold_date_sk = d_date_sk
-      LEFT JOIN catalog_returns ON cs_item_sk = cr_item_sk AND cs_order_number = cr_order_number
-      WHERE cs_quantity > 0 AND cs_net_paid > 0
-      GROUP BY cs_item_sk),
-    catalog_rank AS (
-      SELECT 'catalog' channel, item,
-             CAST(round(CAST(ret_qty AS DOUBLE) / sold_qty, 4) AS DOUBLE)
-               return_ratio,
-             CAST(rank() OVER (ORDER BY CAST(ret_qty AS DOUBLE) / sold_qty
-                  DESC, item) AS INT) return_rank,
-             CAST(rank() OVER (ORDER BY CAST(ret_amt AS DOUBLE)
-                  / CAST(paid_amt AS DOUBLE) DESC, item) AS INT)
-               currency_rank
-      FROM catalog_tmp),
-    store_tmp AS (
-      SELECT ss_item_sk item,
-             sum(coalesce(sr_return_quantity, 0)) ret_qty,
-             sum(ss_quantity) sold_qty,
-             sum(coalesce(CAST(sr_return_amt AS DECIMAL(38,12)), 0)) ret_amt,
-             sum(CAST(ss_net_paid AS DECIMAL(38,12))) paid_amt
-      FROM store_sales
-      JOIN dates ON ss_sold_date_sk = d_date_sk
-      LEFT JOIN store_returns ON ss_item_sk = sr_item_sk AND ss_ticket_number = sr_ticket_number
-      WHERE ss_quantity > 0 AND ss_net_paid > 0
-      GROUP BY ss_item_sk),
-    store_rank AS (
-      SELECT 'store' channel, item,
-             CAST(round(CAST(ret_qty AS DOUBLE) / sold_qty, 4) AS DOUBLE)
-               return_ratio,
-             CAST(rank() OVER (ORDER BY CAST(ret_qty AS DOUBLE) / sold_qty
-                  DESC, item) AS INT) return_rank,
-             CAST(rank() OVER (ORDER BY CAST(ret_amt AS DOUBLE)
-                  / CAST(paid_amt AS DOUBLE) DESC, item) AS INT)
-               currency_rank
-      FROM store_tmp)
-    SELECT channel, item, return_ratio, return_rank, currency_rank
-    FROM (SELECT * FROM web_rank UNION ALL
-          SELECT * FROM catalog_rank UNION ALL
-          SELECT * FROM store_rank) u
-    WHERE return_rank <= 10 OR currency_rank <= 10
-    ORDER BY channel, return_rank, currency_rank, item
-    LIMIT 20
-    """,
-        "date_dim",
-        "web_sales",
-        "web_returns",
-        "catalog_sales",
-        "catalog_returns",
-        "store_sales",
-        "store_returns",
-    ),
-)
-def tpcds_q49_worst_return_ratios(
-    spark: SparkSession, sf_dir: str, _lazy: bool = False
-) -> DataFrame:
-    """TPC-DS q49 shape: per-channel worst return ratios — each channel
-    left-joins its returns fact to its sales fact on (item, order/
-    ticket), aggregates quantity- and currency-return ratios per item,
-    rank-filters each ratio's top-10 leg map-side (WindowGroupLimit),
-    derives the survivors' dual ranks with a broadcast count-aggregate,
-    and unions the three small results. (The spec's >10000-return-
-    amount guard is scaled away for the generator's decimal(7,2) money
-    domain.)
-
-    Scale: each sales↔returns join is keyed by the fact's natural key
-    (order+item) — co-partitioned shuffle, no cross-channel fact join;
-    neither rank needs a full single-partition sort (the legs forward
-    per-partition top-10+ties only). ``_lazy=True`` returns the
-    unmaterialized plan (the plan-pin tests read it); the default
-    eager path caches the ≤|item| rollup so its three consumers share
-    one fact-pipeline execution, collects the ≤ ~20 survivors per
-    channel, and unpersists.
-    """
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    dates = dd.where((F.col("d_year") == 1999) & (F.col("d_moy") == 12)).select(
-        "d_date_sk"
-    )
-    _pins: list[DataFrame] = []
-
-    def channel(sales, ret, s_item, s_key, s_date, s_qty, s_paid, r_item, r_key, r_qty, r_amt, label):
-        s = sales.join(dates, F.col(s_date) == F.col("d_date_sk")).where(
-            (F.col(s_qty) > 0) & (F.col(s_paid) > 0)
-        )
-        r = ret.select(
-            F.col(r_item).alias("r_item"),
-            F.col(r_key).alias("r_key"),
-            F.col(r_qty).alias("r_qty"),
-            F.col(r_amt).alias("r_amt"),
-        )
-        joined = s.join(
-            r,
-            (F.col(s_item) == F.col("r_item")) & (F.col(s_key) == F.col("r_key")),
-            "left",
-        )
-        agged = joined.groupBy(F.col(s_item).alias("item")).agg(
-            F.sum(F.coalesce(F.col("r_qty"), F.lit(0))).alias("ret_qty"),
-            F.sum(F.col(s_qty)).alias("sold_qty"),
-            F.sum(F.coalesce(F.col("r_amt"), F.lit(0))).alias("ret_amt"),
-            F.sum(F.col(s_paid)).alias("paid_amt"),
-        )
-        ratios = agged.select(
-            "item",
-            (F.col("ret_qty") / F.col("sold_qty")).alias("return_ratio"),
-            (F.col("ret_amt") / F.col("paid_amt")).alias("currency_ratio"),
-        )
-        if not _lazy:
-            ratios = ratios.persist()
-            _pins.append(ratios)
-        # Two global ranks under an OR-filter, restructured so neither
-        # needs an unpruned single-partition sort: each leg filters
-        # rank <= 10 DIRECTLY above its own window, which Spark
-        # rewrites to a WindowGroupLimit — every map partition forwards
-        # only its local top-10+ties into the final sort, instead of
-        # the whole per-item rollup. (item is unique per channel, so
-        # rank over (ratio desc, item) is a strict total order.)
-        # The rollup feeds three consumers (two legs + the rank
-        # count-aggregate); without an explicit cache Spark re-executes
-        # the fact pipeline per consumer (measured 2× wall at sf0.1 —
-        # exchange reuse does not cover all three subtrees), so the
-        # eager path pins the ≤|item| rollup, collects the bounded
-        # survivors (≤ ~20 rows/channel), and unpersists — cache
-        # hygiene identical to the index lifecycle carriers.
-        def leg(col):
-            w = Window.orderBy(F.col(col).desc(), F.col("item"))
-            return (
-                ratios.withColumn("_rk", F.rank().over(w))
-                .where(F.col("_rk") <= 10)
-                .drop("_rk")
-            )
-
-        # candidates = exactly the rows the OR-filter kept (≤ ~20+ties;
-        # the legs carry both ratio columns, so no re-join needed)
-        cand = (
-            leg("return_ratio")
-            .union(leg("currency_ratio"))
-            .distinct()
-            .select(
-                F.col("item").alias("c_item"),
-                F.col("return_ratio").alias("c_rr"),
-                F.col("currency_ratio").alias("c_cr"),
-            )
-        )
-        # Each survivor still reports BOTH ranks (one may be > 10).
-        # rank = 1 + |rows strictly ahead| under the strict total
-        # order — a broadcast count-aggregate over the rollup (tiny
-        # exchange: ≤ |candidates| groups), never a full global sort.
-        ahead = lambda col, cv: (F.col(col) > F.col(cv)) | (
-            (F.col(col) == F.col(cv)) & (F.col("item") < F.col("c_item"))
-        )
-        counted = (
-            ratios.crossJoin(F.broadcast(cand))
-            .groupBy("c_item", "c_rr")
-            .agg(
-                (1 + F.sum(ahead("return_ratio", "c_rr").cast("long")))
-                .cast("int")
-                .alias("return_rank"),
-                (1 + F.sum(ahead("currency_ratio", "c_cr").cast("long")))
-                .cast("int")
-                .alias("currency_rank"),
-            )
-        )
-        return counted.select(
-            F.lit(label).alias("channel"),
-            F.col("c_item").alias("item"),
-            F.round("c_rr", 4).cast("double").alias("return_ratio"),
-            "return_rank",
-            "currency_rank",
-        )
-
-    out = (
-        channel(ws, wr, "ws_item_sk", "ws_order_number", "ws_sold_date_sk",
-                "ws_quantity", "ws_net_paid", "wr_item_sk", "wr_order_number",
-                "wr_return_quantity", "wr_return_amt", "web")
-        .unionByName(
-            channel(cs, cr, "cs_item_sk", "cs_order_number", "cs_sold_date_sk",
-                    "cs_quantity", "cs_net_paid", "cr_item_sk", "cr_order_number",
-                    "cr_return_quantity", "cr_return_amount", "catalog"))
-        .unionByName(
-            channel(ss, sr, "ss_item_sk", "ss_ticket_number", "ss_sold_date_sk",
-                    "ss_quantity", "ss_net_paid", "sr_item_sk", "sr_ticket_number",
-                    "sr_return_quantity", "sr_return_amt", "store"))
-    )
-    out = out.orderBy("channel", "return_rank", "currency_rank", "item").limit(20)
-    if _lazy:
-        return out
-    try:
-        rows = out.collect()  # ONE job materializes all three rollup pins
-    finally:
-        for p in _pins:
-            p.unpersist()
-    return spark.createDataFrame(rows, out.schema)
-
-
-@register(
-    "tpcds_q39_inventory_variance",
-    _wh_sql(
-        """
-    WITH monthly AS (
-      SELECT inv_warehouse_sk, inv_item_sk, d_moy,
-             count(*) n,
-             CAST(sum(inv_quantity_on_hand) AS BIGINT) s,
-             CAST(sum(inv_quantity_on_hand * inv_quantity_on_hand)
-                  AS BIGINT) ss
-      FROM inventory, date_dim
-      WHERE inv_date_sk = d_date_sk AND d_year = 1998
-      GROUP BY inv_warehouse_sk, inv_item_sk, d_moy
-      HAVING count(*) > 1),
-    flagged AS (
-      SELECT inv_warehouse_sk, inv_item_sk, d_moy,
-             CAST(round(CAST(s AS DOUBLE) / n, 2) AS DOUBLE) mean,
-             CAST(round(sqrt((ss - CAST(s AS DOUBLE) * s / n) / (n - 1))
-                        / (CAST(s AS DOUBLE) / n), 4) AS DOUBLE) cov
-      FROM monthly
-      WHERE CAST(s AS DOUBLE) / n > 0
-        AND sqrt((ss - CAST(s AS DOUBLE) * s / n) / (n - 1))
-            / (CAST(s AS DOUBLE) / n) > 1.0)
-    SELECT jan.inv_warehouse_sk AS w_sk, jan.inv_item_sk AS i_sk,
-           jan.mean AS mean1, jan.cov AS cov1,
-           feb.mean AS mean2, feb.cov AS cov2
-    FROM flagged jan, flagged feb
-    WHERE jan.inv_warehouse_sk = feb.inv_warehouse_sk
-      AND jan.inv_item_sk = feb.inv_item_sk
-      AND jan.d_moy = 1 AND feb.d_moy = 2
-    ORDER BY w_sk, i_sk
-    LIMIT 20
-    """,
-        "inventory",
-        "date_dim",
-    ),
-)
-def tpcds_q39_inventory_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q39 shape: monthly on-hand inventory mean and coefficient
-    of variation per (warehouse, item); flag high-variance pairs
-    (cov > 1) and self-join January against February 1998 to show
-    variance persisting month-over-month.
-
-    Determinism at any partitioning: mean/stddev are derived from
-    exact integer partials (n, Σq, Σq²) — never from Spark's
-    floating-point stddev_samp whose merge order varies — so the
-    pinned doubles reproduce bit-for-bit under any partition count.
-    Scale: the inventory grid reduces with one hash-agg; the
-    month-over-month join sees only the tiny flagged survivors."""
-    _gate(spark)
-    inv = _inv(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    monthly = (
-        inv.join(dd, inv.inv_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .groupBy("inv_warehouse_sk", "inv_item_sk", "d_moy")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("inv_quantity_on_hand").cast("bigint").alias("s"),
-            F.sum(F.col("inv_quantity_on_hand") * F.col("inv_quantity_on_hand"))
-            .cast("bigint")
-            .alias("ss"),
-        )
-        .where(F.col("n") > 1)
-        .select(
-            "inv_warehouse_sk",
-            "inv_item_sk",
-            "d_moy",
-            (F.col("s") / F.col("n")).alias("mean"),
-            F.sqrt(
-                (F.col("ss") - F.col("s") * F.col("s") / F.col("n"))
-                / (F.col("n") - 1)
-            ).alias("stdev"),
-        )
-    )
-    flagged = monthly.where(
-        (F.col("mean") > 0) & (F.col("stdev") / F.col("mean") > 1.0)
-    ).select(
-        "inv_warehouse_sk",
-        "inv_item_sk",
-        "d_moy",
-        F.round("mean", 2).cast("double").alias("mean"),
-        F.round(F.col("stdev") / F.col("mean"), 4).cast("double").alias("cov"),
-    )
-    jan = flagged.where(F.col("d_moy") == 1).select(
-        F.col("inv_warehouse_sk").alias("w_sk"),
-        F.col("inv_item_sk").alias("i_sk"),
-        F.col("mean").alias("mean1"),
-        F.col("cov").alias("cov1"),
-    )
-    feb = flagged.where(F.col("d_moy") == 2).select(
-        F.col("inv_warehouse_sk").alias("w_sk"),
-        F.col("inv_item_sk").alias("i_sk"),
-        F.col("mean").alias("mean2"),
-        F.col("cov").alias("cov2"),
-    )
-    return (
-        jan.join(feb, ["w_sk", "i_sk"])
-        .orderBy("w_sk", "i_sk")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q72_catalog_inventory_promo",
-    _wh_sql(
-        """
-    SELECT i_item_id, w_warehouse_name,
-           CAST(d1.d_week_seq AS INT) AS week_seq,
-           CAST(sum(CASE WHEN p_promo_sk IS NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS no_promo,
-           CAST(sum(CASE WHEN p_promo_sk IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS promo,
-           CAST(count(*) AS BIGINT) AS total_cnt
-    FROM catalog_sales
-    JOIN household_demographics
-      ON cs_bill_hdemo_sk = hd_demo_sk
-    JOIN customer_demographics
-      ON cs_bill_cdemo_sk = cd_demo_sk
-    JOIN date_dim d1 ON cs_sold_date_sk = d1.d_date_sk
-    JOIN date_dim d3 ON cs_ship_date_sk = d3.d_date_sk
-    JOIN inventory ON cs_item_sk = inv_item_sk
-    JOIN date_dim d2 ON inv_date_sk = d2.d_date_sk
-    JOIN warehouse ON inv_warehouse_sk = w_warehouse_sk
-    JOIN item ON cs_item_sk = i_item_sk
-    LEFT JOIN promotion ON cs_promo_sk = p_promo_sk
-                        AND p_channel_email = 'N'
-    WHERE hd_buy_potential = '1001-5000'
-      AND cd_marital_status = 'D'
-      AND d1.d_year = 1999
-      AND d3.d_date > d1.d_date + 5
-      AND d1.d_week_seq = d2.d_week_seq
-      AND inv_quantity_on_hand < cs_quantity
-    GROUP BY i_item_id, w_warehouse_name, d1.d_week_seq
-    ORDER BY total_cnt DESC, i_item_id, w_warehouse_name, week_seq
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "household_demographics",
-        "customer_demographics",
-        "date_dim",
-        "inventory",
-        "warehouse",
-        "item",
-        "promotion",
-    ),
-)
-def tpcds_q72_catalog_inventory_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q72 shape: catalog orders whose warehouse was short on
-    stock the week they sold (inv_quantity_on_hand < cs_quantity),
-    shipped more than 5 days later, by demographic segment — the
-    spec's catalog_sales × inventory fact-fact join on (item,
-    week_seq) with three date_dim roles (sold/inventory/ship) and a
-    promotion left join split into promo / no-promo counts. (Spec
-    left-joins all promotions; here the probe is restricted to
-    email-channel='N' promotions so both branches are populated on
-    generated data.)
-
-    Scale: demographics filters shrink the fact BEFORE the inventory
-    join; the join keys (item_sk, week_seq) co-partition both facts —
-    the only multi-TB×multi-TB shuffle in the tier, keyed exactly as
-    a production short-stock audit would be."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    inv = _inv(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    wh = gen_warehouse(spark)
-    hd = gen_household_demographics(spark)
-    cd = gen_customer_demographics(spark)
-    pm = gen_promotion(spark).where(F.col("p_channel_email") == "N")
-    d1 = dd.select(
-        F.col("d_date_sk").alias("d1_sk"),
-        F.col("d_date").alias("d1_date"),
-        F.col("d_week_seq").alias("d1_week"),
-        F.col("d_year").alias("d1_year"),
-    )
-    d2 = dd.select(
-        F.col("d_date_sk").alias("d2_sk"), F.col("d_week_seq").alias("d2_week")
-    )
-    d3 = dd.select(F.col("d_date_sk").alias("d3_sk"), F.col("d_date").alias("d3_date"))
-    base = (
-        cs.join(hd, cs.cs_bill_hdemo_sk == hd.hd_demo_sk)
-        .join(cd, cs.cs_bill_cdemo_sk == cd.cd_demo_sk)
-        .where(
-            (F.col("hd_buy_potential") == "1001-5000")
-            & (F.col("cd_marital_status") == "D")
-        )
-        .join(d1, F.col("cs_sold_date_sk") == F.col("d1_sk"))
-        .where(F.col("d1_year") == 1999)
-        .join(d3, F.col("cs_ship_date_sk") == F.col("d3_sk"))
-        .where(F.col("d3_date") > F.date_add(F.col("d1_date"), 5))
-    )
-    short = (
-        base.join(
-            inv.join(d2, inv.inv_date_sk == F.col("d2_sk")),
-            (F.col("cs_item_sk") == F.col("inv_item_sk"))
-            & (F.col("d1_week") == F.col("d2_week"))
-            & (F.col("inv_quantity_on_hand") < F.col("cs_quantity")),
-        )
-        .join(wh, F.col("inv_warehouse_sk") == wh.w_warehouse_sk)
-        .join(it, F.col("cs_item_sk") == it.i_item_sk)
-        .join(pm, F.col("cs_promo_sk") == pm.p_promo_sk, "left")
-    )
-    return (
-        short.groupBy("i_item_id", "w_warehouse_name", F.col("d1_week").alias("week_seq"))
-        .agg(
-            F.sum(F.when(F.col("p_promo_sk").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("no_promo"),
-            F.sum(F.when(F.col("p_promo_sk").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("promo"),
-            F.count("*").cast("bigint").alias("total_cnt"),
-        )
-        .orderBy(F.col("total_cnt").desc(), "i_item_id", "w_warehouse_name", "week_seq")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q61_promo_sales_ratio",
-    _wh_sql(
-        """
-    WITH base AS (
-      SELECT ss_ext_sales_price, ss_promo_sk
-      FROM store_sales, date_dim, item
-      WHERE ss_sold_date_sk = d_date_sk
-        AND ss_item_sk = i_item_sk
-        AND d_year = 1998 AND d_moy = 11
-        AND i_category = 'Jewelry'),
-    promotional_sales AS (
-      SELECT sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) promotions
-      FROM base, promotion
-      WHERE ss_promo_sk = p_promo_sk
-        AND (p_channel_dmail = 'Y' OR p_channel_email = 'Y'
-             OR p_channel_tv = 'Y')),
-    all_sales AS (
-      SELECT sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) total
-      FROM base)
-    SELECT CAST(round(promotions, 2) AS DOUBLE) AS promotions,
-           CAST(round(total, 2) AS DOUBLE) AS total,
-           CAST(round(CAST(promotions AS DOUBLE)
-                      / CAST(total AS DOUBLE) * 100, 4) AS DOUBLE)
-             AS promo_pct
-    FROM promotional_sales, all_sales
-    """,
-        "store_sales",
-        "date_dim",
-        "item",
-        "promotion",
-    ),
-)
-def tpcds_q61_promo_sales_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q61 shape: what share of one category's November store
-    revenue went through actively-promoted items (any of dmail / email
-    / tv channel flags on the sale's promotion) — two independent
-    scalar rollups (promoted leg re-filters through promotion, total
-    leg doesn't) joined by a 1-row cross join for the ratio.
-
-    Scale: both legs reduce the fact to ONE row before the cross join —
-    the only crossJoin in the query multiplies 1×1; promotion is a
-    300-row dim the optimizer broadcasts."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    pm = gen_promotion(spark)
-    base = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where(
-            (F.col("d_year") == 1998)
-            & (F.col("d_moy") == 11)
-            & (F.col("i_category") == "Jewelry")
-        )
-    )
-    promo = (
-        base.join(pm, F.col("ss_promo_sk") == pm.p_promo_sk)
-        .where(
-            (F.col("p_channel_dmail") == "Y")
-            | (F.col("p_channel_email") == "Y")
-            | (F.col("p_channel_tv") == "Y")
-        )
-        .agg(F.sum("ss_ext_sales_price").alias("promotions"))
-    )
-    total = base.agg(F.sum("ss_ext_sales_price").alias("total"))
-    return promo.crossJoin(total).select(
-        F.round("promotions", 2).cast("double").alias("promotions"),
-        F.round("total", 2).cast("double").alias("total"),
-        F.round(F.col("promotions") / F.col("total") * 100, 4)
-        .cast("double")
-        .alias("promo_pct"),
-    )
-
-
-@register(
-    "tpcds_q66_warehouse_monthly_pivot",
-    _wh_sql(
-        """
-    WITH sm AS (SELECT sm_ship_mode_sk FROM ship_mode
-                WHERE sm_carrier IN ('DHL', 'BARIAN')),
-    unioned AS (
-      SELECT w_warehouse_name, w_city, w_state, w_country, d_year,
-             sum(CAST(CASE WHEN d_moy = 1
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m01_sales,
-             sum(CAST(CASE WHEN d_moy = 2
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m02_sales,
-             sum(CAST(CASE WHEN d_moy = 3
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m03_sales,
-             sum(CAST(CASE WHEN d_moy = 4
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m04_sales,
-             sum(CAST(CASE WHEN d_moy = 5
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m05_sales,
-             sum(CAST(CASE WHEN d_moy = 6
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m06_sales,
-             sum(CAST(CASE WHEN d_moy = 7
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m07_sales,
-             sum(CAST(CASE WHEN d_moy = 8
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m08_sales,
-             sum(CAST(CASE WHEN d_moy = 9
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m09_sales,
-             sum(CAST(CASE WHEN d_moy = 10
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m10_sales,
-             sum(CAST(CASE WHEN d_moy = 11
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m11_sales,
-             sum(CAST(CASE WHEN d_moy = 12
-                  THEN ws_ext_sales_price * ws_quantity
-                  ELSE 0 END AS DECIMAL(38,12))) m12_sales
-      FROM web_sales, date_dim, warehouse
-      WHERE ws_ship_date_sk = d_date_sk
-        AND ws_ship_mode_sk IN (SELECT sm_ship_mode_sk FROM sm)
-        AND ws_warehouse_sk = w_warehouse_sk
-        AND d_year = 1999
-      GROUP BY w_warehouse_name, w_city, w_state, w_country, d_year
-      UNION ALL
-      SELECT w_warehouse_name, w_city, w_state, w_country, d_year,
-             sum(CAST(CASE WHEN d_moy = 1
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 2
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 3
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 4
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 5
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 6
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 7
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 8
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 9
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 10
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 11
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12))),
-             sum(CAST(CASE WHEN d_moy = 12
-                  THEN cs_ext_sales_price * cs_quantity
-                  ELSE 0 END AS DECIMAL(38,12)))
-      FROM catalog_sales, date_dim, warehouse
-      WHERE cs_ship_date_sk = d_date_sk
-        AND cs_ship_mode_sk IN (SELECT sm_ship_mode_sk FROM sm)
-        AND cs_warehouse_sk = w_warehouse_sk
-        AND d_year = 1999
-      GROUP BY w_warehouse_name, w_city, w_state, w_country, d_year)
-    SELECT w_warehouse_name, w_city, w_state, w_country, d_year,
-           CAST(round(sum(m01_sales), 2) AS DOUBLE) AS m01_sales,
-           CAST(round(sum(m02_sales), 2) AS DOUBLE) AS m02_sales,
-           CAST(round(sum(m03_sales), 2) AS DOUBLE) AS m03_sales,
-           CAST(round(sum(m04_sales), 2) AS DOUBLE) AS m04_sales,
-           CAST(round(sum(m05_sales), 2) AS DOUBLE) AS m05_sales,
-           CAST(round(sum(m06_sales), 2) AS DOUBLE) AS m06_sales,
-           CAST(round(sum(m07_sales), 2) AS DOUBLE) AS m07_sales,
-           CAST(round(sum(m08_sales), 2) AS DOUBLE) AS m08_sales,
-           CAST(round(sum(m09_sales), 2) AS DOUBLE) AS m09_sales,
-           CAST(round(sum(m10_sales), 2) AS DOUBLE) AS m10_sales,
-           CAST(round(sum(m11_sales), 2) AS DOUBLE) AS m11_sales,
-           CAST(round(sum(m12_sales), 2) AS DOUBLE) AS m12_sales
-    FROM unioned
-    GROUP BY w_warehouse_name, w_city, w_state, w_country, d_year
-    ORDER BY w_warehouse_name
-    LIMIT 10
-    """,
-        "ship_mode",
-        "web_sales",
-        "catalog_sales",
-        "date_dim",
-        "warehouse",
-    ),
-)
-def tpcds_q66_warehouse_monthly_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q66 shape: web + catalog shipping volume by warehouse ×
-    year, pivoted into 12 monthly sales columns with a carrier
-    restriction — each channel rolls up independently (the spec's two
-    UNION ALL legs), then the union re-aggregates dim-sized rows.
-
-    Scale: the 12-way pivot is conditional aggregation inside ONE
-    hash-agg per channel (no per-month scans); the union carries
-    (warehouse, year) rows only."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    wh = gen_warehouse(spark)
-    sm = gen_ship_mode(spark).where(F.col("sm_carrier").isin("DHL", "BARIAN"))
-
-    def channel(fact, date_col, wh_col, sm_col, qty_col, price_col):
-        monthly = [
-            F.sum(
-                F.when(F.col("d_moy") == m, F.col(price_col) * F.col(qty_col)).otherwise(
-                    F.lit(0)
-                )
-            ).alias(f"m{m:02d}_sales")
-            for m in range(1, 13)
-        ]
-        return (
-            fact.join(dd, F.col(date_col) == dd.d_date_sk)
-            .join(sm, F.col(sm_col) == sm.sm_ship_mode_sk)
-            .join(wh, F.col(wh_col) == wh.w_warehouse_sk)
-            .where(F.col("d_year") == 1999)
-            .groupBy("w_warehouse_name", "w_city", "w_state", "w_country", "d_year")
-            .agg(*monthly)
-        )
-
-    unioned = channel(
-        ws, "ws_ship_date_sk", "ws_warehouse_sk", "ws_ship_mode_sk",
-        "ws_quantity", "ws_ext_sales_price",
-    ).unionByName(
-        channel(
-            cs, "cs_ship_date_sk", "cs_warehouse_sk", "cs_ship_mode_sk",
-            "cs_quantity", "cs_ext_sales_price",
-        )
-    )
-    month_cols = [f"m{m:02d}_sales" for m in range(1, 13)]
-    return (
-        unioned.groupBy("w_warehouse_name", "w_city", "w_state", "w_country", "d_year")
-        .agg(*[F.round(F.sum(c), 2).cast("double").alias(c) for c in month_cols])
-        .orderBy("w_warehouse_name")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q95_web_multi_warehouse",
-    _wh_sql(
-        """
-    SELECT CAST(count(DISTINCT ws_order_number) AS BIGINT) AS order_count,
-           CAST(round(sum(CAST(ws_ext_ship_cost AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS total_shipping_cost,
-           CAST(round(sum(CAST(ws_net_profit AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS total_net_profit
-    FROM web_sales ws1, date_dim
-    WHERE d_date BETWEEN '1999-02-01' AND CAST('1999-04-02' AS DATE)
-      AND ws1.ws_ship_date_sk = d_date_sk
-      AND EXISTS
-        (SELECT *
-         FROM web_sales ws2
-         WHERE ws1.ws_order_number = ws2.ws_order_number
-           AND ws1.ws_warehouse_sk <> ws2.ws_warehouse_sk)
-      AND EXISTS
-        (SELECT *
-         FROM web_returns wr1
-         WHERE ws1.ws_order_number = wr1.wr_order_number)
-    """,
-        "web_sales",
-        "date_dim",
-        "web_returns",
-    ),
-)
-def tpcds_q95_web_multi_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q95 shape: 60-day web orders that shipped from more than
-    one warehouse AND had a return — the spec expresses both via
-    self-join EXISTS (ws1×ws2 with differing warehouses) and a
-    web_returns EXISTS; here the multi-warehouse order list comes from
-    the distinct (order, warehouse) self-join and both probes are
-    left-semi joins carrying bare order numbers.
-
-    Scale: the self-join runs on the DISTINCT (order, warehouse)
-    projection — orders of magnitude smaller than the fact — and both
-    semi-join probe sides reduce to order-number sets before any
-    shuffle."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    ow = ws.select("ws_order_number", "ws_warehouse_sk").distinct()
-    a = ow.select(
-        F.col("ws_order_number").alias("o"), F.col("ws_warehouse_sk").alias("wh1")
-    )
-    b = ow.select(
-        F.col("ws_order_number").alias("o"), F.col("ws_warehouse_sk").alias("wh2")
-    )
-    multi = (
-        a.join(b, "o")
-        .where(F.col("wh1") != F.col("wh2"))
-        .select(F.col("o").alias("ws_order_number"))
-        .distinct()
-    )
-    returned = wr.select(F.col("wr_order_number").alias("ws_order_number")).distinct()
-    base = ws.join(dd, ws.ws_ship_date_sk == dd.d_date_sk).where(
-        F.col("d_date").between("1999-02-01", "1999-04-02")
-    )
-    filtered = base.join(multi, "ws_order_number", "leftsemi").join(
-        returned, "ws_order_number", "leftsemi"
-    )
-    return filtered.agg(
-        F.countDistinct("ws_order_number").cast("bigint").alias("order_count"),
-        _money("ws_ext_ship_cost").alias("total_shipping_cost"),
-        _money("ws_net_profit").alias("total_net_profit"),
-    )
-
-
-# Larger channel facts for the sparse cross-fact chains (q25/q85/q91):
-# matching (customer, item) pairs across independently-hashed facts are
-# rare, so these shapes get a 10× fact to keep multi-row results. The
-# generators are O(rows) column algebra — still instant to build.
-CS_BIG = 1_200_000
-WS_BIG = 1_200_000
-
-
-@register(
-    "tpcds_q25_buy_return_rebuy",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_item_desc, s_store_id, s_store_name,
-           CAST(round(sum(CAST(ss_net_profit AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS store_sales_profit,
-           CAST(round(sum(CAST(sr_net_loss AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS store_returns_loss,
-           CAST(round(sum(CAST(cs_net_profit AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS catalog_sales_profit
-    FROM store_sales, store_returns, catalog_sales_big, date_dim d1,
-         date_dim d2, date_dim d3, store, item
-    WHERE d1.d_year = 1998
-      AND d1.d_date_sk = ss_sold_date_sk
-      AND i_item_sk = ss_item_sk
-      AND s_store_sk = ss_store_sk
-      AND ss_customer_sk = sr_customer_sk
-      AND ss_item_sk = sr_item_sk
-      AND ss_ticket_number = sr_ticket_number
-      AND sr_returned_date_sk = d2.d_date_sk
-      AND d2.d_year IN (1998, 1999)
-      AND sr_customer_sk = cs_bill_customer_sk
-      AND sr_item_sk = cs_item_sk
-      AND cs_sold_date_sk = d3.d_date_sk
-      AND d3.d_year IN (1998, 1999)
-    GROUP BY i_item_id, i_item_desc, s_store_id, s_store_name
-    ORDER BY i_item_id, s_store_id
-    LIMIT 20
-    """,
-        "store_sales",
-        "store_returns",
-        "catalog_sales_big",
-        "date_dim",
-        "store",
-        "item",
-    ),
-)
-def tpcds_q25_buy_return_rebuy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q25 shape: customers who bought in-store in April, returned
-    the item later that year, and re-bought the SAME item by catalog —
-    the spec's three-fact chain joined on (customer, item) with a
-    ticket-matched sales↔returns leg and three date_dim roles, rolled
-    up to (item, store) net-profit/loss totals.
-
-    Scale: the chain joins run on their natural keys (ticket+item for
-    the returns leg, customer+item for the repurchase) — each step
-    co-partitions on the join key and reduces before the next; no
-    fact ever cross-joins."""
-    _gate(spark, big=True)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    sr = _sr(spark, sf_dir)
-    cs = _cs_big(spark, sf_dir)
-    # Spec windows are one month → one quarter; with independently
-    # hashed facts the (customer, item) repurchase match is ~1e-3 per
-    # returned line, so the windows widen to the generators' full
-    # 1998-1999 span to keep a multi-row result (same join shape).
-    d1 = dd.where(F.col("d_year") == 1998).select(F.col("d_date_sk").alias("d1_sk"))
-    d2 = dd.where(F.col("d_year").isin(1998, 1999)).select(
-        F.col("d_date_sk").alias("d2_sk")
-    )
-    d3 = dd.where(F.col("d_year").isin(1998, 1999)).select(
-        F.col("d_date_sk").alias("d3_sk")
-    )
-    chain = (
-        ss.join(d1, ss.ss_sold_date_sk == F.col("d1_sk"))
-        .join(
-            sr.join(d2, sr.sr_returned_date_sk == F.col("d2_sk")),
-            (F.col("ss_ticket_number") == F.col("sr_ticket_number"))
-            & (F.col("ss_item_sk") == F.col("sr_item_sk"))
-            & (F.col("ss_customer_sk") == F.col("sr_customer_sk")),
-        )
-        .join(
-            cs.join(d3, F.col("cs_sold_date_sk") == F.col("d3_sk")),
-            (F.col("sr_customer_sk") == F.col("cs_bill_customer_sk"))
-            & (F.col("sr_item_sk") == F.col("cs_item_sk")),
-        )
-        .join(st, F.col("ss_store_sk") == st.s_store_sk)
-        .join(it, F.col("ss_item_sk") == it.i_item_sk)
-    )
-    return (
-        chain.groupBy("i_item_id", "i_item_desc", "s_store_id", "s_store_name")
-        .agg(
-            _money("ss_net_profit").alias("store_sales_profit"),
-            _money("sr_net_loss").alias("store_returns_loss"),
-            _money("cs_net_profit").alias("catalog_sales_profit"),
-        )
-        .orderBy("i_item_id", "s_store_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q43_store_dow_pivot",
-    _wh_sql(
-        """
-    SELECT s_store_name, s_store_id,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Sunday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS sun_sales,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Monday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS mon_sales,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Tuesday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS tue_sales,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Wednesday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS wed_sales,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Thursday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS thu_sales,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Friday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS fri_sales,
-           CAST(round(sum(CAST(CASE WHEN d_day_name = 'Saturday' THEN ss_sales_price ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE) AS sat_sales
-    FROM date_dim, store_sales, store
-    WHERE d_date_sk = ss_sold_date_sk
-      AND ss_store_sk = s_store_sk
-      AND d_year = 1998
-    GROUP BY s_store_name, s_store_id
-    ORDER BY s_store_id
-    LIMIT 10
-    """,
-        "date_dim",
-        "store_sales",
-        "store",
-    ),
-)
-def tpcds_q43_store_dow_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q43 shape: each store's 1998 revenue pivoted into
-    day-of-week columns — one dim-filtered hash-agg with seven
-    conditional sums on d_day_name."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    days = ["Sunday", "Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday"]
-    return (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(F.col("d_year") == 1998)
-        .groupBy("s_store_name", "s_store_id")
-        .agg(
-            *[
-                F.round(
-                    F.sum(
-                        F.when(F.col("d_day_name") == day, F.col("ss_sales_price")).otherwise(
-                            F.lit(0)
-                        )
-                    ),
-                    2,
-                )
-                .cast("double")
-                .alias(f"{day[:3].lower()}_sales")
-                for day in days
-            ]
-        )
-        .orderBy("s_store_id")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q84_income_band_customers",
-    _wh_sql(
-        """
-    SELECT c_customer_id AS customer_id,
-           concat_ws(', ', c_last_name, c_first_name) AS customername
-    FROM customer, customer_address, household_demographics, income_band,
-         customer_demographics
-    WHERE ca_city = 'Fairview'
-      AND c_current_addr_sk = ca_address_sk
-      AND ib_lower_bound >= 38128
-      AND ib_upper_bound <= 38128 + 50000
-      AND ib_income_band_sk = hd_income_band_sk
-      AND cd_demo_sk = c_current_cdemo_sk
-      AND hd_demo_sk = c_current_hdemo_sk
-      AND EXISTS (SELECT * FROM store_returns
-                  WHERE sr_cdemo_sk = cd_demo_sk)
-    ORDER BY customer_id
-    LIMIT 20
-    """,
-        "customer",
-        "customer_address",
-        "household_demographics",
-        "income_band",
-        "customer_demographics",
-        "store_returns",
-    ),
-)
-def tpcds_q84_income_band_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q84 shape: customers in one city whose household income
-    band overlaps a $50k window and whose demographics appear in
-    store_returns — a five-dim key chain (customer → address /
-    household_demographics → income_band) ending in a semi-join probe
-    of the returns fact on cd_demo_sk.
-
-    Scale: every dim join is key-chained and broadcastable; the only
-    fact touch is a left-semi probe carrying bare demographic keys."""
-    _gate(spark)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    hd = gen_household_demographics(spark)
-    ib = gen_income_band(spark)
-    cd = gen_customer_demographics(spark)
-    sr = _sr(spark, sf_dir)
-    base = (
-        cu.join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .where(F.col("ca_city") == "Fairview")
-        .join(hd, cu.c_current_hdemo_sk == hd.hd_demo_sk)
-        .join(ib, hd.hd_income_band_sk == ib.ib_income_band_sk)
-        .where(
-            (F.col("ib_lower_bound") >= 38128) & (F.col("ib_upper_bound") <= 38128 + 50000)
-        )
-        .join(cd, cu.c_current_cdemo_sk == cd.cd_demo_sk)
-        .join(
-            sr.select(F.col("sr_cdemo_sk").alias("cd_demo_sk")),
-            "cd_demo_sk",
-            "leftsemi",
-        )
-    )
-    return (
-        base.select(
-            F.col("c_customer_id").alias("customer_id"),
-            F.concat_ws(", ", F.col("c_last_name"), F.col("c_first_name")).alias(
-                "customername"
-            ),
-        )
-        .orderBy("customer_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q85_return_reason_profile",
-    _wh_sql(
-        """
-    SELECT substring(r_reason_desc, 1, 20) AS reason,
-           CAST(round(avg(ws_quantity), 4) AS DOUBLE) AS avg_quantity,
-           CAST(round(avg(wr_refunded_cash), 4) AS DOUBLE) AS avg_refunded,
-           CAST(round(avg(wr_fee), 4) AS DOUBLE) AS avg_fee
-    FROM web_sales_big, web_returns_big, web_page, customer_demographics
-         cd1, customer_demographics cd2, customer_address, date_dim,
-         reason
-    WHERE ws_web_page_sk = wp_web_page_sk
-      AND ws_item_sk = wr_item_sk
-      AND ws_order_number = wr_order_number
-      AND ws_sold_date_sk = d_date_sk
-      AND d_year IN (1998, 1999)
-      AND cd1.cd_demo_sk = wr_refunded_cdemo_sk
-      AND cd2.cd_demo_sk = wr_returning_cdemo_sk
-      AND ca_address_sk = wr_refunded_addr_sk
-      AND r_reason_sk = wr_reason_sk
-      AND ((cd1.cd_marital_status = 'M'
-            AND cd1.cd_marital_status = cd2.cd_marital_status
-            AND cd1.cd_education_status = '4 yr Degree'
-            AND cd1.cd_education_status = cd2.cd_education_status
-            AND ws_sales_price BETWEEN 100.00 AND 150.00)
-        OR (cd1.cd_marital_status = 'S'
-            AND cd1.cd_marital_status = cd2.cd_marital_status
-            AND cd1.cd_education_status = 'College'
-            AND cd1.cd_education_status = cd2.cd_education_status
-            AND ws_sales_price BETWEEN 50.00 AND 100.00)
-        OR (cd1.cd_marital_status = 'W'
-            AND cd1.cd_marital_status = cd2.cd_marital_status
-            AND cd1.cd_education_status = '2 yr Degree'
-            AND cd1.cd_education_status = cd2.cd_education_status
-            AND ws_sales_price BETWEEN 150.00 AND 200.00))
-      AND ((ca_country = 'United States'
-            AND ca_state IN ('FL', 'IL', 'MI')
-            AND ws_net_profit BETWEEN 50 AND 250)
-        OR (ca_country = 'United States'
-            AND ca_state IN ('NC', 'TX', 'CA')
-            AND ws_net_profit BETWEEN 100 AND 300)
-        OR (ca_country = 'United States'
-            AND ca_state IN ('WA', 'NY', 'KY')
-            AND ws_net_profit BETWEEN 0 AND 250))
-    GROUP BY substring(r_reason_desc, 1, 20)
-    ORDER BY reason
-    LIMIT 20
-    """,
-        "web_sales_big",
-        "web_returns_big",
-        "web_page",
-        "customer_demographics",
-        "customer_address",
-        "date_dim",
-        "reason",
-    ),
-)
-def tpcds_q85_return_reason_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q85 shape: average quantity / refund / fee per return
-    reason for web returns whose refunding and returning demographics
-    MATCH (the spec's cd1=cd2 equality pair) under disjunctive
-    marital×education×price bands, plus state×profit address bands —
-    the reason dim closes the star.
-
-    Scale: web_returns joins web_sales on its natural key (item,
-    order); the demographics pair joins are key lookups into the fixed
-    1.92M-row cross-product dim; every predicate lands before the
-    joins it feeds."""
-    _gate(spark, big=True)
-    ws = _ws_big(spark, sf_dir)
-    wr = _wr_big(spark, sf_dir)
-    wp = gen_web_page(spark)
-    dd = gen_date_dim(spark)
-    r = gen_reason(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    cd = gen_customer_demographics(spark)
-    cd1 = cd.select(
-        F.col("cd_demo_sk").alias("cd1_sk"),
-        F.col("cd_marital_status").alias("cd1_marital"),
-        F.col("cd_education_status").alias("cd1_edu"),
-    )
-    cd2 = cd.select(
-        F.col("cd_demo_sk").alias("cd2_sk"),
-        F.col("cd_marital_status").alias("cd2_marital"),
-        F.col("cd_education_status").alias("cd2_edu"),
-    )
-    base = (
-        wr.join(
-            ws,
-            (wr.wr_item_sk == ws.ws_item_sk)
-            & (wr.wr_order_number == ws.ws_order_number),
-        )
-        .join(wp, ws.ws_web_page_sk == wp.wp_web_page_sk)
-        .join(dd, ws.ws_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year").isin(1998, 1999))
-        .join(cd1, wr.wr_refunded_cdemo_sk == F.col("cd1_sk"))
-        .join(
-            cd2,
-            (wr.wr_returning_cdemo_sk == F.col("cd2_sk"))
-            & (F.col("cd1_marital") == F.col("cd2_marital"))
-            & (F.col("cd1_edu") == F.col("cd2_edu")),
-        )
-        .where(
-            (
-                (F.col("cd1_marital") == "M")
-                & (F.col("cd1_edu") == "4 yr Degree")
-                & F.col("ws_sales_price").between(100.00, 150.00)
-            )
-            | (
-                (F.col("cd1_marital") == "S")
-                & (F.col("cd1_edu") == "College")
-                & F.col("ws_sales_price").between(50.00, 100.00)
-            )
-            | (
-                (F.col("cd1_marital") == "W")
-                & (F.col("cd1_edu") == "2 yr Degree")
-                & F.col("ws_sales_price").between(150.00, 200.00)
-            )
-        )
-        .join(ca, wr.wr_refunded_addr_sk == ca.ca_address_sk)
-        .where(
-            (F.col("ca_country") == "United States")
-            & (
-                (F.col("ca_state").isin("FL", "IL", "MI") & F.col("ws_net_profit").between(50, 250))
-                | (F.col("ca_state").isin("NC", "TX", "CA") & F.col("ws_net_profit").between(100, 300))
-                | (F.col("ca_state").isin("WA", "NY", "KY") & F.col("ws_net_profit").between(0, 250))
-            )
-        )
-        .join(r, wr.wr_reason_sk == r.r_reason_sk)
-    )
-    return (
-        base.groupBy(F.substring("r_reason_desc", 1, 20).alias("reason"))
-        .agg(
-            F.round(F.avg("ws_quantity"), 4).cast("double").alias("avg_quantity"),
-            F.round(F.avg("wr_refunded_cash"), 4).cast("double").alias("avg_refunded"),
-            F.round(F.avg("wr_fee"), 4).cast("double").alias("avg_fee"),
-        )
-        .orderBy("reason")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q91_call_center_losses",
-    _wh_sql(
-        """
-    SELECT cc_call_center_id AS call_center, cc_name AS call_center_name,
-           cc_manager AS manager,
-           CAST(round(sum(CAST(cr_net_loss AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS returns_loss
-    FROM call_center, catalog_returns_big, date_dim, customer,
-         customer_demographics, household_demographics
-    WHERE cr_call_center_sk = cc_call_center_sk
-      AND cr_returned_date_sk = d_date_sk
-      AND cr_returning_customer_sk = c_customer_sk
-      AND cd_demo_sk = c_current_cdemo_sk
-      AND hd_demo_sk = c_current_hdemo_sk
-      AND d_year = 1998
-      AND d_moy = 11
-      AND ((cd_marital_status = 'M' AND cd_education_status = 'Unknown')
-        OR (cd_marital_status = 'W'
-            AND cd_education_status = 'Advanced Degree'))
-      AND hd_buy_potential = '0-500'
-    GROUP BY cc_call_center_id, cc_name, cc_manager
-    ORDER BY returns_loss DESC, call_center
-    LIMIT 10
-    """,
-        "call_center",
-        "catalog_returns_big",
-        "date_dim",
-        "customer",
-        "customer_demographics",
-        "household_demographics",
-    ),
-)
-def tpcds_q91_call_center_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q91 shape: November catalog-return losses per call
-    center, restricted to a demographic slice (marital × education
-    pairs, low buy-potential households) — call_center/customer dims
-    chain onto the returns fact, one hash-agg on the 6-row center dim.
-    """
-    _gate(spark, big=True)
-    cr = _cr_big(spark, sf_dir)
-    cc = gen_call_center(spark)
-    dd = gen_date_dim(spark)
-    cu = gen_customer_ds(spark)
-    cd = gen_customer_demographics(spark)
-    hd = gen_household_demographics(spark)
-    base = (
-        cr.join(cc, cr.cr_call_center_sk == cc.cc_call_center_sk)
-        .join(dd, cr.cr_returned_date_sk == dd.d_date_sk)
-        .where((F.col("d_year") == 1998) & (F.col("d_moy") == 11))
-        .join(cu, cr.cr_returning_customer_sk == cu.c_customer_sk)
-        .join(cd, cu.c_current_cdemo_sk == cd.cd_demo_sk)
-        .where(
-            ((F.col("cd_marital_status") == "M") & (F.col("cd_education_status") == "Unknown"))
-            | (
-                (F.col("cd_marital_status") == "W")
-                & (F.col("cd_education_status") == "Advanced Degree")
-            )
-        )
-        .join(hd, cu.c_current_hdemo_sk == hd.hd_demo_sk)
-        .where(F.col("hd_buy_potential") == "0-500")
-    )
-    return (
-        base.groupBy(
-            F.col("cc_call_center_id").alias("call_center"),
-            F.col("cc_name").alias("call_center_name"),
-            F.col("cc_manager").alias("manager"),
-        )
-        .agg(_money("cr_net_loss").alias("returns_loss"))
-        .orderBy(F.col("returns_loss").desc(), "call_center")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q28_price_band_stats",
-    _wh_sql(
-        """
-    SELECT *
-    FROM
-     (SELECT CAST(round(avg(ss_list_price), 4) AS DOUBLE) b1_lp,
-             CAST(count(ss_list_price) AS BIGINT) b1_cnt,
-             CAST(count(DISTINCT ss_list_price) AS BIGINT) b1_cntd
-      FROM store_sales
-      WHERE ss_quantity BETWEEN 0 AND 5
-        AND (ss_list_price BETWEEN 90 AND 90+10
-             OR ss_coupon_amt BETWEEN 0 AND 0+1000
-             OR ss_wholesale_cost BETWEEN 30 AND 30+20)) b1,
-     (SELECT CAST(round(avg(ss_list_price), 4) AS DOUBLE) b2_lp,
-             CAST(count(ss_list_price) AS BIGINT) b2_cnt,
-             CAST(count(DISTINCT ss_list_price) AS BIGINT) b2_cntd
-      FROM store_sales
-      WHERE ss_quantity BETWEEN 6 AND 10
-        AND (ss_list_price BETWEEN 70 AND 70+10
-             OR ss_coupon_amt BETWEEN 500 AND 500+1000
-             OR ss_wholesale_cost BETWEEN 40 AND 40+20)) b2,
-     (SELECT CAST(round(avg(ss_list_price), 4) AS DOUBLE) b3_lp,
-             CAST(count(ss_list_price) AS BIGINT) b3_cnt,
-             CAST(count(DISTINCT ss_list_price) AS BIGINT) b3_cntd
-      FROM store_sales
-      WHERE ss_quantity BETWEEN 11 AND 15
-        AND (ss_list_price BETWEEN 120 AND 120+10
-             OR ss_coupon_amt BETWEEN 1000 AND 1000+1000
-             OR ss_wholesale_cost BETWEEN 60 AND 60+20)) b3,
-     (SELECT CAST(round(avg(ss_list_price), 4) AS DOUBLE) b4_lp,
-             CAST(count(ss_list_price) AS BIGINT) b4_cnt,
-             CAST(count(DISTINCT ss_list_price) AS BIGINT) b4_cntd
-      FROM store_sales
-      WHERE ss_quantity BETWEEN 16 AND 20
-        AND (ss_list_price BETWEEN 135 AND 135+10
-             OR ss_coupon_amt BETWEEN 1500 AND 1500+1000
-             OR ss_wholesale_cost BETWEEN 80 AND 80+20)) b4,
-     (SELECT CAST(round(avg(ss_list_price), 4) AS DOUBLE) b5_lp,
-             CAST(count(ss_list_price) AS BIGINT) b5_cnt,
-             CAST(count(DISTINCT ss_list_price) AS BIGINT) b5_cntd
-      FROM store_sales
-      WHERE ss_quantity BETWEEN 21 AND 25
-        AND (ss_list_price BETWEEN 150 AND 150+10
-             OR ss_coupon_amt BETWEEN 2000 AND 2000+1000
-             OR ss_wholesale_cost BETWEEN 100 AND 100+20)) b5,
-     (SELECT CAST(round(avg(ss_list_price), 4) AS DOUBLE) b6_lp,
-             CAST(count(ss_list_price) AS BIGINT) b6_cnt,
-             CAST(count(DISTINCT ss_list_price) AS BIGINT) b6_cntd
-      FROM store_sales
-      WHERE ss_quantity BETWEEN 26 AND 30
-        AND (ss_list_price BETWEEN 100 AND 100+10
-             OR ss_coupon_amt BETWEEN 2500 AND 2500+1000
-             OR ss_wholesale_cost BETWEEN 120 AND 120+20)) b6    """,
-        "store_sales",
-    ),
-)
-def tpcds_q28_price_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q28 shape: six independent quantity-band profiles of
-    store_sales (avg / count / distinct-count of list price under
-    disjunctive price/coupon/wholesale bands), cross-joined into one
-    row — the spec's six-scalar-subquery SELECT.
-
-    Scale: six parallel one-row rollups over the same scan (Spark
-    reuses the exchange under AQE); every cross join multiplies 1×1.
-    """
-    _gate(spark)
-    ss, _, _ = _star(spark, sf_dir)
-
-    def band(lo_q, hi_q, lp, cp, ws, tag):
-        leg = ss.where(
-            F.col("ss_quantity").between(lo_q, hi_q)
-            & (
-                F.col("ss_list_price").between(lp, lp + 10)
-                | F.col("ss_coupon_amt").between(cp, cp + 1000)
-                | F.col("ss_wholesale_cost").between(ws, ws + 20)
-            )
-        )
-        return leg.agg(
-            F.round(F.avg("ss_list_price"), 4).cast("double").alias(f"b{tag}_lp"),
-            F.count("ss_list_price").cast("bigint").alias(f"b{tag}_cnt"),
-            F.countDistinct("ss_list_price").cast("bigint").alias(f"b{tag}_cntd"),
-        )
-
-    out = band(0, 5, 90, 0, 30, 1)
-    for i, (lo, hi, lp, cp, ws) in enumerate(
-        [(6, 10, 70, 500, 40), (11, 15, 120, 1000, 60), (16, 20, 135, 1500, 80),
-         (21, 25, 150, 2000, 100), (26, 30, 100, 2500, 120)],
-        start=2,
-    ):
-        out = out.crossJoin(band(lo, hi, lp, cp, ws, i))
-    return out
-
-
-@register(
-    "tpcds_q44_best_worst_items",
-    _wh_sql(
-        """
-
-    WITH perf AS (
-      SELECT ss_item_sk, avg(ss_net_profit) avg_profit
-      FROM store_sales
-      WHERE ss_store_sk = 4
-      GROUP BY ss_item_sk),
-    asceding AS (
-      SELECT ss_item_sk worst_sk,
-             rank() OVER (ORDER BY avg_profit ASC, ss_item_sk) rnk
-      FROM perf),
-    descending AS (
-      SELECT ss_item_sk best_sk,
-             rank() OVER (ORDER BY avg_profit DESC, ss_item_sk) rnk
-      FROM perf)
-    SELECT CAST(asceding.rnk AS INT) AS rnk,
-           i1.i_product_name best_performing,
-           i2.i_product_name worst_performing
-    FROM asceding, descending, item i1, item i2
-    WHERE asceding.rnk = descending.rnk
-      AND asceding.rnk <= 10 AND descending.rnk <= 10
-      AND i1.i_item_sk = best_sk
-      AND i2.i_item_sk = worst_sk
-    ORDER BY rnk
-    """,
-        "store_sales",
-        "item",
-    ),
-)
-def tpcds_q44_best_worst_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q44 shape: one store's ten best and ten worst items by
-    average net profit, joined POSITIONALLY on rank — two windowed
-    rankings of the same per-item rollup, then rank-equijoined and
-    closed with two item-dim lookups.
-
-    Scale: the per-item rollup reduces the fact once; both rankings
-    and the rank join operate on item-sized rows."""
-    _gate(spark)
-    ss, _, it = _star(spark, sf_dir)
-    perf = (
-        ss.where(ss.ss_store_sk == 4)
-        .groupBy("ss_item_sk")
-        .agg(F.avg("ss_net_profit").alias("avg_profit"))
-    )
-    asc = perf.select(
-        F.col("ss_item_sk").alias("worst_sk"),
-        F.rank()
-        .over(Window.orderBy(F.col("avg_profit").asc(), F.col("ss_item_sk")))
-        .alias("rnk"),
-    ).where(F.col("rnk") <= 10)
-    desc = perf.select(
-        F.col("ss_item_sk").alias("best_sk"),
-        F.rank()
-        .over(Window.orderBy(F.col("avg_profit").desc(), F.col("ss_item_sk")))
-        .alias("rnk"),
-    ).where(F.col("rnk") <= 10)
-    i1 = it.select(F.col("i_item_sk").alias("best_sk"), F.col("i_product_name").alias("best_performing"))
-    i2 = it.select(F.col("i_item_sk").alias("worst_sk"), F.col("i_product_name").alias("worst_performing"))
-    return (
-        desc.join(asc, "rnk")
-        .join(i1, "best_sk")
-        .join(i2, "worst_sk")
-        .select(
-            F.col("rnk").cast("int").alias("rnk"),
-            "best_performing",
-            "worst_performing",
-        )
-        .orderBy("rnk")
-    )
-
-
-@register(
-    "tpcds_q47_monthly_deviation_lag",
-    _wh_sql(
-        """
-    WITH monthly AS (
-      SELECT i_category, i_brand, s_store_name ename, d_year, d_moy,
-             sum(CAST(ss_sales_price AS DECIMAL(38,12))) sum_sales
-      FROM store_sales, date_dim, item, store
-      WHERE ss_sold_date_sk = d_date_sk
-        AND ss_item_sk = i_item_sk
-        AND ss_store_sk = s_store_sk
-        AND d_year IN (1998, 1999)
-      GROUP BY i_category, i_brand, s_store_name, d_year, d_moy),
-    v AS (
-      SELECT i_category, i_brand, ename, d_year, d_moy, sum_sales,
-             avg(sum_sales) OVER (PARTITION BY i_category, i_brand,
-                 ename, d_year) avg_monthly_sales,
-             lag(sum_sales) OVER (PARTITION BY i_category, i_brand,
-                 ename ORDER BY d_year, d_moy) psum,
-             lead(sum_sales) OVER (PARTITION BY i_category, i_brand,
-                 ename ORDER BY d_year, d_moy) nsum
-      FROM monthly)
-    SELECT i_category, i_brand, ename AS s_store_name, d_year, d_moy,
-           CAST(round(sum_sales, 2) AS DOUBLE) AS sum_sales,
-           CAST(round(avg_monthly_sales, 4) AS DOUBLE)
-             AS avg_monthly_sales,
-           CAST(round(psum, 2) AS DOUBLE) AS psum,
-           CAST(round(nsum, 2) AS DOUBLE) AS nsum
-    FROM v
-    WHERE d_year = 1999
-      AND avg_monthly_sales > 0
-      AND abs(sum_sales - avg_monthly_sales) / avg_monthly_sales > 0.1
-      AND psum IS NOT NULL AND nsum IS NOT NULL
-    ORDER BY (sum_sales - avg_monthly_sales), i_category, i_brand,
-             s_store_name, d_moy
-    LIMIT 20
-    """,
-        "store_sales",
-        "date_dim",
-        "item",
-        "store",
-    ),
-)
-def tpcds_q47_monthly_deviation_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q47 shape: brand-months whose sales deviate >10% from the
-    brand's yearly average, reported with the neighboring months'
-    sales — the spec's v1/v1_lag/v1_lead self-join expressed as lag()/
-    lead() windows over the monthly rollup (same result, one pass, no
-    3-way self-join).
-
-    Scale: one fact rollup to (brand, category, year, month); the avg
-    and lag/lead windows share the (brand, category) partitioning —
-    one window exchange total."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    monthly = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(F.col("d_year").isin(1998, 1999))
-        .groupBy("i_category", "i_brand", "s_store_name", "d_year", "d_moy")
-        .agg(F.sum("ss_sales_price").alias("sum_sales"))
-    )
-    part = ["i_category", "i_brand", "s_store_name"]
-    w_avg = Window.partitionBy(*part, "d_year")
-    w_seq = Window.partitionBy(*part).orderBy("d_year", "d_moy")
-    v = monthly.select(
-        *part,
-        "d_year",
-        "d_moy",
-        "sum_sales",
-        F.avg("sum_sales").over(w_avg).alias("avg_monthly_sales"),
-        F.lag("sum_sales").over(w_seq).alias("psum"),
-        F.lead("sum_sales").over(w_seq).alias("nsum"),
-    )
-    dev = (
-        F.abs(F.col("sum_sales") - F.col("avg_monthly_sales"))
-        / F.col("avg_monthly_sales")
-    )
-    return (
-        v.where(
-            (F.col("d_year") == 1999)
-            & (F.col("avg_monthly_sales") > 0)
-            & (dev > 0.1)
-            & F.col("psum").isNotNull()
-            & F.col("nsum").isNotNull()
-        )
-        .select(
-            "i_category",
-            "i_brand",
-            "s_store_name",
-            "d_year",
-            "d_moy",
-            F.round("sum_sales", 2).cast("double").alias("sum_sales"),
-            F.round("avg_monthly_sales", 4).cast("double").alias("avg_monthly_sales"),
-            F.round("psum", 2).cast("double").alias("psum"),
-            F.round("nsum", 2).cast("double").alias("nsum"),
-        )
-        .orderBy(
-            (F.col("sum_sales") - F.col("avg_monthly_sales")).asc(),
-            "i_category",
-            "i_brand",
-            "s_store_name",
-            "d_moy",
-        )
-        .limit(20)
-    )
-
-
-@register(
     "tpcds_q67_rollup_topk_items",
     _wh_sql(
         """
@@ -4234,3545 +521,6 @@ def tpcds_q67_rollup_topk_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= 3)
         .orderBy("i_category", "rk", "i_class", "i_brand")
         .limit(30)
-    )
-
-
-@register(
-    "tpcds_q31_county_qoq_growth",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk, d_qoy FROM date_dim
-      WHERE d_year = 1998 AND d_qoy IN (1, 2, 3)),
-    store_q AS (
-      SELECT ca_county,
-             sum(CAST(CASE WHEN d_qoy = 1 THEN ss_ext_sales_price
-                           ELSE 0 END AS DECIMAL(38,12))) ss1,
-             sum(CAST(CASE WHEN d_qoy = 2 THEN ss_ext_sales_price
-                           ELSE 0 END AS DECIMAL(38,12))) ss2,
-             sum(CAST(CASE WHEN d_qoy = 3 THEN ss_ext_sales_price
-                           ELSE 0 END AS DECIMAL(38,12))) ss3
-      FROM store_sales, dates, customer_address
-      WHERE ss_sold_date_sk = d_date_sk AND ss_addr_sk = ca_address_sk
-      GROUP BY ca_county),
-    web_q AS (
-      SELECT ca_county,
-             sum(CAST(CASE WHEN d_qoy = 1 THEN ws_ext_sales_price
-                           ELSE 0 END AS DECIMAL(38,12))) ws1,
-             sum(CAST(CASE WHEN d_qoy = 2 THEN ws_ext_sales_price
-                           ELSE 0 END AS DECIMAL(38,12))) ws2,
-             sum(CAST(CASE WHEN d_qoy = 3 THEN ws_ext_sales_price
-                           ELSE 0 END AS DECIMAL(38,12))) ws3
-      FROM web_sales, dates, customer_address
-      WHERE ws_sold_date_sk = d_date_sk AND ws_bill_addr_sk = ca_address_sk
-      GROUP BY ca_county)
-    SELECT store_q.ca_county AS ca_county,
-           CAST(round(CAST(ws2 AS DOUBLE) / CAST(ws1 AS DOUBLE), 4)
-                AS DOUBLE) AS web_q1_q2_increase,
-           CAST(round(CAST(ss2 AS DOUBLE) / CAST(ss1 AS DOUBLE), 4)
-                AS DOUBLE) AS store_q1_q2_increase,
-           CAST(round(CAST(ws3 AS DOUBLE) / CAST(ws2 AS DOUBLE), 4)
-                AS DOUBLE) AS web_q2_q3_increase,
-           CAST(round(CAST(ss3 AS DOUBLE) / CAST(ss2 AS DOUBLE), 4)
-                AS DOUBLE) AS store_q2_q3_increase
-    FROM store_q, web_q
-    WHERE store_q.ca_county = web_q.ca_county
-      AND ss1 > 0 AND ss2 > 0 AND ws1 > 0 AND ws2 > 0
-      AND ws2 / ws1 > ss2 / ss1
-      AND ws3 / ws2 > ss3 / ss2
-    ORDER BY ca_county
-    LIMIT 20
-    """,
-        "date_dim",
-        "store_sales",
-        "web_sales",
-        "customer_address",
-    ),
-)
-def tpcds_q31_county_qoq_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q31 shape: counties where web revenue grew faster than
-    store revenue in BOTH 1998 Q1→Q2 and Q2→Q3 — the spec writes six
-    quarterly self-joins; here each channel pivots its three quarters
-    inside ONE hash-agg (conditional sums), then the two channel rows
-    join once on county. Same county/quarter semantics, 6× fewer
-    shuffles.
-
-    Scale: each channel reduces to ≤ |county| rows before the only
-    join; the address dim joins by key ahead of the rollup."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    dates = dd.where((F.col("d_year") == 1998) & F.col("d_qoy").isin(1, 2, 3)).select(
-        "d_date_sk", "d_qoy"
-    )
-
-    def quarters(fact, date_col, addr_col, price_col, prefix):
-        q = [
-            F.sum(
-                F.when(F.col("d_qoy") == i, F.col(price_col)).otherwise(F.lit(0))
-            ).alias(f"{prefix}{i}")
-            for i in (1, 2, 3)
-        ]
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(ca, F.col(addr_col) == ca.ca_address_sk)
-            .groupBy("ca_county")
-            .agg(*q)
-        )
-
-    store_q = quarters(ss, "ss_sold_date_sk", "ss_addr_sk", "ss_ext_sales_price", "ss")
-    web_q = quarters(ws, "ws_sold_date_sk", "ws_bill_addr_sk", "ws_ext_sales_price", "ws")
-    joined = store_q.join(web_q, "ca_county").where(
-        (F.col("ss1") > 0) & (F.col("ss2") > 0) & (F.col("ws1") > 0) & (F.col("ws2") > 0)
-    )
-    web_g1 = F.col("ws2") / F.col("ws1")
-    web_g2 = F.col("ws3") / F.col("ws2")
-    store_g1 = F.col("ss2") / F.col("ss1")
-    store_g2 = F.col("ss3") / F.col("ss2")
-    return (
-        joined.where((web_g1 > store_g1) & (web_g2 > store_g2))
-        .select(
-            "ca_county",
-            F.round(web_g1, 4).cast("double").alias("web_q1_q2_increase"),
-            F.round(store_g1, 4).cast("double").alias("store_q1_q2_increase"),
-            F.round(web_g2, 4).cast("double").alias("web_q2_q3_increase"),
-            F.round(store_g2, 4).cast("double").alias("store_q2_q3_increase"),
-        )
-        .orderBy("ca_county")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q22_inventory_hierarchy_avg",
-    _wh_sql(
-        """
-    SELECT i_product_name, i_brand, i_class, i_category,
-           CAST(round(avg(inv_quantity_on_hand), 4) AS DOUBLE) AS qoh
-    FROM inventory, date_dim, item
-    WHERE inv_date_sk = d_date_sk
-      AND inv_item_sk = i_item_sk
-      AND d_month_seq BETWEEN 1176 AND 1187
-    GROUP BY ROLLUP (i_product_name, i_brand, i_class, i_category)
-    ORDER BY qoh, i_product_name NULLS FIRST, i_brand NULLS FIRST,
-             i_class NULLS FIRST, i_category NULLS FIRST
-    LIMIT 20
-    """,
-        "inventory",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q22_inventory_hierarchy_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q22 shape: average on-hand inventory rolled up the full
-    product hierarchy (product → brand → class → category → grand
-    total) for a 12-month window — ROLLUP inside one hash-agg over the
-    inventory grid.
-
-    Determinism: avg = exact integer sum / count (Spark computes avg
-    of an int column as exact partials), rounded once."""
-    _gate(spark)
-    inv = _inv(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    return (
-        inv.join(dd, inv.inv_date_sk == dd.d_date_sk)
-        .join(it, inv.inv_item_sk == it.i_item_sk)
-        .where(F.col("d_month_seq").between(1176, 1187))
-        .rollup("i_product_name", "i_brand", "i_class", "i_category")
-        .agg(
-            F.round(F.avg("inv_quantity_on_hand"), 4).cast("double").alias("qoh")
-        )
-        .orderBy(
-            F.col("qoh").asc(),
-            F.col("i_product_name").asc_nulls_first(),
-            F.col("i_brand").asc_nulls_first(),
-            F.col("i_class").asc_nulls_first(),
-            F.col("i_category").asc_nulls_first(),
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q9_bucket_case_stats",
-    _wh_sql(
-        """
-    SELECT
-           CAST(round(CASE WHEN (SELECT count(*) FROM store_sales
-                                 WHERE ss_quantity BETWEEN 1 AND 20) > 5000
-                      THEN (SELECT avg(ss_ext_discount_amt) FROM store_sales
-                            WHERE ss_quantity BETWEEN 1 AND 20)
-                      ELSE (SELECT avg(ss_net_paid) FROM store_sales
-                            WHERE ss_quantity BETWEEN 1 AND 20) END, 4)
-                AS DOUBLE) AS bucket1,
-           CAST(round(CASE WHEN (SELECT count(*) FROM store_sales
-                                 WHERE ss_quantity BETWEEN 21 AND 40) > 5000
-                      THEN (SELECT avg(ss_ext_discount_amt) FROM store_sales
-                            WHERE ss_quantity BETWEEN 21 AND 40)
-                      ELSE (SELECT avg(ss_net_paid) FROM store_sales
-                            WHERE ss_quantity BETWEEN 21 AND 40) END, 4)
-                AS DOUBLE) AS bucket2,
-           CAST(round(CASE WHEN (SELECT count(*) FROM store_sales
-                                 WHERE ss_quantity BETWEEN 41 AND 60) > 5000
-                      THEN (SELECT avg(ss_ext_discount_amt) FROM store_sales
-                            WHERE ss_quantity BETWEEN 41 AND 60)
-                      ELSE (SELECT avg(ss_net_paid) FROM store_sales
-                            WHERE ss_quantity BETWEEN 41 AND 60) END, 4)
-                AS DOUBLE) AS bucket3,
-           CAST(round(CASE WHEN (SELECT count(*) FROM store_sales
-                                 WHERE ss_quantity BETWEEN 61 AND 80) > 5000
-                      THEN (SELECT avg(ss_ext_discount_amt) FROM store_sales
-                            WHERE ss_quantity BETWEEN 61 AND 80)
-                      ELSE (SELECT avg(ss_net_paid) FROM store_sales
-                            WHERE ss_quantity BETWEEN 61 AND 80) END, 4)
-                AS DOUBLE) AS bucket4,
-           CAST(round(CASE WHEN (SELECT count(*) FROM store_sales
-                                 WHERE ss_quantity BETWEEN 81 AND 100) > 5000
-                      THEN (SELECT avg(ss_ext_discount_amt) FROM store_sales
-                            WHERE ss_quantity BETWEEN 81 AND 100)
-                      ELSE (SELECT avg(ss_net_paid) FROM store_sales
-                            WHERE ss_quantity BETWEEN 81 AND 100) END, 4)
-                AS DOUBLE) AS bucket5
-    FROM reason
-    WHERE r_reason_sk = 1
-    """,
-        "store_sales",
-        "reason",
-    ),
-)
-def tpcds_q9_bucket_case_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q9 shape: five quantity-band CASE expressions, each
-    choosing between two averages depending on the band's row count —
-    the spec runs 15 scalar subqueries over store_sales; here ONE
-    conditional-aggregation pass computes every band's count and both
-    averages, and the CASE picks in the projection. Same semantics,
-    one scan instead of 15.
-
-    Scale: a single hash-agg with no keys (all-partial reduction to
-    one row); the reason 1-row probe is the spec's driving-table
-    artifact, kept as a 1×1 cross join."""
-    _gate(spark)
-    ss, _, _ = _star(spark, sf_dir)
-    r = gen_reason(spark).where(F.col("r_reason_sk") == 1).select("r_reason_sk")
-    bands = [(1, 20, 5000), (21, 40, 5000), (41, 60, 5000), (61, 80, 5000), (81, 100, 5000)]
-    aggs = []
-    for i, (lo, hi, _thr) in enumerate(bands, start=1):
-        in_band = F.col("ss_quantity").between(lo, hi)
-        aggs += [
-            F.sum(F.when(in_band, 1).otherwise(0)).alias(f"cnt{i}"),
-            F.avg(F.when(in_band, F.col("ss_ext_discount_amt"))).alias(f"disc{i}"),
-            F.avg(F.when(in_band, F.col("ss_net_paid"))).alias(f"paid{i}"),
-        ]
-    one = ss.agg(*aggs).crossJoin(r)
-    out_cols = []
-    for i, (_lo, _hi, thr) in enumerate(bands, start=1):
-        out_cols.append(
-            F.round(
-                F.when(F.col(f"cnt{i}") > thr, F.col(f"disc{i}")).otherwise(
-                    F.col(f"paid{i}")
-                ),
-                4,
-            )
-            .cast("double")
-            .alias(f"bucket{i}")
-        )
-    return one.select(*out_cols)
-
-
-@register(
-    "tpcds_q92_excess_discount",
-    _wh_sql(
-        """
-    WITH base AS (
-      SELECT ws_item_sk, ws_ext_discount_amt
-      FROM web_sales, date_dim, item
-      WHERE ws_sold_date_sk = d_date_sk
-        AND ws_item_sk = i_item_sk
-        AND d_date BETWEEN CAST('1998-01-01' AS DATE)
-                       AND CAST('1999-12-31' AS DATE)
-        AND i_manufact_id = 35),
-    flagged AS (
-      SELECT ws_ext_discount_amt,
-             avg(ws_ext_discount_amt) OVER (PARTITION BY ws_item_sk) * 1.3
-               AS threshold
-      FROM base)
-    SELECT CAST(round(sum(CAST(ws_ext_discount_amt AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS excess_discount_amount,
-           CAST(count(*) AS BIGINT) AS excess_line_count
-    FROM flagged
-    WHERE ws_ext_discount_amt > threshold
-    """,
-        "web_sales",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q92_excess_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q92 shape: total web discount on line items whose
-    discount exceeds 1.3× their item's 90-day average — the spec's
-    correlated per-item average subquery decorrelated into an avg
-    window partitioned by item over the filtered fact.
-
-    Scale: one window exchange on item_sk over the date-filtered fact,
-    then an all-partial global sum; the item dim filter (one
-    manufacturer) shrinks the fact before the window."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    base = (
-        ws.join(dd, ws.ws_sold_date_sk == dd.d_date_sk)
-        .join(it, ws.ws_item_sk == it.i_item_sk)
-        # Spec uses a 90-day window; the generator spreads one
-        # manufacturer's ~18 items over 2 years (~1 row/item/quarter),
-        # which degenerates the per-item average — the full span keeps
-        # the correlated-average semantics testable.
-        .where(F.col("d_date").between("1998-01-01", "1999-12-31"))
-        .where(F.col("i_manufact_id") == 35)  # generator domain is 1..100
-    )
-    w = Window.partitionBy("ws_item_sk")
-    flagged = base.select(
-        "ws_ext_discount_amt",
-        (F.avg("ws_ext_discount_amt").over(w) * 1.3).alias("threshold"),
-    ).where(F.col("ws_ext_discount_amt") > F.col("threshold"))
-    return flagged.agg(
-        _money("ws_ext_discount_amt").alias("excess_discount_amount"),
-        F.count("*").cast("bigint").alias("excess_line_count"),
-    )
-
-
-@register(
-    "tpcds_q75_declining_items_yoy",
-    _wh_sql(
-        """
-    WITH items AS (
-      SELECT i_item_sk, i_brand_id, i_class_id, i_category_id,
-             i_manufact_id
-      FROM item WHERE i_category = 'Electronics'),
-    all_sales AS (
-      SELECT d_year, i_brand_id, i_class_id, i_category_id,
-             i_manufact_id,
-             ss_quantity - coalesce(sr_return_quantity, 0) net_qty,
-             CAST(ss_ext_sales_price
-                  - coalesce(sr_return_amt, 0) AS DECIMAL(38,12)) net_amt
-      FROM store_sales
-      JOIN date_dim ON ss_sold_date_sk = d_date_sk
-      JOIN items ON ss_item_sk = items.i_item_sk
-      LEFT JOIN store_returns
-        ON ss_ticket_number = sr_ticket_number AND ss_item_sk = sr_item_sk
-      UNION ALL
-      SELECT d_year, i_brand_id, i_class_id, i_category_id,
-             i_manufact_id,
-             cs_quantity - coalesce(cr_return_quantity, 0),
-             CAST(cs_ext_sales_price
-                  - coalesce(cr_return_amount, 0) AS DECIMAL(38,12))
-      FROM catalog_sales
-      JOIN date_dim ON cs_sold_date_sk = d_date_sk
-      JOIN items ON cs_item_sk = items.i_item_sk
-      LEFT JOIN catalog_returns
-        ON cs_order_number = cr_order_number AND cs_item_sk = cr_item_sk
-      UNION ALL
-      SELECT d_year, i_brand_id, i_class_id, i_category_id,
-             i_manufact_id,
-             ws_quantity - coalesce(wr_return_quantity, 0),
-             CAST(ws_ext_sales_price
-                  - coalesce(wr_return_amt, 0) AS DECIMAL(38,12))
-      FROM web_sales
-      JOIN date_dim ON ws_sold_date_sk = d_date_sk
-      JOIN items ON ws_item_sk = items.i_item_sk
-      LEFT JOIN web_returns
-        ON ws_order_number = wr_order_number AND ws_item_sk = wr_item_sk),
-    yearly AS (
-      SELECT d_year, i_brand_id, i_class_id, i_category_id,
-             i_manufact_id, sum(net_qty) qty, sum(net_amt) amt
-      FROM all_sales
-      GROUP BY d_year, i_brand_id, i_class_id, i_category_id,
-               i_manufact_id)
-    SELECT curr.i_brand_id AS i_brand_id, curr.i_class_id AS i_class_id,
-           curr.i_category_id AS i_category_id,
-           curr.i_manufact_id AS i_manufact_id,
-           CAST(prev.qty AS BIGINT) AS prev_qty,
-           CAST(curr.qty AS BIGINT) AS curr_qty,
-           CAST(curr.qty - prev.qty AS BIGINT) AS qty_delta,
-           CAST(round(curr.amt - prev.amt, 2) AS DOUBLE) AS amt_delta
-    FROM yearly curr, yearly prev
-    WHERE curr.i_brand_id = prev.i_brand_id
-      AND curr.i_class_id = prev.i_class_id
-      AND curr.i_category_id = prev.i_category_id
-      AND curr.i_manufact_id = prev.i_manufact_id
-      AND curr.d_year = 1999 AND prev.d_year = 1998
-      AND curr.qty < prev.qty
-    ORDER BY qty_delta, i_brand_id, i_class_id, i_manufact_id
-    LIMIT 20
-    """,
-        "item",
-        "store_sales",
-        "store_returns",
-        "catalog_sales",
-        "catalog_returns",
-        "web_sales",
-        "web_returns",
-        "date_dim",
-    ),
-)
-def tpcds_q75_declining_items_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q75 shape: items of one category whose returns-netted
-    quantity DECLINED year-over-year, summed across all three sales
-    channels — each channel left-joins its returns on the natural key,
-    nets quantity/amount, the three union, aggregate per (year, item
-    identity), and the two years join for the delta.
-
-    Scale: returns net out BEFORE the union (channel-local natural-key
-    joins); the yoy join sees (year × item) rollups only."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    items = it.where(F.col("i_category") == "Electronics").select(
-        "i_item_sk", "i_brand_id", "i_class_id", "i_category_id", "i_manufact_id"
-    )
-
-    def channel(fact, ret, date_col, item_col, keys, qty_col, amt_col, r_keys, r_qty, r_amt):
-        r = ret.select(
-            *[F.col(k).alias(f"rk{i}") for i, k in enumerate(r_keys)],
-            F.col(r_qty).alias("r_qty"),
-            F.col(r_amt).alias("r_amt"),
-        )
-        cond = None
-        for i, k in enumerate(keys):
-            c = F.col(k) == F.col(f"rk{i}")
-            cond = c if cond is None else (cond & c)
-        return (
-            fact.join(dd, F.col(date_col) == dd.d_date_sk)
-            .join(items, F.col(item_col) == F.col("i_item_sk"))
-            .join(r, cond, "left")
-            .select(
-                "d_year",
-                "i_brand_id",
-                "i_class_id",
-                "i_category_id",
-                "i_manufact_id",
-                (F.col(qty_col) - F.coalesce(F.col("r_qty"), F.lit(0))).alias("net_qty"),
-                (F.col(amt_col) - F.coalesce(F.col("r_amt"), F.lit(0))).alias("net_amt"),
-            )
-        )
-
-    unioned = (
-        channel(ss, sr, "ss_sold_date_sk", "ss_item_sk",
-                ["ss_ticket_number", "ss_item_sk"], "ss_quantity", "ss_ext_sales_price",
-                ["sr_ticket_number", "sr_item_sk"], "sr_return_quantity", "sr_return_amt")
-        .unionByName(
-            channel(cs, cr, "cs_sold_date_sk", "cs_item_sk",
-                    ["cs_order_number", "cs_item_sk"], "cs_quantity", "cs_ext_sales_price",
-                    ["cr_order_number", "cr_item_sk"], "cr_return_quantity", "cr_return_amount"))
-        .unionByName(
-            channel(ws, wr, "ws_sold_date_sk", "ws_item_sk",
-                    ["ws_order_number", "ws_item_sk"], "ws_quantity", "ws_ext_sales_price",
-                    ["wr_order_number", "wr_item_sk"], "wr_return_quantity", "wr_return_amt"))
-    )
-    yearly = unioned.groupBy(
-        "d_year", "i_brand_id", "i_class_id", "i_category_id", "i_manufact_id"
-    ).agg(
-        F.sum("net_qty").alias("qty"),
-        F.sum("net_amt").alias("amt"),
-    )
-    prev = yearly.where(F.col("d_year") == 1998).select(
-        "i_brand_id", "i_class_id", "i_category_id", "i_manufact_id",
-        F.col("qty").alias("prev_qty"), F.col("amt").alias("prev_amt"),
-    )
-    curr = yearly.where(F.col("d_year") == 1999).select(
-        "i_brand_id", "i_class_id", "i_category_id", "i_manufact_id",
-        F.col("qty").alias("curr_qty"), F.col("amt").alias("curr_amt"),
-    )
-    return (
-        curr.join(prev, ["i_brand_id", "i_class_id", "i_category_id", "i_manufact_id"])
-        .where(F.col("curr_qty") < F.col("prev_qty"))
-        .select(
-            "i_brand_id",
-            "i_class_id",
-            "i_category_id",
-            "i_manufact_id",
-            F.col("prev_qty").cast("bigint").alias("prev_qty"),
-            F.col("curr_qty").cast("bigint").alias("curr_qty"),
-            (F.col("curr_qty") - F.col("prev_qty")).cast("bigint").alias("qty_delta"),
-            F.round(F.col("curr_amt") - F.col("prev_amt"), 2)
-            .cast("double")
-            .alias("amt_delta"),
-        )
-        .orderBy("qty_delta", "i_brand_id", "i_class_id", "i_manufact_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q37_catalog_stocked_items",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_item_desc,
-           CAST(i_current_price AS DOUBLE) AS i_current_price
-    FROM item, inventory, date_dim, catalog_sales
-    WHERE i_current_price BETWEEN 20 AND 50
-      AND inv_item_sk = i_item_sk
-      AND d_date_sk = inv_date_sk
-      AND d_date BETWEEN CAST('1999-03-01' AS DATE)
-                     AND CAST('1999-04-30' AS DATE)
-      AND i_manufact_id IN (10, 20, 30, 40)
-      AND inv_quantity_on_hand BETWEEN 100 AND 500
-      AND cs_item_sk = i_item_sk
-    GROUP BY i_item_id, i_item_desc, i_current_price
-    ORDER BY i_item_id
-    LIMIT 20
-    """,
-        "item",
-        "inventory",
-        "date_dim",
-        "catalog_sales",
-    ),
-)
-def tpcds_q37_catalog_stocked_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q37 shape: items in a price/manufacturer slice that were
-    well-stocked (on-hand 100-500 in a 60-day window) AND sold by
-    catalog — inventory filters the item list, catalog_sales confirms
-    demand via a left-semi probe, then a per-item rollup.
-
-    Scale: inventory and the item dim reduce to a small key set before
-    the fact probe; the probe carries only item keys."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    inv = _inv(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    items = it.where(
-        F.col("i_current_price").between(20, 50) & F.col("i_manufact_id").isin(10, 20, 30, 40)
-    )
-    stocked = (
-        inv.join(dd, inv.inv_date_sk == dd.d_date_sk)
-        .where(F.col("d_date").between("1999-03-01", "1999-04-30"))
-        .where(F.col("inv_quantity_on_hand").between(100, 500))
-        .select(F.col("inv_item_sk").alias("i_item_sk"))
-        .distinct()
-    )
-    demanded = cs.select(F.col("cs_item_sk").alias("i_item_sk")).distinct()
-    return (
-        items.join(stocked, "i_item_sk", "leftsemi")
-        .join(demanded, "i_item_sk", "leftsemi")
-        .groupBy("i_item_id", "i_item_desc", "i_current_price")
-        .agg(F.count("*").cast("bigint").alias("n_variants"))
-        .select(
-            "i_item_id",
-            "i_item_desc",
-            F.col("i_current_price").cast("double").alias("i_current_price"),
-        )
-        .orderBy("i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q40_warehouse_returns_pivot",
-    _wh_sql(
-        """
-    SELECT w_state, i_item_id,
-           CAST(round(sum(CAST(CASE WHEN d_date < CAST('1998-06-01' AS DATE)
-                    THEN cs_sales_price - coalesce(cr_refunded_cash, 0)
-                    ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE)
-             AS sales_before,
-           CAST(round(sum(CAST(CASE WHEN d_date >= CAST('1998-06-01' AS DATE)
-                    THEN cs_sales_price - coalesce(cr_refunded_cash, 0)
-                    ELSE 0 END AS DECIMAL(38,12))), 2) AS DOUBLE)
-             AS sales_after
-    FROM catalog_sales
-    LEFT OUTER JOIN catalog_returns
-      ON (cs_order_number = cr_order_number AND cs_item_sk = cr_item_sk),
-         warehouse, item, date_dim
-    WHERE i_current_price BETWEEN 0.99 AND 1.49
-      AND i_item_sk = cs_item_sk
-      AND cs_warehouse_sk = w_warehouse_sk
-      AND cs_sold_date_sk = d_date_sk
-      AND d_date BETWEEN CAST('1998-05-01' AS DATE)
-                     AND CAST('1998-07-01' AS DATE)
-    GROUP BY w_state, i_item_id
-    ORDER BY w_state, i_item_id
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "catalog_returns",
-        "warehouse",
-        "item",
-        "date_dim",
-    ),
-)
-def tpcds_q40_warehouse_returns_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q40 shape: returns-netted catalog sales value per
-    (warehouse, item) split before/after a pivot date — catalog_sales
-    left-joins catalog_returns on the natural (order, item) key, nets
-    the refund, and one hash-agg computes both date halves as
-    conditional sums."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    wh = gen_warehouse(spark)
-    pivot = "1998-06-01"
-    r = cr.select(
-        F.col("cr_order_number").alias("cs_order_number"),
-        F.col("cr_item_sk").alias("cs_item_sk"),
-        "cr_refunded_cash",
-    )
-    net = (
-        cs.join(r, ["cs_order_number", "cs_item_sk"], "left")
-        .join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .join(it, cs.cs_item_sk == it.i_item_sk)
-        .join(wh, cs.cs_warehouse_sk == wh.w_warehouse_sk)
-        .where(F.col("d_date").between("1998-05-01", "1998-07-01"))
-        .where(F.col("i_current_price").between(0.99, 1.49))
-        .select(
-            "w_state",
-            "i_item_id",
-            "d_date",
-            (F.col("cs_sales_price") - F.coalesce(F.col("cr_refunded_cash"), F.lit(0))).alias(
-                "net_value"
-            ),
-        )
-    )
-    return (
-        net.groupBy("w_state", "i_item_id")
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("d_date") < pivot, F.col("net_value")).otherwise(0)), 2
-            )
-            .cast("double")
-            .alias("sales_before"),
-            F.round(
-                F.sum(F.when(F.col("d_date") >= pivot, F.col("net_value")).otherwise(0)), 2
-            )
-            .cast("double")
-            .alias("sales_after"),
-        )
-        .orderBy("w_state", "i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q58_equal_channel_items",
-    _wh_sql(
-        """
-    WITH week_dates AS (
-      SELECT d_date_sk FROM date_dim WHERE d_year = 1998 AND d_moy = 12),
-    ss_items AS (
-      SELECT i_item_id,
-             sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) ss_rev
-      FROM store_sales, week_dates, item
-      WHERE ss_sold_date_sk = d_date_sk AND ss_item_sk = i_item_sk
-      GROUP BY i_item_id),
-    cs_items AS (
-      SELECT i_item_id,
-             sum(CAST(cs_ext_sales_price AS DECIMAL(38,12))) cs_rev
-      FROM catalog_sales, week_dates, item
-      WHERE cs_sold_date_sk = d_date_sk AND cs_item_sk = i_item_sk
-      GROUP BY i_item_id),
-    ws_items AS (
-      SELECT i_item_id,
-             sum(CAST(ws_ext_sales_price AS DECIMAL(38,12))) ws_rev
-      FROM web_sales, week_dates, item
-      WHERE ws_sold_date_sk = d_date_sk AND ws_item_sk = i_item_sk
-      GROUP BY i_item_id)
-    SELECT ss_items.i_item_id AS i_item_id,
-           CAST(round(ss_rev, 2) AS DOUBLE) AS ss_rev,
-           CAST(round(cs_rev, 2) AS DOUBLE) AS cs_rev,
-           CAST(round(ws_rev, 2) AS DOUBLE) AS ws_rev,
-           CAST(round((ss_rev + cs_rev + ws_rev) / 3, 4) AS DOUBLE)
-             AS average
-    FROM ss_items, cs_items, ws_items
-    WHERE ss_items.i_item_id = cs_items.i_item_id
-      AND ss_items.i_item_id = ws_items.i_item_id
-      AND ss_rev BETWEEN 0.7 * (ss_rev + cs_rev + ws_rev) / 3
-                     AND 1.3 * (ss_rev + cs_rev + ws_rev) / 3
-      AND cs_rev BETWEEN 0.7 * (ss_rev + cs_rev + ws_rev) / 3
-                     AND 1.3 * (ss_rev + cs_rev + ws_rev) / 3
-      AND ws_rev BETWEEN 0.7 * (ss_rev + cs_rev + ws_rev) / 3
-                     AND 1.3 * (ss_rev + cs_rev + ws_rev) / 3
-    ORDER BY i_item_id
-    LIMIT 20
-    """,
-        "date_dim",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-        "item",
-    ),
-)
-def tpcds_q58_equal_channel_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q58 shape: items whose revenue is BALANCED across all
-    three channels (each channel within ±20% of the others' average)
-    for one week — three per-item channel rollups three-way joined on
-    item, with mutual tolerance predicates.
-
-    Scale: each channel reduces independently; the 3-way join runs on
-    per-item rollups."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    # Spec restricts to one week; the generators' per-(item, week,
-    # channel) density is <0.1, which empties a 3-way inner join — a
-    # month keeps the same balanced-revenue semantics testable.
-    week_dates = dd.where((F.col("d_year") == 1998) & (F.col("d_moy") == 12)).select(
-        "d_date_sk"
-    )
-
-    def channel(fact, date_col, item_col, price_col, out):
-        return (
-            fact.join(week_dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(it, F.col(item_col) == it.i_item_sk)
-            .groupBy("i_item_id")
-            .agg(F.sum(price_col).alias(out))
-        )
-
-    s = channel(ss, "ss_sold_date_sk", "ss_item_sk", "ss_ext_sales_price", "ss_rev")
-    c = channel(cs, "cs_sold_date_sk", "cs_item_sk", "cs_ext_sales_price", "cs_rev")
-    w = channel(ws, "ws_sold_date_sk", "ws_item_sk", "ws_ext_sales_price", "ws_rev")
-    joined = s.join(c, "i_item_id").join(w, "i_item_id")
-    avg_rev = (F.col("ss_rev") + F.col("cs_rev") + F.col("ws_rev")) / 3
-
-    def within(col):
-        # spec tolerance is 0.9-1.1 over dsdgen's dense weeks; single
-        # line items per channel need a wider band to ever balance
-        return (F.col(col) >= 0.7 * avg_rev) & (F.col(col) <= 1.3 * avg_rev)
-
-    return (
-        joined.where(within("ss_rev") & within("cs_rev") & within("ws_rev"))
-        .select(
-            "i_item_id",
-            F.round("ss_rev", 2).cast("double").alias("ss_rev"),
-            F.round("cs_rev", 2).cast("double").alias("cs_rev"),
-            F.round("ws_rev", 2).cast("double").alias("ws_rev"),
-            F.round(avg_rev, 4).cast("double").alias("average"),
-        )
-        .orderBy("i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q71_brand_time_buckets",
-    _wh_sql(
-        """
-    WITH items AS (SELECT i_item_sk, i_brand_id, i_brand FROM item
-                   WHERE i_manufact_id = 52),
-    dates AS (SELECT d_date_sk FROM date_dim
-              WHERE d_moy = 12 AND d_year = 1998),
-    unioned AS (
-      SELECT ws_item_sk item_sk, ws_sold_time_sk time_sk,
-             ws_ext_sales_price ext_price
-      FROM web_sales, dates WHERE ws_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT cs_item_sk, cs_sold_time_sk, cs_ext_sales_price
-      FROM catalog_sales, dates WHERE cs_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT ss_item_sk, ss_sold_time_sk, ss_ext_sales_price
-      FROM store_sales, dates WHERE ss_sold_date_sk = d_date_sk)
-    SELECT i_brand_id, i_brand, t_hour, t_meal_time,
-           CAST(round(sum(CAST(ext_price AS DECIMAL(38,12))), 2) AS DOUBLE)
-             AS ext_price
-    FROM unioned, items, time_dim
-    WHERE item_sk = i_item_sk
-      AND time_sk = t_time_sk
-      AND t_meal_time IN ('breakfast', 'dinner')
-    GROUP BY i_brand_id, i_brand, t_hour, t_meal_time
-    ORDER BY ext_price DESC, i_brand_id, t_hour
-    LIMIT 20
-    """,
-        "item",
-        "date_dim",
-        "web_sales",
-        "catalog_sales",
-        "store_sales",
-        "time_dim",
-    ),
-)
-def tpcds_q71_brand_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q71 shape: one manufacturer's December revenue per brand
-    split by meal-time shift (breakfast/dinner via time_dim) across
-    all three channels — the channels union as (item, time, price)
-    triples BEFORE the dim joins, then one rollup on (brand, hour,
-    meal time).
-
-    Scale: the union carries projected fact columns only; time_dim
-    (86,400 rows) and item broadcast from size estimates."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    td = gen_time_dim(spark)
-    items = it.where(F.col("i_manufact_id") == 52).select(
-        "i_item_sk", "i_brand_id", "i_brand"
-    )
-    dates = dd.where((F.col("d_moy") == 12) & (F.col("d_year") == 1998)).select("d_date_sk")
-
-    def leg(fact, date_col, item_col, time_col, price_col):
-        return fact.join(dates, F.col(date_col) == F.col("d_date_sk")).select(
-            F.col(item_col).alias("item_sk"),
-            F.col(time_col).alias("time_sk"),
-            F.col(price_col).alias("ext_price"),
-        )
-
-    unioned = (
-        leg(ws, "ws_sold_date_sk", "ws_item_sk", "ws_sold_time_sk", "ws_ext_sales_price")
-        .unionByName(leg(cs, "cs_sold_date_sk", "cs_item_sk", "cs_sold_time_sk", "cs_ext_sales_price"))
-        .unionByName(leg(ss, "ss_sold_date_sk", "ss_item_sk", "ss_sold_time_sk", "ss_ext_sales_price"))
-    )
-    meal = td.where(F.col("t_meal_time").isin("breakfast", "dinner")).select(
-        "t_time_sk", "t_hour", "t_meal_time"
-    )
-    return (
-        unioned.join(items, F.col("item_sk") == F.col("i_item_sk"))
-        .join(meal, F.col("time_sk") == F.col("t_time_sk"))
-        .groupBy("i_brand_id", "i_brand", "t_hour", "t_meal_time")
-        .agg(_money("ext_price").alias("ext_price"))
-        .orderBy(F.col("ext_price").desc(), "i_brand_id", "t_hour")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q83_returned_items_3way",
-    _wh_sql(
-        """
-    WITH dates AS (SELECT d_date_sk FROM date_dim
-                   WHERE d_year = 1998 AND d_moy IN (9, 10)),
-    sr_items AS (
-      SELECT i_item_id, CAST(sum(sr_return_quantity) AS BIGINT) sr_qty
-      FROM store_returns, dates, item
-      WHERE sr_returned_date_sk = d_date_sk AND sr_item_sk = i_item_sk
-      GROUP BY i_item_id),
-    cr_items AS (
-      SELECT i_item_id, CAST(sum(cr_return_quantity) AS BIGINT) cr_qty
-      FROM catalog_returns, dates, item
-      WHERE cr_returned_date_sk = d_date_sk AND cr_item_sk = i_item_sk
-      GROUP BY i_item_id),
-    wr_items AS (
-      SELECT i_item_id, CAST(sum(wr_return_quantity) AS BIGINT) wr_qty
-      FROM web_returns, dates, item
-      WHERE wr_returned_date_sk = d_date_sk AND wr_item_sk = i_item_sk
-      GROUP BY i_item_id)
-    SELECT sr_items.i_item_id AS i_item_id, sr_qty,
-           CAST(round(CAST(sr_qty AS DOUBLE)
-                      / (sr_qty + cr_qty + wr_qty) * 100, 4) AS DOUBLE)
-             AS sr_share_pct,
-           cr_qty,
-           CAST(round(CAST(cr_qty AS DOUBLE)
-                      / (sr_qty + cr_qty + wr_qty) * 100, 4) AS DOUBLE)
-             AS cr_share_pct,
-           wr_qty,
-           CAST(round(CAST(wr_qty AS DOUBLE)
-                      / (sr_qty + cr_qty + wr_qty) * 100, 4) AS DOUBLE)
-             AS wr_share_pct,
-           CAST(CAST(sr_qty + cr_qty + wr_qty AS DOUBLE) / 3 AS DOUBLE)
-             AS average
-    FROM sr_items, cr_items, wr_items
-    WHERE sr_items.i_item_id = cr_items.i_item_id
-      AND sr_items.i_item_id = wr_items.i_item_id
-    ORDER BY i_item_id
-    LIMIT 20
-    """,
-        "date_dim",
-        "store_returns",
-        "catalog_returns",
-        "web_returns",
-        "item",
-    ),
-)
-def tpcds_q83_returned_items_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q83 shape: items returned through ALL THREE channels in
-    one month, with each channel's return quantity and its share of
-    the three-channel total — per-channel returns rollups three-way
-    joined on item id.
-
-    Scale: returns facts reduce per item before the join; shares are
-    column algebra on the joined rollups."""
-    _gate(spark)
-    sr = _sr(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    dates = dd.where((F.col("d_year") == 1998) & F.col("d_moy").isin(9, 10)).select(
-        "d_date_sk"
-    )
-
-    def channel(ret, date_col, item_col, qty_col, out):
-        return (
-            ret.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(it, F.col(item_col) == it.i_item_sk)
-            .groupBy("i_item_id")
-            .agg(F.sum(qty_col).cast("bigint").alias(out))
-        )
-
-    s = channel(sr, "sr_returned_date_sk", "sr_item_sk", "sr_return_quantity", "sr_qty")
-    c = channel(cr, "cr_returned_date_sk", "cr_item_sk", "cr_return_quantity", "cr_qty")
-    w = channel(wr, "wr_returned_date_sk", "wr_item_sk", "wr_return_quantity", "wr_qty")
-    joined = s.join(c, "i_item_id").join(w, "i_item_id")
-    total = F.col("sr_qty") + F.col("cr_qty") + F.col("wr_qty")
-    return (
-        joined.select(
-            "i_item_id",
-            "sr_qty",
-            F.round(F.col("sr_qty") / total * 100, 4).cast("double").alias("sr_share_pct"),
-            "cr_qty",
-            F.round(F.col("cr_qty") / total * 100, 4).cast("double").alias("cr_share_pct"),
-            "wr_qty",
-            F.round(F.col("wr_qty") / total * 100, 4).cast("double").alias("wr_share_pct"),
-            ((total / 3).cast("double")).alias("average"),
-        )
-        .orderBy("i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q78_loyal_item_customers",
-    _wh_sql(
-        """
-    WITH ss_clean AS (
-      SELECT ss_customer_sk cust_sk, ss_item_sk item_sk,
-             CAST(sum(ss_quantity) AS BIGINT) ss_qty,
-             sum(CAST(ss_net_paid AS DECIMAL(38,12))) ss_amt
-      FROM store_sales
-      JOIN date_dim ON ss_sold_date_sk = d_date_sk
-      WHERE d_year = 1998
-        AND NOT EXISTS (SELECT * FROM store_returns
-                        WHERE sr_ticket_number = ss_ticket_number
-                          AND sr_item_sk = ss_item_sk)
-      GROUP BY ss_customer_sk, ss_item_sk),
-    ws_roll AS (
-      SELECT ws_bill_customer_sk cust_sk, ws_item_sk item_sk,
-             CAST(sum(ws_quantity) AS BIGINT) ws_qty
-      FROM web_sales, date_dim
-      WHERE ws_sold_date_sk = d_date_sk AND d_year = 1998
-      GROUP BY ws_bill_customer_sk, ws_item_sk),
-    cs_roll AS (
-      SELECT cs_bill_customer_sk cust_sk, cs_item_sk item_sk,
-             CAST(sum(cs_quantity) AS BIGINT) cs_qty
-      FROM catalog_sales, date_dim
-      WHERE cs_sold_date_sk = d_date_sk AND d_year = 1998
-      GROUP BY cs_bill_customer_sk, cs_item_sk)
-    SELECT ss_clean.cust_sk AS cust_sk, ss_clean.item_sk AS item_sk,
-           ss_qty,
-           CAST(round(ss_amt, 2) AS DOUBLE) AS ss_amt,
-           CAST(coalesce(ws_qty, 0) AS BIGINT) AS ws_qty,
-           CAST(coalesce(cs_qty, 0) AS BIGINT) AS cs_qty
-    FROM ss_clean
-    LEFT JOIN ws_roll ON ss_clean.cust_sk = ws_roll.cust_sk
-                     AND ss_clean.item_sk = ws_roll.item_sk
-    LEFT JOIN cs_roll ON ss_clean.cust_sk = cs_roll.cust_sk
-                     AND ss_clean.item_sk = cs_roll.item_sk
-    WHERE coalesce(ws_qty, 0) + coalesce(cs_qty, 0) > 0
-    ORDER BY ss_qty DESC, cust_sk, item_sk
-    LIMIT 20
-    """,
-        "store_sales",
-        "store_returns",
-        "date_dim",
-        "web_sales",
-        "catalog_sales",
-    ),
-)
-def tpcds_q78_loyal_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q78 shape: (customer, item) pairs with UNRETURNED store
-    sales, their store quantity/value vs the other channels' — store
-    sales anti-joined against returns on the natural key, rolled up
-    per (year, customer, item), left-joined to the web and catalog
-    rollups, keeping pairs where the other channels also sold.
-
-    Scale: the anti-join carries (ticket, item) keys; all three
-    rollups reduce to (year, customer, item) before joining on that
-    shared key."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-
-    ss_clean = (
-        ss.join(
-            sr.select(
-                F.col("sr_ticket_number").alias("ss_ticket_number"),
-                F.col("sr_item_sk").alias("ss_item_sk"),
-            ),
-            ["ss_ticket_number", "ss_item_sk"],
-            "leftanti",
-        )
-        .join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .groupBy(
-            F.col("ss_customer_sk").alias("cust_sk"), F.col("ss_item_sk").alias("item_sk")
-        )
-        .agg(
-            F.sum("ss_quantity").cast("bigint").alias("ss_qty"),
-            F.sum("ss_net_paid").alias("ss_amt"),
-        )
-    )
-    ws_roll = (
-        ws.join(dd, ws.ws_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .groupBy(
-            F.col("ws_bill_customer_sk").alias("cust_sk"),
-            F.col("ws_item_sk").alias("item_sk"),
-        )
-        .agg(F.sum("ws_quantity").cast("bigint").alias("ws_qty"))
-    )
-    cs_roll = (
-        cs.join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .groupBy(
-            F.col("cs_bill_customer_sk").alias("cust_sk"),
-            F.col("cs_item_sk").alias("item_sk"),
-        )
-        .agg(F.sum("cs_quantity").cast("bigint").alias("cs_qty"))
-    )
-    joined = (
-        ss_clean.join(ws_roll, ["cust_sk", "item_sk"], "left")
-        .join(cs_roll, ["cust_sk", "item_sk"], "left")
-        .where(F.coalesce(F.col("ws_qty"), F.lit(0)) + F.coalesce(F.col("cs_qty"), F.lit(0)) > 0)
-    )
-    return (
-        joined.select(
-            "cust_sk",
-            "item_sk",
-            "ss_qty",
-            F.round("ss_amt", 2).cast("double").alias("ss_amt"),
-            F.coalesce(F.col("ws_qty"), F.lit(0)).cast("bigint").alias("ws_qty"),
-            F.coalesce(F.col("cs_qty"), F.lit(0)).cast("bigint").alias("cs_qty"),
-        )
-        .orderBy(F.col("ss_qty").desc(), "cust_sk", "item_sk")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q64_cross_sales_yoy",
-    _wh_sql(
-        """
-    WITH cs_ui AS (
-      SELECT cs_item_sk AS item_sk
-      FROM catalog_sales
-      LEFT JOIN catalog_returns
-        ON cs_order_number = cr_order_number AND cs_item_sk = cr_item_sk
-      GROUP BY cs_item_sk
-      HAVING sum(CAST(cs_ext_list_price AS DECIMAL(38,12))) >
-             2 * sum(coalesce(CAST(cr_refunded_cash + cr_reversed_charge
-                                   + cr_store_credit AS DECIMAL(38,12)), 0))),
-    cross_sales AS (
-      SELECT i_product_name AS product_name, ss_item_sk AS item_sk,
-             s_store_name AS store_name, s_zip AS store_zip,
-             d1.d_year AS syear, count(*) AS cnt,
-             sum(CAST(ss_wholesale_cost AS DECIMAL(38,12))) AS s1,
-             sum(CAST(ss_list_price AS DECIMAL(38,12))) AS s2,
-             sum(CAST(ss_coupon_amt AS DECIMAL(38,12))) AS s3
-      FROM store_sales, store_returns, item, store, customer,
-           date_dim d1, date_dim d2, date_dim d3,
-           customer_demographics cd1, customer_demographics cd2,
-           household_demographics hd1, household_demographics hd2,
-           income_band ib1, income_band ib2,
-           customer_address ad1, customer_address ad2
-      WHERE ss_ticket_number = sr_ticket_number AND ss_item_sk = sr_item_sk
-        AND ss_item_sk IN (SELECT item_sk FROM cs_ui)
-        AND ss_item_sk = i_item_sk
-        AND i_color IN ('azure', 'gold', 'cream', 'khaki')
-        AND ss_store_sk = s_store_sk
-        AND ss_customer_sk = c_customer_sk
-        AND ss_sold_date_sk = d1.d_date_sk
-        AND c_first_sales_date_sk = d2.d_date_sk
-        AND c_first_shipto_date_sk = d3.d_date_sk
-        AND ss_cdemo_sk = cd1.cd_demo_sk
-        AND c_current_cdemo_sk = cd2.cd_demo_sk
-        AND cd1.cd_marital_status <> cd2.cd_marital_status
-        AND ss_hdemo_sk = hd1.hd_demo_sk
-        AND hd1.hd_income_band_sk = ib1.ib_income_band_sk
-        AND c_current_hdemo_sk = hd2.hd_demo_sk
-        AND hd2.hd_income_band_sk = ib2.ib_income_band_sk
-        AND ss_addr_sk = ad1.ca_address_sk
-        AND c_current_addr_sk = ad2.ca_address_sk
-      GROUP BY i_product_name, ss_item_sk, s_store_name, s_zip, d1.d_year)
-    SELECT cs1.product_name AS i_product_name,
-           CAST(cs1.item_sk AS INT) AS ss_item_sk,
-           cs1.store_name AS s_store_name,
-           CAST(cs1.cnt AS BIGINT) AS cnt1,
-           CAST(round(cs1.s1, 2) AS DOUBLE) AS wh1,
-           CAST(round(cs1.s2, 2) AS DOUBLE) AS lp1,
-           CAST(round(cs1.s3, 2) AS DOUBLE) AS cp1,
-           CAST(cs2.cnt AS BIGINT) AS cnt2,
-           CAST(round(cs2.s1, 2) AS DOUBLE) AS wh2,
-           CAST(round(cs2.s2, 2) AS DOUBLE) AS lp2,
-           CAST(round(cs2.s3, 2) AS DOUBLE) AS cp2
-    FROM cross_sales cs1, cross_sales cs2
-    WHERE cs1.item_sk = cs2.item_sk
-      AND cs1.store_name = cs2.store_name
-      AND cs1.store_zip = cs2.store_zip
-      AND cs1.syear = 1998 AND cs2.syear = 1999
-      AND cs2.cnt <= cs1.cnt
-    ORDER BY i_product_name, ss_item_sk, s_store_name
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "catalog_returns",
-        "store_sales",
-        "store_returns",
-        "item",
-        "store",
-        "customer",
-        "date_dim",
-        "customer_demographics",
-        "household_demographics",
-        "income_band",
-        "customer_address",
-    ),
-)
-def tpcds_q64_cross_sales_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q64 shape — the suite's largest composite: store sales of
-    catalog-cross-sold items (catalog gross sale > 2× its refunds),
-    returned in store, by customers whose CURRENT demographics differ
-    from their AT-SALE demographics (cd1 ≠ cd2 marital), with both
-    household income bands resolved and three date roles (sold /
-    first-sale / first-ship) — rolled up per (item, store, year) and
-    self-joined 1998 vs 1999 keeping pairs whose activity did not grow.
-
-    Adaptations for generator independence (documented, shape kept):
-    the spec also groups by both address zips — independently hashed
-    addresses make every (zip, zip) group a singleton, which would
-    empty the yoy self-join — so the rollup keys are (item, store,
-    year) and the address/income joins remain as row filters.
-
-    Scale: cs_ui reduces catalog+returns to an item key set first; the
-    ss→sr leg joins on (ticket, item); every dim join is keyed; the
-    yoy self-join sees (item × store) rollups only."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    sr = _sr(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    cd = gen_customer_demographics(spark)
-    hd = gen_household_demographics(spark)
-    ib = gen_income_band(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-
-    r = cr.select(
-        F.col("cr_order_number").alias("cs_order_number"),
-        F.col("cr_item_sk").alias("cs_item_sk"),
-        (F.col("cr_refunded_cash") + F.col("cr_reversed_charge") + F.col("cr_store_credit")).alias(
-            "refund"
-        ),
-    )
-    cs_ui = (
-        cs.join(r, ["cs_order_number", "cs_item_sk"], "left")
-        .groupBy("cs_item_sk")
-        .agg(
-            F.sum("cs_ext_list_price").alias("sale"),
-            F.sum(F.coalesce(F.col("refund"), F.lit(0))).alias("refund_total"),
-        )
-        .where(F.col("sale") > 2 * F.col("refund_total"))
-        .select(F.col("cs_item_sk").alias("ss_item_sk"))
-    )
-    cd1 = cd.select(
-        F.col("cd_demo_sk").alias("cd1_sk"), F.col("cd_marital_status").alias("cd1_marital")
-    )
-    cd2 = cd.select(
-        F.col("cd_demo_sk").alias("cd2_sk"), F.col("cd_marital_status").alias("cd2_marital")
-    )
-    hd1 = hd.select(F.col("hd_demo_sk").alias("hd1_sk"), F.col("hd_income_band_sk").alias("ib1_sk"))
-    hd2 = hd.select(F.col("hd_demo_sk").alias("hd2_sk"), F.col("hd_income_band_sk").alias("ib2_sk"))
-    ib1 = ib.select(F.col("ib_income_band_sk").alias("ib1_sk"))
-    ib2 = ib.select(F.col("ib_income_band_sk").alias("ib2_sk"))
-    ad1 = ca.select(F.col("ca_address_sk").alias("ad1_sk"))
-    ad2 = ca.select(F.col("ca_address_sk").alias("ad2_sk"))
-    d1 = dd.select(F.col("d_date_sk").alias("d1_sk"), F.col("d_year").alias("syear"))
-    d2 = dd.select(F.col("d_date_sk").alias("d2_sk"))
-    d3 = dd.select(F.col("d_date_sk").alias("d3_sk"))
-    items = it.where(F.col("i_color").isin("azure", "gold", "cream", "khaki")).select(
-        "i_item_sk", "i_product_name"
-    )
-    base = (
-        ss.join(
-            sr.select(
-                F.col("sr_ticket_number").alias("ss_ticket_number"),
-                F.col("sr_item_sk").alias("ss_item_sk"),
-            ),
-            ["ss_ticket_number", "ss_item_sk"],
-        )
-        .join(cs_ui, "ss_item_sk", "leftsemi")
-        .join(items, F.col("ss_item_sk") == F.col("i_item_sk"))
-        .join(st, F.col("ss_store_sk") == st.s_store_sk)
-        .join(cu, F.col("ss_customer_sk") == cu.c_customer_sk)
-        .join(d1, F.col("ss_sold_date_sk") == F.col("d1_sk"))
-        .join(d2, F.col("c_first_sales_date_sk") == F.col("d2_sk"))
-        .join(d3, F.col("c_first_shipto_date_sk") == F.col("d3_sk"))
-        .join(cd1, F.col("ss_cdemo_sk") == F.col("cd1_sk"))
-        .join(cd2, F.col("c_current_cdemo_sk") == F.col("cd2_sk"))
-        .where(F.col("cd1_marital") != F.col("cd2_marital"))
-        .join(hd1, F.col("ss_hdemo_sk") == F.col("hd1_sk"))
-        .join(ib1, "ib1_sk")
-        .join(hd2, F.col("c_current_hdemo_sk") == F.col("hd2_sk"))
-        .join(ib2, "ib2_sk")
-        .join(ad1, F.col("ss_addr_sk") == F.col("ad1_sk"))
-        .join(ad2, F.col("c_current_addr_sk") == F.col("ad2_sk"))
-    )
-    # The spec phrases the yoy comparison as a self-join of the rollup;
-    # a DataFrame self-join would execute the whole 12-join base TWICE
-    # (measured: 0 ReusedExchange, 28 BHJ at sf0.1 — double every fact
-    # scan and dim probe). With exactly two years the join folds into
-    # ONE conditional-aggregate pass: group once, F.when(syear=...)
-    # partials per year, inner-join existence == both year counts > 0.
-    # Same rows, half the compute, one less shuffle.
-    y1 = F.col("syear") == 1998
-    y2 = F.col("syear") == 1999
-    rolled = (
-        base.where(F.col("syear").isin(1998, 1999))
-        # groupBy is null-SAFE where the oracle's self-join equality is
-        # null-REJECTING: a group with NULL store_name/zip present in
-        # both years would be emitted here but dropped by the join.
-        # Guard the dim attributes so the fold stays join-equivalent
-        # even if the generator ever emits NULLs (today it cannot —
-        # datagen/tpcds.py builds both from non-null hash expressions).
-        .where(F.col("s_store_name").isNotNull() & F.col("s_zip").isNotNull())
-        .groupBy("i_product_name", "ss_item_sk", "s_store_name", "s_zip")
-        .agg(
-            F.count(F.when(y1, 1)).alias("cnt1"),
-            F.sum(F.when(y1, F.col("ss_wholesale_cost"))).alias("wh1_raw"),
-            F.sum(F.when(y1, F.col("ss_list_price"))).alias("lp1_raw"),
-            F.sum(F.when(y1, F.col("ss_coupon_amt"))).alias("cp1_raw"),
-            F.count(F.when(y2, 1)).alias("cnt2"),
-            F.sum(F.when(y2, F.col("ss_wholesale_cost"))).alias("wh2_raw"),
-            F.sum(F.when(y2, F.col("ss_list_price"))).alias("lp2_raw"),
-            F.sum(F.when(y2, F.col("ss_coupon_amt"))).alias("cp2_raw"),
-        )
-        .where((F.col("cnt1") > 0) & (F.col("cnt2") > 0))
-    )
-    return (
-        rolled.select(
-            "i_product_name", "ss_item_sk", "s_store_name",
-            "cnt1",
-            F.col("wh1_raw").alias("wh1"),
-            F.col("lp1_raw").alias("lp1"),
-            F.col("cp1_raw").alias("cp1"),
-            "cnt2",
-            F.col("wh2_raw").alias("wh2"),
-            F.col("lp2_raw").alias("lp2"),
-            F.col("cp2_raw").alias("cp2"),
-        )
-        .where(F.col("cnt2") <= F.col("cnt1"))
-        .select(
-            "i_product_name",
-            "ss_item_sk",
-            "s_store_name",
-            "cnt1",
-            F.round("wh1", 2).cast("double").alias("wh1"),
-            F.round("lp1", 2).cast("double").alias("lp1"),
-            F.round("cp1", 2).cast("double").alias("cp1"),
-            "cnt2",
-            F.round("wh2", 2).cast("double").alias("wh2"),
-            F.round("lp2", 2).cast("double").alias("lp2"),
-            F.round("cp2", 2).cast("double").alias("cp2"),
-        )
-        .orderBy("i_product_name", "ss_item_sk", "s_store_name")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q54_revenue_segments",
-    _wh_sql(
-        """
-    WITH items AS (SELECT i_item_sk FROM item WHERE i_category = 'Women'),
-    dec98 AS (SELECT d_date_sk FROM date_dim
-              WHERE d_year = 1998 AND d_moy = 12),
-    my_customers AS (
-      SELECT DISTINCT c_customer_sk
-      FROM (SELECT cs_bill_customer_sk customer_sk
-            FROM catalog_sales, dec98
-            WHERE cs_sold_date_sk = d_date_sk
-              AND cs_item_sk IN (SELECT i_item_sk FROM items)
-            UNION ALL
-            SELECT ws_bill_customer_sk
-            FROM web_sales, dec98
-            WHERE ws_sold_date_sk = d_date_sk
-              AND ws_item_sk IN (SELECT i_item_sk FROM items)) b,
-           customer, customer_address
-      WHERE customer_sk = c_customer_sk
-        AND c_current_addr_sk = ca_address_sk
-        AND EXISTS (SELECT 1 FROM store
-                    WHERE s_county = ca_county AND s_state = ca_state)),
-    q1_99 AS (SELECT d_date_sk FROM date_dim
-              WHERE d_month_seq BETWEEN 1188 AND 1193),
-    revenue AS (
-      SELECT ss_customer_sk,
-             sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) revenue
-      FROM store_sales, q1_99
-      WHERE ss_sold_date_sk = d_date_sk
-        AND ss_customer_sk IN (SELECT c_customer_sk FROM my_customers)
-      GROUP BY ss_customer_sk)
-    SELECT CAST(segment AS INT) AS segment,
-           CAST(count(*) AS BIGINT) AS num_customers,
-           CAST(segment * 50 AS INT) AS segment_base
-    FROM (SELECT CAST(floor(revenue / 50) AS INT) segment FROM revenue) t
-    GROUP BY segment
-    ORDER BY segment
-    LIMIT 30
-    """,
-        "item",
-        "date_dim",
-        "catalog_sales",
-        "web_sales",
-        "customer",
-        "customer_address",
-        "store",
-        "store_sales",
-    ),
-)
-def tpcds_q54_revenue_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q54 shape: customers who bought one category by catalog
-    or web in December 1998, live in a county with a store, and their
-    following-quarter store revenue bucketed into $50 segments — a
-    cross-channel distinct customer set, an address↔store county/state
-    semi-join, a per-customer revenue rollup, and a histogram rollup.
-
-    Scale: my_customers reduces to distinct keys before touching
-    store_sales; the county/state match is a semi-join against the
-    8-row store dim; the histogram runs over per-customer rollups."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    st = gen_store(spark)
-    # Spec filters category+class and one month; the generators'
-    # independent hashing leaves ~6 customers after the county
-    # semi-join at that selectivity, so the buyer set is category-wide
-    # (same funnel shape, every stage still selective).
-    items = it.where(F.col("i_category") == "Women").select("i_item_sk")
-    dec98 = dd.where((F.col("d_year") == 1998) & (F.col("d_moy") == 12)).select("d_date_sk")
-
-    def buyers(fact, date_col, item_col, cust_col):
-        return (
-            fact.join(dec98, F.col(date_col) == F.col("d_date_sk"))
-            .join(items, F.col(item_col) == F.col("i_item_sk"), "leftsemi")
-            .select(F.col(cust_col).alias("c_customer_sk"))
-        )
-
-    my_customers = (
-        buyers(cs, "cs_sold_date_sk", "cs_item_sk", "cs_bill_customer_sk")
-        .unionByName(buyers(ws, "ws_sold_date_sk", "ws_item_sk", "ws_bill_customer_sk"))
-        .distinct()
-        .join(cu, "c_customer_sk")
-        .join(ca, F.col("c_current_addr_sk") == ca.ca_address_sk)
-        .join(
-            st.select(
-                F.col("s_county").alias("ca_county"), F.col("s_state").alias("ca_state")
-            ).distinct(),
-            ["ca_county", "ca_state"],
-            "leftsemi",
-        )
-        .select("c_customer_sk")
-    )
-    q1_99 = dd.where(F.col("d_month_seq").between(1188, 1193)).select("d_date_sk")
-    revenue = (
-        ss.join(q1_99, ss.ss_sold_date_sk == F.col("d_date_sk"))
-        .join(my_customers, ss.ss_customer_sk == my_customers.c_customer_sk, "leftsemi")
-        .groupBy("ss_customer_sk")
-        .agg(F.sum("ss_ext_sales_price").alias("revenue"))
-    )
-    return (
-        revenue.select(F.floor(F.col("revenue") / 50).cast("int").alias("segment"))
-        .groupBy("segment")
-        .agg(F.count("*").cast("bigint").alias("num_customers"))
-        .select(
-            "segment",
-            "num_customers",
-            (F.col("segment") * 50).cast("int").alias("segment_base"),
-        )
-        .orderBy("segment")
-        .limit(30)
-    )
-
-
-@register(
-    "tpcds_q14_cross_channel_intersect",
-    _wh_sql(
-        """
-    WITH cross_triples AS (
-      SELECT i_brand_id, i_class_id, i_category_id
-      FROM store_sales, item
-      WHERE ss_item_sk = i_item_sk
-      INTERSECT
-      SELECT i_brand_id, i_class_id, i_category_id
-      FROM catalog_sales, item
-      WHERE cs_item_sk = i_item_sk
-      INTERSECT
-      SELECT i_brand_id, i_class_id, i_category_id
-      FROM web_sales, item
-      WHERE ws_item_sk = i_item_sk),
-    cross_items AS (
-      SELECT i_item_sk, item.i_brand_id, item.i_class_id,
-             item.i_category_id
-      FROM item
-      WHERE EXISTS (SELECT 1 FROM cross_triples ct
-                    WHERE ct.i_brand_id = item.i_brand_id
-                      AND ct.i_class_id = item.i_class_id
-                      AND ct.i_category_id = item.i_category_id)),
-    avg_sales AS (
-      SELECT avg(s) avg_sales FROM (
-        SELECT CAST(ss_quantity * ss_list_price AS DECIMAL(38,12)) s
-        FROM store_sales
-        UNION ALL
-        SELECT CAST(cs_quantity * cs_list_price AS DECIMAL(38,12))
-        FROM catalog_sales
-        UNION ALL
-        SELECT CAST(ws_quantity * ws_list_price AS DECIMAL(38,12))
-        FROM web_sales) x),
-    unioned AS (
-      SELECT 'store' channel, i_brand_id, i_class_id, i_category_id,
-             CAST(ss_quantity * ss_list_price AS DECIMAL(38,12)) sales
-      FROM store_sales, date_dim, cross_items
-      WHERE ss_sold_date_sk = d_date_sk AND d_year = 1999 AND d_moy = 12
-        AND ss_item_sk = i_item_sk
-      UNION ALL
-      SELECT 'catalog', i_brand_id, i_class_id, i_category_id,
-             CAST(cs_quantity * cs_list_price AS DECIMAL(38,12))
-      FROM catalog_sales, date_dim, cross_items
-      WHERE cs_sold_date_sk = d_date_sk AND d_year = 1999 AND d_moy = 12
-        AND cs_item_sk = i_item_sk
-      UNION ALL
-      SELECT 'web', i_brand_id, i_class_id, i_category_id,
-             CAST(ws_quantity * ws_list_price AS DECIMAL(38,12))
-      FROM web_sales, date_dim, cross_items
-      WHERE ws_sold_date_sk = d_date_sk AND d_year = 1999 AND d_moy = 12
-        AND ws_item_sk = i_item_sk)
-    SELECT channel, i_brand_id, i_class_id, i_category_id,
-           CAST(round(sum_sales, 2) AS DOUBLE) AS sum_sales, n_sales
-    FROM (SELECT channel, i_brand_id, i_class_id, i_category_id,
-                 sum(sales) sum_sales,
-                 CAST(count(*) AS BIGINT) n_sales
-          FROM unioned
-          GROUP BY channel, i_brand_id, i_class_id, i_category_id) r
-    WHERE sum_sales > (SELECT avg_sales FROM avg_sales)
-    ORDER BY sum_sales DESC, channel, i_brand_id
-    LIMIT 20
-    """,
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-        "item",
-        "date_dim",
-    ),
-)
-def tpcds_q14_cross_channel_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q14 shape (first variant): December revenue per channel
-    for items whose (brand, class, category) triple sold in ALL THREE
-    channels over the full span — the spec's cross_items INTERSECT
-    chain (computed on distinct attribute triples, then semi-joined
-    back to the item dim) and its avg_sales scalar threshold (1-row
-    cross join), rolled up per (channel, brand, class, category).
-
-    Scale: the INTERSECT operates on distinct (brand, class, category)
-    triples — bounded by the item-attribute domain, not the facts; the
-    scalar threshold leg reduces the union of facts to ONE row before
-    the cross join; each channel's December rollup joins the small
-    cross_items key set via leftsemi."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-
-    def sold_triples(fact, item_col):
-        return (
-            fact.join(it, F.col(item_col) == it.i_item_sk)
-            .select("i_brand_id", "i_class_id", "i_category_id")
-            .distinct()
-        )
-
-    triple_cols = ["i_brand_id", "i_class_id", "i_category_id"]
-    cross_triples = (
-        sold_triples(ss, "ss_item_sk")
-        .intersect(sold_triples(cs, "cs_item_sk"))
-        .intersect(sold_triples(ws, "ws_item_sk"))
-    )
-    cross_items = it.join(cross_triples, triple_cols, "leftsemi").select(
-        "i_item_sk", *triple_cols
-    )
-
-    def december(fact, date_col, item_col, qty, price, label):
-        return (
-            fact.join(dd, F.col(date_col) == dd.d_date_sk)
-            .where((F.col("d_year") == 1999) & (F.col("d_moy") == 12))
-            .join(cross_items, F.col(item_col) == F.col("i_item_sk"))
-            .select(
-                F.lit(label).alias("channel"),
-                *triple_cols,
-                (F.col(qty) * F.col(price)).alias("sales"),
-            )
-        )
-
-    avg_sales = (
-        ss.select((F.col("ss_quantity") * F.col("ss_list_price")).alias("s"))
-        .unionByName(cs.select((F.col("cs_quantity") * F.col("cs_list_price")).alias("s")))
-        .unionByName(ws.select((F.col("ws_quantity") * F.col("ws_list_price")).alias("s")))
-        .agg(F.avg("s").alias("avg_sales"))
-    )
-    unioned = (
-        december(ss, "ss_sold_date_sk", "ss_item_sk", "ss_quantity", "ss_list_price", "store")
-        .unionByName(december(cs, "cs_sold_date_sk", "cs_item_sk", "cs_quantity", "cs_list_price", "catalog"))
-        .unionByName(december(ws, "ws_sold_date_sk", "ws_item_sk", "ws_quantity", "ws_list_price", "web"))
-    )
-    rolled = (
-        unioned.groupBy("channel", "i_brand_id", "i_class_id", "i_category_id")
-        .agg(F.sum("sales").alias("sum_sales"), F.count("*").cast("bigint").alias("n_sales"))
-        .crossJoin(avg_sales)
-        .where(F.col("sum_sales") > F.col("avg_sales"))
-    )
-    return (
-        rolled.select(
-            "channel",
-            "i_brand_id",
-            "i_class_id",
-            "i_category_id",
-            F.round("sum_sales", 2).cast("double").alias("sum_sales"),
-            "n_sales",
-        )
-        .orderBy(F.col("sum_sales").desc(), "channel", "i_brand_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q76_null_key_report",
-    _wh_sql(
-        """
-    WITH unioned AS (
-      SELECT 'store' channel, 'ss_customer_sk' col_name, d_year, d_qoy,
-             i_category,
-             CAST(ss_ext_sales_price AS DECIMAL(38,12)) ext_sales_price
-      FROM store_sales, date_dim, item
-      WHERE substring(md5(CAST(ss_customer_sk AS VARCHAR)), 1, 1) = '0'
-        AND ss_sold_date_sk = d_date_sk AND ss_item_sk = i_item_sk
-      UNION ALL
-      SELECT 'web', 'ws_ship_customer_sk', d_year, d_qoy, i_category,
-             CAST(ws_ext_sales_price AS DECIMAL(38,12))
-      FROM web_sales, date_dim, item
-      WHERE substring(md5(CAST(ws_ship_customer_sk AS VARCHAR)), 1, 1) = '0'
-        AND ws_sold_date_sk = d_date_sk AND ws_item_sk = i_item_sk
-      UNION ALL
-      SELECT 'catalog', 'cs_ship_addr_sk', d_year, d_qoy, i_category,
-             CAST(cs_ext_sales_price AS DECIMAL(38,12))
-      FROM catalog_sales, date_dim, item
-      WHERE substring(md5(CAST(cs_ship_addr_sk AS VARCHAR)), 1, 1) = '0'
-        AND cs_sold_date_sk = d_date_sk AND cs_item_sk = i_item_sk)
-    SELECT channel, col_name, d_year, d_qoy, i_category,
-           CAST(count(*) AS BIGINT) AS sales_cnt,
-           CAST(round(sum(ext_sales_price), 2) AS DOUBLE) AS sales_amt
-    FROM unioned
-    GROUP BY channel, col_name, d_year, d_qoy, i_category
-    ORDER BY channel, col_name, d_year, d_qoy, i_category
-    LIMIT 20
-    """,
-        "store_sales",
-        "web_sales",
-        "catalog_sales",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q76_null_key_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q76 shape: sales rows with a NULL surrogate key, counted
-    and summed per (channel, null-column, year, quarter) over the
-    3-channel union. dsdgen plants NULL FKs; these generators don't,
-    so a deterministic subset (key hash ≡ 0 mod 50) is nulled
-    IN-QUERY via NULLIF — the union/rollup plan and null-handling
-    semantics are exactly the spec's, only the null-planting site
-    differs (documented adaptation).
-
-    Scale: each channel projects and filters to its null-key rows
-    BEFORE the union; the rollup sees only the (tiny) null slices.
-
-    Round 6: the null-key simulation moved from xxhash64 (no DuckDB
-    twin) to an md5-nibble rule so the oracle can re-derive the
-    simulated null set and this query joins the DuckDB-executed tier
-    — leaving only the structural warehouse build audit on a pin.
-    """
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-
-    def leg(fact, date_col, item_col, key_col, price_col, channel, col_name):
-        # md5 is bit-identical in Spark and DuckDB (xxhash64 is not),
-        # so the simulated null set is re-derivable by the oracle:
-        # ~1/16 of keys (leading hex nibble '0') go null
-        nulled = F.when(
-            F.substring(F.md5(F.col(key_col).cast("string")), 1, 1) == "0",
-            None,
-        ).otherwise(F.col(key_col))
-        return (
-            fact.withColumn("_k", nulled)
-            .where(F.col("_k").isNull())
-            .join(dd, F.col(date_col) == dd.d_date_sk)
-            .join(it, F.col(item_col) == it.i_item_sk)
-            .select(
-                F.lit(channel).alias("channel"),
-                F.lit(col_name).alias("col_name"),
-                "d_year",
-                "d_qoy",
-                "i_category",
-                F.col(price_col).alias("ext_sales_price"),
-            )
-        )
-
-    unioned = (
-        leg(ss, "ss_sold_date_sk", "ss_item_sk", "ss_customer_sk",
-            "ss_ext_sales_price", "store", "ss_customer_sk")
-        .unionByName(leg(ws, "ws_sold_date_sk", "ws_item_sk", "ws_ship_customer_sk",
-                         "ws_ext_sales_price", "web", "ws_ship_customer_sk"))
-        .unionByName(leg(cs, "cs_sold_date_sk", "cs_item_sk", "cs_ship_addr_sk",
-                         "cs_ext_sales_price", "catalog", "cs_ship_addr_sk"))
-    )
-    return (
-        unioned.groupBy("channel", "col_name", "d_year", "d_qoy", "i_category")
-        .agg(
-            F.count("*").cast("bigint").alias("sales_cnt"),
-            _money("ext_sales_price").alias("sales_amt"),
-        )
-        .orderBy("channel", "col_name", "d_year", "d_qoy", "i_category")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_stress_corpus",
-    """
-    SELECT 'q3_brand_rollup' AS unit_name, CAST(4 AS BIGINT) AS n_runs,
-           CAST(4 AS BIGINT) AS n_ok, CAST(10 AS BIGINT) AS min_rows, CAST(10 AS BIGINT) AS max_rows
-    UNION ALL
-    SELECT 'q42_category_rollup', CAST(4 AS BIGINT), CAST(4 AS BIGINT), CAST(10 AS BIGINT), CAST(10 AS BIGINT)
-    UNION ALL
-    SELECT 'q52_brand_monthly', CAST(4 AS BIGINT), CAST(4 AS BIGINT), CAST(10 AS BIGINT), CAST(10 AS BIGINT)
-    UNION ALL
-    SELECT 'q55_manager_brands', CAST(4 AS BIGINT), CAST(4 AS BIGINT), CAST(10 AS BIGINT), CAST(10 AS BIGINT)
-    ORDER BY unit_name
-    """,
-)
-def tpcds_stress_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's HEADLINE use case end-to-end: the dbstress
-    harness driving TPC-DS corpus SQL against a TPC-DS warehouse
-    (`evaluation_tools/dbstress__Current.py:93-175` loads
-    `queries/tpcds_2.13/*.sql` and fans them over parallel
-    connections). Here: the generated star registers as temp views,
-    four q3-family SQL TEXTS (comments stripped, exactly as the
-    reference's sqlparse pass) run 2-parallel × 2-repeats through the
-    thread-pool harness, and the summary exports the deterministic
-    columns (latencies go to latency_summary, never hashed).
-
-    Scale: the harness is control-plane — Spark's scheduler interleaves
-    the concurrent jobs; each unit's plan is the same dims-broadcast
-    single-shuffle rollup the dedicated tpcds_q3 query pins."""
-    from lakehouse_dba_tools_spark.workload.harness import (
-        SqlUnit,
-        run_workload,
-        latency_summary,
-        strip_sql_comments,
-    )
-
-    ss, dd, it = _star(spark, sf_dir)
-    ss.createOrReplaceTempView("v_store_sales")
-    dd.createOrReplaceTempView("v_date_dim")
-    it.createOrReplaceTempView("v_item")
-    corpus = {
-        "q3_brand_rollup": """
-            -- TPC-DS q3 family
-            SELECT d_year, i_brand_id, i_brand, sum(ss_ext_sales_price) AS sum_agg
-            FROM v_store_sales JOIN v_date_dim ON ss_sold_date_sk = d_date_sk
-            JOIN v_item ON ss_item_sk = i_item_sk
-            WHERE i_manufact_id = 43 AND d_moy = 11
-            GROUP BY d_year, i_brand_id, i_brand
-            ORDER BY d_year, sum_agg DESC, i_brand_id LIMIT 10;
-        """,
-        "q42_category_rollup": """
-            /* q42: category rollup for one month */
-            SELECT d_year, i_category_id, i_category, sum(ss_ext_sales_price) AS sum_agg
-            FROM v_store_sales JOIN v_date_dim ON ss_sold_date_sk = d_date_sk
-            JOIN v_item ON ss_item_sk = i_item_sk
-            WHERE i_manager_id = 1 AND d_moy = 11 AND d_year = 1998
-            GROUP BY d_year, i_category_id, i_category
-            ORDER BY sum_agg DESC, d_year, i_category_id LIMIT 10;
-        """,
-        "q52_brand_monthly": """
-            SELECT d_year, i_brand_id, i_brand, sum(ss_ext_sales_price) AS ext_price
-            FROM v_store_sales JOIN v_date_dim ON ss_sold_date_sk = d_date_sk
-            JOIN v_item ON ss_item_sk = i_item_sk
-            WHERE i_manager_id = 1 AND d_moy = 11 AND d_year = 1998
-            GROUP BY d_year, i_brand_id, i_brand
-            ORDER BY d_year, ext_price DESC, i_brand_id LIMIT 10;
-        """,
-        "q55_manager_brands": """
-            SELECT i_brand_id, i_brand, sum(ss_ext_sales_price) AS ext_price
-            FROM v_store_sales JOIN v_date_dim ON ss_sold_date_sk = d_date_sk
-            JOIN v_item ON ss_item_sk = i_item_sk
-            WHERE i_manager_id = 28 AND d_moy = 11 AND d_year = 1998
-            GROUP BY i_brand_id, i_brand
-            ORDER BY ext_price DESC, i_brand_id LIMIT 10;
-        """,
-    }
-    units = [
-        SqlUnit(name, strip_sql_comments(sql), parallel=2, repeats=2)
-        for name, sql in sorted(corpus.items())
-    ]
-    results = run_workload(spark, units)
-    return (
-        latency_summary(results)
-        .select("unit_name", "n_runs", "n_ok", "min_rows", "max_rows")
-        .orderBy("unit_name")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 completion sweep: the remaining numbers of the 99-query corpus.
-# Most are channel/dim twins of shapes implemented above; each docstring
-# names its prototype. Same pinned-VALUES oracle discipline throughout.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "tpcds_q99_catalog_ship_latency",
-    _wh_sql(
-        """
-    SELECT substring(w_warehouse_name, 1, 20) AS warehouse,
-           sm_type, cc_name,
-           CAST(sum(CASE WHEN (cs_ship_date_sk - cs_sold_date_sk <= 30)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d30,
-           CAST(sum(CASE WHEN (cs_ship_date_sk - cs_sold_date_sk > 30)
-                          AND (cs_ship_date_sk - cs_sold_date_sk <= 60)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d60,
-           CAST(sum(CASE WHEN (cs_ship_date_sk - cs_sold_date_sk > 60)
-                          AND (cs_ship_date_sk - cs_sold_date_sk <= 90)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d90,
-           CAST(sum(CASE WHEN (cs_ship_date_sk - cs_sold_date_sk > 90)
-                          AND (cs_ship_date_sk - cs_sold_date_sk <= 120)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d120,
-           CAST(sum(CASE WHEN (cs_ship_date_sk - cs_sold_date_sk > 120)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS dmore
-    FROM catalog_sales, warehouse, ship_mode, call_center, date_dim
-    WHERE d_month_seq BETWEEN 1176 AND 1187
-      AND cs_ship_date_sk = d_date_sk
-      AND cs_warehouse_sk = w_warehouse_sk
-      AND cs_ship_mode_sk = sm_ship_mode_sk
-      AND cs_call_center_sk = cc_call_center_sk
-    GROUP BY substring(w_warehouse_name, 1, 20), sm_type, cc_name
-    ORDER BY warehouse, sm_type, cc_name
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "warehouse",
-        "ship_mode",
-        "call_center",
-        "date_dim",
-    ),
-)
-def tpcds_q99_catalog_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q99: catalog ship-latency buckets per (warehouse, ship
-    mode, call center) — the q62 shape with the catalog channel's
-    dims."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    wh = gen_warehouse(spark)
-    sm = gen_ship_mode(spark)
-    cc = gen_call_center(spark)
-    gap = F.col("cs_ship_date_sk") - F.col("cs_sold_date_sk")
-
-    def bucket(lo, hi, name):
-        if hi is None:
-            cond = gap > lo
-        elif lo is None:
-            cond = gap <= hi
-        else:
-            cond = (gap > lo) & (gap <= hi)
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(name)
-
-    return (
-        cs.join(dd, cs.cs_ship_date_sk == dd.d_date_sk)
-        .join(wh, cs.cs_warehouse_sk == wh.w_warehouse_sk)
-        .join(sm, cs.cs_ship_mode_sk == sm.sm_ship_mode_sk)
-        .join(cc, cs.cs_call_center_sk == cc.cc_call_center_sk)
-        .where(F.col("d_month_seq").between(1176, 1187))
-        .groupBy(
-            F.substring("w_warehouse_name", 1, 20).alias("warehouse"),
-            "sm_type",
-            "cc_name",
-        )
-        .agg(
-            bucket(None, 30, "d30"),
-            bucket(30, 60, "d60"),
-            bucket(60, 90, "d90"),
-            bucket(90, 120, "d120"),
-            bucket(120, None, "dmore"),
-        )
-        .orderBy("warehouse", "sm_type", "cc_name")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q50_store_return_latency",
-    _wh_sql(
-        """
-
-    SELECT s_store_name, s_company_id, s_street_name,
-           CAST(sum(CASE WHEN (sr_returned_date_sk - ss_sold_date_sk <= 30)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d30,
-           CAST(sum(CASE WHEN (sr_returned_date_sk - ss_sold_date_sk > 30)
-                          AND (sr_returned_date_sk - ss_sold_date_sk <= 60)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d60,
-           CAST(sum(CASE WHEN (sr_returned_date_sk - ss_sold_date_sk > 60)
-                          AND (sr_returned_date_sk - ss_sold_date_sk <= 90)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d90,
-           CAST(sum(CASE WHEN (sr_returned_date_sk - ss_sold_date_sk > 90)
-                          AND (sr_returned_date_sk - ss_sold_date_sk <= 120)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS d120,
-           CAST(sum(CASE WHEN (sr_returned_date_sk - ss_sold_date_sk > 120)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS dmore
-    FROM store_sales, store_returns, store, date_dim d2
-    WHERE ss_ticket_number = sr_ticket_number
-      AND ss_item_sk = sr_item_sk
-      AND ss_customer_sk = sr_customer_sk
-      AND sr_returned_date_sk = d2.d_date_sk
-      AND ss_store_sk = s_store_sk
-      AND d2.d_year = 1998
-      AND d2.d_moy = 9
-    GROUP BY s_store_name, s_company_id, s_street_name
-    ORDER BY s_store_name, s_company_id, s_street_name
-    LIMIT 10
-    """,
-        "store_sales",
-        "store_returns",
-        "store",
-        "date_dim",
-    ),
-)
-def tpcds_q50_store_return_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q50: days-to-return buckets per store — sales joined to
-    their returns on the (ticket, item, customer) natural key, the
-    sold→returned day gap bucketed like q62's ship latency."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    sr = _sr(spark, sf_dir)
-    r = sr.select(
-        F.col("sr_ticket_number").alias("ss_ticket_number"),
-        F.col("sr_item_sk").alias("ss_item_sk"),
-        F.col("sr_customer_sk").alias("ss_customer_sk"),
-        "sr_returned_date_sk",
-    )
-    d2 = dd.select(F.col("d_date_sk").alias("sr_returned_date_sk"), "d_year", "d_moy")
-    gap = F.col("sr_returned_date_sk") - F.col("ss_sold_date_sk")
-
-    def bucket(lo, hi, name):
-        if hi is None:
-            cond = gap > lo
-        elif lo is None:
-            cond = gap <= hi
-        else:
-            cond = (gap > lo) & (gap <= hi)
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(name)
-
-    return (
-        ss.join(r, ["ss_ticket_number", "ss_item_sk", "ss_customer_sk"])
-        .join(d2, "sr_returned_date_sk")
-        .join(st, F.col("ss_store_sk") == st.s_store_sk)
-        .where((F.col("d_year") == 1998) & (F.col("d_moy") == 9))
-        .groupBy("s_store_name", "s_company_id", "s_street_name")
-        .agg(
-            bucket(None, 30, "d30"),
-            bucket(30, 60, "d60"),
-            bucket(60, 90, "d90"),
-            bucket(90, 120, "d120"),
-            bucket(120, None, "dmore"),
-        )
-        .orderBy("s_store_name", "s_company_id", "s_street_name")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q33_manufacturer_cross_channel",
-    _wh_sql(
-        """
-
-    WITH items AS (SELECT i_item_sk, i_manufact_id FROM item WHERE i_category = 'Books'),
-    dates AS (SELECT d_date_sk FROM date_dim
-              WHERE d_year = 1998 AND d_moy = 9),
-    unioned AS (
-      SELECT i_manufact_id, sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) sales
-      FROM store_sales, dates, items
-      WHERE ss_sold_date_sk = d_date_sk AND ss_item_sk = i_item_sk
-      GROUP BY i_manufact_id
-      UNION ALL
-      SELECT i_manufact_id, sum(CAST(cs_ext_sales_price AS DECIMAL(38,12)))
-      FROM catalog_sales, dates, items
-      WHERE cs_sold_date_sk = d_date_sk AND cs_item_sk = i_item_sk
-      GROUP BY i_manufact_id
-      UNION ALL
-      SELECT i_manufact_id, sum(CAST(ws_ext_sales_price AS DECIMAL(38,12)))
-      FROM web_sales, dates, items
-      WHERE ws_sold_date_sk = d_date_sk AND ws_item_sk = i_item_sk
-      GROUP BY i_manufact_id)
-    SELECT i_manufact_id,
-           CAST(round(sum(sales), 2) AS DOUBLE) AS total_sales
-    FROM unioned
-    GROUP BY i_manufact_id
-    ORDER BY total_sales DESC, i_manufact_id
-    LIMIT 15
-    """,
-        "item",
-        "date_dim",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-    ),
-)
-def tpcds_q33_manufacturer_cross_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q33: one category's September revenue per MANUFACTURER
-    summed across the three channels — the q60 cross-channel union
-    shape keyed by i_manufact_id."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    items = it.where(F.col("i_category") == "Books").select("i_item_sk", "i_manufact_id")
-    dates = dd.where((F.col("d_year") == 1998) & (F.col("d_moy") == 9)).select("d_date_sk")
-
-    def channel(fact, date_col, item_col, price_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(items, F.col(item_col) == F.col("i_item_sk"))
-            .groupBy("i_manufact_id")
-            .agg(F.sum(price_col).alias("sales"))
-        )
-
-    unioned = (
-        channel(ss, "ss_sold_date_sk", "ss_item_sk", "ss_ext_sales_price")
-        .unionByName(channel(cs, "cs_sold_date_sk", "cs_item_sk", "cs_ext_sales_price"))
-        .unionByName(channel(ws, "ws_sold_date_sk", "ws_item_sk", "ws_ext_sales_price"))
-    )
-    return (
-        unioned.groupBy("i_manufact_id")
-        .agg(F.round(F.sum("sales"), 2).cast("double").alias("total_sales"))
-        .orderBy(F.col("total_sales").desc(), "i_manufact_id")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q56_color_cross_channel",
-    _wh_sql(
-        """
-
-    WITH items AS (SELECT i_item_sk, i_item_id FROM item WHERE i_color IN ('coral', 'indigo', 'cyan')),
-    dates AS (SELECT d_date_sk FROM date_dim
-              WHERE d_year = 1999 AND d_moy = 2),
-    unioned AS (
-      SELECT i_item_id, sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) sales
-      FROM store_sales, dates, items
-      WHERE ss_sold_date_sk = d_date_sk AND ss_item_sk = i_item_sk
-      GROUP BY i_item_id
-      UNION ALL
-      SELECT i_item_id, sum(CAST(cs_ext_sales_price AS DECIMAL(38,12)))
-      FROM catalog_sales, dates, items
-      WHERE cs_sold_date_sk = d_date_sk AND cs_item_sk = i_item_sk
-      GROUP BY i_item_id
-      UNION ALL
-      SELECT i_item_id, sum(CAST(ws_ext_sales_price AS DECIMAL(38,12)))
-      FROM web_sales, dates, items
-      WHERE ws_sold_date_sk = d_date_sk AND ws_item_sk = i_item_sk
-      GROUP BY i_item_id)
-    SELECT i_item_id,
-           CAST(round(sum(sales), 2) AS DOUBLE) AS total_sales
-    FROM unioned
-    GROUP BY i_item_id
-    ORDER BY total_sales DESC, i_item_id
-    LIMIT 15
-    """,
-        "item",
-        "date_dim",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-    ),
-)
-def tpcds_q56_color_cross_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q56: revenue of color-picked items per item id across
-    the three channels — the q60 union shape with an i_color IN-list
-    item filter."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    items = it.where(F.col("i_color").isin("coral", "indigo", "cyan")).select(
-        "i_item_sk", "i_item_id"
-    )
-    dates = dd.where((F.col("d_year") == 1999) & (F.col("d_moy") == 2)).select("d_date_sk")
-
-    def channel(fact, date_col, item_col, price_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(items, F.col(item_col) == F.col("i_item_sk"))
-            .groupBy("i_item_id")
-            .agg(F.sum(price_col).alias("sales"))
-        )
-
-    unioned = (
-        channel(ss, "ss_sold_date_sk", "ss_item_sk", "ss_ext_sales_price")
-        .unionByName(channel(cs, "cs_sold_date_sk", "cs_item_sk", "cs_ext_sales_price"))
-        .unionByName(channel(ws, "ws_sold_date_sk", "ws_item_sk", "ws_ext_sales_price"))
-    )
-    return (
-        unioned.groupBy("i_item_id")
-        .agg(F.round(F.sum("sales"), 2).cast("double").alias("total_sales"))
-        .orderBy(F.col("total_sales").desc(), "i_item_id")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q12_web_class_ratio",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_category, i_class,
-           CAST(round(itemrevenue, 2) AS DOUBLE) AS itemrevenue,
-           CAST(round(CAST(itemrevenue AS DOUBLE) * 100
-                      / CAST(sum(itemrevenue) OVER (PARTITION BY i_class)
-                             AS DOUBLE), 4) AS DOUBLE) AS revenueratio
-    FROM (SELECT i_item_id, i_category, i_class,
-                 sum(CAST(ws_ext_sales_price AS DECIMAL(38,12))) itemrevenue
-          FROM web_sales, item, date_dim
-          WHERE ws_item_sk = i_item_sk
-            AND i_category IN ('Sports', 'Books', 'Home')
-            AND ws_sold_date_sk = d_date_sk
-            AND d_date BETWEEN CAST('1999-02-22' AS DATE)
-                           AND CAST('1999-03-24' AS DATE)
-          GROUP BY i_item_id, i_category, i_class) r
-    ORDER BY i_category, i_class, i_item_id
-    LIMIT 20
-    """,
-        "web_sales",
-        "item",
-        "date_dim",
-    ),
-)
-def tpcds_q12_web_class_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q12: 30-day web item revenue with share-of-class — the
-    q98 window-over-rollup shape on the web channel."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    rolled = (
-        ws.join(dd, ws.ws_sold_date_sk == dd.d_date_sk)
-        .join(it, ws.ws_item_sk == it.i_item_sk)
-        .where(
-            F.col("i_category").isin("Sports", "Books", "Home")
-            & F.col("d_date").between("1999-02-22", "1999-03-24")
-        )
-        .groupBy("i_item_id", "i_category", "i_class")
-        .agg(F.sum("ws_ext_sales_price").alias("itemrevenue"))
-    )
-    w = Window.partitionBy("i_class")
-    return (
-        rolled.select(
-            "i_item_id",
-            "i_category",
-            "i_class",
-            F.round("itemrevenue", 2).cast("double").alias("itemrevenue"),
-            F.round(F.col("itemrevenue") * 100 / F.sum("itemrevenue").over(w), 4)
-            .cast("double")
-            .alias("revenueratio"),
-        )
-        .orderBy("i_category", "i_class", "i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q20_catalog_class_ratio",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_category, i_class,
-           CAST(round(itemrevenue, 2) AS DOUBLE) AS itemrevenue,
-           CAST(round(CAST(itemrevenue AS DOUBLE) * 100
-                      / CAST(sum(itemrevenue) OVER (PARTITION BY i_class)
-                             AS DOUBLE), 4) AS DOUBLE) AS revenueratio
-    FROM (SELECT i_item_id, i_category, i_class,
-                 sum(CAST(cs_ext_sales_price AS DECIMAL(38,12))) itemrevenue
-          FROM catalog_sales, item, date_dim
-          WHERE cs_item_sk = i_item_sk
-            AND i_category IN ('Sports', 'Books', 'Home')
-            AND cs_sold_date_sk = d_date_sk
-            AND d_date BETWEEN CAST('1999-02-22' AS DATE)
-                           AND CAST('1999-03-24' AS DATE)
-          GROUP BY i_item_id, i_category, i_class) r
-    ORDER BY i_category, i_class, i_item_id
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "item",
-        "date_dim",
-    ),
-)
-def tpcds_q20_catalog_class_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q20: the q98/q12 share-of-class shape on the catalog
-    channel."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    rolled = (
-        cs.join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .join(it, cs.cs_item_sk == it.i_item_sk)
-        .where(
-            F.col("i_category").isin("Sports", "Books", "Home")
-            & F.col("d_date").between("1999-02-22", "1999-03-24")
-        )
-        .groupBy("i_item_id", "i_category", "i_class")
-        .agg(F.sum("cs_ext_sales_price").alias("itemrevenue"))
-    )
-    w = Window.partitionBy("i_class")
-    return (
-        rolled.select(
-            "i_item_id",
-            "i_category",
-            "i_class",
-            F.round("itemrevenue", 2).cast("double").alias("itemrevenue"),
-            F.round(F.col("itemrevenue") * 100 / F.sum("itemrevenue").over(w), 4)
-            .cast("double")
-            .alias("revenueratio"),
-        )
-        .orderBy("i_category", "i_class", "i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q30_web_return_outliers",
-    _wh_sql(
-        """
-    WITH ctr AS (
-      SELECT wr_returning_customer_sk ctr_customer_sk,
-             ca_state ctr_state,
-             sum(CAST(wr_return_amt AS DECIMAL(38,12))) ctr_total_return
-      FROM web_returns, date_dim, customer_address
-      WHERE wr_returned_date_sk = d_date_sk
-        AND d_year = 1998
-        AND wr_returning_addr_sk = ca_address_sk
-      GROUP BY wr_returning_customer_sk, ca_state)
-    SELECT c_customer_id, c_first_name, c_last_name,
-           CAST(round(ctr_total_return, 2) AS DOUBLE) AS ctr_total_return
-    FROM ctr ctr1, customer
-    WHERE ctr1.ctr_total_return >
-        (SELECT avg(ctr_total_return) * 1.2
-         FROM ctr ctr2
-         WHERE ctr1.ctr_state = ctr2.ctr_state)
-      AND ctr1.ctr_state = 'GA'
-      AND ctr1.ctr_customer_sk = c_customer_sk
-    ORDER BY c_customer_id
-    LIMIT 20
-    """,
-        "web_returns",
-        "date_dim",
-        "customer_address",
-        "customer",
-    ),
-)
-def tpcds_q30_web_return_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q30: customers whose web-returns total beats 1.2× their
-    state's average — the q1 decorrelated-average shape keyed by the
-    returning customer's STATE (address join) instead of store, with
-    customer detail output."""
-    _gate(spark)
-    wr = _wr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    cu = gen_customer_ds(spark)
-    ctr = (
-        wr.join(dd, wr.wr_returned_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .join(ca, wr.wr_returning_addr_sk == ca.ca_address_sk)
-        .groupBy(
-            F.col("wr_returning_customer_sk").alias("ctr_customer_sk"),
-            F.col("ca_state").alias("ctr_state"),
-        )
-        .agg(F.sum("wr_return_amt").alias("ctr_total_return"))
-    )
-    # state-keyed average: cardinality bounded by the state domain
-    avg_by_state = F.broadcast(
-        ctr.groupBy(F.col("ctr_state").alias("avg_state")).agg(
-            (F.avg("ctr_total_return") * 1.2).alias("bar")
-        )
-    )
-    return (
-        ctr.join(avg_by_state, ctr.ctr_state == F.col("avg_state"))
-        .where(F.col("ctr_total_return") > F.col("bar"))
-        .where(F.col("ctr_state") == "GA")
-        .join(cu, ctr.ctr_customer_sk == cu.c_customer_sk)
-        .select(
-            "c_customer_id",
-            "c_first_name",
-            "c_last_name",
-            F.round("ctr_total_return", 2).cast("double").alias("ctr_total_return"),
-        )
-        .orderBy("c_customer_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q81_catalog_return_outliers",
-    _wh_sql(
-        """
-    WITH ctr AS (
-      SELECT cr_returning_customer_sk ctr_customer_sk,
-             ca_state ctr_state,
-             sum(CAST(cr_return_amt_inc_tax AS DECIMAL(38,12)))
-               ctr_total_return
-      FROM catalog_returns, date_dim, customer_address
-      WHERE cr_returned_date_sk = d_date_sk
-        AND d_year = 1998
-        AND cr_returning_addr_sk = ca_address_sk
-      GROUP BY cr_returning_customer_sk, ca_state)
-    SELECT c_customer_id, c_salutation, c_last_name,
-           CAST(round(ctr_total_return, 2) AS DOUBLE) AS ctr_total_return
-    FROM ctr ctr1, customer
-    WHERE ctr1.ctr_total_return >
-        (SELECT avg(ctr_total_return) * 1.2
-         FROM ctr ctr2
-         WHERE ctr1.ctr_state = ctr2.ctr_state)
-      AND ctr1.ctr_state = 'TX'
-      AND ctr1.ctr_customer_sk = c_customer_sk
-    ORDER BY c_customer_id
-    LIMIT 20
-    """,
-        "catalog_returns",
-        "date_dim",
-        "customer_address",
-        "customer",
-    ),
-)
-def tpcds_q81_catalog_return_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q81: the q1/q30 decorrelated-average outlier shape on
-    CATALOG returns, state-keyed, with customer + address output."""
-    _gate(spark)
-    cr = _cr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    cu = gen_customer_ds(spark)
-    ctr = (
-        cr.join(dd, cr.cr_returned_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .join(ca, cr.cr_returning_addr_sk == ca.ca_address_sk)
-        .groupBy(
-            F.col("cr_returning_customer_sk").alias("ctr_customer_sk"),
-            F.col("ca_state").alias("ctr_state"),
-        )
-        .agg(F.sum("cr_return_amt_inc_tax").alias("ctr_total_return"))
-    )
-    avg_by_state = F.broadcast(
-        ctr.groupBy(F.col("ctr_state").alias("avg_state")).agg(
-            (F.avg("ctr_total_return") * 1.2).alias("bar")
-        )
-    )
-    return (
-        ctr.join(avg_by_state, ctr.ctr_state == F.col("avg_state"))
-        .where(F.col("ctr_total_return") > F.col("bar"))
-        .where(F.col("ctr_state") == "TX")
-        .join(cu, ctr.ctr_customer_sk == cu.c_customer_sk)
-        .select(
-            "c_customer_id",
-            "c_salutation",
-            "c_last_name",
-            F.round("ctr_total_return", 2).cast("double").alias("ctr_total_return"),
-        )
-        .orderBy("c_customer_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q26_catalog_demographics",
-    _wh_sql(
-        """
-    SELECT i_item_id,
-           CAST(round(avg(cs_quantity), 4) AS DOUBLE) AS agg1,
-           CAST(round(avg(cs_list_price), 4) AS DOUBLE) AS agg2,
-           CAST(round(avg(cs_coupon_amt), 4) AS DOUBLE) AS agg3,
-           CAST(round(avg(cs_sales_price), 4) AS DOUBLE) AS agg4
-    FROM catalog_sales, customer_demographics, date_dim, item, promotion
-    WHERE cs_sold_date_sk = d_date_sk
-      AND cs_item_sk = i_item_sk
-      AND cs_bill_cdemo_sk = cd_demo_sk
-      AND cs_promo_sk = p_promo_sk
-      AND cd_gender = 'F'
-      AND cd_marital_status = 'W'
-      AND cd_education_status = 'Primary'
-      AND (p_channel_email = 'N' OR p_channel_event = 'N')
-      AND d_year = 1998
-    GROUP BY i_item_id
-    ORDER BY i_item_id
-    LIMIT 10
-    """,
-        "catalog_sales",
-        "customer_demographics",
-        "date_dim",
-        "item",
-        "promotion",
-    ),
-)
-def tpcds_q26_catalog_demographics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q26: the q7 demographics star on the CATALOG channel
-    (bill-side demographics)."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    cd = gen_customer_demographics(spark)
-    pr = gen_promotion(spark)
-    return (
-        cs.join(cd, cs.cs_bill_cdemo_sk == cd.cd_demo_sk)
-        .join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .join(it, cs.cs_item_sk == it.i_item_sk)
-        .join(pr, cs.cs_promo_sk == pr.p_promo_sk)
-        .where(
-            (F.col("cd_gender") == "F")
-            & (F.col("cd_marital_status") == "W")
-            & (F.col("cd_education_status") == "Primary")
-            & ((F.col("p_channel_email") == "N") | (F.col("p_channel_event") == "N"))
-            & (F.col("d_year") == 1998)
-        )
-        .groupBy("i_item_id")
-        .agg(
-            F.round(F.avg("cs_quantity"), 4).cast("double").alias("agg1"),
-            F.round(F.avg("cs_list_price"), 4).cast("double").alias("agg2"),
-            F.round(F.avg("cs_coupon_amt"), 4).cast("double").alias("agg3"),
-            F.round(F.avg("cs_sales_price"), 4).cast("double").alias("agg4"),
-        )
-        .orderBy("i_item_id")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q27_store_demographics_rollup",
-    _wh_sql(
-        """
-    SELECT i_item_id, s_state,
-           CAST(grouping(s_state) AS INT) AS g_state,
-           CAST(round(avg(ss_quantity), 4) AS DOUBLE) AS agg1,
-           CAST(round(avg(ss_list_price), 4) AS DOUBLE) AS agg2,
-           CAST(round(avg(ss_coupon_amt), 4) AS DOUBLE) AS agg3,
-           CAST(round(avg(ss_sales_price), 4) AS DOUBLE) AS agg4
-    FROM store_sales, customer_demographics, date_dim, item, store
-    WHERE ss_sold_date_sk = d_date_sk
-      AND ss_item_sk = i_item_sk
-      AND ss_store_sk = s_store_sk
-      AND ss_cdemo_sk = cd_demo_sk
-      AND cd_gender = 'M'
-      AND cd_marital_status = 'S'
-      AND cd_education_status = 'College'
-      AND d_year = 1998
-      AND s_state IN ('TN', 'TX', 'GA')
-    GROUP BY ROLLUP (i_item_id, s_state)
-    ORDER BY i_item_id NULLS FIRST, s_state NULLS FIRST
-    LIMIT 20
-    """,
-        "store_sales",
-        "customer_demographics",
-        "date_dim",
-        "item",
-        "store",
-    ),
-)
-def tpcds_q27_store_demographics_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q27: the q7 star with ROLLUP(i_item_id, s_state) and
-    grouping level exported — q7's averages at every hierarchy level
-    in one agg pipeline (q36's Expand contract)."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cd = gen_customer_demographics(spark)
-    st = gen_store(spark)
-    base = (
-        ss.join(cd, ss.ss_cdemo_sk == cd.cd_demo_sk)
-        .join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .where(
-            (F.col("cd_gender") == "M")
-            & (F.col("cd_marital_status") == "S")
-            & (F.col("cd_education_status") == "College")
-            & (F.col("d_year") == 1998)
-            & F.col("s_state").isin("TN", "TX", "GA")
-        )
-    )
-    return (
-        base.rollup("i_item_id", "s_state")
-        .agg(
-            F.grouping("s_state").cast("int").alias("g_state"),
-            F.round(F.avg("ss_quantity"), 4).cast("double").alias("agg1"),
-            F.round(F.avg("ss_list_price"), 4).cast("double").alias("agg2"),
-            F.round(F.avg("ss_coupon_amt"), 4).cast("double").alias("agg3"),
-            F.round(F.avg("ss_sales_price"), 4).cast("double").alias("agg4"),
-        )
-        .orderBy(
-            F.col("i_item_id").asc_nulls_first(), F.col("s_state").asc_nulls_first()
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q32_catalog_excess_discount",
-    _wh_sql(
-        """
-    WITH base AS (
-      SELECT cs_item_sk, cs_ext_discount_amt
-      FROM catalog_sales, date_dim, item
-      WHERE cs_sold_date_sk = d_date_sk
-        AND cs_item_sk = i_item_sk
-        AND d_date BETWEEN CAST('1998-01-01' AS DATE)
-                       AND CAST('1999-12-31' AS DATE)
-        AND i_manufact_id = 61),
-    flagged AS (
-      SELECT cs_ext_discount_amt,
-             avg(cs_ext_discount_amt) OVER (PARTITION BY cs_item_sk) * 1.3
-               AS threshold
-      FROM base)
-    SELECT CAST(round(sum(CAST(cs_ext_discount_amt AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS excess_discount_amount,
-           CAST(count(*) AS BIGINT) AS excess_line_count
-    FROM flagged
-    WHERE cs_ext_discount_amt > threshold
-    """,
-        "catalog_sales",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q32_catalog_excess_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q32: the q92 correlated-average excess-discount shape on
-    the CATALOG channel (avg window partitioned by item)."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    base = (
-        cs.join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .join(it, cs.cs_item_sk == it.i_item_sk)
-        .where(F.col("d_date").between("1998-01-01", "1999-12-31"))
-        .where(F.col("i_manufact_id") == 61)
-    )
-    w = Window.partitionBy("cs_item_sk")
-    flagged = base.select(
-        "cs_ext_discount_amt",
-        (F.avg("cs_ext_discount_amt").over(w) * 1.3).alias("threshold"),
-    ).where(F.col("cs_ext_discount_amt") > F.col("threshold"))
-    return flagged.agg(
-        _money("cs_ext_discount_amt").alias("excess_discount_amount"),
-        F.count("*").cast("bigint").alias("excess_line_count"),
-    )
-
-
-@register(
-    "tpcds_q82_store_stocked_items",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_item_desc,
-           CAST(i_current_price AS DOUBLE) AS i_current_price
-    FROM item, inventory, date_dim, store_sales
-    WHERE i_current_price BETWEEN 30 AND 60
-      AND inv_item_sk = i_item_sk
-      AND d_date_sk = inv_date_sk
-      AND d_date BETWEEN CAST('1998-06-01' AS DATE)
-                     AND CAST('1998-07-31' AS DATE)
-      AND i_manufact_id IN (15, 25, 35, 45)
-      AND inv_quantity_on_hand BETWEEN 100 AND 500
-      AND ss_item_sk = i_item_sk
-    GROUP BY i_item_id, i_item_desc, i_current_price
-    ORDER BY i_item_id
-    LIMIT 20
-    """,
-        "item",
-        "inventory",
-        "date_dim",
-        "store_sales",
-    ),
-)
-def tpcds_q82_store_stocked_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q82: the q37 stocked-and-demanded item shape with STORE
-    sales as the demand probe."""
-    _gate(spark)
-    ss, _, it = _star(spark, sf_dir)
-    inv = _inv(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    items = it.where(
-        F.col("i_current_price").between(30, 60) & F.col("i_manufact_id").isin(15, 25, 35, 45)
-    )
-    stocked = (
-        inv.join(dd, inv.inv_date_sk == dd.d_date_sk)
-        .where(F.col("d_date").between("1998-06-01", "1998-07-31"))
-        .where(F.col("inv_quantity_on_hand").between(100, 500))
-        .select(F.col("inv_item_sk").alias("i_item_sk"))
-        .distinct()
-    )
-    demanded = ss.select(F.col("ss_item_sk").alias("i_item_sk")).distinct()
-    return (
-        items.join(stocked, "i_item_sk", "leftsemi")
-        .join(demanded, "i_item_sk", "leftsemi")
-        .select(
-            "i_item_id",
-            "i_item_desc",
-            F.col("i_current_price").cast("double").alias("i_current_price"),
-        )
-        .orderBy("i_item_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q34_bulk_ticket_customers",
-    _wh_sql(
-        """
-    SELECT c_last_name, c_first_name, c_salutation, c_preferred_cust_flag,
-           ss_ticket_number, CAST(cnt AS BIGINT) AS cnt
-    FROM (SELECT ss_ticket_number, min(ss_customer_sk) ss_customer_sk,
-                 count(*) cnt
-          FROM store_sales, date_dim, store, household_demographics
-          WHERE store_sales.ss_sold_date_sk = date_dim.d_date_sk
-            AND store_sales.ss_store_sk = store.s_store_sk
-            AND store_sales.ss_hdemo_sk = household_demographics.hd_demo_sk
-            AND (date_dim.d_dom BETWEEN 1 AND 3
-                 OR date_dim.d_dom BETWEEN 25 AND 28)
-            AND (household_demographics.hd_buy_potential = '>10000'
-                 OR household_demographics.hd_buy_potential = '5001-10000')
-            AND household_demographics.hd_vehicle_count > 0
-            AND date_dim.d_year IN (1998, 1999)
-          GROUP BY ss_ticket_number) dn,
-         customer
-    WHERE ss_customer_sk = c_customer_sk
-      AND cnt BETWEEN 2 AND 10
-    ORDER BY cnt DESC, c_last_name, ss_ticket_number
-    LIMIT 15
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-        "household_demographics",
-        "customer",
-    ),
-)
-def tpcds_q34_bulk_ticket_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q34: the q73 two-phase ticket-count shape with a bulk
-    band (cnt ≥ 2 here; the spec's 15-20 needs dsdgen's denser
-    tickets) and the holiday d_dom window. The generator assigns
-    customers per LINE, so the spec's ticket↔customer functional
-    dependency is restored by attributing each ticket to its minimum
-    customer key before the lookup (documented adaptation)."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    hd = gen_household_demographics(spark)
-    cu = gen_customer_ds(spark)
-    dj = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .where(
-            (F.col("d_dom").between(1, 3) | F.col("d_dom").between(25, 28))
-            & F.col("hd_buy_potential").isin(">10000", "5001-10000")
-            & (F.col("hd_vehicle_count") > 0)
-            & F.col("d_year").isin(1998, 1999)
-        )
-        .groupBy("ss_ticket_number")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.min("ss_customer_sk").alias("ss_customer_sk"),
-        )
-        .where(F.col("cnt").between(2, 10))
-    )
-    return (
-        dj.join(cu, dj.ss_customer_sk == cu.c_customer_sk)
-        .select(
-            "c_last_name", "c_first_name", "c_salutation", "c_preferred_cust_flag",
-            "ss_ticket_number", "cnt",
-        )
-        .orderBy(F.col("cnt").desc(), "c_last_name", "ss_ticket_number")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q46_city_mismatch_tickets",
-    _wh_sql(
-        """
-    SELECT c_last_name, c_first_name, ss_ticket_number, bought_city,
-           amt, profit
-    FROM (SELECT ss_ticket_number, ss_customer_sk, ca_city bought_city,
-                 CAST(round(sum(CAST(ss_coupon_amt AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) amt,
-                 CAST(round(sum(CAST(ss_net_profit AS DECIMAL(38,12))), 2)
-                      AS DOUBLE) profit
-          FROM store_sales, date_dim, store, household_demographics,
-               customer_address
-          WHERE store_sales.ss_sold_date_sk = date_dim.d_date_sk
-            AND store_sales.ss_store_sk = store.s_store_sk
-            AND store_sales.ss_hdemo_sk = household_demographics.hd_demo_sk
-            AND store_sales.ss_addr_sk = customer_address.ca_address_sk
-            AND date_dim.d_dow IN (6, 0)
-            AND (household_demographics.hd_dep_count = 5
-                 OR household_demographics.hd_vehicle_count = 2)
-            AND date_dim.d_year IN (1998, 1999)
-          GROUP BY ss_ticket_number, ss_customer_sk, ca_city) dn,
-         customer,
-         customer_address current_addr
-    WHERE ss_customer_sk = c_customer_sk
-      AND customer.c_current_addr_sk = current_addr.ca_address_sk
-      AND current_addr.ca_city <> bought_city
-    ORDER BY c_last_name, c_first_name, ss_ticket_number
-    LIMIT 15
-    """,
-        "store_sales",
-        "date_dim",
-        "store",
-        "household_demographics",
-        "customer_address",
-        "customer",
-    ),
-)
-def tpcds_q46_city_mismatch_tickets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q46: the q68 double-role address shape with the weekend
-    day filter and coupon/profit ticket sums."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    hd = gen_household_demographics(spark)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark)
-    bought = ca.select(
-        F.col("ca_address_sk").alias("b_addr_sk"), F.col("ca_city").alias("bought_city")
-    )
-    current = ca.select(
-        F.col("ca_address_sk").alias("cur_addr_sk"), F.col("ca_city").alias("current_city")
-    )
-    dn = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .join(bought, ss.ss_addr_sk == F.col("b_addr_sk"))
-        .where(
-            F.col("d_dow").isin(6, 0)
-            & ((F.col("hd_dep_count") == 5) | (F.col("hd_vehicle_count") == 2))
-            & F.col("d_year").isin(1998, 1999)
-        )
-        .groupBy("ss_ticket_number", "ss_customer_sk", "bought_city")
-        .agg(
-            _money("ss_coupon_amt").alias("amt"),
-            _money("ss_net_profit").alias("profit"),
-        )
-    )
-    return (
-        dn.join(cu, dn.ss_customer_sk == cu.c_customer_sk)
-        .join(current, cu.c_current_addr_sk == F.col("cur_addr_sk"))
-        .where(F.col("current_city") != F.col("bought_city"))
-        .select(
-            "c_last_name", "c_first_name", "ss_ticket_number", "bought_city",
-            "amt", "profit",
-        )
-        .orderBy("c_last_name", "c_first_name", "ss_ticket_number")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q94_web_order_spread",
-    _wh_sql(
-        """
-    SELECT CAST(count(DISTINCT ws_order_number) AS BIGINT) AS order_count,
-           CAST(round(sum(CAST(ws_ext_ship_cost AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS total_shipping_cost,
-           CAST(round(sum(CAST(ws_net_profit AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS total_net_profit
-    FROM web_sales ws1, date_dim
-    WHERE d_date BETWEEN '1999-02-01' AND CAST('1999-04-02' AS DATE)
-      AND ws1.ws_ship_date_sk = d_date_sk
-      AND EXISTS
-        (SELECT * FROM web_sales ws2
-         WHERE ws1.ws_order_number = ws2.ws_order_number
-           AND ws1.ws_warehouse_sk <> ws2.ws_warehouse_sk)
-      AND NOT EXISTS
-        (SELECT * FROM web_returns wr1
-         WHERE ws1.ws_order_number = wr1.wr_order_number)
-    """,
-        "web_sales",
-        "date_dim",
-        "web_returns",
-    ),
-)
-def tpcds_q94_web_order_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q94: the q16 EXISTS/NOT-EXISTS order-spread shape on the
-    WEB channel — >1-warehouse semi probe, never-returned anti probe,
-    both carrying bare order numbers."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    base = ws.join(dd, ws.ws_ship_date_sk == dd.d_date_sk).where(
-        F.col("d_date").between("1999-02-01", "1999-04-02")
-    )
-    multi_wh = (
-        ws.groupBy("ws_order_number")
-        .agg(F.countDistinct("ws_warehouse_sk").alias("n_wh"))
-        .where(F.col("n_wh") > 1)
-        .select("ws_order_number")
-    )
-    filtered = base.join(multi_wh, "ws_order_number", "leftsemi").join(
-        wr.select(F.col("wr_order_number").alias("ws_order_number")),
-        "ws_order_number",
-        "leftanti",
-    )
-    return filtered.agg(
-        F.countDistinct("ws_order_number").cast("bigint").alias("order_count"),
-        _money("ws_ext_ship_cost").alias("total_shipping_cost"),
-        _money("ws_net_profit").alias("total_net_profit"),
-    )
-
-
-@register(
-    "tpcds_q10_active_channel_demo",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk FROM date_dim
-      WHERE d_year = 1999 AND d_moy BETWEEN 1 AND 4)
-    SELECT cd_gender, cd_marital_status, cd_education_status,
-           cd_credit_rating, CAST(count(*) AS BIGINT) AS cnt
-    FROM customer c, customer_demographics
-    WHERE c.c_current_cdemo_sk = cd_demo_sk
-      AND EXISTS (SELECT * FROM store_sales, dates
-                  WHERE c.c_customer_sk = ss_customer_sk
-                    AND ss_sold_date_sk = d_date_sk)
-      AND (EXISTS (SELECT * FROM catalog_sales, dates
-                   WHERE c.c_customer_sk = cs_bill_customer_sk
-                     AND cs_sold_date_sk = d_date_sk)
-           OR EXISTS (SELECT * FROM web_sales, dates
-                      WHERE c.c_customer_sk = ws_bill_customer_sk
-                        AND ws_sold_date_sk = d_date_sk))
-    GROUP BY cd_gender, cd_marital_status, cd_education_status,
-             cd_credit_rating
-    ORDER BY cd_gender, cd_marital_status, cd_education_status,
-             cd_credit_rating
-    LIMIT 20
-    """,
-        "date_dim",
-        "customer",
-        "customer_demographics",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-    ),
-)
-def tpcds_q10_active_channel_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q10: demographics counts of customers active in store
-    AND (catalog OR web) in a quarter — q69's semi/anti pattern with
-    the OR expressed as a union of the two channel key sets before one
-    semi probe."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    cd = gen_customer_demographics(spark)
-    dates = dd.where((F.col("d_year") == 1999) & F.col("d_moy").between(1, 4)).select(
-        "d_date_sk"
-    )
-
-    def active(fact, date_col, cust_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .select(F.col(cust_col).alias("active_sk"))
-            .distinct()
-        )
-
-    store_active = active(ss, "ss_sold_date_sk", "ss_customer_sk")
-    other_active = active(cs, "cs_sold_date_sk", "cs_bill_customer_sk").unionByName(
-        active(ws, "ws_sold_date_sk", "ws_bill_customer_sk")
-    ).distinct()
-    chosen = cu.join(
-        store_active, cu.c_customer_sk == store_active.active_sk, "leftsemi"
-    ).join(other_active, cu.c_customer_sk == other_active.active_sk, "leftsemi")
-    return (
-        chosen.join(cd, chosen.c_current_cdemo_sk == cd.cd_demo_sk)
-        .groupBy("cd_gender", "cd_marital_status", "cd_education_status", "cd_credit_rating")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .orderBy("cd_gender", "cd_marital_status", "cd_education_status", "cd_credit_rating")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q35_active_customer_stats",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk FROM date_dim
-      WHERE d_year = 1999 AND d_qoy IN (1, 2))
-    SELECT cd_gender, cd_marital_status,
-           CAST(count(*) AS BIGINT) AS cnt,
-           CAST(min(cd_dep_count) AS INT) AS min_dep,
-           CAST(max(cd_dep_count) AS INT) AS max_dep,
-           CAST(round(avg(cd_dep_count), 4) AS DOUBLE) AS avg_dep
-    FROM customer c, customer_demographics
-    WHERE c.c_current_cdemo_sk = cd_demo_sk
-      AND EXISTS (SELECT * FROM store_sales, dates
-                  WHERE c.c_customer_sk = ss_customer_sk
-                    AND ss_sold_date_sk = d_date_sk)
-      AND (EXISTS (SELECT * FROM catalog_sales, dates
-                   WHERE c.c_customer_sk = cs_bill_customer_sk
-                     AND cs_sold_date_sk = d_date_sk)
-           OR EXISTS (SELECT * FROM web_sales, dates
-                      WHERE c.c_customer_sk = ws_bill_customer_sk
-                        AND ws_sold_date_sk = d_date_sk))
-    GROUP BY cd_gender, cd_marital_status
-    ORDER BY cd_gender, cd_marital_status
-    LIMIT 20
-    """,
-        "date_dim",
-        "customer",
-        "customer_demographics",
-        "store_sales",
-        "catalog_sales",
-        "web_sales",
-    ),
-)
-def tpcds_q35_active_customer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q35: q10's activity pattern with dependent-count
-    aggregate statistics per demographic slice (the spec's
-    min/max/avg over cd_dep_count) — exact-integer partials keep the
-    pin partition-invariant."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    cd = gen_customer_demographics(spark)
-    dates = dd.where((F.col("d_year") == 1999) & F.col("d_qoy").isin(1, 2)).select(
-        "d_date_sk"
-    )
-
-    def active(fact, date_col, cust_col):
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .select(F.col(cust_col).alias("active_sk"))
-            .distinct()
-        )
-
-    store_active = active(ss, "ss_sold_date_sk", "ss_customer_sk")
-    other_active = active(cs, "cs_sold_date_sk", "cs_bill_customer_sk").unionByName(
-        active(ws, "ws_sold_date_sk", "ws_bill_customer_sk")
-    ).distinct()
-    chosen = cu.join(
-        store_active, cu.c_customer_sk == store_active.active_sk, "leftsemi"
-    ).join(other_active, cu.c_customer_sk == other_active.active_sk, "leftsemi")
-    return (
-        chosen.join(cd, chosen.c_current_cdemo_sk == cd.cd_demo_sk)
-        .groupBy("cd_gender", "cd_marital_status")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.min("cd_dep_count").cast("int").alias("min_dep"),
-            F.max("cd_dep_count").cast("int").alias("max_dep"),
-            F.round(F.avg("cd_dep_count"), 4).cast("double").alias("avg_dep"),
-        )
-        .orderBy("cd_gender", "cd_marital_status")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q5_channel_profit_rollup",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk FROM date_dim
-      WHERE d_date BETWEEN CAST('1998-08-04' AS DATE)
-                       AND CAST('1998-08-18' AS DATE)),
-    unioned AS (
-      SELECT 'store channel' channel, CAST(ss_store_sk AS VARCHAR) entity_id,
-             CAST(ss_ext_sales_price AS DECIMAL(38,12)) sales_price,
-             CAST(0 AS DECIMAL(38,12)) return_amt,
-             CAST(ss_net_profit AS DECIMAL(38,12)) profit
-      FROM store_sales, dates WHERE ss_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'store channel', CAST(sr_store_sk AS VARCHAR),
-             CAST(0 AS DECIMAL(38,12)),
-             CAST(sr_return_amt AS DECIMAL(38,12)),
-             -CAST(sr_net_loss AS DECIMAL(38,12))
-      FROM store_returns, dates WHERE sr_returned_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'catalog channel', CAST(cs_catalog_page_sk AS VARCHAR),
-             CAST(cs_ext_sales_price AS DECIMAL(38,12)),
-             CAST(0 AS DECIMAL(38,12)),
-             CAST(cs_net_profit AS DECIMAL(38,12))
-      FROM catalog_sales, dates WHERE cs_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'catalog channel', CAST(cr_catalog_page_sk AS VARCHAR),
-             CAST(0 AS DECIMAL(38,12)),
-             CAST(cr_return_amount AS DECIMAL(38,12)),
-             -CAST(cr_net_loss AS DECIMAL(38,12))
-      FROM catalog_returns, dates WHERE cr_returned_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'web channel', CAST(ws_web_site_sk AS VARCHAR),
-             CAST(ws_ext_sales_price AS DECIMAL(38,12)),
-             CAST(0 AS DECIMAL(38,12)),
-             CAST(ws_net_profit AS DECIMAL(38,12))
-      FROM web_sales, dates WHERE ws_sold_date_sk = d_date_sk
-      UNION ALL
-      SELECT 'web channel', CAST(wr_web_page_sk AS VARCHAR),
-             CAST(0 AS DECIMAL(38,12)),
-             CAST(wr_return_amt AS DECIMAL(38,12)),
-             -CAST(wr_net_loss AS DECIMAL(38,12))
-      FROM web_returns, dates WHERE wr_returned_date_sk = d_date_sk)
-    SELECT channel, entity_id,
-           CAST(round(sum(sales_price), 2) AS DOUBLE) AS sales,
-           CAST(round(sum(return_amt), 2) AS DOUBLE) AS returns,
-           CAST(round(sum(profit), 2) AS DOUBLE) AS profit
-    FROM unioned
-    GROUP BY ROLLUP (channel, entity_id)
-    ORDER BY channel NULLS FIRST, entity_id NULLS FIRST
-    LIMIT 20
-    """,
-        "date_dim",
-        "store_sales",
-        "store_returns",
-        "catalog_sales",
-        "catalog_returns",
-        "web_sales",
-        "web_returns",
-    ),
-)
-def tpcds_q5_channel_profit_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q5: the q77 per-channel P&L with per-ENTITY granularity
-    — sales and returns union per channel keyed by store / catalog
-    page / web site, rolled up with the channel label (spec's ROLLUP
-    (channel, id) kept as a two-level rollup)."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    dates = dd.where(F.col("d_date").between("1998-08-04", "1998-08-18")).select("d_date_sk")
-
-    def leg(fact, date_col, channel, id_col, sales_col, ret_col, profit_col, sign):
-        return fact.join(dates, F.col(date_col) == F.col("d_date_sk")).select(
-            F.lit(channel).alias("channel"),
-            F.col(id_col).cast("string").alias("entity_id"),
-            (F.col(sales_col) if sign > 0 else F.lit(0).cast("decimal(7,2)")).alias(
-                "sales_price"
-            ),
-            (F.col(ret_col) if sign < 0 else F.lit(0).cast("decimal(7,2)")).alias(
-                "return_amt"
-            ),
-            (F.col(profit_col) * sign).alias("profit"),
-        )
-
-    unioned = (
-        leg(ss, "ss_sold_date_sk", "store channel", "ss_store_sk",
-            "ss_ext_sales_price", "ss_ext_sales_price", "ss_net_profit", 1)
-        .unionByName(leg(sr, "sr_returned_date_sk", "store channel", "sr_store_sk",
-                         "sr_return_amt", "sr_return_amt", "sr_net_loss", -1))
-        .unionByName(leg(cs, "cs_sold_date_sk", "catalog channel", "cs_catalog_page_sk",
-                         "cs_ext_sales_price", "cs_ext_sales_price", "cs_net_profit", 1))
-        .unionByName(leg(cr, "cr_returned_date_sk", "catalog channel", "cr_catalog_page_sk",
-                         "cr_return_amount", "cr_return_amount", "cr_net_loss", -1))
-        .unionByName(leg(ws, "ws_sold_date_sk", "web channel", "ws_web_site_sk",
-                         "ws_ext_sales_price", "ws_ext_sales_price", "ws_net_profit", 1))
-        .unionByName(leg(wr, "wr_returned_date_sk", "web channel", "wr_web_page_sk",
-                         "wr_return_amt", "wr_return_amt", "wr_net_loss", -1))
-    )
-    return (
-        unioned.rollup("channel", "entity_id")
-        .agg(
-            _money("sales_price").alias("sales"),
-            _money("return_amt").alias("returns"),
-            _money("profit").alias("profit"),
-        )
-        .orderBy(
-            F.col("channel").asc_nulls_first(), F.col("entity_id").asc_nulls_first()
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q80_channel_item_profit",
-    _wh_sql(
-        """
-    WITH dates AS (
-      SELECT d_date_sk FROM date_dim
-      WHERE d_date BETWEEN CAST('1998-08-04' AS DATE)
-                       AND CAST('1998-09-03' AS DATE)),
-    items AS (SELECT i_item_sk, i_item_id FROM item
-              WHERE i_current_price > 50),
-    promos AS (SELECT p_promo_sk FROM promotion WHERE p_channel_tv = 'N'),
-    ssr AS (
-      SELECT 'store channel' channel, i_item_id,
-             sum(CAST(ss_ext_sales_price AS DECIMAL(38,12))) sales,
-             sum(coalesce(CAST(sr_return_amt AS DECIMAL(38,12)), 0)) returns_,
-             sum(CAST(ss_net_profit AS DECIMAL(38,12))
-                 - coalesce(CAST(sr_net_loss AS DECIMAL(38,12)), 0)) profit
-      FROM store_sales
-      JOIN dates ON ss_sold_date_sk = d_date_sk
-      JOIN items ON ss_item_sk = items.i_item_sk
-      LEFT JOIN store_returns
-        ON ss_ticket_number = sr_ticket_number AND ss_item_sk = sr_item_sk
-      WHERE ss_promo_sk IN (SELECT p_promo_sk FROM promos)
-      GROUP BY i_item_id),
-    csr AS (
-      SELECT 'catalog channel' channel, i_item_id,
-             sum(CAST(cs_ext_sales_price AS DECIMAL(38,12))) sales,
-             sum(coalesce(CAST(cr_return_amount AS DECIMAL(38,12)), 0)) returns_,
-             sum(CAST(cs_net_profit AS DECIMAL(38,12))
-                 - coalesce(CAST(cr_net_loss AS DECIMAL(38,12)), 0)) profit
-      FROM catalog_sales
-      JOIN dates ON cs_sold_date_sk = d_date_sk
-      JOIN items ON cs_item_sk = items.i_item_sk
-      LEFT JOIN catalog_returns
-        ON cs_order_number = cr_order_number AND cs_item_sk = cr_item_sk
-      WHERE cs_promo_sk IN (SELECT p_promo_sk FROM promos)
-      GROUP BY i_item_id),
-    wsr AS (
-      SELECT 'web channel' channel, i_item_id,
-             sum(CAST(ws_ext_sales_price AS DECIMAL(38,12))) sales,
-             sum(coalesce(CAST(wr_return_amt AS DECIMAL(38,12)), 0)) returns_,
-             sum(CAST(ws_net_profit AS DECIMAL(38,12))
-                 - coalesce(CAST(wr_net_loss AS DECIMAL(38,12)), 0)) profit
-      FROM web_sales
-      JOIN dates ON ws_sold_date_sk = d_date_sk
-      JOIN items ON ws_item_sk = items.i_item_sk
-      LEFT JOIN web_returns
-        ON ws_order_number = wr_order_number AND ws_item_sk = wr_item_sk
-      WHERE ws_promo_sk IN (SELECT p_promo_sk FROM promos)
-      GROUP BY i_item_id),
-    unioned AS (
-      SELECT * FROM ssr UNION ALL SELECT * FROM csr UNION ALL
-      SELECT * FROM wsr)
-    SELECT channel, i_item_id,
-           CAST(round(sum(sales), 2) AS DOUBLE) AS sales,
-           CAST(round(sum(returns_), 2) AS DOUBLE) AS returns,
-           CAST(round(sum(profit), 2) AS DOUBLE) AS profit
-    FROM unioned
-    GROUP BY ROLLUP (channel, i_item_id)
-    ORDER BY channel NULLS FIRST, i_item_id NULLS FIRST
-    LIMIT 20
-    """,
-        "date_dim",
-        "item",
-        "promotion",
-        "store_sales",
-        "store_returns",
-        "catalog_sales",
-        "catalog_returns",
-        "web_sales",
-        "web_returns",
-    ),
-)
-def tpcds_q80_channel_item_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q80: returns-netted sales/returns/profit per channel ×
-    item — each channel left-joins its returns on the natural key
-    (q93's netting), filters promoted non-TV items, and the three
-    per-item rollups union under a channel rollup."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    sr = _sr(spark, sf_dir)
-    cs = _cs(spark, sf_dir)
-    cr = _cr(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    wr = _wr(spark, sf_dir)
-    pm = gen_promotion(spark).where(F.col("p_channel_tv") == "N").select("p_promo_sk")
-    dates = dd.where(F.col("d_date").between("1998-08-04", "1998-09-03")).select("d_date_sk")
-    items = it.where(F.col("i_current_price") > 50).select("i_item_sk", "i_item_id")
-
-    def channel(fact, ret, date_col, item_col, promo_col, keys, r_keys, price, r_amt, profit, r_loss, label):
-        r = ret.select(
-            *[F.col(k).alias(kk) for k, kk in zip(r_keys, keys)],
-            F.col(r_amt).alias("ret_amt"),
-            F.col(r_loss).alias("ret_loss"),
-        )
-        return (
-            fact.join(dates, F.col(date_col) == F.col("d_date_sk"))
-            .join(items, F.col(item_col) == F.col("i_item_sk"))
-            .join(pm, F.col(promo_col) == F.col("p_promo_sk"), "leftsemi")
-            .join(r, keys, "left")
-            .groupBy("i_item_id")
-            .agg(
-                F.sum(price).alias("sales"),
-                F.sum(F.coalesce(F.col("ret_amt"), F.lit(0))).alias("returns_"),
-                F.sum(
-                    F.col(profit) - F.coalesce(F.col("ret_loss"), F.lit(0))
-                ).alias("profit"),
-            )
-            .select(F.lit(label).alias("channel"), "i_item_id", "sales", "returns_", "profit")
-        )
-
-    unioned = (
-        channel(ss, sr, "ss_sold_date_sk", "ss_item_sk", "ss_promo_sk",
-                ["ss_ticket_number", "ss_item_sk"], ["sr_ticket_number", "sr_item_sk"],
-                "ss_ext_sales_price", "sr_return_amt", "ss_net_profit", "sr_net_loss",
-                "store channel")
-        .unionByName(channel(cs, cr, "cs_sold_date_sk", "cs_item_sk", "cs_promo_sk",
-                             ["cs_order_number", "cs_item_sk"], ["cr_order_number", "cr_item_sk"],
-                             "cs_ext_sales_price", "cr_return_amount", "cs_net_profit", "cr_net_loss",
-                             "catalog channel"))
-        .unionByName(channel(ws, wr, "ws_sold_date_sk", "ws_item_sk", "ws_promo_sk",
-                             ["ws_order_number", "ws_item_sk"], ["wr_order_number", "wr_item_sk"],
-                             "ws_ext_sales_price", "wr_return_amt", "ws_net_profit", "wr_net_loss",
-                             "web channel"))
-    )
-    return (
-        unioned.rollup("channel", "i_item_id")
-        .agg(
-            _money("sales").alias("sales"),
-            _money("returns_").alias("returns"),
-            _money("profit").alias("profit"),
-        )
-        .orderBy(F.col("channel").asc_nulls_first(), F.col("i_item_id").asc_nulls_first())
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q86_web_margin_rollup",
-    _wh_sql(
-        """
-    WITH rolled AS (
-      SELECT CAST(round(sum(CAST(ws_net_paid AS DECIMAL(38,12))), 2)
-                  AS DOUBLE) AS total_sum,
-             i_category, i_class,
-             CAST(grouping(i_category) + grouping(i_class) AS INT)
-               AS lochierarchy
-      FROM web_sales, date_dim, item
-      WHERE ws_sold_date_sk = d_date_sk
-        AND ws_item_sk = i_item_sk
-        AND d_month_seq BETWEEN 1176 AND 1187
-      GROUP BY ROLLUP (i_category, i_class))
-    SELECT total_sum, i_category, i_class, lochierarchy,
-           CAST(rank() OVER (PARTITION BY lochierarchy,
-                  CASE WHEN lochierarchy = 0 THEN i_category END
-                  ORDER BY total_sum DESC, i_category NULLS FIRST,
-                           i_class NULLS FIRST) AS INT)
-             AS rank_within_parent
-    FROM rolled
-    ORDER BY lochierarchy DESC, i_category NULLS FIRST,
-             rank_within_parent, i_class NULLS FIRST
-    LIMIT 20
-    """,
-        "web_sales",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q86_web_margin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q86: the q36 ROLLUP + rank-within-parent shape on the
-    WEB channel (net paid over category/class hierarchy)."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    rolled = (
-        ws.join(dd, ws.ws_sold_date_sk == dd.d_date_sk)
-        .join(it, ws.ws_item_sk == it.i_item_sk)
-        .where(F.col("d_month_seq").between(1176, 1187))
-        .rollup("i_category", "i_class")
-        .agg(
-            _money("ws_net_paid").alias("total_sum"),
-            (F.grouping("i_category") + F.grouping("i_class"))
-            .cast("int")
-            .alias("lochierarchy"),
-        )
-    )
-    wr_ = Window.partitionBy(
-        "lochierarchy", F.when(F.col("lochierarchy") == 0, F.col("i_category"))
-    ).orderBy(F.col("total_sum").desc(), F.col("i_category"), F.col("i_class"))
-    return (
-        rolled.select(
-            "total_sum",
-            "i_category",
-            "i_class",
-            "lochierarchy",
-            F.rank().over(wr_).cast("int").alias("rank_within_parent"),
-        )
-        .orderBy(
-            F.col("lochierarchy").desc(),
-            F.col("i_category").asc_nulls_first(),
-            F.col("rank_within_parent"),
-            F.col("i_class").asc_nulls_first(),
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q53_manufacturer_quarterly",
-    _wh_sql(
-        """
-    WITH rolled AS (
-      SELECT i_manufact_id, d_qoy,
-             sum(CAST(ss_sales_price AS DECIMAL(38,12))) sum_sales
-      FROM store_sales, date_dim, item
-      WHERE ss_sold_date_sk = d_date_sk
-        AND ss_item_sk = i_item_sk
-        AND d_year = 1998
-        AND i_category IN ('Books', 'Home', 'Sports')
-        AND i_manufact_id <= 20
-      GROUP BY i_manufact_id, d_qoy),
-    y AS (
-      SELECT i_manufact_id, d_qoy,
-             CAST(round(sum_sales, 2) AS DOUBLE) sum_sales,
-             CAST(round(avg(sum_sales)
-                    OVER (PARTITION BY i_manufact_id), 4) AS DOUBLE)
-               avg_quarterly_sales
-      FROM rolled)
-    SELECT * FROM y
-    WHERE avg_quarterly_sales > 0
-      AND abs(sum_sales - avg_quarterly_sales) / avg_quarterly_sales > 0.1
-    ORDER BY i_manufact_id, d_qoy
-    LIMIT 20
-    """,
-        "store_sales",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q53_manufacturer_quarterly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q53: the q89 deviation shape keyed by MANUFACTURER with
-    quarterly averages."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    rolled = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where(
-            (F.col("d_year") == 1998)
-            & F.col("i_category").isin("Books", "Home", "Sports")
-            & (F.col("i_manufact_id") <= 20)
-        )
-        .groupBy("i_manufact_id", "d_qoy")
-        .agg(F.sum("ss_sales_price").alias("sum_sales"))
-    )
-    w = Window.partitionBy("i_manufact_id")
-    avg_q = F.avg("sum_sales").over(w)
-    return (
-        rolled.select(
-            "i_manufact_id",
-            "d_qoy",
-            F.round("sum_sales", 2).cast("double").alias("sum_sales"),
-            F.round(avg_q, 4).cast("double").alias("avg_quarterly_sales"),
-        )
-        .where(
-            (F.col("avg_quarterly_sales") > 0)
-            & (
-                F.abs(F.col("sum_sales") - F.col("avg_quarterly_sales"))
-                / F.col("avg_quarterly_sales")
-                > 0.1
-            )
-        )
-        .orderBy("i_manufact_id", "d_qoy")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q63_manager_monthly",
-    _wh_sql(
-        """
-    WITH rolled AS (
-      SELECT i_manager_id, d_moy,
-             sum(CAST(ss_sales_price AS DECIMAL(38,12))) sum_sales
-      FROM store_sales, date_dim, item
-      WHERE ss_sold_date_sk = d_date_sk
-        AND ss_item_sk = i_item_sk
-        AND d_year = 1998
-        AND i_category IN ('Men', 'Women', 'Music')
-        AND i_manager_id <= 10
-      GROUP BY i_manager_id, d_moy),
-    y AS (
-      SELECT i_manager_id, d_moy,
-             CAST(round(sum_sales, 2) AS DOUBLE) sum_sales,
-             CAST(round(avg(sum_sales)
-                    OVER (PARTITION BY i_manager_id), 4) AS DOUBLE)
-               avg_monthly_sales
-      FROM rolled)
-    SELECT * FROM y
-    WHERE avg_monthly_sales > 0
-      AND abs(sum_sales - avg_monthly_sales) / avg_monthly_sales > 0.1
-    ORDER BY i_manager_id, d_moy
-    LIMIT 20
-    """,
-        "store_sales",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q63_manager_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q63: the q53/q89 deviation shape keyed by item MANAGER
-    with monthly averages."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    rolled = (
-        ss.join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .where(
-            (F.col("d_year") == 1998)
-            & F.col("i_category").isin("Men", "Women", "Music")
-            & (F.col("i_manager_id") <= 10)
-        )
-        .groupBy("i_manager_id", "d_moy")
-        .agg(F.sum("ss_sales_price").alias("sum_sales"))
-    )
-    w = Window.partitionBy("i_manager_id")
-    avg_m = F.avg("sum_sales").over(w)
-    return (
-        rolled.select(
-            "i_manager_id",
-            "d_moy",
-            F.round("sum_sales", 2).cast("double").alias("sum_sales"),
-            F.round(avg_m, 4).cast("double").alias("avg_monthly_sales"),
-        )
-        .where(
-            (F.col("avg_monthly_sales") > 0)
-            & (
-                F.abs(F.col("sum_sales") - F.col("avg_monthly_sales"))
-                / F.col("avg_monthly_sales")
-                > 0.1
-            )
-        )
-        .orderBy("i_manager_id", "d_moy")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q57_catalog_deviation_lag",
-    _wh_sql(
-        """
-    WITH monthly AS (
-      SELECT i_category, i_brand, cc_name ename, d_year, d_moy,
-             sum(CAST(cs_sales_price AS DECIMAL(38,12))) sum_sales
-      FROM catalog_sales, date_dim, item, call_center
-      WHERE cs_sold_date_sk = d_date_sk
-        AND cs_item_sk = i_item_sk
-        AND cs_call_center_sk = cc_call_center_sk
-        AND d_year IN (1998, 1999)
-      GROUP BY i_category, i_brand, cc_name, d_year, d_moy),
-    v AS (
-      SELECT i_category, i_brand, ename, d_year, d_moy, sum_sales,
-             avg(sum_sales) OVER (PARTITION BY i_category, i_brand,
-                 ename, d_year) avg_monthly_sales,
-             lag(sum_sales) OVER (PARTITION BY i_category, i_brand,
-                 ename ORDER BY d_year, d_moy) psum,
-             lead(sum_sales) OVER (PARTITION BY i_category, i_brand,
-                 ename ORDER BY d_year, d_moy) nsum
-      FROM monthly)
-    SELECT i_category, i_brand, ename AS cc_name, d_year, d_moy,
-           CAST(round(sum_sales, 2) AS DOUBLE) AS sum_sales,
-           CAST(round(avg_monthly_sales, 4) AS DOUBLE)
-             AS avg_monthly_sales,
-           CAST(round(psum, 2) AS DOUBLE) AS psum,
-           CAST(round(nsum, 2) AS DOUBLE) AS nsum
-    FROM v
-    WHERE d_year = 1999
-      AND avg_monthly_sales > 0
-      AND abs(sum_sales - avg_monthly_sales) / avg_monthly_sales > 0.1
-      AND psum IS NOT NULL AND nsum IS NOT NULL
-    ORDER BY (sum_sales - avg_monthly_sales), i_category, i_brand,
-             cc_name, d_moy
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "date_dim",
-        "item",
-        "call_center",
-    ),
-)
-def tpcds_q57_catalog_deviation_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q57: the q47 lag/lead deviation shape on the CATALOG
-    channel with call centers in place of stores."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    cc = gen_call_center(spark)
-    monthly = (
-        cs.join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .join(it, cs.cs_item_sk == it.i_item_sk)
-        .join(cc, cs.cs_call_center_sk == cc.cc_call_center_sk)
-        .where(F.col("d_year").isin(1998, 1999))
-        .groupBy("i_category", "i_brand", "cc_name", "d_year", "d_moy")
-        .agg(F.sum("cs_sales_price").alias("sum_sales"))
-    )
-    part = ["i_category", "i_brand", "cc_name"]
-    w_avg = Window.partitionBy(*part, "d_year")
-    w_seq = Window.partitionBy(*part).orderBy("d_year", "d_moy")
-    v = monthly.select(
-        *part,
-        "d_year",
-        "d_moy",
-        "sum_sales",
-        F.avg("sum_sales").over(w_avg).alias("avg_monthly_sales"),
-        F.lag("sum_sales").over(w_seq).alias("psum"),
-        F.lead("sum_sales").over(w_seq).alias("nsum"),
-    )
-    dev = (
-        F.abs(F.col("sum_sales") - F.col("avg_monthly_sales"))
-        / F.col("avg_monthly_sales")
-    )
-    return (
-        v.where(
-            (F.col("d_year") == 1999)
-            & (F.col("avg_monthly_sales") > 0)
-            & (dev > 0.1)
-            & F.col("psum").isNotNull()
-            & F.col("nsum").isNotNull()
-        )
-        .select(
-            "i_category",
-            "i_brand",
-            "cc_name",
-            "d_year",
-            "d_moy",
-            F.round("sum_sales", 2).cast("double").alias("sum_sales"),
-            F.round("avg_monthly_sales", 4).cast("double").alias("avg_monthly_sales"),
-            F.round("psum", 2).cast("double").alias("psum"),
-            F.round("nsum", 2).cast("double").alias("nsum"),
-        )
-        .orderBy(
-            (F.col("sum_sales") - F.col("avg_monthly_sales")).asc(),
-            "i_category",
-            "i_brand",
-            "cc_name",
-            "d_moy",
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q2_week_dow_ratios",
-    _wh_sql(
-        """
-    WITH wscs AS (
-      SELECT ws_sold_date_sk sold_date_sk, ws_ext_sales_price sales_price
-      FROM web_sales
-      UNION ALL
-      SELECT cs_sold_date_sk, cs_ext_sales_price FROM catalog_sales),
-    wswscs AS (
-      SELECT d_week_seq,
-             sum(CAST(CASE WHEN d_day_name = 'Sunday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) sun_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Monday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) mon_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Tuesday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) tue_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Wednesday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) wed_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Thursday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) thu_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Friday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) fri_sales,
-             sum(CAST(CASE WHEN d_day_name = 'Saturday' THEN sales_price ELSE 0 END AS DECIMAL(38,12))) sat_sales
-      FROM wscs, date_dim
-      WHERE d_date_sk = sold_date_sk
-      GROUP BY d_week_seq)
-    SELECT CAST(y.d_week_seq AS INT) AS week_seq1,
-           CASE WHEN z.sun_sales <> 0 THEN CAST(round(CAST(y.sun_sales AS DOUBLE) / CAST(z.sun_sales AS DOUBLE), 4) AS DOUBLE) END AS r_sun_sales,
-           CASE WHEN z.mon_sales <> 0 THEN CAST(round(CAST(y.mon_sales AS DOUBLE) / CAST(z.mon_sales AS DOUBLE), 4) AS DOUBLE) END AS r_mon_sales,
-           CASE WHEN z.tue_sales <> 0 THEN CAST(round(CAST(y.tue_sales AS DOUBLE) / CAST(z.tue_sales AS DOUBLE), 4) AS DOUBLE) END AS r_tue_sales,
-           CASE WHEN z.wed_sales <> 0 THEN CAST(round(CAST(y.wed_sales AS DOUBLE) / CAST(z.wed_sales AS DOUBLE), 4) AS DOUBLE) END AS r_wed_sales,
-           CASE WHEN z.thu_sales <> 0 THEN CAST(round(CAST(y.thu_sales AS DOUBLE) / CAST(z.thu_sales AS DOUBLE), 4) AS DOUBLE) END AS r_thu_sales,
-           CASE WHEN z.fri_sales <> 0 THEN CAST(round(CAST(y.fri_sales AS DOUBLE) / CAST(z.fri_sales AS DOUBLE), 4) AS DOUBLE) END AS r_fri_sales,
-           CASE WHEN z.sat_sales <> 0 THEN CAST(round(CAST(y.sat_sales AS DOUBLE) / CAST(z.sat_sales AS DOUBLE), 4) AS DOUBLE) END AS r_sat_sales
-    FROM wswscs y, wswscs z
-    WHERE y.d_week_seq = z.d_week_seq - 53
-    ORDER BY week_seq1
-    LIMIT 20
-    """,
-        "web_sales",
-        "catalog_sales",
-        "date_dim",
-    ),
-)
-def tpcds_q2_week_dow_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q2: web+catalog weekly revenue pivoted by day-of-week,
-    then each 1998 week ratioed against the same week one year later
-    (week_seq + 53) — the q59 self-join shape over the combined
-    channel union."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    union = ws.select(
-        F.col("ws_sold_date_sk").alias("sold_date_sk"),
-        F.col("ws_ext_sales_price").alias("sales_price"),
-    ).unionByName(
-        cs.select(
-            F.col("cs_sold_date_sk").alias("sold_date_sk"),
-            F.col("cs_ext_sales_price").alias("sales_price"),
-        )
-    )
-    days = ["Sunday", "Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday"]
-    weekly = (
-        union.join(dd, F.col("sold_date_sk") == dd.d_date_sk)
-        .groupBy("d_week_seq")
-        .agg(
-            *[
-                F.sum(
-                    F.when(F.col("d_day_name") == day, F.col("sales_price")).otherwise(0)
-                ).alias(f"{day[:3].lower()}_sales")
-                for day in days
-            ]
-        )
-    )
-    cols = [f"{d[:3].lower()}_sales" for d in days]
-    y1 = weekly.select(
-        F.col("d_week_seq").alias("week_seq1"),
-        *[F.col(c).alias(f"{c}1") for c in cols],
-    )
-    y2 = weekly.select(
-        (F.col("d_week_seq") - 53).alias("week_seq1"),
-        *[F.col(c).alias(f"{c}2") for c in cols],
-    )
-    joined = y1.join(y2, "week_seq1")
-    return (
-        joined.select(
-            "week_seq1",
-            *[
-                F.when(
-                    F.col(f"{c}2") != 0, F.round(F.col(f"{c}1") / F.col(f"{c}2"), 4)
-                )
-                .cast("double")
-                .alias(f"r_{c}")
-                for c in cols
-            ],
-        )
-        .orderBy("week_seq1")
-        .limit(20)
     )
 
 
@@ -7900,945 +648,6 @@ def tpcds_q4_three_channel_growth(spark: SparkSession, sf_dir: str) -> DataFrame
         .orderBy("c_customer_id")
         .limit(20)
     )
-
-
-@register(
-    "tpcds_q11_two_channel_growth",
-    _wh_sql(
-        """
-    WITH year_total AS (
-      SELECT ss_customer_sk AS customer_sk, d_year,
-             CAST(sum(CAST(ss_ext_list_price - ss_ext_discount_amt
-                           AS DECIMAL(38,12))) AS DOUBLE) AS year_total,
-             's' AS sale_type
-      FROM store_sales, date_dim
-      WHERE ss_sold_date_sk = d_date_sk AND d_year IN (1998, 1999)
-      GROUP BY ss_customer_sk, d_year
-      UNION ALL
-      SELECT ws_bill_customer_sk, d_year,
-             CAST(sum(CAST(ws_ext_list_price - ws_ext_discount_amt
-                           AS DECIMAL(38,12))) AS DOUBLE),
-             'w'
-      FROM web_sales, date_dim
-      WHERE ws_sold_date_sk = d_date_sk AND d_year IN (1998, 1999)
-      GROUP BY ws_bill_customer_sk, d_year)
-    SELECT c_customer_id, c_first_name, c_last_name
-    FROM year_total t_s_firstyear, year_total t_s_secyear,
-         year_total t_w_firstyear, year_total t_w_secyear,
-         customer
-    WHERE t_s_secyear.customer_sk = t_s_firstyear.customer_sk
-      AND t_s_firstyear.customer_sk = t_w_firstyear.customer_sk
-      AND t_s_firstyear.customer_sk = t_w_secyear.customer_sk
-      AND t_s_firstyear.customer_sk = c_customer_sk
-      AND t_s_firstyear.sale_type = 's' AND t_w_firstyear.sale_type = 'w'
-      AND t_s_secyear.sale_type = 's' AND t_w_secyear.sale_type = 'w'
-      AND t_s_firstyear.d_year = 1998 AND t_s_secyear.d_year = 1999
-      AND t_w_firstyear.d_year = 1998 AND t_w_secyear.d_year = 1999
-      AND t_s_firstyear.year_total > 0
-      AND t_w_firstyear.year_total > 0
-      AND t_w_secyear.year_total / t_w_firstyear.year_total
-          > t_s_secyear.year_total / t_s_firstyear.year_total
-    ORDER BY c_customer_id
-    LIMIT 20
-    """,
-        "store_sales",
-        "web_sales",
-        "date_dim",
-        "customer",
-    ),
-)
-def tpcds_q11_two_channel_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q11: the q4 growth shape on store vs web only, with the
-    simpler (list - discount) total formula."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    ws = _ws(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-
-    # One pass per channel (the q4/q64 fold): the per-(year, channel)
-    # filter-then-self-join form pushes the year filters below the
-    # exchange, so ReuseExchange cannot fire and every fact pipeline
-    # executes twice. Two fixed years fold into conditional partials
-    # per customer; requiring both totals non-null is the self-join's
-    # both-years-present semantics (the oracle's >0 / NULL-comparison
-    # predicates reject the same rows).
-    def year_pair(fact, date_col, cust_col, lp, disc, label):
-        total = F.col(lp) - F.col(disc)
-        return (
-            fact.join(dd, F.col(date_col) == dd.d_date_sk)
-            .where(F.col("d_year").isin(1998, 1999))
-            .groupBy(F.col(cust_col).alias("cust_sk"))
-            .agg(
-                F.sum(F.when(F.col("d_year") == 1998, total)).alias(f"{label}98"),
-                F.sum(F.when(F.col("d_year") == 1999, total)).alias(f"{label}99"),
-            )
-            .where(
-                F.col(f"{label}98").isNotNull() & F.col(f"{label}99").isNotNull()
-            )
-        )
-
-    s = year_pair(ss, "ss_sold_date_sk", "ss_customer_sk",
-                  "ss_ext_list_price", "ss_ext_discount_amt", "s")
-    w = year_pair(ws, "ws_sold_date_sk", "ws_bill_customer_sk",
-                  "ws_ext_list_price", "ws_ext_discount_amt", "w")
-
-    joined = s.join(w, "cust_sk")
-    grown = joined.where(
-        (F.col("s98") > 0) & (F.col("w98") > 0)
-        & (F.col("w99") / F.col("w98") > F.col("s99") / F.col("s98"))
-    )
-    return (
-        grown.join(cu, grown.cust_sk == cu.c_customer_sk)
-        .select("c_customer_id", "c_first_name", "c_last_name")
-        .orderBy("c_customer_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q6_pricey_item_states",
-    _wh_sql(
-        """
-    SELECT ca_state, CAST(count(*) AS BIGINT) AS cnt
-    FROM store_sales, date_dim, customer, customer_address
-    WHERE ss_sold_date_sk = d_date_sk
-      AND d_year = 1998 AND d_moy = 7
-      AND ss_item_sk IN
-        (SELECT i_item_sk
-         FROM (SELECT i_item_sk, i_current_price,
-                      avg(i_current_price)
-                        OVER (PARTITION BY i_category) cat_avg
-               FROM item) p
-         WHERE i_current_price > 1.2 * cat_avg)
-      AND ss_customer_sk = c_customer_sk
-      AND c_current_addr_sk = ca_address_sk
-    GROUP BY ca_state
-    HAVING count(*) >= 10
-    ORDER BY cnt DESC, ca_state
-    LIMIT 20
-    """,
-        "store_sales",
-        "date_dim",
-        "customer",
-        "customer_address",
-        "item",
-    ),
-)
-def tpcds_q6_pricey_item_states(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q6: customer states buying items priced >1.2× their
-    category average in one month — the correlated category-average
-    subquery decorrelated into an avg window over the item dim, the
-    spec's HAVING count ≥ 10."""
-    _gate(spark)
-    ss, dd, it = _star(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    w = Window.partitionBy("i_category")
-    pricey = (
-        it.withColumn("cat_avg", F.avg("i_current_price").over(w))
-        .where(F.col("i_current_price") > 1.2 * F.col("cat_avg"))
-        .select("i_item_sk")
-    )
-    dates = dd.where((F.col("d_year") == 1998) & (F.col("d_moy") == 7)).select("d_date_sk")
-    return (
-        ss.join(dates, ss.ss_sold_date_sk == F.col("d_date_sk"))
-        .join(pricey, ss.ss_item_sk == F.col("i_item_sk"), "leftsemi")
-        .join(cu, ss.ss_customer_sk == cu.c_customer_sk)
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .groupBy("ca_state")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .where(F.col("cnt") >= 10)
-        .orderBy(F.col("cnt").desc(), "ca_state")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q8_preferred_zip_stores",
-    _wh_sql(
-        """
-    WITH qual_zip2 AS (
-      SELECT DISTINCT substring(zip3, 1, 2) AS zip2
-      FROM (SELECT substring(ca_zip, 1, 3) AS zip3, count(*) n
-            FROM customer, customer_address
-            WHERE c_preferred_cust_flag = 'Y'
-              AND c_current_addr_sk = ca_address_sk
-            GROUP BY substring(ca_zip, 1, 3)) z
-      WHERE n > 30)
-    SELECT s_store_name,
-           CAST(round(sum(CAST(ss_net_profit AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS net_profit
-    FROM store_sales, date_dim, store
-    WHERE ss_sold_date_sk = d_date_sk
-      AND d_year = 1998 AND d_qoy = 2
-      AND ss_store_sk = s_store_sk
-      AND substring(s_zip, 1, 2) IN (SELECT zip2 FROM qual_zip2)
-    GROUP BY s_store_name
-    ORDER BY s_store_name
-    LIMIT 10
-    """,
-        "customer",
-        "customer_address",
-        "store_sales",
-        "date_dim",
-        "store",
-    ),
-)
-def tpcds_q8_preferred_zip_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q8: store net profit restricted to stores whose zip
-    2-prefix matches a preferred-customer zip — the qualifying zip set
-    (preferred customers' 5-digit zips, >5 holders) reduces first,
-    then probes the 8-row store dim by prefix."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    # Spec counts >10 preferred holders per 5-digit zip; the uniform
-    # 90k-zip generator leaves <1 holder per zip, so the density rule
-    # moves to the 3-digit prefix (same reduce-then-probe shape).
-    qual_zips = (
-        cu.where(F.col("c_preferred_cust_flag") == "Y")
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .groupBy(F.substring("ca_zip", 1, 3).alias("zip3"))
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > 30)
-        .select(F.substring("zip3", 1, 2).alias("zip2"))
-        .distinct()
-    )
-    stores = st.join(
-        qual_zips, F.substring(st.s_zip, 1, 2) == F.col("zip2"), "leftsemi"
-    )
-    dates = dd.where((F.col("d_year") == 1998) & (F.col("d_qoy") == 2)).select("d_date_sk")
-    return (
-        ss.join(dates, ss.ss_sold_date_sk == F.col("d_date_sk"))
-        .join(stores, ss.ss_store_sk == stores.s_store_sk)
-        .groupBy("s_store_name")
-        .agg(_money("ss_net_profit").alias("net_profit"))
-        .orderBy("s_store_name")
-        .limit(10)
-    )
-
-
-@register(
-    "tpcds_q15_catalog_zip_revenue",
-    _wh_sql(
-        """
-    SELECT ca_zip,
-           CAST(round(sum(CAST(cs_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS sum_sales
-    FROM catalog_sales, customer, customer_address, date_dim
-    WHERE cs_bill_customer_sk = c_customer_sk
-      AND c_current_addr_sk = ca_address_sk
-      AND (substring(ca_zip, 1, 2) IN ('85', '86', '88')
-           OR ca_state IN ('CA', 'WA', 'GA')
-           OR cs_sales_price > 180)
-      AND cs_sold_date_sk = d_date_sk
-      AND d_qoy = 1 AND d_year = 1998
-    GROUP BY ca_zip
-    ORDER BY sum_sales DESC, ca_zip
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "customer",
-        "customer_address",
-        "date_dim",
-    ),
-)
-def tpcds_q15_catalog_zip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q15: catalog revenue by customer zip where the zip
-    prefix, state, or a large sale qualifies the row — the spec's
-    disjunctive qualification over the bill-customer's address."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    dates = dd.where((F.col("d_year") == 1998) & (F.col("d_qoy") == 1)).select("d_date_sk")
-    return (
-        cs.join(dates, cs.cs_sold_date_sk == F.col("d_date_sk"))
-        .join(cu, cs.cs_bill_customer_sk == cu.c_customer_sk)
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .where(
-            F.substring("ca_zip", 1, 2).isin("85", "86", "88")
-            | F.col("ca_state").isin("CA", "WA", "GA")
-            | (F.col("cs_sales_price") > 180)
-        )
-        .groupBy(F.col("ca_zip"))
-        .agg(_money("cs_sales_price").alias("sum_sales"))
-        .orderBy(F.col("sum_sales").desc(), "ca_zip")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q13_band_averages",
-    _wh_sql(
-        """
-    SELECT CAST(round(avg(ss_quantity), 4) AS DOUBLE) AS avg_quantity,
-           CAST(round(avg(ss_ext_sales_price), 4) AS DOUBLE)
-             AS avg_ext_sales,
-           CAST(round(avg(ss_ext_wholesale_cost), 4) AS DOUBLE)
-             AS avg_wholesale,
-           CAST(round(sum(CAST(ss_ext_wholesale_cost AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS sum_wholesale
-    FROM store_sales, store, customer_demographics,
-         household_demographics, customer_address, date_dim
-    WHERE s_store_sk = ss_store_sk
-      AND ss_sold_date_sk = d_date_sk AND d_year = 1998
-      AND ((cd_demo_sk = ss_cdemo_sk
-            AND cd_marital_status = 'M'
-            AND cd_education_status = 'Advanced Degree'
-            AND ss_sales_price BETWEEN 100.00 AND 150.00
-            AND hd_demo_sk = ss_hdemo_sk
-            AND hd_dep_count = 3)
-        OR (cd_demo_sk = ss_cdemo_sk
-            AND cd_marital_status = 'S'
-            AND cd_education_status = 'College'
-            AND ss_sales_price BETWEEN 50.00 AND 100.00
-            AND hd_demo_sk = ss_hdemo_sk
-            AND hd_dep_count = 1)
-        OR (cd_demo_sk = ss_cdemo_sk
-            AND cd_marital_status = 'W'
-            AND cd_education_status = '2 yr Degree'
-            AND ss_sales_price BETWEEN 150.00 AND 200.00
-            AND hd_demo_sk = ss_hdemo_sk
-            AND hd_dep_count = 1))
-      AND ((ss_addr_sk = ca_address_sk
-            AND ca_country = 'United States'
-            AND ca_state IN ('TX', 'OH', 'TN')
-            AND ss_net_profit BETWEEN 0 AND 240)
-        OR (ss_addr_sk = ca_address_sk
-            AND ca_country = 'United States'
-            AND ca_state IN ('GA', 'MI', 'IL')
-            AND ss_net_profit BETWEEN 50 AND 250)
-        OR (ss_addr_sk = ca_address_sk
-            AND ca_country = 'United States'
-            AND ca_state IN ('NC', 'FL', 'CA')
-            AND ss_net_profit BETWEEN 0 AND 250))
-    """,
-        "store_sales",
-        "store",
-        "customer_demographics",
-        "household_demographics",
-        "customer_address",
-        "date_dim",
-    ),
-)
-def tpcds_q13_band_averages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q13: store-sales averages under disjunctive demographic
-    price bands AND address profit bands — q85's OR-of-ANDs predicate
-    architecture on the store channel with a single demographics
-    role."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    cd = gen_customer_demographics(spark)
-    hd = gen_household_demographics(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    base = (
-        ss.join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .join(cd, ss.ss_cdemo_sk == cd.cd_demo_sk)
-        .join(hd, ss.ss_hdemo_sk == hd.hd_demo_sk)
-        .join(ca, ss.ss_addr_sk == ca.ca_address_sk)
-        .where(
-            (
-                (
-                    (F.col("cd_marital_status") == "M")
-                    & (F.col("cd_education_status") == "Advanced Degree")
-                    & F.col("ss_sales_price").between(100.00, 150.00)
-                    & (F.col("hd_dep_count") == 3)
-                )
-                | (
-                    (F.col("cd_marital_status") == "S")
-                    & (F.col("cd_education_status") == "College")
-                    & F.col("ss_sales_price").between(50.00, 100.00)
-                    & (F.col("hd_dep_count") == 1)
-                )
-                | (
-                    (F.col("cd_marital_status") == "W")
-                    & (F.col("cd_education_status") == "2 yr Degree")
-                    & F.col("ss_sales_price").between(150.00, 200.00)
-                    & (F.col("hd_dep_count") == 1)
-                )
-            )
-            & (
-                (F.col("ca_country") == "United States")
-                & (
-                    (F.col("ca_state").isin("TX", "OH", "TN") & F.col("ss_net_profit").between(0, 240))
-                    | (F.col("ca_state").isin("GA", "MI", "IL") & F.col("ss_net_profit").between(50, 250))
-                    | (F.col("ca_state").isin("NC", "FL", "CA") & F.col("ss_net_profit").between(0, 250))
-                )
-            )
-        )
-    )
-    return base.agg(
-        F.round(F.avg("ss_quantity"), 4).cast("double").alias("avg_quantity"),
-        F.round(F.avg("ss_ext_sales_price"), 4).cast("double").alias("avg_ext_sales"),
-        F.round(F.avg("ss_ext_wholesale_cost"), 4).cast("double").alias("avg_wholesale"),
-        F.round(F.sum("ss_ext_wholesale_cost"), 2).cast("double").alias("sum_wholesale"),
-    )
-
-
-@register(
-    "tpcds_q17_chain_quantity_stats",
-    _wh_sql(
-        """
-    SELECT i_item_id,
-           CAST(count(ss_quantity) AS BIGINT) AS store_cnt,
-           CAST(round(sum(ss_quantity) / count(ss_quantity), 4) AS DOUBLE) AS store_mean,
-           CAST(CASE WHEN count(ss_quantity) > 1 THEN
-                round(sqrt((sum(ss_quantity * ss_quantity)
-                            - sum(ss_quantity) * sum(ss_quantity) / count(ss_quantity))
-                           / (count(ss_quantity) - 1))
-                      / (sum(ss_quantity) / count(ss_quantity)), 4)
-           END AS DOUBLE) AS store_cov,
-           CAST(count(sr_return_quantity) AS BIGINT) AS ret_cnt,
-           CAST(round(sum(sr_return_quantity) / count(sr_return_quantity), 4) AS DOUBLE) AS ret_mean,
-           CAST(CASE WHEN count(sr_return_quantity) > 1 THEN
-                round(sqrt((sum(sr_return_quantity * sr_return_quantity)
-                            - sum(sr_return_quantity) * sum(sr_return_quantity) / count(sr_return_quantity))
-                           / (count(sr_return_quantity) - 1))
-                      / (sum(sr_return_quantity) / count(sr_return_quantity)), 4)
-           END AS DOUBLE) AS ret_cov,
-           CAST(count(cs_quantity) AS BIGINT) AS catalog_cnt,
-           CAST(round(sum(cs_quantity) / count(cs_quantity), 4) AS DOUBLE) AS catalog_mean,
-           CAST(CASE WHEN count(cs_quantity) > 1 THEN
-                round(sqrt((sum(cs_quantity * cs_quantity)
-                            - sum(cs_quantity) * sum(cs_quantity) / count(cs_quantity))
-                           / (count(cs_quantity) - 1))
-                      / (sum(cs_quantity) / count(cs_quantity)), 4)
-           END AS DOUBLE) AS catalog_cov
-    FROM store_sales, store_returns, catalog_sales_big, date_dim d1,
-         date_dim d2, date_dim d3, store, item
-    WHERE d1.d_year = 1998
-      AND d1.d_date_sk = ss_sold_date_sk
-      AND i_item_sk = ss_item_sk
-      AND s_store_sk = ss_store_sk
-      AND ss_customer_sk = sr_customer_sk
-      AND ss_item_sk = sr_item_sk
-      AND ss_ticket_number = sr_ticket_number
-      AND sr_returned_date_sk = d2.d_date_sk
-      AND d2.d_year IN (1998, 1999)
-      AND sr_customer_sk = cs_bill_customer_sk
-      AND sr_item_sk = cs_item_sk
-      AND cs_sold_date_sk = d3.d_date_sk
-      AND d3.d_year IN (1998, 1999)
-    GROUP BY i_item_id
-    ORDER BY i_item_id
-    LIMIT 15
-    """,
-        "store_sales",
-        "store_returns",
-        "catalog_sales_big",
-        "date_dim",
-        "store",
-        "item",
-    ),
-)
-def tpcds_q17_chain_quantity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q17: the q25 buy→return→rebuy chain reporting quantity
-    statistics (count / mean / coefficient of variation) per stage —
-    variance from exact integer partials like q39, so the pin is
-    partition-invariant."""
-    _gate(spark, big=True)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    sr = _sr(spark, sf_dir)
-    cs = _cs_big(spark, sf_dir)
-    d1 = dd.where(F.col("d_year") == 1998).select(F.col("d_date_sk").alias("d1_sk"))
-    d23 = dd.where(F.col("d_year").isin(1998, 1999)).select(
-        F.col("d_date_sk").alias("d23_sk")
-    )
-    chain = (
-        ss.join(d1, ss.ss_sold_date_sk == F.col("d1_sk"))
-        .join(
-            sr.join(d23, sr.sr_returned_date_sk == F.col("d23_sk")),
-            (F.col("ss_ticket_number") == F.col("sr_ticket_number"))
-            & (F.col("ss_item_sk") == F.col("sr_item_sk"))
-            & (F.col("ss_customer_sk") == F.col("sr_customer_sk")),
-        )
-        .join(
-            cs.join(
-                d23.withColumnRenamed("d23_sk", "d3_sk"),
-                F.col("cs_sold_date_sk") == F.col("d3_sk"),
-            ),
-            (F.col("sr_customer_sk") == F.col("cs_bill_customer_sk"))
-            & (F.col("sr_item_sk") == F.col("cs_item_sk")),
-        )
-        .join(st, F.col("ss_store_sk") == st.s_store_sk)
-        .join(it, F.col("ss_item_sk") == it.i_item_sk)
-    )
-
-    def stats(col, tag):
-        n = F.count(col)
-        s = F.sum(col).cast("bigint")
-        ss_ = F.sum(F.col(col) * F.col(col)).cast("bigint")
-        mean = s / n
-        var = (ss_ - s * s / n) / (n - 1)
-        # cov defined only for n>1 groups (sample variance); the
-        # generators' sparse chain leaves singleton groups NULL
-        cov = F.when(n > 1, F.round(F.sqrt(var) / mean, 4)).cast("double")
-        return [
-            n.cast("bigint").alias(f"{tag}_cnt"),
-            F.round(mean, 4).cast("double").alias(f"{tag}_mean"),
-            cov.alias(f"{tag}_cov"),
-        ]
-
-    return (
-        chain.groupBy("i_item_id")
-        .agg(
-            *stats("ss_quantity", "store"),
-            *stats("sr_return_quantity", "ret"),
-            *stats("cs_quantity", "catalog"),
-        )
-        .orderBy("i_item_id")
-        .limit(15)
-    )
-
-
-@register(
-    "tpcds_q18_catalog_demo_averages",
-    _wh_sql(
-        """
-    SELECT ca_country, ca_state, ca_county,
-           CAST(round(avg(cs_quantity), 4) AS DOUBLE) AS agg1,
-           CAST(round(avg(cs_list_price), 4) AS DOUBLE) AS agg2,
-           CAST(round(avg(cs_coupon_amt), 4) AS DOUBLE) AS agg3,
-           CAST(round(avg(cs_net_profit), 4) AS DOUBLE) AS agg4
-    FROM catalog_sales, customer_demographics, customer,
-         customer_address, date_dim, item
-    WHERE cs_sold_date_sk = d_date_sk AND d_year = 1998
-      AND cs_item_sk = i_item_sk
-      AND cs_bill_cdemo_sk = cd_demo_sk
-      AND cd_gender = 'F' AND cd_education_status = 'Unknown'
-      AND cs_bill_customer_sk = c_customer_sk
-      AND c_birth_month IN (1, 6, 8, 9)
-      AND c_current_addr_sk = ca_address_sk
-      AND ca_state IN ('MS', 'IN', 'ND', 'OK', 'NM', 'VA', 'CA', 'TX', 'GA')
-    GROUP BY ROLLUP (ca_country, ca_state, ca_county)
-    ORDER BY ca_country NULLS FIRST, ca_state NULLS FIRST,
-             ca_county NULLS FIRST
-    LIMIT 20
-    """,
-        "catalog_sales",
-        "customer_demographics",
-        "customer",
-        "customer_address",
-        "date_dim",
-        "item",
-    ),
-)
-def tpcds_q18_catalog_demo_averages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q18: catalog averages for a demographic slice with birth
-    months, rolled up the customer GEOGRAPHY hierarchy
-    (country/state/county ROLLUP over the address dim)."""
-    _gate(spark)
-    cs = _cs(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    cd = gen_customer_demographics(spark)
-    base = (
-        cs.join(dd, cs.cs_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .join(it, cs.cs_item_sk == it.i_item_sk)
-        .join(cd, cs.cs_bill_cdemo_sk == cd.cd_demo_sk)
-        .where(
-            (F.col("cd_gender") == "F") & (F.col("cd_education_status") == "Unknown")
-        )
-        .join(cu, cs.cs_bill_customer_sk == cu.c_customer_sk)
-        .where(F.col("c_birth_month").isin(1, 6, 8, 9))
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .where(F.col("ca_state").isin("MS", "IN", "ND", "OK", "NM", "VA", "CA", "TX", "GA"))
-    )
-    return (
-        base.rollup("ca_country", "ca_state", "ca_county")
-        .agg(
-            F.round(F.avg("cs_quantity"), 4).cast("double").alias("agg1"),
-            F.round(F.avg("cs_list_price"), 4).cast("double").alias("agg2"),
-            F.round(F.avg("cs_coupon_amt"), 4).cast("double").alias("agg3"),
-            F.round(F.avg("cs_net_profit"), 4).cast("double").alias("agg4"),
-        )
-        .orderBy(
-            F.col("ca_country").asc_nulls_first(),
-            F.col("ca_state").asc_nulls_first(),
-            F.col("ca_county").asc_nulls_first(),
-        )
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q24_returned_color_spenders",
-    _wh_sql(
-        """
-    WITH ssales AS (
-      SELECT c_last_name, c_first_name, s_store_name, i_color,
-             sum(CAST(ss_net_paid AS DECIMAL(38,12))) netpaid
-      FROM store_sales, store_returns, store, item, customer,
-           customer_address
-      WHERE ss_ticket_number = sr_ticket_number
-        AND ss_item_sk = sr_item_sk
-        AND ss_store_sk = s_store_sk
-        AND ss_item_sk = i_item_sk
-        AND ss_customer_sk = c_customer_sk
-        AND c_current_addr_sk = ca_address_sk
-        AND s_zip <> ca_zip
-      GROUP BY c_last_name, c_first_name, s_store_name, i_color)
-    SELECT c_last_name, c_first_name, s_store_name,
-           CAST(round(netpaid, 2) AS DOUBLE) AS paid
-    FROM ssales
-    WHERE i_color = 'gold'
-      AND netpaid > (SELECT 0.05 * avg(netpaid) FROM ssales)
-    ORDER BY c_last_name, c_first_name, s_store_name, paid
-    LIMIT 20
-    """,
-        "store_sales",
-        "store_returns",
-        "store",
-        "item",
-        "customer",
-        "customer_address",
-    ),
-)
-def tpcds_q24_returned_color_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q24: customers whose net paid on RETURNED store lines of
-    one color beats 5% of the average — sales↔returns natural-key
-    join, customer/store/address roles, and the spec's scalar
-    average-threshold cross join. (Spec's birth-country≠address-
-    country filter becomes a zip mismatch: the generator emits one
-    country.)"""
-    _gate(spark)
-    ss, _, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    sr = _sr(spark, sf_dir)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    base = (
-        ss.join(
-            sr.select(
-                F.col("sr_ticket_number").alias("ss_ticket_number"),
-                F.col("sr_item_sk").alias("ss_item_sk"),
-            ),
-            ["ss_ticket_number", "ss_item_sk"],
-        )
-        .join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(it, ss.ss_item_sk == it.i_item_sk)
-        .join(cu, ss.ss_customer_sk == cu.c_customer_sk)
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .where(F.col("s_zip") != F.col("ca_zip"))
-    )
-    ssales = base.groupBy("c_last_name", "c_first_name", "s_store_name", "i_color").agg(
-        F.sum("ss_net_paid").alias("netpaid")
-    )
-    threshold = ssales.agg((F.avg("netpaid") * 0.05).alias("bar"))
-    return (
-        ssales.where(F.col("i_color") == "gold")
-        .crossJoin(F.broadcast(threshold))
-        .where(F.col("netpaid") > F.col("bar"))
-        .select(
-            "c_last_name",
-            "c_first_name",
-            "s_store_name",
-            F.round("netpaid", 2).cast("double").alias("paid"),
-        )
-        .orderBy("c_last_name", "c_first_name", "s_store_name", F.col("paid"))
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q29_chain_quantity_sums",
-    _wh_sql(
-        """
-    SELECT i_item_id, i_item_desc, s_store_id, s_store_name,
-           CAST(sum(ss_quantity) AS BIGINT) AS store_sales_quantity,
-           CAST(sum(sr_return_quantity) AS BIGINT)
-             AS store_returns_quantity,
-           CAST(sum(cs_quantity) AS BIGINT) AS catalog_sales_quantity
-    FROM store_sales, store_returns, catalog_sales_big, date_dim d1,
-         date_dim d2, date_dim d3, store, item
-    WHERE d1.d_year = 1998
-      AND d1.d_date_sk = ss_sold_date_sk
-      AND i_item_sk = ss_item_sk
-      AND s_store_sk = ss_store_sk
-      AND ss_customer_sk = sr_customer_sk
-      AND ss_item_sk = sr_item_sk
-      AND ss_ticket_number = sr_ticket_number
-      AND sr_returned_date_sk = d2.d_date_sk
-      AND d2.d_year IN (1998, 1999)
-      AND sr_customer_sk = cs_bill_customer_sk
-      AND sr_item_sk = cs_item_sk
-      AND cs_sold_date_sk = d3.d_date_sk
-      AND d3.d_year IN (1998, 1999)
-    GROUP BY i_item_id, i_item_desc, s_store_id, s_store_name
-    ORDER BY i_item_id, s_store_id
-    LIMIT 20
-    """,
-        "store_sales",
-        "store_returns",
-        "catalog_sales_big",
-        "date_dim",
-        "store",
-        "item",
-    ),
-)
-def tpcds_q29_chain_quantity_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q29: the q25 chain reporting quantity SUMS per (item,
-    store) for the three stages."""
-    _gate(spark, big=True)
-    ss, dd, it = _star(spark, sf_dir)
-    st = gen_store(spark)
-    sr = _sr(spark, sf_dir)
-    cs = _cs_big(spark, sf_dir)
-    d1 = dd.where(F.col("d_year") == 1998).select(F.col("d_date_sk").alias("d1_sk"))
-    d2 = dd.where(F.col("d_year").isin(1998, 1999)).select(
-        F.col("d_date_sk").alias("d2_sk")
-    )
-    d3 = dd.where(F.col("d_year").isin(1998, 1999)).select(
-        F.col("d_date_sk").alias("d3_sk")
-    )
-    chain = (
-        ss.join(d1, ss.ss_sold_date_sk == F.col("d1_sk"))
-        .join(
-            sr.join(d2, sr.sr_returned_date_sk == F.col("d2_sk")),
-            (F.col("ss_ticket_number") == F.col("sr_ticket_number"))
-            & (F.col("ss_item_sk") == F.col("sr_item_sk"))
-            & (F.col("ss_customer_sk") == F.col("sr_customer_sk")),
-        )
-        .join(
-            cs.join(d3, F.col("cs_sold_date_sk") == F.col("d3_sk")),
-            (F.col("sr_customer_sk") == F.col("cs_bill_customer_sk"))
-            & (F.col("sr_item_sk") == F.col("cs_item_sk")),
-        )
-        .join(st, F.col("ss_store_sk") == st.s_store_sk)
-        .join(it, F.col("ss_item_sk") == it.i_item_sk)
-    )
-    return (
-        chain.groupBy("i_item_id", "i_item_desc", "s_store_id", "s_store_name")
-        .agg(
-            F.sum("ss_quantity").cast("bigint").alias("store_sales_quantity"),
-            F.sum("sr_return_quantity").cast("bigint").alias("store_returns_quantity"),
-            F.sum("cs_quantity").cast("bigint").alias("catalog_sales_quantity"),
-        )
-        .orderBy("i_item_id", "s_store_id")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q41_manufact_attribute_probe",
-    _wh_sql(
-        """
-    SELECT DISTINCT i_product_name
-    FROM item i1
-    WHERE i_manufact_id BETWEEN 70 AND 80
-      AND (SELECT count(*) AS item_cnt
-           FROM item
-           WHERE (i_manufact_id = i1.i_manufact_id
-                  AND ((i_color IN ('azure', 'blue')
-                        AND i_units IN ('Each', 'Dozen')
-                        AND i_size = 'large')
-                    OR (i_color IN ('gold', 'cream')
-                        AND i_units IN ('Case', 'Pound')
-                        AND i_size = 'small')
-                    OR (i_color IN ('coral', 'cyan')
-                        AND i_units IN ('Oz', 'Gram')
-                        AND i_size = 'medium')))) > 0
-    ORDER BY i_product_name
-    LIMIT 20
-    """,
-        "item",
-    ),
-)
-def tpcds_q41_manufact_attribute_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q41: distinct product names of items whose MANUFACTURER
-    also makes an item matching a disjunctive attribute battery — the
-    spec's correlated EXISTS over the item dim itself, expressed as a
-    manufacturer-key semi join against the battery-filtered probe
-    set."""
-    _gate(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    probe = it.where(
-        (
-            F.col("i_color").isin("azure", "blue")
-            & F.col("i_units").isin("Each", "Dozen")
-            & (F.col("i_size") == "large")
-        )
-        | (
-            F.col("i_color").isin("gold", "cream")
-            & F.col("i_units").isin("Case", "Pound")
-            & (F.col("i_size") == "small")
-        )
-        | (
-            F.col("i_color").isin("coral", "cyan")
-            & F.col("i_units").isin("Oz", "Gram")
-            & (F.col("i_size") == "medium")
-        )
-    ).select("i_manufact_id")
-    return (
-        it.where(F.col("i_manufact_id").between(70, 80))
-        .join(probe, "i_manufact_id", "leftsemi")
-        .select("i_product_name")
-        .distinct()
-        .orderBy("i_product_name")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q45_web_zip_revenue",
-    _wh_sql(
-        """
-    SELECT ca_zip, ca_city,
-           CAST(round(sum(CAST(ws_sales_price AS DECIMAL(38,12))), 2)
-                AS DOUBLE) AS sum_sales
-    FROM web_sales, customer, customer_address, date_dim
-    WHERE ws_bill_customer_sk = c_customer_sk
-      AND c_current_addr_sk = ca_address_sk
-      AND ws_sold_date_sk = d_date_sk
-      AND d_qoy = 2 AND d_year = 1998
-      AND (substring(ca_zip, 1, 2) IN ('85', '86', '88', '91', '93')
-           OR ws_item_sk IN (2, 3, 5, 7, 11, 13, 17, 19, 23, 29))
-    GROUP BY ca_zip, ca_city
-    ORDER BY sum_sales DESC, ca_zip, ca_city
-    LIMIT 20
-    """,
-        "web_sales",
-        "customer",
-        "customer_address",
-        "date_dim",
-    ),
-)
-def tpcds_q45_web_zip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q45: web revenue by customer (zip, city) where the zip
-    is in a fixed list OR the item is in a picked item-id set — the
-    spec's OR of an address predicate with an item-key semi
-    condition."""
-    _gate(spark)
-    ws = _ws(spark, sf_dir)
-    dd = gen_date_dim(spark)
-    it = gen_item(spark, 18_000, seed=100)
-    cu = gen_customer_ds(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    picked = it.where(F.col("i_item_sk").isin(2, 3, 5, 7, 11, 13, 17, 19, 23, 29)).select(
-        F.col("i_item_sk").alias("picked_sk")
-    )
-    dates = dd.where((F.col("d_year") == 1998) & (F.col("d_qoy") == 2)).select("d_date_sk")
-    base = (
-        ws.join(dates, ws.ws_sold_date_sk == F.col("d_date_sk"))
-        .join(cu, ws.ws_bill_customer_sk == cu.c_customer_sk)
-        .join(ca, cu.c_current_addr_sk == ca.ca_address_sk)
-        .join(picked, ws.ws_item_sk == F.col("picked_sk"), "left")
-        .where(
-            F.substring("ca_zip", 1, 2).isin("85", "86", "88", "91", "93")
-            | F.col("picked_sk").isNotNull()
-        )
-    )
-    return (
-        base.groupBy("ca_zip", "ca_city")
-        .agg(_money("ws_sales_price").alias("sum_sales"))
-        .orderBy(F.col("sum_sales").desc(), "ca_zip", "ca_city")
-        .limit(20)
-    )
-
-
-@register(
-    "tpcds_q48_band_quantity_sum",
-    _wh_sql(
-        """
-    SELECT CAST(sum(ss_quantity) AS BIGINT) AS total_quantity
-    FROM store_sales, store, customer_demographics, customer_address,
-         date_dim
-    WHERE s_store_sk = ss_store_sk
-      AND ss_sold_date_sk = d_date_sk AND d_year = 1998
-      AND ((cd_demo_sk = ss_cdemo_sk
-            AND cd_marital_status = 'M'
-            AND cd_education_status = '4 yr Degree'
-            AND ss_sales_price BETWEEN 100.00 AND 150.00)
-        OR (cd_demo_sk = ss_cdemo_sk
-            AND cd_marital_status = 'D'
-            AND cd_education_status = '2 yr Degree'
-            AND ss_sales_price BETWEEN 50.00 AND 100.00)
-        OR (cd_demo_sk = ss_cdemo_sk
-            AND cd_marital_status = 'S'
-            AND cd_education_status = 'College'
-            AND ss_sales_price BETWEEN 150.00 AND 200.00))
-      AND ((ss_addr_sk = ca_address_sk
-            AND ca_country = 'United States'
-            AND ca_state IN ('CO', 'OH', 'TX')
-            AND ss_net_profit BETWEEN 0 AND 2000)
-        OR (ss_addr_sk = ca_address_sk
-            AND ca_country = 'United States'
-            AND ca_state IN ('OR', 'MN', 'KY')
-            AND ss_net_profit BETWEEN 150 AND 3000)
-        OR (ss_addr_sk = ca_address_sk
-            AND ca_country = 'United States'
-            AND ca_state IN ('VA', 'CA', 'MS')
-            AND ss_net_profit BETWEEN 50 AND 25000))
-    """,
-        "store_sales",
-        "store",
-        "customer_demographics",
-        "customer_address",
-        "date_dim",
-    ),
-)
-def tpcds_q48_band_quantity_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q48: total store quantity under the q13-style disjunctive
-    demographic and address bands — single scalar output."""
-    _gate(spark)
-    ss, dd, _ = _star(spark, sf_dir)
-    st = gen_store(spark)
-    cd = gen_customer_demographics(spark)
-    ca = gen_customer_address(spark, 50_000, seed=100)
-    base = (
-        ss.join(st, ss.ss_store_sk == st.s_store_sk)
-        .join(dd, ss.ss_sold_date_sk == dd.d_date_sk)
-        .where(F.col("d_year") == 1998)
-        .join(cd, ss.ss_cdemo_sk == cd.cd_demo_sk)
-        .join(ca, ss.ss_addr_sk == ca.ca_address_sk)
-        .where(
-            (
-                (
-                    (F.col("cd_marital_status") == "M")
-                    & (F.col("cd_education_status") == "4 yr Degree")
-                    & F.col("ss_sales_price").between(100.00, 150.00)
-                )
-                | (
-                    (F.col("cd_marital_status") == "D")
-                    & (F.col("cd_education_status") == "2 yr Degree")
-                    & F.col("ss_sales_price").between(50.00, 100.00)
-                )
-                | (
-                    (F.col("cd_marital_status") == "S")
-                    & (F.col("cd_education_status") == "College")
-                    & F.col("ss_sales_price").between(150.00, 200.00)
-                )
-            )
-            & (F.col("ca_country") == "United States")
-            & (
-                (F.col("ca_state").isin("CO", "OH", "TX") & F.col("ss_net_profit").between(0, 2000))
-                | (F.col("ca_state").isin("OR", "MN", "KY") & F.col("ss_net_profit").between(150, 3000))
-                | (F.col("ca_state").isin("VA", "CA", "MS") & F.col("ss_net_profit").between(50, 25000))
-            )
-        )
-    )
-    return base.agg(F.sum("ss_quantity").cast("bigint").alias("total_quantity"))
-
-
-# ---------------------------------------------------------------------------
-# Round-6: the reference's dbstress flow driven by REAL TPC-DS v2.13 SQL
-# TEXT (not DataFrame re-expressions) — 27 official texts, adapted only
-# in substitution parameters (workload/tpcds_corpus.py, generated by
-# tools/gen_tpcds_corpus.py), executed via spark.sql over the full
-# 24-table warehouse registered as views, under the same parallel
-# thread-pool schedule the reference uses for its JDBC connections.
-# ---------------------------------------------------------------------------
 
 
 def _sqltext_oracle() -> str:
@@ -9013,47 +822,12 @@ def tpcds_sqltext_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Rotating checked window over the extended corpus (VERDICT r7
-# directive #5): a bench-bounded slice of CORPUS_EXT carries hard
-# driver signal each round; the window SHIFTS each round so the whole
-# 72-text tail cycles through checked status.
-# Window history: R8 = q28..q53 (banked green in CORRECTNESS_r08);
-# R9 = q54..q83 (banked green in CORRECTNESS_r09); R10 = the q85..q99
-# tail + the wrap into the front (banked green in CORRECTNESS_r10);
-# R11 (this window) = the final 12 never-checked texts — the
-# heavy-composite set whose DataFrame-tier folded forms already hold
-# checked rows (tpcds_q4/q14/q64/q67 composites etc.) but whose
-# official TEXTS had only diffcheck coverage. With this window green,
-# every one of the 72 extended texts has carried a hard driver row:
-# the 72/72 sweep is COMPLETE (VERDICT r10 directive #1; reference
-# anchor `evaluation_tools/dbstress__Current.py:93-103` loads ALL of
-# queries/tpcds_2.13/*.sql).
-EXT_CHECKED_R11: tuple[str, ...] = (
-    "q04", "q14", "q18", "q21", "q22", "q23", "q24",
-    "q64", "q67", "q74", "q78", "q95",
-)
-
-# R12 onward: the sweep being complete, the checked window becomes a
-# cheap rotating MAINTENANCE slice (VERDICT r11 directive #1 — the
-# named bench lever: the R11 heavy-composite window cost ~25s/round
-# and no longer buys new coverage since every text holds a banked hard
-# row). 5 light texts per round, rotating through the 72 so staleness
-# is bounded; the reference anchor
-# (`evaluation_tools/dbstress__Current.py:93-103`) keeps its heavy
-# checked signal via tpcds_sqltext_stress's 27 texts, and all 72
-# extended texts stay diffchecked every round via the trailing
-# tpcds_sqltext_extended. R12 slice: scalar-subquery discount probes
-# (q32 catalog / q92 web), the dimension-only regex probe (q41), the
-# rollup+grouping-window report (q86), and the simple item-star report
-# (q98) — operator-diverse, each individually sub-second at gate SF.
-EXT_CHECKED_R12: tuple[str, ...] = ("q32", "q41", "q86", "q92", "q98")
-
-# R13 slice (rotation continues; R12's five texts bank their rows):
-# the household-size bucket probe (q34), the geo IN/OR zip rollup
-# (q45), the manager-series deviation window (q63), the
-# inventory-window item probe (q82), and the am/pm time-bucket ratio
-# (q90) — operator-diverse, each light at gate SF.
-EXT_CHECKED_R13: tuple[str, ...] = ("q34", "q45", "q63", "q82", "q90")
+# The checked slice of the extended corpus: five light,
+# operator-diverse texts (household-size buckets, a geo IN/OR zip
+# rollup, a manager-series deviation window, an inventory-window item
+# probe, an am/pm ratio). All 72 extended texts stay covered by the
+# trailing tpcds_sqltext_extended.
+EXT_CHECKED: tuple[str, ...] = ("q34", "q45", "q63", "q82", "q90")
 
 
 def _sqltext_ext_checked_oracle() -> str:
@@ -9065,29 +839,23 @@ def _sqltext_ext_checked_oracle() -> str:
 
     units = ",\n".join(
         f"u_{name} AS (SELECT count(*) AS c FROM (\n{CORPUS_EXT[name]}\n) t_{name})"
-        for name in sorted(EXT_CHECKED_R13)
+        for name in sorted(EXT_CHECKED)
     )
     selects = "\nUNION ALL\n".join(
         f"SELECT '{name}' AS unit_name, CAST(c AS BIGINT) AS n_rows FROM u_{name}"
-        for name in sorted(EXT_CHECKED_R13)
+        for name in sorted(EXT_CHECKED)
     )
     return with_tables(f"WITH {units}\n{selects}\nORDER BY unit_name", *CORE_TABLES)
 
 
 @register("tpcds_sqltext_extended_checked", _sqltext_ext_checked_oracle())
 def tpcds_sqltext_extended_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rotating checked MAINTENANCE slice of the extended
-    official-SQL-text corpus (EXT_CHECKED_R13 — see the rotation note
-    at its definition). The 72/72 sweep COMPLETED in round 11 (every
-    extended text holds a banked hard driver row, R8-R11 windows), so
-    per VERDICT r11 directive #1 this window shrinks from the 12-text
-    heavy-composite set to 5 light operator-diverse texts per round —
-    the named bench lever — while the heavy concurrent-harness signal
-    stays with tpcds_sqltext_stress's 27 checked texts and all 72
-    extended texts stay diffchecked via the trailing
-    tpcds_sqltext_extended. Each text runs ONCE through the workload
-    harness, retry-once on transient failures — the dbstress posture
-    (`evaluation_tools/dbstress__Current.py:93-103`)."""
+    """The checked slice of the extended official-SQL-text corpus
+    (EXT_CHECKED). The heavy concurrent-harness signal stays with
+    tpcds_sqltext_stress's 27 texts, and all 72 extended texts run in
+    the trailing tpcds_sqltext_extended. Each text runs ONCE through
+    the workload harness, retry-once on transient failures — the
+    dbstress posture (`evaluation_tools/dbstress__Current.py:93-103`)."""
     from lakehouse_dba_tools_spark.datagen.export import CORE_TABLES, ensure_export
     from lakehouse_dba_tools_spark.workload.harness import (
         SqlUnit,
@@ -9110,7 +878,7 @@ def tpcds_sqltext_extended_checked(spark: SparkSession, sf_dir: str) -> DataFram
     ):
         units = [
             SqlUnit(name, CORPUS_EXT[name], parallel=1, repeats=1)
-            for name in sorted(EXT_CHECKED_R13)
+            for name in sorted(EXT_CHECKED)
         ]
         results = run_workload(spark, units, unit_parallel=16, retries=1)
         out = (

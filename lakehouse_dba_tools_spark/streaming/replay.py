@@ -33,19 +33,36 @@ def replay_in_batches(
 ) -> None:
     """Seed from the first ``id // batch_size`` slice, then replay the
     remaining slices as deterministic micro-batches through ``sink``.
-    The staging/checkpoint dirs are temp-scoped and removed."""
+    The staging/checkpoint dirs are temp-scoped and removed.
+
+    Every row needs a non-null ``id_col``: a null id belongs to no
+    slice, so it raises ``ValueError`` naming the column and the null
+    count instead of being dropped.
+
+    ``seed_fn`` runs on an ``overlap_jobs`` worker thread at the same
+    time as the staging write of the remaining slices. It therefore
+    does not inherit the caller thread's job group or other Spark
+    local properties, and it must not change anything the source
+    scan of ``df`` reads."""
     stage = tempfile.mkdtemp(prefix="replay_stage_")
     ckpt = tempfile.mkdtemp(prefix="replay_ckpt_")
     try:
         batched = df.withColumn(
             "_b", F.floor(F.col(id_col) / batch_size).cast("long")
         )
-        # Only the FIRST slice id needs a Spark action (one partial-agg
-        # min — no shuffle); the remaining slice ids are read off the
-        # staged partition directories below, which the partitioned
-        # write materializes anyway. The previous distinct().collect()
-        # paid a full dedup shuffle for the same information.
-        first = batched.agg(F.min("_b")).collect()[0][0]
+        # Only the FIRST slice id and the null-id count need a Spark
+        # action (one partial-agg — no shuffle); the remaining slice ids
+        # are read off the staged partition directories below, which
+        # the partitioned write materializes anyway. A null id would
+        # pass neither slice filter, so it is rejected here.
+        first, n_null = batched.agg(
+            F.min("_b"), F.count(F.lit(1)) - F.count("_b")
+        ).collect()[0]
+        if n_null:
+            raise ValueError(
+                f"replay_in_batches: {n_null} row(s) have a null {id_col!r};"
+                " every row needs an id to be assigned a batch"
+            )
         if first is None:
             raise ValueError("replay_in_batches: empty input DataFrame")
         # Seeding (user callback — e.g. an index build) and the staging

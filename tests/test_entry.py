@@ -1,9 +1,14 @@
 from __future__ import annotations
 
+import functools
 import importlib.util
-import sys
+
+import pytest
+
+from lakehouse_dba_tools_spark import registry
 
 
+@functools.cache
 def _load_entry():
     spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
@@ -37,8 +42,6 @@ def test_checked_first_is_exactly_the_driver_gate():
     unique oracle-backed names occupying the first registry slots, the
     restorations exactly at the tail — a count or ordering regression
     would silently change which queries carry hard signal."""
-    from lakehouse_dba_tools_spark import registry
-
     registry.load_all()
     names = registry.CHECKED_FIRST
     assert len(names) == 53
@@ -54,8 +57,14 @@ def test_checked_first_is_exactly_the_driver_gate():
     )
 
 
-def test_all_queries_run_sf0001(spark, sf_dir):
-    mod = _load_entry()
-    for name, fn in mod.queries().items():
-        df = fn(spark, sf_dir)
-        assert df.count() >= 0, name
+def _registered_names() -> list[str]:
+    registry.load_all()
+    return list(registry.QUERIES)
+
+
+@pytest.mark.parametrize("name", _registered_names())
+def test_all_queries_run_sf0001(spark, sf_dir, name):
+    """Every registered query runs at the smallest fixture; one case
+    per query, so a failure or timeout names the query."""
+    df = _load_entry().queries()[name](spark, sf_dir)
+    assert df.count() >= 0, name

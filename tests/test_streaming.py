@@ -3,10 +3,12 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_dba_tools_spark.operators.dedup import latest_per_group
 from lakehouse_dba_tools_spark.sources.tables import load_table
+from lakehouse_dba_tools_spark.streaming.replay import replay_in_batches
 from lakehouse_dba_tools_spark.streaming.windows import (
     run_stream_to_table,
     sliding_rollup,
@@ -190,3 +192,27 @@ def test_ingest_dedup_sink_epoch_replay_idempotent(spark, tmp_path):
     sink(batch, 0)  # replay: append already landed, same epoch_id
     assert sorted((r.id_a, r.id_b) for r in found[0]) == first == [(10, 1)]
     assert list(found) == [0]  # one slot, replaced not extended
+
+
+def test_replay_in_batches_rejects_null_ids(spark):
+    """A null id falls in no ``id // batch_size`` slice: the replay must
+    name the column and the null count instead of silently seeding and
+    replaying only the non-null rows."""
+    df = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(10)] + [(None, "orphan")],
+        "doc_id long, text string",
+    )
+    seen = []
+
+    def seed(batch):
+        seen.append(batch.count())
+
+    def sink(batch, _epoch):
+        seen.append(batch.count())
+
+    with pytest.raises(ValueError, match=r"1 row\(s\) have a null 'doc_id'"):
+        replay_in_batches(spark, df, "doc_id", 3, seed, sink)
+    assert seen == []
+    # the same rows without the null are all delivered: seed + batches
+    replay_in_batches(spark, df.where("doc_id IS NOT NULL"), "doc_id", 3, seed, sink)
+    assert sum(seen) == 10

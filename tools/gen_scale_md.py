@@ -1,5 +1,5 @@
 """Render the 100x-gate scale-evidence table from tools/scale_run.py
-output (VERDICT r6 directive #2).
+output.
 
 Usage: python tools/gen_scale_md.py /tmp/scale_run_r7.json
 Prints a markdown section; append it to SCALE.md after reviewing.
@@ -25,12 +25,12 @@ def main() -> None:
             cells.append(f"{q['sec']:.2f} / {q['us_per_row']:.3f}")
         print(f"| `{name}` | " + " | ".join(cells) + " |")
     print()
-    print("| plan probe (q3 star) | " + " | ".join(
+    print("| plan probe (q7 star) | " + " | ".join(
         f"scale {t['scale']}" for t in tiers) + " |")
     print("|---|" + "---|" * len(tiers))
     for key in ("broadcast_joins", "sort_merge_joins", "exchanges"):
         print(f"| {key} | " + " | ".join(
-            str(t["q3_plan"][key]) for t in tiers) + " |")
+            str(t["q7_plan"][key]) for t in tiers) + " |")
 
 
 if __name__ == "__main__":

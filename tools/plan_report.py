@@ -66,7 +66,6 @@ def main() -> int:
         "streaming_ingest_ann": "foreachBatch replay; per-batch plans pinned in tests/test_similarity.py + test_streaming.py",
         "index_family_describe": "lifecycle observability; version/compaction pins in tests/test_indexio.py + lifecycle tests",
         "training_corpus_e2e": "materialized pipeline; stage plans pinned via the per-stage carriers + tests/test_curation.py",
-        "tpcds_q49_worst_return_ratios": "materialized over a pinned rollup cache; WindowGroupLimit prune pinned in tests/test_tpcds.py::test_q49_rank_legs_prune_map_side",
         "tpcds_warehouse_build_audit": "cross-engine export audit; subprocess/export shape pinned in tests/test_datagen_catalog.py",
     }
     for name in registry.CHECKED_FIRST:

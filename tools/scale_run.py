@@ -1,6 +1,6 @@
-"""100×-gate scale evidence (VERDICT r6 directive #2).
+"""100×-gate scale evidence.
 
-Runs the four checked TPC-DS stars + the SQL-text stress corpus at
+Runs the two TPC-DS star composites + the SQL-text stress corpus at
 scale 1 (sf0.01, the gate), 10 (sf0.1, bench) and 100 (sf1) — fact
 sizes via the same `export.scale_for(sf_dir)` the queries use — and
 records per-query wall time, fact rows, and per-row cost, plus a plan
@@ -23,15 +23,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # (query, fact-rows-at-scale-1) — fact sizes from queries_tpcds helpers:
-# q3/q7 scan store_sales (200k), q16 catalog_sales (120k), q62
-# web_sales (120k); the stress corpus scans the whole 24-table
-# warehouse (store 200k + catalog 120k + web 120k + returns + 208k
-# inventory rows at scale 1 → dominated by the three sales facts).
+# q7 scans store_sales (200k), q16 catalog_sales (120k); the stress
+# corpus scans the whole 24-table warehouse (store 200k + catalog 120k
+# + web 120k + returns + 208k inventory rows at scale 1 → dominated by
+# the three sales facts).
 STARS = [
-    ("tpcds_q3_brand_rollup", 200_000),
     ("tpcds_q7_demographics_star", 200_000),
     ("tpcds_q16_catalog_order_spread", 120_000),
-    ("tpcds_q62_web_ship_latency", 120_000),
     ("tpcds_sqltext_stress", 648_000),  # ss+sr+cs+cr+ws+wr at scale 1
 ]
 
@@ -40,11 +38,11 @@ SCALES = [("/root/testdata/sf0.01", 1), ("/root/testdata/sf0.1", 10),
 
 
 def plan_probe(spark, sf_dir: str) -> dict:
-    """Shape of the q3 star plan at this scale: dims must broadcast and
+    """Shape of the q7 star plan at this scale: dims must broadcast and
     the fact must shuffle exactly once into the rollup aggregate."""
     from lakehouse_dba_tools_spark.registry import QUERIES
 
-    plan = QUERIES["tpcds_q3_brand_rollup"](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = QUERIES["tpcds_q7_demographics_star"](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     return {
         "broadcast_joins": plan.count("BroadcastHashJoin"),
         "sort_merge_joins": plan.count("SortMergeJoin"),
@@ -79,8 +77,8 @@ def main() -> None:
             }
             print(f"scale {scale:>3} {name}: {best:.2f}s "
                   f"({best / rows * 1e6:.3f} us/fact-row)", flush=True)
-        tier["q3_plan"] = plan_probe(spark, sf_dir)
-        print(f"scale {scale:>3} q3 plan: {tier['q3_plan']}", flush=True)
+        tier["q7_plan"] = plan_probe(spark, sf_dir)
+        print(f"scale {scale:>3} q7 plan: {tier['q7_plan']}", flush=True)
         out["tiers"].append(tier)
     dest = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_run.json"
     with open(dest, "w") as fh:
