@@ -31,15 +31,24 @@ LOG_NAME = "commits.jsonl"
 def footer_row_count(table_path: str) -> int:
     """Row count from parquet footers — driver-side metadata read, no
     Spark job (the way Delta gets commit stats from its log for free;
-    rescanning the table per commit would double every merge's cost)."""
-    import glob as _glob
+    rescanning the table per commit would double every merge's cost).
 
+    Walks partition directories (``col=value/``), skipping ``_``- and
+    ``.``-prefixed entries (``_SUCCESS``, ``_engine_log``, checksum
+    files), so partitioned tables count every live row."""
     import pyarrow.parquet as pq
 
-    files = _glob.glob(os.path.join(table_path, "*.parquet")) or (
-        [table_path] if os.path.isfile(table_path) else []
-    )
-    return sum(pq.read_metadata(f).num_rows for f in files)
+    if os.path.isfile(table_path):
+        return pq.read_metadata(table_path).num_rows
+    total = 0
+    for root, dirs, files in os.walk(table_path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        total += sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    return total
 
 
 def _log_path(table_path: str) -> str:

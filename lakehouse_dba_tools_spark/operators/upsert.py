@@ -92,10 +92,15 @@ def create_or_upsert_parquet(
     date/key-prefix partition bounds the rewrite to touched dirs; the
     streaming sink and the QH ETL flagship route through it (round-7).
 
+    The merged table is written once, to a staging dir, which then
+    replaces ``path`` by directory swap (``rmtree`` + ``os.rename``) —
+    the same swap the partitioned verb does per partition dir.
+
     (With a Delta/Iceberg classpath this becomes a true transactional
     MERGE; the branch logic and key-uniqueness contract are identical.)
     """
     import os
+    import shutil
 
     from lakehouse_dba_tools_spark.maintenance.history import (
         footer_row_count,
@@ -114,15 +119,15 @@ def create_or_upsert_parquet(
         return
     target = spark.read.parquet(path)
     merged = merge_upsert(target, source, keys, source_order=source_order)
-    # Rewrite via a staging dir: parquet has no transaction log and we
+    # Write via a staging dir: parquet has no transaction log and we
     # cannot overwrite a path we're still reading from lazily.
     staging = path.rstrip("/") + "._staging"
-    merged.write.mode("overwrite").parquet(staging)
-    final = spark.read.parquet(staging)
-    final.write.mode("overwrite").parquet(path)
-    import shutil
-
     shutil.rmtree(staging, ignore_errors=True)
+    merged.write.mode("overwrite").parquet(staging)
+    shutil.rmtree(path)
+    os.rename(staging, path)
+    # The swap bypasses Spark's write-path cache refresh.
+    spark.catalog.refreshByPath(path)
     record_commit(
         path, "MERGE", num_output_rows=footer_row_count(path),
         parameters={"keys": list(keys)},
@@ -155,10 +160,23 @@ def create_or_upsert_partitioned(
 
     Returns the list of rewritten/created partition directory names.
 
+    One pass over the source: the MERGE branch pins ``source``
+    (``pinned_for_write``) from the affected-partition collect through
+    the staging write, so the collect, ``merge_upsert``'s uniqueness
+    check and both arms of the merged write read one materialised copy
+    instead of re-running the source lineage (JSON parse, dedup window)
+    each time; the pin is released when the verb returns. The merged
+    rows are repartitioned on ``partition_col`` before the write, so
+    each rewritten partition dir holds exactly one parquet file.
+
+    The commit log records the CREATE's row count, and for a MERGE the
+    rows written into the rewritten partitions (Delta's
+    ``numOutputRows``: bounded by the rewrite, not the table).
+
     Scale: the distinct-partition collect is bounded by the SOURCE's
     partition cardinality (a look-back window: tens of values, never
     fact-row cardinality); the merge join shuffles only the affected
-    partitions' rows.
+    partitions' rows, and the pin holds only the source.
     """
     import os
     import shutil
@@ -167,6 +185,7 @@ def create_or_upsert_partitioned(
         footer_row_count,
         record_commit,
     )
+    from lakehouse_dba_tools_spark.operators.indexio import pinned_for_write
 
     if source_order is not None:
         source = dedup_by_key(source, keys, source_order, keep="last")
@@ -180,30 +199,35 @@ def create_or_upsert_partitioned(
             d for d in os.listdir(path) if d.startswith(f"{partition_col}=")
         )
 
-    affected = [
-        r[0] for r in source.select(partition_col).distinct().collect()
-    ]
-    # Partition pruning keeps the target read to the affected dirs only.
-    # NULL partition values need an explicit isNull arm: isin() is
-    # three-valued and never matches NULL, yet the staging write emits a
-    # __HIVE_DEFAULT_PARTITION__ dir whose rename would replace the
-    # target's NULL partition — without this arm the target's existing
-    # NULL-partition keys would be silently dropped.
-    non_null = [a for a in affected if a is not None]
-    prune = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if any(a is None for a in affected):
-        prune = prune | F.col(partition_col).isNull()
-    target = spark.read.option("basePath", path).parquet(path).where(prune)
-    # source already deduped above when source_order was given; without
-    # it, keep merge_upsert's uniqueness guard
-    merged = merge_upsert(
-        target, source, keys,
-        source_order=None,
-        validate_unique=source_order is None,
-    )
     staging = path.rstrip("/") + "._staging"
     shutil.rmtree(staging, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+    with pinned_for_write(source) as source:
+        affected = [
+            r[0] for r in source.select(partition_col).distinct().collect()
+        ]
+        # Partition pruning keeps the target read to the affected dirs
+        # only. NULL partition values need an explicit isNull arm: isin()
+        # is three-valued and never matches NULL, yet the staging write
+        # emits a __HIVE_DEFAULT_PARTITION__ dir whose rename would
+        # replace the target's NULL partition — without this arm the
+        # target's existing NULL-partition keys would be silently dropped.
+        non_null = [a for a in affected if a is not None]
+        prune = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+        if any(a is None for a in affected):
+            prune = prune | F.col(partition_col).isNull()
+        target = spark.read.option("basePath", path).parquet(path).where(prune)
+        # source already deduped above when source_order was given;
+        # without it, keep merge_upsert's uniqueness guard
+        merged = merge_upsert(
+            target, source, keys,
+            source_order=None,
+            validate_unique=source_order is None,
+        )
+        (
+            merged.repartition(partition_col)
+            .write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+        )
+    written = footer_row_count(staging)
     rewritten = []
     for d in sorted(os.listdir(staging)):
         if not d.startswith(f"{partition_col}="):
@@ -220,7 +244,7 @@ def create_or_upsert_partitioned(
     # dedup/index.py _refresh, where it silently dropped a pair).
     spark.catalog.refreshByPath(path)
     record_commit(
-        path, "MERGE", num_output_rows=footer_row_count(path),
+        path, "MERGE", num_output_rows=written,
         parameters={
             "keys": list(keys),
             "partition_col": partition_col,

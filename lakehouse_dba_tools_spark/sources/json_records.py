@@ -7,10 +7,12 @@ Delta_withmetrics.py:61-69,89-96,153-204`). We rebuild that as:
 
 - ``records_to_df``: list-of-dicts → DataFrame with inferred (or
   declared) nested schema, optional bool normalization;
-- ``paged_source``: a generator-of-pages source that parses each page
-  into a DataFrame and returns ONE DataFrame via a single union fold —
-  avoiding the reference's N-page-deep union chain built inside the
-  loop (QH:225), which bloats the logical plan (SURVEY.md §3.1).
+- ``paged_source``: a generator-of-pages source that gathers every page
+  into one record list and parses it ONCE — one schema-inference job
+  and one parse lineage for the whole pull, instead of the reference's
+  per-page parse and N-page-deep union chain built inside the loop
+  (QH:225), which bloats the logical plan (SURVEY.md §3.1) and re-infers
+  the schema per page.
 
 The reference also drops the final page because it breaks before
 parsing when ``has_next_page`` is false (QH:187-188). We process the
@@ -20,8 +22,8 @@ page first and then stop — fixed divergence, documented here.
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterable, Iterator
-from functools import reduce
+from collections.abc import Callable, Iterable
+from itertools import islice
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,23 +84,22 @@ def paged_source(
 
     ``pages`` stands in for the REST pagination loop — any generator
     yielding lists of records (an HTTP client, a file tailer, a fixture).
-    Unlike the reference we union once over the collected page frames
-    (and by NAME, not position — SURVEY.md §7 risk 4), and we never drop
-    the final page.
+    At most ``max_pages`` pages are drained, and the final page is never
+    dropped. The non-empty pages are parsed together by one
+    ``records_to_df`` call, so the contract is that of one
+    ``spark.read.json`` over the whole payload:
+
+    - schema inference runs once (one Spark job) over every record;
+    - with an inferred schema, columns come in inferred (alphabetical)
+      order, and a field missing from some records is null there;
+    - a field whose type differs across pages is widened the way
+      ``spark.read.json`` widens it (e.g. long + string → string)
+      instead of failing at collect.
+
+    ``flatten`` is applied once, to the combined frame.
     """
-    frames: list[DataFrame] = []
-    it: Iterator[list[dict[str, Any]]] = iter(pages)
-    for i, page in enumerate(it):
-        if i >= max_pages:
-            break
-        if not page:
-            continue
-        df = records_to_df(spark, page, schema=schema, stringify_bools=stringify_bools)
-        if flatten is not None:
-            df = flatten(df)
-        frames.append(df)
-    if not frames:
-        if schema is None:
-            raise ValueError("no pages and no schema")
-        return spark.createDataFrame([], schema)
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    records = [r for page in islice(pages, max_pages) for r in page]
+    if not records and schema is None:
+        raise ValueError("no pages and no schema")
+    df = records_to_df(spark, records, schema=schema, stringify_bools=stringify_bools)
+    return flatten(df) if flatten is not None else df

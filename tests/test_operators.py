@@ -83,6 +83,7 @@ def test_partitioned_merge_rewrites_only_affected_partitions(spark, tmp_path):
     import hashlib
     import os
 
+    from lakehouse_dba_tools_spark.maintenance.history import read_log
     from lakehouse_dba_tools_spark.operators.upsert import (
         create_or_upsert_partitioned,
     )
@@ -120,6 +121,13 @@ def test_partitioned_merge_rewrites_only_affected_partitions(spark, tmp_path):
     assert len(got) == 51
     assert got[2] == ("updated", 2) and got[99] == ("inserted", 7)
     assert got[7] == ("v7", 2)  # k=7 lives in p=2, untouched by the update of k=2
+    # the commit log counts rows from the partition dirs' footers: the
+    # CREATE's whole table, then the MERGE's rewrite (Delta's
+    # numOutputRows) — p=2's 10 rows plus the new p=7 row
+    log = read_log(path)
+    assert [(e["operation"], e["num_output_rows"]) for e in log] == [
+        ("CREATE", 50), ("MERGE", 11),
+    ]
 
 
 def test_partitioned_merge_null_partition_values(spark, tmp_path):
@@ -143,6 +151,61 @@ def test_partitioned_merge_null_partition_values(spark, tmp_path):
     assert rewritten == ["p=__HIVE_DEFAULT_PARTITION__"]
     got = {r.k: (r.v, r.p) for r in spark.read.parquet(path).collect()}
     assert got == {1: ("a2", None), 2: ("b", None), 3: ("c", 1)}
+
+
+def test_partitioned_merge_evaluates_source_once(spark, tmp_path):
+    """The MERGE branch pins its source: the affected-partition collect,
+    the uniqueness check and both arms of the merged write read one
+    materialised copy, so each source row runs its lineage once."""
+    from lakehouse_dba_tools_spark.operators.upsert import (
+        create_or_upsert_partitioned,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(i, f"v{i}", i % 5) for i in range(50)], "k int, v string, p int"
+    )
+    create_or_upsert_partitioned(spark, base, path, ["k"], "p")
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def keep(k):
+        evaluated.add(1)
+        return True
+
+    n = 20
+    src = spark.createDataFrame(
+        [(k, f"u{k}", k % 5) for k in range(0, 3 * n, 3)], "k int, v string, p int"
+    ).filter(F.udf(keep, "boolean")("k"))
+    create_or_upsert_partitioned(spark, src, path, ["k"], "p")
+    assert evaluated.value == n
+    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert len(got) == 50 + len([k for k in range(0, 3 * n, 3) if k >= 50])
+    assert got[3] == "u3" and got[4] == "v4"
+
+
+def test_partitioned_merge_writes_one_file_per_partition(spark, tmp_path):
+    """Each rewritten partition dir holds exactly one parquet file,
+    however many files the target partition and the source had."""
+    import os
+
+    from lakehouse_dba_tools_spark.operators.upsert import (
+        create_or_upsert_partitioned,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(i, f"v{i}", i % 5) for i in range(50)], "k int, v string, p int"
+    ).repartition(4)
+    create_or_upsert_partitioned(spark, base, path, ["k"], "p")
+    src = spark.createDataFrame(
+        [(i, f"u{i}", i % 3) for i in range(0, 60, 2)], "k int, v string, p int"
+    ).repartition(4)
+    rewritten = create_or_upsert_partitioned(spark, src, path, ["k"], "p")
+    assert rewritten == ["p=0", "p=1", "p=2"]
+    for d in rewritten:
+        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
 
 
 def test_union_fold_and_template(spark):

@@ -37,6 +37,33 @@ def test_paged_source_heterogeneous_pages_union_by_name(spark):
     assert rows[0].extra is None and rows[1].extra == "late"
 
 
+def test_paged_source_widens_conflicting_types_like_read_json(spark):
+    """A field whose type conflicts across pages is widened the way one
+    ``spark.read.json`` over the whole payload widens it, instead of
+    failing at collect (a per-page parse unions a long column with a
+    string one and the cast fails)."""
+    import json
+
+    pages = [[{"x": 1}], [{"x": "s"}]]
+    df = paged_source(spark, iter(pages), stringify_bools=False)
+    payload = [json.dumps(r) for page in pages for r in page]
+    expected = spark.read.json(spark.sparkContext.parallelize(payload))
+    assert df.schema == expected.schema
+    assert dict(df.dtypes) == {"x": "string"}
+    assert sorted(r.x for r in df.collect()) == ["1", "s"]
+
+
+def test_paged_source_infers_schema_in_one_job(spark):
+    """Five pages cost one schema-inference job, not one per page."""
+    pages = [[{"a": p, "b": {"c": p * 10}}] for p in range(5)]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    df = paged_source(spark, iter(pages), stringify_bools=False)
+    assert dag.numTotalJobs() - before == 1
+    assert [f.name for f in df.schema.fields] == ["a", "b"]
+    assert sorted(r.a for r in df.collect()) == [0, 1, 2, 3, 4]
+
+
 def test_empty_inputs(spark):
     from lakehouse_dba_tools_spark.dedup.minhash import with_minhash_signature, with_shingle_set
     from lakehouse_dba_tools_spark.operators.dedup import dedup_by_key
