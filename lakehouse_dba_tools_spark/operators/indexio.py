@@ -566,9 +566,9 @@ def write_snapshot_table(
     the written tree (an empty partitionBy write emits no parquet at
     all), falling back to the schema-bearing rewrite — which re-plans
     the frame, but only in the forget-everything edge where the source
-    scan found nothing to keep. Callers then read their audit count
-    back from ``target`` (parquet metadata count — no second
-    anti-join), the same pattern ``compact_lsh_index`` uses."""
+    scan found nothing to keep. Callers then count ``target`` itself
+    instead of re-running the anti-join (the LSH verbs read its
+    parquet footers on the driver)."""
     if partition_by is not None and (n_rows is None or n_rows > 0):
         df.repartition(partition_by).write.mode("overwrite").partitionBy(
             partition_by

@@ -939,3 +939,37 @@ def test_ledger_before_publish_crash_direction_is_harmless(
         got = spark.read.parquet(current_version_dir(f"{path}/{t}"))
         want = spark.read.parquet(current_version_dir(f"{fresh}/{t}"))
         assert _rowset(got) == _rowset(want), t
+
+
+def test_lsh_forget_evaluates_forget_ids_once(spark, tmp_path):
+    """``forget_from_lsh_index`` pins its distinct id set: both table
+    rewrites and the ledger append read the pin, so each forget-id row
+    runs the caller's lineage once. Counts come from parquet footers."""
+    from lakehouse_dba_tools_spark.dedup.index import (
+        build_lsh_index,
+        forget_from_lsh_index,
+    )
+    from lakehouse_dba_tools_spark.operators.indexio import read_forget_ledger
+
+    docs = spark.createDataFrame(
+        [(i, f"document {i} talks about topic {i % 3} in words {i * 7}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "idx")
+    build_lsh_index(docs, path, bands=8)
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def keep(doc_id):
+        evaluated.add(1)
+        return True
+
+    ids = [2, 5, 5, 9]
+    forget = spark.createDataFrame([(i,) for i in ids], "doc_id long").filter(
+        F.udf(keep, "boolean")("doc_id")
+    )
+    rep = forget_from_lsh_index(spark, path, forget)
+    assert evaluated.value == len(ids)
+    assert rep["shash"] == {"rows_before": 12, "rows_removed": 3, "rows_after": 9}
+    assert rep["bands"] == {"rows_before": 96, "rows_removed": 24, "rows_after": 72}
+    ledger = read_forget_ledger(spark, path)
+    assert sorted(r[0] for r in ledger.collect()) == [2, 5, 9]

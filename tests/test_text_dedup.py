@@ -883,3 +883,137 @@ def test_lsh_bands_meta_names_its_shash_version(spark, tmp_path):
         for r in query_lsh_index(spark, batch, path, threshold=0.5).collect()
     }
     assert got == want  # the meta-named version answered, not the pointer
+
+
+_NEAR_DUP_CORPUS = [
+    (1, "the quick brown fox jumps over the lazy dog again and again today"),
+    (3, "completely different text about spark query engines and shuffles"),
+    (5, "parquet footers record row counts so readers can skip a scan"),
+]
+_NEAR_DUP_BATCH = [
+    (10, "the quick brown fox jumps over the lazy dog again and again tonight"),
+    (11, "parquet footers record row counts so readers can skip the scan"),
+    (12, "unrelated content entirely about row groups and dictionary pages"),
+]
+
+
+def test_compact_lsh_index_with_custom_id_col(spark, tmp_path):
+    """Compaction keys its dedup on the index's own id column, so an
+    index built with ``id_col="id"`` compacts and keeps answering."""
+    from lakehouse_dba_tools_spark.dedup.index import (
+        append_to_lsh_index,
+        build_lsh_index,
+        compact_lsh_index,
+        query_lsh_index,
+    )
+
+    schema = "id int, body string"
+    corpus = spark.createDataFrame(_NEAR_DUP_CORPUS, schema)
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH[:1], schema)
+    path = str(tmp_path / "idx")
+    build_lsh_index(corpus, path, text_col="body", id_col="id", num_perm=32, bands=8, seed=7)
+    append_to_lsh_index(batch, path)
+    append_to_lsh_index(batch, path)  # replayed epoch
+    stats = compact_lsh_index(spark, path)
+    assert stats["shash"]["rows"] == 4
+    assert stats["bands"]["rows"] == 8 * 4
+    probe = spark.createDataFrame([(20, _NEAR_DUP_BATCH[0][1])], schema)
+    got = {(r.id_a, r.id_b) for r in query_lsh_index(spark, probe, path).collect()}
+    assert got == {(20, 1), (20, 10)}
+
+
+def test_lsh_query_frame_starts_no_jobs(spark, tmp_path):
+    """The version meta records each table's schema, so building the
+    lazy query frame reads both tables without a schema-inference job."""
+    from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, query_lsh_index
+
+    schema = "doc_id long, text string"
+    path = str(tmp_path / "idx")
+    build_lsh_index(spark.createDataFrame(_NEAR_DUP_CORPUS, schema), path)
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    pairs = query_lsh_index(spark, batch, path)
+    assert dag.numTotalJobs() - before == 0
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(10, 1), (11, 5)}
+
+
+def test_ingest_batch_evaluates_docs_once(spark, tmp_path):
+    """``ingest_batch`` takes its own-id exclusion from the pinned
+    shingle pass, so each batch row runs the caller's lineage once; the
+    returned pairs frame is a local Arrow-backed relation."""
+    from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, ingest_batch
+
+    schema = "doc_id long, text string"
+    path = str(tmp_path / "idx")
+    build_lsh_index(spark.createDataFrame(_NEAR_DUP_CORPUS, schema), path)
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def keep(doc_id):
+        evaluated.add(1)
+        return True
+
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema).filter(
+        F.udf(keep, "boolean")("doc_id")
+    )
+    pairs = ingest_batch(spark, batch, path)
+    assert evaluated.value == len(_NEAR_DUP_BATCH)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(10, 1), (11, 5)}
+    assert evaluated.value == len(_NEAR_DUP_BATCH)
+    assert "LocalRelation" in pairs._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_lsh_legacy_meta_without_schemas_matches(spark, tmp_path):
+    """An index whose version meta predates the recorded schemas reads
+    its tables by inference, and every verb answers as it does on an
+    index that keeps them."""
+    import json
+    import os
+
+    from lakehouse_dba_tools_spark.dedup.index import (
+        META_NAME,
+        build_lsh_index,
+        compact_lsh_index,
+        forget_from_lsh_index,
+        ingest_batch,
+        query_lsh_index,
+        read_lsh_meta,
+    )
+    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
+
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame(_NEAR_DUP_CORPUS, schema)
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
+    probe = spark.createDataFrame(
+        [(20, _NEAR_DUP_BATCH[0][1]), (21, _NEAR_DUP_CORPUS[2][1])], schema
+    )
+    forget = spark.createDataFrame([(3,), (11,)], "doc_id long")
+
+    def pairs(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def lifecycle(path):
+        return (
+            pairs(query_lsh_index(spark, probe, path)),
+            pairs(ingest_batch(spark, batch, path)),
+            compact_lsh_index(spark, path),
+            forget_from_lsh_index(spark, path, forget),
+            pairs(query_lsh_index(spark, probe, path)),
+        )
+
+    kept, legacy = str(tmp_path / "kept"), str(tmp_path / "legacy")
+    build_lsh_index(corpus, kept)
+    build_lsh_index(corpus, legacy)
+    for meta_path in (
+        os.path.join(current_version_dir(os.path.join(legacy, "bands")), META_NAME),
+        os.path.join(legacy, META_NAME),
+    ):
+        with open(meta_path) as fh:
+            m = json.load(fh)
+        m.pop("schemas", None)
+        with open(meta_path, "w") as fh:
+            json.dump(m, fh)
+    assert "schemas" not in read_lsh_meta(legacy)
+    want = lifecycle(kept)
+    assert want[0] == [(20, 1, 0.833333), (21, 5, 1.0)]
+    assert lifecycle(legacy) == want
