@@ -35,9 +35,15 @@ as operators/upsert.py):
   shash version that snapshot names. Pre-round-10 indexes lack the
   key and fall back to the live shash pointer. ``schemas`` holds each
   table's schema as its readers see it (``StructType.jsonValue()``,
-  keyed ``bands`` / ``shash``): every verb reads the tables with it, so
-  no read starts a schema-inference job. A meta written before the key
-  existed reads with inference instead, with the same results.
+  keyed ``bands`` / ``shash``): every verb reads the tables with it
+  (``indexio.read_table``), so no read starts a schema-inference job.
+  A meta written before the key existed reads by inference instead,
+  with the same results.
+
+The two tables are declared once as ``LSH_TABLES``; build, compact and
+forget write and publish them through indexio's shared versioned-table
+layer (``write_versions`` / ``compact_tables`` / ``forget_rows``), and
+every reader resolves them with ``indexio.open_snapshot``.
 
 Scale notes: query cost is |batch| signatures + one join against the
 band table (shuffle carries (band_key, id) pairs only) + a verify join
@@ -70,30 +76,31 @@ from __future__ import annotations
 
 import json
 import os
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-from lakehouse_dba_tools_spark.maintenance.history import footer_row_count
 
 from lakehouse_dba_tools_spark.operators.indexio import (
-    append_forget_ledger,
-    compact_forget_ledger,
-    current_version_dir,
+    IndexTables,
+    Layout,
+    Snapshot,
+    append_tables,
+    compact_tables,
     filter_ledgered,
-    read_forget_ledger,
-    heal,
+    forget_rows,
+    heal_tables,
     init_versioned,
+    open_snapshot,
     overlap_jobs,
-    parquet_file_count,
-    pinned_for_write,
+    pinned_forget_ids,
     publish,
+    read_forget_ledger,
+    read_table,
+    reader_schema,
+    refresh_listings,
     snapshot_meta,
-    vacuum_versions,
-    write_snapshot_table,
     write_version_meta,
+    write_versions,
     writer_lock,
 )
 from lakehouse_dba_tools_spark.dedup.minhash import (
@@ -110,6 +117,28 @@ META_NAME = "_lsh_meta.json"
 # at their build sites, so a future default change surfaces as an
 # obvious parameter, never a confusing count mismatch.
 DEFAULT_BANDS = 16
+
+_BANDS = Layout(partition_by="band_idx")
+
+LSH_TABLES = IndexTables(
+    kind="LSH",
+    primary="bands",
+    meta_name=META_NAME,
+    root_meta=META_NAME,
+    # bands clustered by band before the partitioned write (the Iceberg
+    # write.distribution-mode=hash analog): an unclustered partitionBy
+    # write emits one file per (input task × band) — measured 512
+    # files for 624 KiB at gate SF, and every later query/forget/
+    # residual read pays the per-file open cost
+    layouts={"bands": _BANDS, "shash": Layout()},
+    # rows are idempotent per (band_idx, band_key, doc_id) / (doc_id)
+    dedup_keys=lambda id_col: {
+        "bands": ["band_idx", "band_key", id_col],
+        "shash": [id_col],
+    },
+    secondary="shash",
+    pair_key="shash_dir",
+)
 
 
 def _index_rows(
@@ -184,56 +213,24 @@ def build_lsh_index(
     meta: dict = {"k": k, "num_perm": num_perm, "bands": bands, "seed": seed,
                   "id_col": id_col, "text_col": text_col}
     with writer_lock(path):
-        bands_live = os.path.join(path, "bands")
-        sh_live = os.path.join(path, "shash")
-        heal(bands_live)
-        heal(sh_live)
+        heal_tables(path, LSH_TABLES)
         # backfill-resurrection guard, under the lock (one ledger read
         # filters both frames; no-op on a path with no forget history)
         ledger = read_forget_ledger(docs.sparkSession, path)
-        bk = filter_ledgered(bk, path, id_col, ledger=ledger)
-        sh = filter_ledgered(sh, path, id_col, ledger=ledger)
-        meta["schemas"] = _table_schemas(bk, sh)
-        # the shash version is NAMED by the bands meta — the bands
-        # pointer flip is then the single atomic commit for the
-        # two-table index (a crash or racing reader before that flip
-        # still resolves the OLD bands meta, which names the OLD,
-        # retained shash version; tables from different builds can
-        # never pair silently). Naming needs only the target PATH, so
-        # the two table writes are independent jobs — overlapped from
-        # driver threads (indexio.overlap_jobs): each write's straggler
-        # tail back-fills the other's idle executors, and both consume
-        # the same pinned shingle pass. Publishes stay ordered after
-        # both complete, so the commit semantics are unchanged (a crash
-        # mid-writes leaves orphan version dirs for heal, exactly as
-        # before).
-        sh_target = init_versioned(sh_live)
-        bands_target = init_versioned(bands_live)
-        # bands clustered by band before the partitioned write (the
-        # Iceberg write.distribution-mode=hash analog): an unclustered
-        # partitionBy write emits one file per (input task × band) —
-        # measured 512 files for 624 KiB at gate SF, and every
-        # subsequent query/forget/residual read pays the per-file open
-        # cost. One exchange of (doc_id, band_idx, band_key) triples —
-        # the payload the band table IS — buys the same one-file-per-
-        # band layout compact_lsh_index publishes.
-        overlap_jobs(
-            lambda: sh.write.mode("overwrite").parquet(sh_target),
-            lambda: bk.repartition(F.col("band_idx"))
-            .write.mode("overwrite")
-            .partitionBy("band_idx")
-            .parquet(bands_target),
+        # both table writes consume the same pinned shingle pass; the
+        # bands meta NAMES the shash version, so the bands pointer flip
+        # is the single atomic commit for the two-table index
+        meta, _ = write_versions(
+            docs.sparkSession, path, LSH_TABLES,
+            {"bands": filter_ledgered(bk, id_col, ledger=ledger),
+             "shash": filter_ledgered(sh, id_col, ledger=ledger)},
+            meta,
         )
-        meta["shash_dir"] = os.path.basename(sh_target)
-        write_version_meta(bands_target, META_NAME, meta)
-        publish(sh_live, sh_target)
-        publish(bands_live, bands_target)
         # root-level copy is informational only (humans / legacy
         # tooling); every reader goes through snapshot_meta
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
     pinned.unpersist()
-    _refresh(docs.sparkSession, path)
     return meta
 
 
@@ -241,63 +238,6 @@ def read_lsh_meta(path: str) -> dict:
     """Parameters of the CURRENT published snapshot (resolved through
     the bands pointer — atomically coupled with the band tables)."""
     return snapshot_meta(os.path.join(path, "bands"), META_NAME, path)[1]
-
-
-def _shash_dir(path: str, m: dict) -> str:
-    """The shash version directory PAIRED with a bands snapshot's meta
-    (the single-flip coupling — see the module docstring). Falls back
-    to the live shash pointer for pre-round-10 indexes whose meta
-    predates the ``shash_dir`` key, and to a FLAT live directory when
-    the named version is gone because an external tool flattened the
-    layout (the legacy-migration scenario heal() recovers). A named
-    version reclaimed while the live path is still versioned (reader
-    ≥2 compacts stale, or post-vacuum) stays pointed-at and fails
-    loudly on first file access — the standard retention contract,
-    never a silent re-pair with a different build's table."""
-    live = os.path.join(path, "shash")
-    if "shash_dir" in m:
-        named = os.path.join(path, m["shash_dir"])
-        if not os.path.isdir(named) and os.path.isdir(live) and not os.path.islink(live):
-            # Loud, not silent: if an external actor both reclaimed
-            # the named version AND placed a DIFFERENT build's table
-            # at the flat path, the single-flip pairing guarantee is
-            # void — the warning makes that migration assumption
-            # auditable instead of invisible.
-            warnings.warn(
-                f"LSH index at {path!r}: paired shash version "
-                f"{m['shash_dir']!r} is gone and a flat live directory "
-                f"exists — assuming an external layout migration and "
-                f"reading the flat table. If anything other than a "
-                f"flatten-in-place produced this state, bands and "
-                f"shash may come from different builds.",
-                UserWarning,
-                stacklevel=3,
-            )
-            return live
-        return named
-    return current_version_dir(live)
-
-
-def _table_schemas(bk: DataFrame, sh: DataFrame) -> dict:
-    """The two tables' schemas as their readers see them, for the
-    version meta: a partitioned read lists ``band_idx`` last."""
-    cols = [c for c in bk.columns if c != "band_idx"] + ["band_idx"]
-    return {
-        "bands": bk.select(cols).schema.jsonValue(),
-        "shash": sh.schema.jsonValue(),
-    }
-
-
-def _read_table(spark: SparkSession, table_dir: str, m: dict, table: str) -> DataFrame:
-    """Read ``bands`` or ``shash`` with the schema its version meta
-    records, so planning the read starts no schema-inference job. A
-    meta written before the schemas were recorded falls back to
-    inference."""
-    schema = m.get("schemas", {}).get(table)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(StructType.fromJson(schema))
-    return reader.parquet(table_dir)
 
 
 def append_to_lsh_index(docs: DataFrame, path: str) -> None:
@@ -331,7 +271,8 @@ def _append_rows(
     # snapshot→publish window (it would otherwise be silently dropped
     # with the superseded version directory).
     with writer_lock(path):
-        cur = read_lsh_meta(path)
+        snap = open_snapshot(path, LSH_TABLES)
+        cur = snap.meta
         if signed_under is not None:
             # the batch was signed OUTSIDE the lock; a rebuild landing
             # in between would make these rows a different permutation
@@ -348,26 +289,16 @@ def _append_rows(
         # re-append the forgotten docs' rows. The anti-join against
         # the suppression ledger runs UNDER the lock, so even a forget
         # landing between this batch's signing and its append is
-        # honored. ONE ledger read filters both frames; no-op (no
-        # extra job) while no forget has ever run.
+        # honored. ONE driver-side ledger read filters both frames
+        # (no job); no-op while no forget has ever run.
         ledger = read_forget_ledger(spark, path)
-        bk = filter_ledgered(bk, path, cur["id_col"], ledger=ledger)
-        sh = filter_ledgered(sh, path, cur["id_col"], ledger=ledger)
-        # the two appends target independent tables — overlapped
-        # (indexio.overlap_jobs); a reader racing either sees a prefix,
-        # the standard parquet-append visibility. bands clustered like
-        # the build/compact writes: one file per band per batch instead
-        # of (batch tasks × bands) splinters; shash appends into the
-        # version the CURRENT bands snapshot names (not the live
-        # pointer) — the coupling readers resolve
-        overlap_jobs(
-            lambda: bk.repartition(F.col("band_idx"))
-            .write.mode("append")
-            .partitionBy("band_idx")
-            .parquet(current_version_dir(os.path.join(path, "bands"))),
-            lambda: sh.write.mode("append").parquet(_shash_dir(path, cur)),
-        )
-    _refresh(spark, path)
+        # bands clustered like the build/compact writes: one file per
+        # band per batch; shash appends into the version the CURRENT
+        # bands snapshot names — the coupling readers resolve
+        append_tables(spark, path, LSH_TABLES, snap, {
+            "bands": filter_ledgered(bk, cur["id_col"], ledger=ledger),
+            "shash": filter_ledgered(sh, cur["id_col"], ledger=ledger),
+        })
 
 
 def ingest_batch(
@@ -418,8 +349,11 @@ def ingest_batch(
     batch. The retry excludes the batch's own ids from its pairs (the
     replay idempotence above), and the duplicate rows fold away at
     compaction."""
-    bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME, path)
-    docs = filter_ledgered(docs, path, m["id_col"])
+    snap = open_snapshot(path, LSH_TABLES)
+    m = snap.meta
+    docs = filter_ledgered(
+        docs, m["id_col"], ledger=read_forget_ledger(spark, path)
+    )
     bk, sh, pinned = _index_rows(
         docs, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
     )
@@ -427,8 +361,7 @@ def ingest_batch(
     sh = sh.persist()
     try:
         pairs = _query_signed(
-            spark, bk, sh, path, m, threshold, max_bucket_size,
-            bands_dir=bands_dir,
+            spark, bk, sh, snap, threshold, max_bucket_size,
             exclude_ids=pinned.select(m["id_col"]),
         )
         # bounded collect: verified near-dup pairs for ONE batch —
@@ -472,22 +405,6 @@ def ingest_batch(
         pinned.unpersist()
 
 
-def _refresh(spark: SparkSession, path: str) -> None:
-    """Invalidate the session's cached file listings for the index
-    paths. Without this, a query DataFrame created BEFORE an append
-    can leave a pre-append listing in the shared FileStatusCache, and
-    a query created AFTER the append may silently evaluate against the
-    stale snapshot — observed as a deterministic missing pair in the
-    two-batch carrier until this refresh was added."""
-    for sub in ("bands", "shash"):
-        live = os.path.join(path, sub)
-        spark.catalog.refreshByPath(live)
-        # Readers and appends bind to the RESOLVED version directory
-        # (snapshot isolation across a compact) — its listing is the
-        # one the cache actually keys.
-        spark.catalog.refreshByPath(current_version_dir(live))
-
-
 def compact_lsh_index(spark: SparkSession, path: str) -> dict:
     """Rewrite the index with appends folded in: drop duplicate rows
     (the at-least-once artifact of a foreachBatch epoch replay — rows
@@ -504,68 +421,8 @@ def compact_lsh_index(spark: SparkSession, path: str) -> dict:
     atomic pointer flip, so the live path resolves to a complete tree
     at every instant; a crash mid-compact leaves only an orphan
     version dir for the next locked writer's `heal`."""
-    out: dict = {}
     with writer_lock(path):
-        bands_live = os.path.join(path, "bands")
-        sh_live = os.path.join(path, "shash")
-        heal(bands_live)
-        heal(sh_live)
-        m = read_lsh_meta(path)
-        # The new bands meta NAMES the new shash version (needs only
-        # the target path), so each table's rewrite is an independent
-        # unit — overlapped from driver threads (indexio.overlap_jobs);
-        # publishes stay ordered after both, so the two-table commit
-        # semantics are unchanged. Row counts come from the written
-        # versions' parquet footers (a driver-side read, no job).
-        sh_before = parquet_file_count(sh_live)
-        bands_before = parquet_file_count(bands_live)
-        sh_target = init_versioned(sh_live)
-        bands_target = init_versioned(bands_live)
-
-        id_col = m["id_col"]
-
-        def _compact_shash() -> None:
-            sh_df = _read_table(spark, _shash_dir(path, m), m, "shash")
-            sh_df.dropDuplicates([id_col]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(sh_target)
-
-        def _compact_bands() -> None:
-            bands_src = current_version_dir(bands_live)
-            bands_df = _read_table(spark, bands_src, m, "bands").dropDuplicates(
-                ["band_idx", "band_key", id_col]
-            )
-            # repartition BY the partition column: one task holds each
-            # band -> one file per band directory
-            bands_df.repartition("band_idx").write.mode("overwrite").partitionBy(
-                "band_idx"
-            ).parquet(bands_target)
-
-        overlap_jobs(_compact_shash, _compact_bands)
-        # params unchanged by a compact, but every published version
-        # must be self-describing (snapshot_meta) — with the pairing
-        # re-pointed at the compacted shash version
-        write_version_meta(
-            bands_target, META_NAME,
-            {**{k: v for k, v in m.items() if k != "shash_dir"},
-             "shash_dir": os.path.basename(sh_target)},
-        )
-        publish(sh_live, sh_target)
-        publish(bands_live, bands_target)
-        out["bands"] = {
-            "files_before": bands_before,
-            "files_after": parquet_file_count(bands_live),
-            "rows": footer_row_count(bands_target),
-        }
-        out["shash"] = {
-            "files_before": sh_before,
-            "files_after": parquet_file_count(sh_live),
-            "rows": footer_row_count(sh_target),
-        }
-        # same cadence folds the suppression ledger's per-forget files
-        compact_forget_ledger(spark, path)
-    _refresh(spark, path)
-    return out
+        return compact_tables(spark, path, LSH_TABLES)
 
 
 def forget_from_lsh_index(
@@ -614,78 +471,8 @@ def forget_from_lsh_index(
 
     Cost: the caller's ``forget_ids`` lineage runs once — its distinct
     id set is pinned for the call and released before returning."""
-    id_col_alias = "_forget_id"
-    distinct_ids = forget_ids.select(
-        F.col(forget_ids.columns[0]).alias(id_col_alias)
-    ).distinct()
-    with pinned_for_write(distinct_ids) as ids, writer_lock(path):
-        # fill the pin before both rewrites and the ledger append read it
-        ids.count()
-        bands_live = os.path.join(path, "bands")
-        sh_live = os.path.join(path, "shash")
-        heal(bands_live)
-        heal(sh_live)
-        m = read_lsh_meta(path)
-        out: dict = {}
-        # The new bands meta NAMES the new shash version (single-flip
-        # commit for the two-table index, same as build/compact), and
-        # naming needs only the target path — so each table's
-        # anti-join rewrite is an independent unit, overlapped from
-        # driver threads (indexio.overlap_jobs). write_snapshot_table
-        # handles the forget-everything edge (an empty partitionBy
-        # write would publish an unreadable dir). Counts come from
-        # parquet footers of the source and the WRITTEN version — a
-        # driver-side read, so the anti-join executes exactly once per
-        # table and counting starts no job.
-        sh_target = init_versioned(sh_live)
-        bands_target = init_versioned(bands_live)
-        sh_src_dir = _shash_dir(path, m)
-        bands_src_dir = current_version_dir(bands_live)
-        bcast = F.broadcast(ids)
-
-        def _forget_shash() -> None:
-            sh_src = _read_table(spark, sh_src_dir, m, "shash")
-            sh_kept = sh_src.join(
-                bcast, sh_src[m["id_col"]] == bcast[id_col_alias], "left_anti"
-            )
-            write_snapshot_table(sh_kept, sh_target, single_file=True)
-
-        def _forget_bands() -> None:
-            bands_src = _read_table(spark, bands_src_dir, m, "bands")
-            b_kept = bands_src.join(
-                bcast, bands_src[m["id_col"]] == bcast[id_col_alias], "left_anti"
-            )
-            write_snapshot_table(b_kept, bands_target, partition_by="band_idx")
-
-        overlap_jobs(_forget_shash, _forget_bands)
-        # counted before the publish: an erase reclaims the sources
-        for table, src, target in (
-            ("bands", bands_src_dir, bands_target),
-            ("shash", sh_src_dir, sh_target),
-        ):
-            before, after = footer_row_count(src), footer_row_count(target)
-            out[table] = {
-                "rows_before": before,
-                "rows_removed": before - after,
-                "rows_after": after,
-            }
-        write_version_meta(
-            bands_target, META_NAME,
-            {**{k: v for k, v in m.items() if k != "shash_dir"},
-             "shash_dir": os.path.basename(sh_target)},
-        )
-        # ledger BEFORE the pointer flips (indexio ordering contract):
-        # a published forget without a ledger entry would let a
-        # replayed epoch silently resurrect; the reverse crash is
-        # harmless (ids being deleted, retried forget completes)
-        append_forget_ledger(ids, path, m["id_col"])
-        publish(sh_live, sh_target)
-        publish(bands_live, bands_target)
-        if erase:
-            vacuum_versions(sh_live)
-            vacuum_versions(bands_live)
-    _refresh(spark, path)
-    return out
+    with pinned_forget_ids(forget_ids) as ids, writer_lock(path):
+        return forget_rows(spark, path, LSH_TABLES, ids, erase=erase)
 
 
 def query_lsh_index(
@@ -712,7 +499,8 @@ def query_lsh_index(
     sign pass recomputes per consumer instead of leaking one
     unreleasable cache entry per call (loop-style callers should use
     ``ingest_batch``, which pins AND cleans per batch)."""
-    bands_dir, m = snapshot_meta(os.path.join(path, "bands"), META_NAME, path)
+    snap = open_snapshot(path, LSH_TABLES)
+    m = snap.meta
     bk, batch_sh, pinned = _index_rows(
         batch, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
     )
@@ -725,37 +513,30 @@ def query_lsh_index(
         caches.append(bk)
     else:
         pinned.unpersist()
-    return _query_signed(
-        spark, bk, batch_sh, path, m, threshold, max_bucket_size,
-        bands_dir=bands_dir,
-    )
+    return _query_signed(spark, bk, batch_sh, snap, threshold, max_bucket_size)
 
 
 def _query_signed(
     spark: SparkSession,
     bk: DataFrame,
     batch_sh: DataFrame,
-    path: str,
-    m: dict,
+    snap: Snapshot,
     threshold: float,
     max_bucket_size: int,
-    bands_dir: str | None = None,
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Query body over a batch's precomputed (band rows, shash rows) —
     shared by query_lsh_index (signs per call) and ingest_batch (signs
-    once for query AND append). ``bands_dir`` is the version directory
-    the caller's meta snapshot resolved to (params and band tables are
-    co-published — indexio.snapshot_meta); ``exclude_ids`` drops
+    once for query AND append). ``snap`` is the caller's resolved
+    snapshot (params, bands version and the shash version it names are
+    co-published — indexio.open_snapshot); ``exclude_ids`` drops
     candidates whose id_b is in the given id set (ingest_batch's
     replay-idempotence guard)."""
-    id_col = m["id_col"]
+    id_col = snap.meta["id_col"]
     # Bind the scan to the RESOLVED version directory: the snapshot
     # stays complete across one subsequent compact (indexio retention),
     # so a query planned pre-compact evaluates correctly post-compact.
-    if bands_dir is None:
-        bands_dir = current_version_dir(os.path.join(path, "bands"))
-    idx_bands = _read_table(spark, bands_dir, m, "bands")
+    idx_bands = read_table(spark, snap, "bands")
     # Candidate-bucket pruning BEFORE the sizing window: the batch's
     # (band_idx, band_key) set is batch-bounded (|batch| × bands keys)
     # — broadcast it and left-semi-join the index bands first, so the
@@ -821,7 +602,7 @@ def _query_signed(
     # the shash version PAIRED with this bands snapshot (named by its
     # meta — one pointer flip covers both tables; legacy metas fall
     # back to the live pointer)
-    idx_sh = _read_table(spark, _shash_dir(path, m), m, "shash")
+    idx_sh = read_table(spark, snap, "shash")
     # Duplicate-tolerant: an at-least-once append replay leaves
     # duplicate shash rows until compact_lsh_index runs; the verify
     # join would then emit the SAME pair once per copy. jaccard is a
@@ -862,11 +643,10 @@ def rebuild_lsh_index(
         id_col = m["id_col"]
         sh_live = os.path.join(path, "shash")
         bands_live = os.path.join(path, "bands")
-        heal(sh_live)
-        heal(bands_live)
-        stored = _read_table(spark, _shash_dir(path, m), m, "shash").dropDuplicates(
-            [id_col]
-        )
+        heal_tables(path, LSH_TABLES)
+        stored = read_table(
+            spark, open_snapshot(path, LSH_TABLES), "shash"
+        ).dropDuplicates([id_col])
         signed = stored.withColumn(
             "signature", _signature_udf(n_perm, sd)(F.col("shash"))
         )
@@ -877,7 +657,8 @@ def rebuild_lsh_index(
         stored.coalesce(1).write.mode("overwrite").parquet(sh_target)
         meta = {**m, "num_perm": n_perm, "bands": n_bands, "seed": sd,
                 "shash_dir": os.path.basename(sh_target),
-                "schemas": _table_schemas(bk, stored)}
+                "schemas": {"bands": reader_schema(bk, _BANDS),
+                            "shash": reader_schema(stored, Layout())}}
         bands_target = init_versioned(bands_live)
         bk.repartition("band_idx").write.mode("overwrite").partitionBy(
             "band_idx"
@@ -893,5 +674,5 @@ def rebuild_lsh_index(
         # root copy is informational only; readers use snapshot_meta
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
-    _refresh(spark, path)
+        refresh_listings(spark, path, LSH_TABLES.names)
     return meta

@@ -47,27 +47,10 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_RE), 0))
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def alpha_ratio(col: Column | str) -> Column:
     """Fraction of characters that are ASCII letters."""
     c = F.col(col) if isinstance(col, str) else col
     return F.length(F.regexp_replace(c, "[^A-Za-z]", "")) / F.length(c)
-
-
-def whitespace_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(F.regexp_replace(c, r"\S", "")) / F.length(c)
-
-
-def avg_word_len(col: Column | str) -> Column:
-    toks = tokens(col)
-    return F.aggregate(
-        toks, F.lit(0).cast("double"), lambda acc, t: acc + F.length(t)
-    ) / F.size(toks)
 
 
 def stopword_hits_from_tokens(toks_lower: Column, lang: str) -> Column:
@@ -112,20 +95,6 @@ def detect_language(col: Column | str) -> Column:
     """
     toks = F.transform(tokens(col), lambda t: F.lower(t))
     return detect_language_from_tokens(toks)
-
-
-def quality_score(col: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length band + alpha ratio +
-    stopword presence. Mirrors common pretraining-corpus filters
-    (Gopher/C4-style rules), expressed as one codegen'd projection."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_tok = token_count(c)
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), 1.0).otherwise(0.0)
-    alpha = alpha_ratio(c)
-    stop = stopword_ratio(c, "en")
-    awl = avg_word_len(c)
-    awl_ok = F.when((awl >= 2.0) & (awl <= 12.0), 1.0).otherwise(0.0)
-    return F.round(0.3 * len_ok + 0.3 * F.least(alpha * 2, F.lit(1.0)) + 0.2 * F.least(stop * 5, F.lit(1.0)) + 0.2 * awl_ok, 6)
 
 
 def word_shingles(col: Column | str, k: int = 3) -> Column:

@@ -51,8 +51,3 @@ def latest_per_group(
 ) -> DataFrame:
     """Latest row per group (reference W2)."""
     return dedup_by_key(df, keys, [ts_col, *tie_break], keep="last")
-
-
-def exact_dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — hash-shuffle on all (or subset) columns."""
-    return df.dropDuplicates(list(subset) if subset else None)

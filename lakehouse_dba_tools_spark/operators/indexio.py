@@ -40,6 +40,50 @@ Appends write *through* the symlink into the current version
 directory: parquet appends are additive (new files only), so readers
 racing an append see a prefix of it — the standard parquet-append
 visibility semantics, unchanged by the versioning.
+
+**One versioned-table layer for all three families.** Each family
+declares its tables once (an ``IndexTables``: a primary table whose
+version directory carries the parameter meta, an optional secondary
+table the meta names, and each table's write ``Layout``), and every
+build, compact and forget goes through the same three parts:
+
+- ``open_snapshot`` resolves the primary pointer ONCE and takes the
+  secondary version the primary's meta names (``shash_dir`` /
+  ``doclens_dir``), so the primary's pointer flip is the single atomic
+  commit for the pair. Metas older than the pairing key fall back to
+  the live secondary pointer; a named version that is gone while a
+  flat live directory exists (an external flatten-in-place) reads the
+  flat table with a loud ``UserWarning``.
+- ``read_table`` reads a table with the schema its version meta
+  records under ``schemas`` (``StructType.jsonValue()``, partition
+  column last, as a partitioned read lists it), so planning the read
+  starts no schema-inference job. A meta written before the key
+  existed reads by inference, with the same results.
+- ``write_versions`` writes every table's next version (overlapped
+  across tables), records their schemas, counts their rows from the
+  parquet footers (a driver-side read, no job), writes the primary's
+  version meta naming the secondary version, appends the forget
+  ledger (forget only — BEFORE any pointer flip: a crash between the
+  two leaves a harmless ledger entry, the reverse order would leave a
+  published forget a replay could undo), publishes the secondary and
+  THEN the primary (a reader resolving the old primary still finds the
+  old, retained secondary), vacuums every superseded version on an
+  erase, and refreshes the session's file listings. An empty table
+  (a forget that removes every row) is written schema-bearing
+  (``write_table``); the newest superseded version of each table is
+  retained for in-flight readers unless the verb erases.
+
+``compact_tables`` and ``forget_rows`` are the two rewrite verbs on
+top of them; a family supplies only its row transform (its
+``dedup_keys``, or the pinned forget-id set from
+``pinned_forget_ids``) and runs them under its own ``writer_lock``.
+
+**The suppression ledger is read on the driver.** Its files hold ids
+only, so ``read_forget_ledger`` reads them with pyarrow into a local
+relation — no Spark job — once per lock scope, and ``filter_ledgered``
+takes that frame as a required argument: a ledger of at most
+``LEDGER_INLINE_MAX`` ids filters as a literal IN-set (no job),
+a larger one as a broadcast anti-join.
 """
 
 from __future__ import annotations
@@ -50,11 +94,20 @@ import os
 import re
 import shutil
 import socket
+import warnings
+from collections.abc import Callable
 from contextlib import contextmanager
+from dataclasses import dataclass
+
+from lakehouse_dba_tools_spark.maintenance.history import footer_row_count
 
 LOCK_NAME = "_INDEX_LOCK"
 HOST_NAME = "_INDEX_HOST"
 LEDGER_DIR = "_forget_ledger"
+# A ledger with at most this many ids filters as a literal IN-set,
+# which starts no job; a larger one is broadcast (one job per filter).
+LEDGER_INLINE_MAX = 4096
+_FORGET_ID = "_forget_id"
 _VER_RE = re.compile(r"\.v(\d+)$")
 
 
@@ -271,66 +324,91 @@ def append_forget_ledger(ids, path: str, id_col: str) -> None:
     ).write.mode("append").parquet(target)
 
 
+def _ledger_files(path: str) -> list[str]:
+    """The ledger's committed parquet files, sorted (``_temporary``
+    debris and hidden checksum files are not parquet files here)."""
+    target = os.path.join(path, LEDGER_DIR)
+    if not os.path.isdir(target):
+        return []
+    return sorted(
+        os.path.join(target, f)
+        for f in os.listdir(target)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _ledger_table(path: str):
+    """The ledger's rows as one pyarrow table, read on the driver, or
+    None when no file is committed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = _ledger_files(path)
+    if not files:
+        return None
+    return pa.concat_tables(
+        [pq.read_table(f) for f in files], promote_options="permissive"
+    )
+
+
+def _distinct_ids(table):
+    """Distinct rows of a one-column ledger table (a null id is one
+    row, as Spark's ``distinct`` counts it)."""
+    return table.group_by(table.column_names[0]).aggregate([])
+
+
 def read_forget_ledger(spark, path: str):
     """The index's suppression ledger as a one-column DataFrame, or
     None when no forget has ever run (the common case — append paths
-    skip the anti-join entirely). A ledger DIRECTORY with no committed
+    skip the filter entirely). A ledger DIRECTORY with no committed
     parquet file (a write that died after mkdir but before commit —
-    only ``_temporary`` debris inside) also reads as None instead of
-    failing schema inference, so crash debris can never wedge every
-    subsequent verb on the index; the interrupted forget never
-    published, so there is nothing the debris was suppressing. The
-    cached file listing is invalidated before reading: a batch that
-    read the ledger BEFORE a forget appended to it would otherwise
-    anti-join against the stale listing and silently resurrect the
-    newly-forgotten docs — the same shared FileStatusCache hazard
-    dedup/index.py `_refresh` documents."""
-    target = os.path.join(path, LEDGER_DIR)
-    if not os.path.isdir(target) or not any(
-        f.endswith(".parquet") for f in os.listdir(target)
-    ):
-        return None
-    spark.catalog.refreshByPath(target)
-    return spark.read.parquet(target)
+    only ``_temporary`` debris inside) also reads as None, so crash
+    debris can never wedge every subsequent verb on the index; the
+    interrupted forget never published, so there is nothing the debris
+    was suppressing.
+
+    The ids are read on the driver (pyarrow, from the files committed
+    right now) into a local relation: reading starts no Spark job, no
+    schema is inferred, and no cached file listing can hand a later
+    reader a pre-forget view of the ledger. Read it once per writer-lock
+    scope and pass the frame to every ``filter_ledgered`` in that
+    scope."""
+    table = _ledger_table(path)
+    return None if table is None else spark.createDataFrame(table)
 
 
 def compact_forget_ledger(spark, path: str) -> int:
     """Fold the suppression ledger's per-forget files into one distinct
     file — without this the ledger grows one small parquet file per
-    forget request forever, and every append's anti-join pays the
-    listing. Runs inside each index family's compact verb (the same
-    cadence that folds replay duplicates); caller holds the writer
-    lock, and every ledger reader/writer also runs under it.
+    forget request forever, and every append's read pays the listing.
+    Runs inside each index family's compact verb (the same cadence
+    that folds replay duplicates); caller holds the writer lock, and
+    every ledger reader/writer also runs under it.
 
     Crash-safe BY CONSTRUCTION, not by atomicity: the consolidated
     file is APPENDED beside the old ones first, then the old files are
     removed. A crash after the append leaves duplicate ids (harmless —
-    every consumer distincts before the anti-join); a crash mid-removal
-    leaves a subset of duplicates. Forgotten ids can never be LOST,
-    which is the invariant that matters: losing one would let a
-    replayed epoch resurrect the doc. Returns the ledger file count
-    after folding (0 = no ledger)."""
-    target = os.path.join(path, LEDGER_DIR)
-    if not os.path.isdir(target):
-        return 0
-    old = [
-        os.path.join(target, f)
-        for f in os.listdir(target)
-        if f.endswith(".parquet")
-    ]
+    a duplicate id filters the same rows); a crash mid-removal leaves
+    a subset of duplicates. Forgotten ids can never be LOST, which is
+    the invariant that matters: losing one would let a replayed epoch
+    resurrect the doc. Returns the ledger file count after folding
+    (0 = no ledger)."""
+    old = _ledger_files(path)
     if len(old) <= 1:
         return len(old)
-    spark.catalog.refreshByPath(target)
-    spark.read.parquet(target).distinct().coalesce(1).write.mode(
-        "append"
-    ).parquet(target)
-    for f in old:
+    spark.createDataFrame(_distinct_ids(_ledger_table(path))).coalesce(
+        1
+    ).write.mode("append").parquet(os.path.join(path, LEDGER_DIR))
+    _remove_files(old)
+    return len(_ledger_files(path))
+
+
+def _remove_files(files: list[str]) -> None:
+    for f in files:
         try:
             os.remove(f)
         except FileNotFoundError:
             pass
-    spark.catalog.refreshByPath(target)
-    return sum(1 for f in os.listdir(target) if f.endswith(".parquet"))
 
 
 def remove_from_forget_ledger(spark, path: str, ids) -> int:
@@ -352,62 +430,56 @@ def remove_from_forget_ledger(spark, path: str, ids) -> int:
     ledger = read_forget_ledger(spark, path)
     if ledger is None:
         return 0
-    target = os.path.join(path, LEDGER_DIR)
-    old = [
-        os.path.join(target, f)
-        for f in os.listdir(target)
-        if f.endswith(".parquet")
-    ]
+    old = _ledger_files(path)
     drop = F.broadcast(
         ids.select(F.col(ids.columns[0]).alias("_led_id")).distinct()
     )
     kept = ledger.join(
         drop, ledger[ledger.columns[0]] == drop["_led_id"], "left_anti"
     ).distinct()
-    kept.coalesce(1).write.mode("append").parquet(target)
-    for f in old:
-        try:
-            os.remove(f)
-        except FileNotFoundError:
-            pass
-    spark.catalog.refreshByPath(target)
-    return spark.read.parquet(target).count()
+    kept.coalesce(1).write.mode("append").parquet(os.path.join(path, LEDGER_DIR))
+    _remove_files(old)
+    return _ledger_table(path).num_rows
 
 
 def describe_forget_ledger(spark, path: str) -> dict:
     """DESCRIBE DETAIL analog for the suppression ledger: distinct
     suppressed ids and on-disk file count (the fold-cadence signal —
     compact folds to 1). {n_ids: 0, n_files: 0} when no forget has
-    ever run. Reads only; no lock (ledger files are append-complete
-    by the writer-lock discipline)."""
-    ledger = read_forget_ledger(spark, path)
-    if ledger is None:
+    ever run. Reads only, on the driver; no lock (ledger files are
+    append-complete by the writer-lock discipline)."""
+    table = _ledger_table(path)
+    if table is None:
         return {"n_ids": 0, "n_files": 0}
-    target = os.path.join(path, LEDGER_DIR)
     return {
-        "n_ids": ledger.distinct().count(),
-        "n_files": sum(
-            1 for f in os.listdir(target) if f.endswith(".parquet")
-        ),
+        "n_ids": _distinct_ids(table).num_rows,
+        "n_files": len(_ledger_files(path)),
     }
 
 
-def filter_ledgered(df, path: str, id_col: str, ledger=None):
+def filter_ledgered(df, id_col: str, *, ledger):
     """Drop rows whose ``id_col`` is in the suppression ledger — the
     replay-resurrection guard every append/ingest/build verb applies
-    under the writer lock. The ledger is broadcast (forget sets are
-    tiny next to any batch); no-op without a ledger. Pass a
-    pre-fetched ``ledger`` frame to filter several frames against ONE
-    read (the per-append pattern)."""
+    under the writer lock. ``ledger`` is the frame one
+    ``read_forget_ledger`` returned for the current lock scope (None:
+    no forget has run, and ``df`` comes back unchanged); passing it is
+    required, so no filter reads the ledger on its own.
+
+    A ledger of at most ``LEDGER_INLINE_MAX`` ids becomes a literal
+    IN-set filter, which starts no job; a larger one is broadcast for
+    a left-anti join (forget sets are tiny next to any batch). Either
+    way a null id is kept, as the anti-join keeps it."""
     from pyspark.sql import functions as F
 
     if ledger is None:
-        ledger = read_forget_ledger(df.sparkSession, path)
-    if ledger is None:
         return df
-    led = F.broadcast(
-        ledger.select(F.col(ledger.columns[0]).alias("_led_id")).distinct()
-    )
+    head = ledger.take(LEDGER_INLINE_MAX + 1)
+    if len(head) <= LEDGER_INLINE_MAX:
+        ids = [r[0] for r in head if r[0] is not None]
+        if not ids:
+            return df
+        return df.filter(F.col(id_col).isNull() | ~F.col(id_col).isin(ids))
+    led = F.broadcast(ledger.select(F.col(ledger.columns[0]).alias("_led_id")))
     return df.join(led, df[id_col] == led["_led_id"], "left_anti")
 
 
@@ -541,46 +613,55 @@ def overlap_jobs(*thunks, max_in_flight: int = 4):
         return [f.result() for f in futures]
 
 
-def write_snapshot_table(
-    df,
-    target: str,
-    partition_by: str | None = None,
-    single_file: bool = False,
-    n_rows: int | None = None,
-) -> None:
-    """Write one index table's new version directory with the layout
-    its readers expect — shared by the forget verbs so the one
-    empty-table hazard is handled in ONE place: a partitionBy write of
-    an EMPTY frame emits only _SUCCESS (no schema-bearing footer), and
-    every subsequent read of the published version dies with
-    UNABLE_TO_INFER_SCHEMA — the tenant-offboarding shape (forget set
-    covers every indexed row). An empty snapshot therefore writes
-    non-partitioned: the partition column rides as an ordinary data
-    column of the 0-row schema-bearing file, so readers plan normally
-    and see zero rows.
+@dataclass(frozen=True)
+class Layout:
+    """How one index table is written: clustered into one directory per
+    ``partition_by`` value, range-partitioned and sorted on ``range_by``
+    (parquet row-group min/max on the sort key become a skip index),
+    or neither."""
 
-    ``n_rows=None`` (the forget verbs' path) means the count is NOT
-    known up front — pre-counting would execute the caller's anti-join
-    twice, once for the count and once for the write. Instead the
-    partitioned write runs first and the 0-row case is detected from
-    the written tree (an empty partitionBy write emits no parquet at
-    all), falling back to the schema-bearing rewrite — which re-plans
-    the frame, but only in the forget-everything edge where the source
-    scan found nothing to keep. Callers then count ``target`` itself
-    instead of re-running the anti-join (the LSH verbs read its
-    parquet footers on the driver)."""
-    if partition_by is not None and (n_rows is None or n_rows > 0):
-        df.repartition(partition_by).write.mode("overwrite").partitionBy(
-            partition_by
-        ).parquet(target)
-        if n_rows is None and parquet_file_count(target) == 0:
+    partition_by: str | None = None
+    range_by: str | None = None
+
+
+def write_table(df, target: str, layout: Layout, append: bool = False,
+                pack: bool = False) -> None:
+    """Write (or with ``append``, add to) one index table directory in
+    the layout its readers expect. ``pack`` bin-packs a table with
+    neither partitioning nor sort into one file — what a compact or
+    forget rewrite publishes.
+
+    A range write pins ``df`` for the call: ``repartitionByRange``
+    samples its bounds in a separate job over the full child, which
+    would otherwise run the lineage twice (``pinned_for_write``).
+
+    The empty-table hazard is handled here, in ONE place: a partitionBy
+    write of an EMPTY frame emits only _SUCCESS (no schema-bearing
+    footer), and every later read of the published version would die
+    with UNABLE_TO_INFER_SCHEMA — the tenant-offboarding shape (a
+    forget set covering every indexed row). The row count is not known
+    up front (pre-counting would run the caller's anti-join twice), so
+    the partitioned write runs first and a tree with no parquet file is
+    rewritten non-partitioned: the partition column rides as an
+    ordinary data column of a 0-row schema-bearing file, and readers
+    plan normally and see zero rows. Non-partitioned writes emit a
+    schema-bearing footer even for zero rows."""
+    mode = "append" if append else "overwrite"
+    if layout.partition_by is not None:
+        col = layout.partition_by
+        df.repartition(col).write.mode(mode).partitionBy(col).parquet(target)
+        if not append and parquet_file_count(target) == 0:
             df.coalesce(1).write.mode("overwrite").parquet(target)
-    elif single_file or n_rows == 0:
-        df.coalesce(1).write.mode("overwrite").parquet(target)
+    elif layout.range_by is not None:
+        col = layout.range_by
+        with pinned_for_write(df) as pinned:
+            pinned.repartitionByRange(col).sortWithinPartitions(col).write.mode(
+                mode
+            ).parquet(target)
+    elif pack:
+        df.coalesce(1).write.mode(mode).parquet(target)
     else:
-        # non-partitioned writes emit a schema-bearing footer even for
-        # zero rows, so an unknown count needs no fallback here
-        df.write.mode("overwrite").parquet(target)
+        df.write.mode(mode).parquet(target)
 
 
 def write_version_meta(version_dir: str, name: str, meta: dict) -> None:
@@ -615,16 +696,6 @@ def snapshot_meta(live: str, name: str, root: str) -> tuple[str, dict]:
         return vd, json.load(fh)
 
 
-def carry_version_meta(src_dir: str, dst_dir: str, name: str) -> None:
-    """Copy the parameter sidecar into a compaction's new version
-    directory before publish (parameters are unchanged by a compact,
-    but every published version must be self-describing). No-op for a
-    legacy version that predates in-version meta."""
-    src = os.path.join(src_dir, name)
-    if os.path.exists(src):
-        shutil.copyfile(src, os.path.join(dst_dir, name))
-
-
 def describe_index(spark, path: str, tables: tuple[str, ...]) -> list[dict]:
     """DESCRIBE DETAIL analog for one persisted index: per table, the
     published version number, live file count, and row count — the
@@ -645,3 +716,287 @@ def describe_index(spark, path: str, tables: tuple[str, ...]) -> list[dict]:
             }
         )
     return out
+
+
+@dataclass(frozen=True)
+class IndexTables:
+    """One index family's versioned tables.
+
+    ``primary``'s version directory carries the parameter meta
+    ``meta_name`` (``root_meta`` names the root-level sidecar indexes
+    from before in-version meta fall back to); ``secondary``, when the
+    family has one, is the table that meta names under ``pair_key``.
+    ``layouts`` gives each table's write layout. ``row_id`` is the id
+    column of the tables when it is fixed (otherwise the meta's
+    ``id_col``); ``dedup_keys`` maps that id column to each table's
+    replay-duplicate key; ``manifest`` derives extra meta keys from
+    the primary's written version directory."""
+
+    kind: str
+    primary: str
+    meta_name: str
+    root_meta: str
+    layouts: dict[str, Layout]
+    dedup_keys: Callable[[str], dict[str, list[str]]]
+    secondary: str | None = None
+    pair_key: str | None = None
+    row_id: str | None = None
+    manifest: Callable[[str], dict] | None = None
+
+    @property
+    def names(self) -> tuple[str, ...]:
+        """Table names, primary first."""
+        return (self.primary,) + ((self.secondary,) if self.secondary else ())
+
+    def id_column(self, meta: dict) -> str:
+        return self.row_id or meta["id_col"]
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One resolved index snapshot: each table's version directory
+    (primary first) and the primary's version meta."""
+
+    dirs: dict[str, str]
+    meta: dict
+
+
+def open_snapshot(path: str, tables: IndexTables) -> Snapshot:
+    """Resolve the primary pointer ONCE and pair it with the secondary
+    version its meta names — the reader-side half of the single-flip
+    commit. Callers scan the returned directories (never re-resolve the
+    live paths), so the parameters and the paired table always come
+    from one publish. A meta without the pairing key (written before
+    the key existed) falls back to the live secondary pointer, and to a
+    FLAT live directory when the named version is gone because an
+    external tool flattened the layout (the legacy migration ``heal``
+    recovers) — loudly, since anything else that produced that state
+    could pair tables from different builds. A named version reclaimed
+    while the live path is still versioned (a reader ≥2 compacts stale,
+    or post-vacuum) stays pointed-at and fails loudly on first file
+    access — the retention contract, never a silent re-pair."""
+    # snapshot_meta's lookup, with the family's own root sidecar name
+    vd = current_version_dir(os.path.join(path, tables.primary))
+    meta_path = os.path.join(vd, tables.meta_name)
+    if not os.path.exists(meta_path):
+        meta_path = os.path.join(path, tables.root_meta)
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    dirs = {tables.primary: vd}
+    if tables.secondary is not None:
+        live = os.path.join(path, tables.secondary)
+        named = meta.get(tables.pair_key)
+        flat = os.path.isdir(live) and not os.path.islink(live)
+        if named is None:
+            dirs[tables.secondary] = current_version_dir(live)
+        elif flat and not os.path.isdir(os.path.join(path, named)):
+            warnings.warn(
+                f"{tables.kind} index at {path!r}: paired {tables.secondary} "
+                f"version {named!r} is gone and a flat live directory "
+                f"exists — assuming an external layout migration and "
+                f"reading the flat table. If anything other than a "
+                f"flatten-in-place produced this state, {tables.primary} "
+                f"and {tables.secondary} may come from different builds.",
+                UserWarning,
+                stacklevel=3,
+            )
+            dirs[tables.secondary] = live
+        else:
+            dirs[tables.secondary] = os.path.join(path, named)
+    return Snapshot(dirs, meta)
+
+
+def read_table(spark, snap: Snapshot, table: str, parts: list[str] | None = None):
+    """Read one table of ``snap`` with the schema its version meta
+    records, so planning the read starts no schema-inference job; a
+    meta without ``schemas`` falls back to inference. ``parts`` reads
+    only those partition subdirectories (the partition column is kept,
+    taken from the directory names)."""
+    from pyspark.sql.types import StructType
+
+    schema = snap.meta.get("schemas", {}).get(table)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    vd = snap.dirs[table]
+    if parts is None:
+        return reader.parquet(vd)
+    return reader.option("basePath", vd).parquet(
+        *[os.path.join(vd, p) for p in parts]
+    )
+
+
+def reader_schema(df, layout: Layout) -> dict:
+    """``df``'s schema as a read of the written table lists it (a
+    partitioned read puts the partition column last), for the version
+    meta's ``schemas``."""
+    cols = [c for c in df.columns if c != layout.partition_by]
+    if layout.partition_by is not None:
+        cols.append(layout.partition_by)
+    return df.select(cols).schema.jsonValue()
+
+
+def heal_tables(path: str, tables: IndexTables) -> None:
+    """``heal`` every table of the family (caller holds the lock)."""
+    for t in tables.names:
+        heal(os.path.join(path, t))
+
+
+def refresh_listings(spark, path: str, tables) -> None:
+    """Invalidate the session's cached file listings for the named
+    tables: the live path and the version directory it resolves to
+    (readers bind to the resolved directory, so that listing is the
+    one the cache keys). Without this, a query DataFrame created
+    BEFORE a write can leave a stale listing in the shared
+    FileStatusCache, and a query created AFTER it may silently
+    evaluate against the old snapshot — observed as a deterministic
+    missing pair in the two-batch LSH carrier until this refresh was
+    added."""
+    for t in tables:
+        live = os.path.join(path, t)
+        spark.catalog.refreshByPath(live)
+        spark.catalog.refreshByPath(current_version_dir(live))
+
+
+def write_versions(
+    spark,
+    path: str,
+    tables: IndexTables,
+    frames: dict,
+    meta: dict,
+    pack: bool = False,
+    ledger_ids=None,
+    erase: bool = False,
+) -> tuple[dict, dict[str, int]]:
+    """Write and publish the next version of every table in ``frames``
+    (caller holds the writer lock and has healed the tables). In order:
+    writes each table's new version directory in its layout (the
+    tables are independent jobs, overlapped from driver threads;
+    ``pack`` as in ``write_table``); records the reader schemas; counts
+    each version's rows from its parquet footers; writes the primary's
+    version meta (``meta`` plus ``schemas``, the secondary version under
+    ``pair_key``, and the family's ``manifest``); appends ``ledger_ids``
+    to the forget ledger BEFORE any pointer flip; publishes the
+    secondary and then the primary; vacuums every superseded version
+    when ``erase``; and refreshes the file listings. Returns the meta
+    written and ``{table: rows}``."""
+    order = tables.names[::-1]  # secondary first, so the primary commits
+    targets = {t: init_versioned(os.path.join(path, t)) for t in order}
+    overlap_jobs(*[
+        (lambda t=t: write_table(frames[t], targets[t], tables.layouts[t], pack=pack))
+        for t in order
+    ])
+    meta = {
+        **meta,
+        "schemas": {t: reader_schema(frames[t], tables.layouts[t]) for t in order},
+    }
+    rows = {t: footer_row_count(targets[t]) for t in order}
+    if tables.secondary is not None:
+        meta[tables.pair_key] = os.path.basename(targets[tables.secondary])
+    if tables.manifest is not None:
+        meta.update(tables.manifest(targets[tables.primary]))
+    write_version_meta(targets[tables.primary], tables.meta_name, meta)
+    if ledger_ids is not None:
+        append_forget_ledger(ledger_ids, path, meta["id_col"])
+    for t in order:
+        publish(os.path.join(path, t), targets[t])
+    if erase:
+        for t in order:
+            vacuum_versions(os.path.join(path, t))
+    refresh_listings(spark, path, order)
+    return meta, rows
+
+
+def append_tables(spark, path: str, tables: IndexTables, snap: Snapshot, frames: dict) -> None:
+    """Append ``frames`` into the snapshot's CURRENT version directories
+    (caller holds the writer lock and resolved ``snap`` under it, so
+    the secondary rows land in the version the primary names). Parquet
+    appends add files only: a reader racing one sees a prefix, the
+    standard parquet-append visibility. The tables' appends overlap;
+    the family's manifest is then rewritten in place (atomic
+    temp+replace), and the listings refreshed."""
+    overlap_jobs(*[
+        (lambda t=t: write_table(
+            frames[t], snap.dirs[t], tables.layouts[t], append=True
+        ))
+        for t in tables.names
+    ])
+    if tables.manifest is not None:
+        vd = snap.dirs[tables.primary]
+        write_version_meta(vd, tables.meta_name, {**snap.meta, **tables.manifest(vd)})
+    refresh_listings(spark, path, tables.names)
+
+
+@contextmanager
+def pinned_forget_ids(forget_ids):
+    """The distinct ids of a forget request (its first column, renamed
+    ``_forget_id``), pinned and filled with one count: every table's
+    rewrite and the ledger append read the pin, so the caller's
+    ``forget_ids`` lineage runs once. Released on exit."""
+    from pyspark.sql import functions as F
+
+    distinct = forget_ids.select(
+        F.col(forget_ids.columns[0]).alias(_FORGET_ID)
+    ).distinct()
+    with pinned_for_write(distinct) as ids:
+        ids.count()
+        yield ids
+
+
+def compact_tables(spark, path: str, tables: IndexTables) -> dict:
+    """The OPTIMIZE analog for one index, under the caller's writer
+    lock: drop each table's replay duplicates (rows are idempotent per
+    ``dedup_keys``), publish every table as a new version in its layout
+    (unpartitioned, unsorted tables bin-packed to one file), and fold
+    the forget ledger's files. Returns {table: {files_before,
+    files_after, rows}}, the rows read from the written footers."""
+    heal_tables(path, tables)
+    snap = open_snapshot(path, tables)
+    keys = tables.dedup_keys(tables.id_column(snap.meta))
+    before = {t: parquet_file_count(os.path.join(path, t)) for t in tables.names}
+    frames = {
+        t: read_table(spark, snap, t).dropDuplicates(keys[t]) for t in tables.names
+    }
+    _, rows = write_versions(spark, path, tables, frames, snap.meta, pack=True)
+    compact_forget_ledger(spark, path)
+    return {
+        t: {
+            "files_before": before[t],
+            "files_after": parquet_file_count(os.path.join(path, t)),
+            "rows": rows[t],
+        }
+        for t in tables.names
+    }
+
+
+def forget_rows(spark, path: str, tables: IndexTables, ids, erase: bool = False) -> dict:
+    """The right-to-be-forgotten rewrite for one index, under the
+    caller's writer lock: every table anti-joins the BROADCAST pinned
+    id set from ``pinned_forget_ids`` and publishes as a new version,
+    with the ids appended to the ledger before the pointer flips, and
+    every superseded version vacuumed when ``erase``. Returns {table:
+    {rows_before, rows_removed, rows_after}}, counted from the footers
+    of the source and the written version (no Spark job)."""
+    from pyspark.sql import functions as F
+
+    heal_tables(path, tables)
+    snap = open_snapshot(path, tables)
+    col = tables.id_column(snap.meta)
+    bcast = F.broadcast(ids)
+    frames = {}
+    for t in tables.names:
+        src = read_table(spark, snap, t)
+        frames[t] = src.join(bcast, src[col] == bcast[_FORGET_ID], "left_anti")
+    before = {t: footer_row_count(snap.dirs[t]) for t in tables.names}
+    _, after = write_versions(
+        spark, path, tables, frames, snap.meta, pack=True, ledger_ids=ids,
+        erase=erase,
+    )
+    return {
+        t: {
+            "rows_before": before[t],
+            "rows_removed": before[t] - after[t],
+            "rows_after": after[t],
+        }
+        for t in tables.names
+    }

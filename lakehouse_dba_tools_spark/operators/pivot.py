@@ -17,19 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def pivot_first(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    pivot_col: str,
-    value_col: str,
-    values: Sequence[str] | None = None,
-) -> DataFrame:
-    """Transpose key/value rows into wide columns with first() (A4)."""
-    g = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    p = g.pivot(pivot_col, list(values) if values else None)
-    return p.agg(F.first(value_col))
-
-
 def pivot_agg(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -41,22 +41,3 @@ def sessionize(
     return df.withColumn("_new_sess", is_new).withColumn(
         session_col, F.sum("_new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("_new_sess")
-
-
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: float = 30.0,
-    tie_break: str | None = None,
-) -> DataFrame:
-    """Per-session rollup: span, event count, value sum."""
-    s = sessionize(df, user_col, ts_col, gap_minutes, tie_break=tie_break)
-    return s.groupBy(user_col, "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        (F.max(F.col(ts_col).cast("double")) - F.min(F.col(ts_col).cast("double"))).alias(
-            "duration_sec"
-        ),
-    )

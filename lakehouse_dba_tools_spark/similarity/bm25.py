@@ -25,10 +25,38 @@ Scale shapes (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from lakehouse_dba_tools_spark.operators.indexio import (
+    IndexTables,
+    Layout,
+    append_tables,
+    compact_tables,
+    current_version_dir,
+    filter_ledgered,
+    forget_rows,
+    heal,
+    heal_tables,
+    init_versioned,
+    open_snapshot,
+    overlap_jobs,
+    pinned_for_write,
+    pinned_forget_ids,
+    publish,
+    read_forget_ledger,
+    read_table,
+    refresh_listings,
+    snapshot_meta,
+    vacuum_versions,
+    write_version_meta,
+    write_versions,
+    writer_lock,
+)
 
 TOKEN_RE = "[a-z0-9]+"
 
@@ -281,6 +309,16 @@ def bm25_score_scalar(
 #   refresh). Rides inside the blocked version dir: one flip publishes
 #   postings + maxima + stats.
 # - _bm25_meta.json  {id_col, text_col}
+# - postings/<ver>/_bm25_postings_meta.json  {id_col, text_col,
+#   doclens_dir, schemas} — ``doclens_dir`` names the doclens version
+#   the postings version pairs with (the postings pointer flip is the
+#   single atomic commit for the pair; indexes from before round 10
+#   have no such meta and fall back to the two live pointers, with the
+#   root _bm25_meta.json as their meta). ``schemas`` holds both tables'
+#   schemas as their readers see them (``StructType.jsonValue()``): the
+#   verbs read postings and doclens with them (``indexio.read_table``),
+#   so no read starts a schema-inference job; a meta without the key
+#   reads by inference, with the same results.
 # - champions/<ver>/_bm25_champ_meta.json  {champion_n, n_docs, avgdl,
 #   k1, b, impact_flatness} — the stats snapshot the tier was ordered
 #   under, riding inside the champions version dir (atomic tier+stats
@@ -296,7 +334,10 @@ def bm25_score_scalar(
 # root, and each table's live path is a symlink to a versioned
 # directory published by one atomic pointer flip — an append can never
 # vanish inside a compaction's swap window, and a crash mid-compact
-# leaves the live tables readable. Replay semantics: a replayed append
+# leaves the live tables readable. Postings and doclens are declared
+# once as ``BM25_TABLES`` and written through indexio's shared
+# versioned-table layer; the tiers refresh after each publish. Replay
+# semantics: a replayed append
 # (at-least-once foreachBatch) writes duplicate (term, doc_id) posting
 # rows and duplicate (doc_id) doclens rows; queries dedup both at read
 # time (the postings dedup runs on the query-terms slice only, the
@@ -311,51 +352,17 @@ CHAMP_META = "_bm25_champ_meta.json"
 WAND_META = "_bm25_wand_meta.json"
 
 
-def _postings_snapshot(path: str) -> tuple[str, str]:
-    """(postings version dir, doclens dir) resolved as ONE couple: the
-    postings version meta NAMES the doclens version it was written
-    with, so the postings pointer flip is the single atomic commit for
-    the two-table pair (same round-10 pattern as the LSH bands meta,
-    the IVF cid manifest, and the champions _termstats — two
-    independent flips would let a crash or a reader racing a full
-    rebuild pair postings with a different build's doclens: stats and
-    scores silently wrong). Pre-round-10 indexes have no postings
-    version meta and fall back to the two live pointers; a named
-    doclens version already reclaimed fails loudly on first file
-    access unless the layout was externally flattened (legacy
-    migration), in which case the flat live directory IS the table."""
-    import json
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
-
-    import warnings
-
-    postings_dir = current_version_dir(os.path.join(path, "postings"))
-    live = os.path.join(path, "doclens")
-    pm_path = os.path.join(postings_dir, POSTINGS_META)
-    if os.path.exists(pm_path):
-        with open(pm_path) as fh:
-            named_base = json.load(fh)["doclens_dir"]
-        named = os.path.join(path, named_base)
-        if not os.path.isdir(named) and os.path.isdir(live) and not os.path.islink(live):
-            # Loud, not silent (same contract as dedup._shash_dir): the
-            # flat fallback exists for external flatten-in-place
-            # migrations only; any other path to this state could pair
-            # postings with a different build's doclens.
-            warnings.warn(
-                f"BM25 index at {path!r}: paired doclens version "
-                f"{named_base!r} is gone and a flat live directory "
-                f"exists — assuming an external layout migration and "
-                f"reading the flat table. If anything other than a "
-                f"flatten-in-place produced this state, postings and "
-                f"doclens may come from different builds.",
-                UserWarning,
-                stacklevel=3,
-            )
-            return postings_dir, live
-        return postings_dir, named
-    return postings_dir, current_version_dir(live)
+BM25_TABLES = IndexTables(
+    kind="BM25",
+    primary="postings",
+    meta_name=POSTINGS_META,
+    root_meta=BM25_META,
+    layouts={"postings": Layout(range_by="term"), "doclens": Layout()},
+    # replays write identical rows: (term, doc_id) / (doc_id)
+    dedup_keys=lambda id_col: {"postings": ["term", id_col], "doclens": [id_col]},
+    secondary="doclens",
+    pair_key="doclens_dir",
+)
 
 
 def build_postings_index(
@@ -377,51 +384,23 @@ def build_postings_index(
     each costs one extra postings shuffle per build/compact; an index
     built without them keeps exactly the pre-tier cost profile, and
     compact refreshes only the tiers that exist."""
-    import json
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import writer_lock
-
-    spark = docs.sparkSession
+    tiers = {}
+    if champion_n is not None:
+        tiers["champions"] = {"champion_n": champion_n, "k1": k1, "b": b}
+    if wand_buckets is not None:
+        tiers["blocked"] = {"wand_buckets": wand_buckets, "k1": k1, "b": b}
     with writer_lock(path):
         _write_postings(docs, path, text_col, id_col, fresh=True)
         with open(os.path.join(path, BM25_META), "w") as fh:
             json.dump({"id_col": id_col, "text_col": text_col}, fh)
-        # the two tiers derive from the SAME published postings pair
-        # and write disjoint live dirs — independent refresh jobs,
-        # overlapped from driver threads (indexio.overlap_jobs)
-        from lakehouse_dba_tools_spark.operators.indexio import overlap_jobs
-
         # assume_deduped: a fresh build's postings are aggregated by
         # (term, id) and its doclens projected from the (unique-id)
         # corpus — the refreshes' replay-dedup shuffles have nothing to
         # fold here
-        tier_jobs = []
-        if champion_n is not None:
-            tier_jobs.append(
-                lambda: _refresh_champions(
-                    spark, path, id_col, champion_n, k1, b, assume_deduped=True
-                )
-            )
-        if wand_buckets is not None:
-            tier_jobs.append(
-                lambda: _refresh_wand(
-                    spark, path, id_col, wand_buckets, k1, b, assume_deduped=True
-                )
-            )
-        if tier_jobs:
-            overlap_jobs(*tier_jobs)
+        _refresh_tiers(docs.sparkSession, path, tiers, assume_deduped=True)
 
 
 def append_to_postings_index(docs: DataFrame, path: str) -> None:
-    import json
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        filter_ledgered,
-        writer_lock,
-    )
-
     with open(os.path.join(path, BM25_META)) as fh:
         m = json.load(fh)
     # The lock keeps this append out of any concurrent compaction's
@@ -431,10 +410,10 @@ def append_to_postings_index(docs: DataFrame, path: str) -> None:
         # replay/backfill-resurrection guard lives in _write_postings
         # (one place for append AND fresh-build paths)
         _write_postings(docs, path, m["text_col"], m["id_col"], fresh=False)
-        _heal_stale_tiers(docs.sparkSession, path, m["id_col"])
+        _heal_stale_tiers(docs.sparkSession, path)
 
 
-def _heal_stale_tiers(spark, path: str, id_col: str) -> None:
+def _heal_stale_tiers(spark, path: str) -> None:
     """Crash repair for the publish→tier-refresh window: if a previous
     writer died between publishing new postings and refreshing the
     champions/block-max tiers, their provenance stamps no longer match
@@ -444,103 +423,73 @@ def _heal_stale_tiers(spark, path: str, id_col: str) -> None:
     writer lock. Normal appends never trigger this (they write into
     the SAME postings version, so stamps keep matching) — the check is
     two sidecar reads."""
-    import os
+    cur = os.path.basename(current_version_dir(os.path.join(path, "postings")))
+    stale = {
+        tier: tm
+        for tier, tm in _stored_tiers(path).items()
+        if tm.get("postings_dir") is not None and tm["postings_dir"] != cur
+    }
+    _refresh_tiers(spark, path, stale)
 
-    cur = os.path.basename(_postings_snapshot(path)[0])
-    for snap, refresh in (
-        (
-            _champ_snapshot,
-            lambda cm: _refresh_champions(
-                spark, path, id_col, cm["champion_n"], cm["k1"], cm["b"]
-            ),
-        ),
-        (
-            _wand_snapshot,
-            lambda wm: _refresh_wand(
-                spark, path, id_col, wm["wand_buckets"], wm["k1"], wm["b"]
-            ),
-        ),
-    ):
+
+def _stored_tiers(path: str) -> dict:
+    """{tier: meta} for the opt-in tiers this index has built."""
+    out = {}
+    for tier, snap in (("champions", _champ_snapshot), ("blocked", _wand_snapshot)):
         try:
-            _, tm = snap(path)
+            out[tier] = snap(path)[1]
         except FileNotFoundError:
-            continue
-        if tm.get("postings_dir") is not None and tm["postings_dir"] != cur:
-            refresh(tm)
+            pass
+    return out
+
+
+def _refresh_tiers(spark, path: str, tiers: dict, assume_deduped: bool = False) -> None:
+    """Rebuild the named tiers ({"champions" / "blocked": params}) from
+    the current postings snapshot. They write disjoint live dirs off
+    the same published pair — independent refresh jobs, overlapped
+    from driver threads (indexio.overlap_jobs). Caller holds the
+    writer lock."""
+    jobs = []
+    if "champions" in tiers:
+        cm = tiers["champions"]
+        jobs.append(lambda: _refresh_champions(
+            spark, path, cm["champion_n"], cm["k1"], cm["b"], assume_deduped
+        ))
+    if "blocked" in tiers:
+        wm = tiers["blocked"]
+        jobs.append(lambda: _refresh_wand(
+            spark, path, wm["wand_buckets"], wm["k1"], wm["b"], assume_deduped
+        ))
+    overlap_jobs(*jobs)
 
 
 def _write_postings(
     docs: DataFrame, path: str, text_col: str, id_col: str, fresh: bool
 ) -> None:
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        current_version_dir,
-        filter_ledgered,
-        heal,
-        init_versioned,
-        overlap_jobs,
-        pinned_for_write,
-        publish,
-        read_forget_ledger,
-        write_version_meta,
-    )
-
+    """Index ``docs`` into a fresh postings/doclens pair (``fresh``) or
+    append them to the current one. Caller holds the writer lock."""
     # Replay/backfill-resurrection guard for BOTH paths, under the
     # caller's lock (operators/indexio.py append_forget_ledger): a
     # redelivered epoch must not re-APPEND forgotten docs, and a full
     # re-BUILD fed a corpus snapshot that predates an erasure must not
-    # re-index them. One ledger read filters both frames; no-op while
-    # the path has no forget history.
-    ledger = read_forget_ledger(docs.sparkSession, path)
-    docs = filter_ledgered(docs, path, id_col, ledger=ledger)
-    # pin the aggregated postings: the range write's bounds-sampling
-    # job would otherwise run the tokenize+explode+aggregate lineage a
-    # second time (indexio.pinned_for_write)
-    with pinned_for_write(build_inverted_index(docs, text_col, id_col)) as agg:
-        postings = agg.repartitionByRange("term").sortWithinPartitions("term")
-        doclens = docs.select(F.col(id_col), F.size(_tokens(text_col)).alias("dl"))
-        p_live = os.path.join(path, "postings")
-        d_live = os.path.join(path, "doclens")
-        if fresh:
-            heal(p_live)
-            heal(d_live)
-            # the postings version meta NAMES the doclens version —
-            # naming needs only the target path, so the two table
-            # writes are independent jobs, overlapped from driver
-            # threads (indexio.overlap_jobs); the postings pointer
-            # flip stays the single atomic commit for the pair
-            # (_postings_snapshot), ordered after both writes
-            d_target = init_versioned(d_live)
-            p_target = init_versioned(p_live)
-            overlap_jobs(
-                lambda: doclens.write.mode("overwrite").parquet(d_target),
-                lambda: postings.write.mode("overwrite").parquet(p_target),
-            )
-            write_version_meta(
-                p_target, POSTINGS_META,
-                {"id_col": id_col, "text_col": text_col,
-                 "doclens_dir": os.path.basename(d_target)},
-            )
-            publish(d_live, d_target)
-            publish(p_live, p_target)
-        else:
-            # appends are additive (new files only) into the RESOLVED
-            # current pair (the lock pins the pointer; doclens goes
-            # into the version the postings snapshot NAMES) — readers
-            # racing one see a prefix, the standard parquet-append
-            # visibility; the two appends overlap like the fresh writes
-            p_dir, d_dir = _postings_snapshot(path)
-            overlap_jobs(
-                lambda: postings.write.mode("append").parquet(p_dir),
-                lambda: doclens.write.mode("append").parquet(d_dir),
-            )
-    # invalidate cached file listings (same stale-snapshot class as
-    # dedup/index.py _refresh)
-    for sub in ("postings", "doclens"):
-        live = os.path.join(path, sub)
-        docs.sparkSession.catalog.refreshByPath(live)
-        docs.sparkSession.catalog.refreshByPath(current_version_dir(live))
+    # re-index them. One driver-side ledger read filters the batch
+    # once, before both tables derive from it; no-op while the path
+    # has no forget history.
+    spark = docs.sparkSession
+    docs = filter_ledgered(docs, id_col, ledger=read_forget_ledger(spark, path))
+    frames = {
+        "postings": build_inverted_index(docs, text_col, id_col),
+        "doclens": docs.select(F.col(id_col), F.size(_tokens(text_col)).alias("dl")),
+    }
+    if fresh:
+        heal_tables(path, BM25_TABLES)
+        write_versions(
+            spark, path, BM25_TABLES, frames, {"id_col": id_col, "text_col": text_col}
+        )
+    else:
+        # appends go into the RESOLVED current pair (the lock pins the
+        # pointer; doclens into the version the postings meta NAMES)
+        append_tables(spark, path, BM25_TABLES, open_snapshot(path, BM25_TABLES), frames)
 
 
 def _impact(k1: float, b: float, avgdl: float) -> Column:
@@ -555,8 +504,25 @@ def _impact(k1: float, b: float, avgdl: float) -> Column:
     )
 
 
+def _tier_source(spark, path: str, assume_deduped: bool):
+    """(postings version dir, id column, postings frame, n_docs,
+    avgdl) of the CURRENT postings snapshot — what a tier refresh
+    derives from. ``assume_deduped`` skips the replay-dedup shuffles
+    (see ``_refresh_champions``)."""
+    snap = open_snapshot(path, BM25_TABLES)
+    id_col = snap.meta["id_col"]
+    postings = read_table(spark, snap, "postings")
+    doclens = read_table(spark, snap, "doclens")
+    if not assume_deduped:
+        postings = postings.dropDuplicates(["term", id_col])
+        doclens = doclens.dropDuplicates([id_col])
+    row = doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
+    return (snap.dirs["postings"], id_col, postings, int(row["n"]),
+            float(row["avgdl"] or 0.0))
+
+
 def _refresh_champions(
-    spark, path: str, id_col: str, champion_n: int, k1: float, b: float,
+    spark, path: str, champion_n: int, k1: float, b: float,
     assume_deduped: bool = False,
 ) -> None:
     """(Re)build the champions tier from the CURRENT postings/doclens
@@ -580,26 +546,9 @@ def _refresh_champions(
     version dir as ``_termstats/`` (underscore-hidden from the tier's
     own parquet scan) and the ordering-stats snapshot + the measured
     ``impact_flatness`` ride in the ``CHAMP_META`` sidecar."""
-    import os
-
     from pyspark.sql import Window
 
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        current_version_dir,
-        heal,
-        init_versioned,
-        publish,
-        write_version_meta,
-    )
-
-    p_dir, d_dir = _postings_snapshot(path)
-    postings = spark.read.parquet(p_dir)
-    doclens = spark.read.parquet(d_dir)
-    if not assume_deduped:
-        postings = postings.dropDuplicates(["term", id_col])
-        doclens = doclens.dropDuplicates([id_col])
-    row = doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
+    p_dir, id_col, postings, n_docs, avgdl = _tier_source(spark, path, assume_deduped)
 
     imp = postings.withColumn("_imp", _impact(k1, b, avgdl)).withColumn(
         "_pid", F.spark_partition_id()
@@ -617,8 +566,6 @@ def _refresh_champions(
     # feeds the gauge's broadcast and its own sampled range write —
     # without the pins the window chain executes 3× and the agg 3×
     # per refresh (indexio.pinned_for_write)
-    from lakehouse_dba_tools_spark.operators.indexio import pinned_for_write
-
     with pinned_for_write(
         pre.withColumn("_rn", F.row_number().over(w2)).filter(
             F.col("_rn") <= champion_n
@@ -676,12 +623,11 @@ def _refresh_champions(
         ).parquet(os.path.join(target, "_termstats"))
         write_version_meta(target, CHAMP_META, meta)
         publish(live, target)
-    spark.catalog.refreshByPath(live)
-    spark.catalog.refreshByPath(current_version_dir(live))
+    refresh_listings(spark, path, ("champions",))
 
 
 def _refresh_wand(
-    spark, path: str, id_col: str, wand_buckets: int, k1: float, b: float,
+    spark, path: str, wand_buckets: int, k1: float, b: float,
     assume_deduped: bool = False,
 ) -> None:
     """(Re)build the block-max tier from the CURRENT postings/doclens
@@ -696,27 +642,7 @@ def _refresh_wand(
     pointer flip covers postings + maxima + stats. ``assume_deduped``
     as in ``_refresh_champions`` (skips the dedup shuffles when the
     snapshot is dup-free by construction)."""
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        current_version_dir,
-        heal,
-        init_versioned,
-        publish,
-        write_version_meta,
-    )
-
-    p_dir, d_dir = _postings_snapshot(path)
-    postings = spark.read.parquet(p_dir)
-    doclens = spark.read.parquet(d_dir)
-    if not assume_deduped:
-        postings = postings.dropDuplicates(["term", id_col])
-        doclens = doclens.dropDuplicates([id_col])
-    row = doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-
-    from lakehouse_dba_tools_spark.operators.indexio import pinned_for_write
-
+    p_dir, id_col, postings, n_docs, avgdl = _tier_source(spark, path, assume_deduped)
     # pin the bucketed postings: they feed two sampled range writes
     # (the tier itself and the _blockmax sidecar's aggregate), each of
     # which would otherwise re-run the dedup shuffle + scan lineage
@@ -767,8 +693,7 @@ def _refresh_wand(
             },
         )
         publish(live, target)
-    spark.catalog.refreshByPath(live)
-    spark.catalog.refreshByPath(current_version_dir(live))
+    refresh_listings(spark, path, ("blocked",))
 
 
 def compact_postings_index(spark, path: str) -> dict:
@@ -783,120 +708,14 @@ def compact_postings_index(spark, path: str) -> dict:
     version behind one atomic pointer flip under the index writer lock
     (appends queue behind it). Returns {table: files_before/
     files_after/rows}."""
-    import json
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        heal,
-        init_versioned,
-        parquet_file_count,
-        publish,
-        write_version_meta,
-        writer_lock,
-    )
-
-    with open(os.path.join(path, BM25_META)) as fh:
-        bm = json.load(fh)
-    id_col = bm["id_col"]
-    out: dict = {}
     with writer_lock(path):
-        p_live = os.path.join(path, "postings")
-        d_live = os.path.join(path, "doclens")
-        heal(p_live)
-        heal(d_live)
-        src_p, src_d = _postings_snapshot(path)
-        # The compacted postings' version meta NAMES the compacted
-        # doclens version — naming needs only the target path, so each
-        # table's dedup-rewrite+count is an independent unit,
-        # overlapped from driver threads (indexio.overlap_jobs); the
-        # postings flip still commits the pair atomically after both
-        # (_postings_snapshot)
-        from lakehouse_dba_tools_spark.operators.indexio import (
-            overlap_jobs,
-            pinned_for_write,
-        )
-
-        d_before = parquet_file_count(d_live)
-        p_before = parquet_file_count(p_live)
-        d_target = init_versioned(d_live)
-        p_target = init_versioned(p_live)
-
-        def _compact_doclens() -> int:
-            d_df = spark.read.parquet(src_d).dropDuplicates([id_col]).coalesce(1)
-            d_df.write.mode("overwrite").parquet(d_target)
-            return spark.read.parquet(d_target).count()
-
-        def _compact_postings() -> int:
-            # pin the deduped postings: the range write's bounds sample
-            # would otherwise re-run the dropDuplicates shuffle
-            # (indexio.pinned_for_write)
-            with pinned_for_write(
-                spark.read.parquet(src_p).dropDuplicates(["term", id_col])
-            ) as p_dedup:
-                p_dedup.repartitionByRange("term").sortWithinPartitions(
-                    "term"
-                ).write.mode("overwrite").parquet(p_target)
-            return spark.read.parquet(p_target).count()
-
-        d_rows, p_rows = overlap_jobs(_compact_doclens, _compact_postings)
-        write_version_meta(
-            p_target, POSTINGS_META,
-            {"id_col": id_col, "text_col": bm["text_col"],
-             "doclens_dir": os.path.basename(d_target)},
-        )
-        publish(d_live, d_target)
-        publish(p_live, p_target)
-        out["postings"] = {
-            "files_before": p_before,
-            "files_after": parquet_file_count(p_live),
-            "rows": p_rows,
-        }
-        out["doclens"] = {
-            "files_before": d_before,
-            "files_after": parquet_file_count(d_live),
-            "rows": d_rows,
-        }
-        spark.catalog.refreshByPath(p_live)
-        spark.catalog.refreshByPath(d_live)
-        # the champions / block-max tiers are opt-in: refresh each
-        # (params carried from the current tier) only where the build
-        # created one — this is the tier-merge step that makes appends
-        # since the last refresh visible to mode='champions'/'wand'
-        try:
-            _, cm = _champ_snapshot(path)
-        except FileNotFoundError:
-            cm = None
-        try:
-            _, wm = _wand_snapshot(path)
-        except FileNotFoundError:
-            wm = None
-        # disjoint tier dirs off the same published pair — overlap.
+        out = compact_tables(spark, path, BM25_TABLES)
+        # the tier-merge step that makes appends since the last refresh
+        # visible to mode='champions'/'wand', for the tiers the build
+        # created (params carried from the current tier).
         # assume_deduped: the pair published above was dedup-folded by
-        # this very compact, so the refreshes' own dedup shuffles would
-        # re-fold an already-unique snapshot.
-        tier_jobs = []
-        if cm is not None:
-            tier_jobs.append(
-                lambda: _refresh_champions(
-                    spark, path, id_col, cm["champion_n"], cm["k1"], cm["b"],
-                    assume_deduped=True,
-                )
-            )
-        if wm is not None:
-            tier_jobs.append(
-                lambda: _refresh_wand(
-                    spark, path, id_col, wm["wand_buckets"], wm["k1"], wm["b"],
-                    assume_deduped=True,
-                )
-            )
-        if tier_jobs:
-            overlap_jobs(*tier_jobs)
-        # same cadence folds the suppression ledger's per-forget files
-        from lakehouse_dba_tools_spark.operators.indexio import (
-            compact_forget_ledger,
-        )
-
-        compact_forget_ledger(spark, path)
+        # this very compact.
+        _refresh_tiers(spark, path, _stored_tiers(path), assume_deduped=True)
     return out
 
 
@@ -939,9 +758,9 @@ def forget_from_postings_index(
     a mismatch and any locked writer repairs it (`_check_tier_stamp` /
     `_heal_stale_tiers`).
 
-    ``erase=True`` upgrades to PHYSICAL erasure: after the tier
-    refreshes, every superseded version of postings/doclens AND the
-    tiers is vacuumed (`indexio.vacuum_versions` — the reference's
+    ``erase=True`` upgrades to PHYSICAL erasure: every superseded
+    version of postings/doclens is vacuumed at their publish, and of
+    the tiers after their refresh (`indexio.vacuum_versions` — the reference's
     ``VACUUM ... RETAIN 0 HOURS``, `resources/TPC-datagen-notebook.
     scala:2076-2092`), so no pre-forget byte survives on disk. The
     documented GDPR trade: erase-grade forget forfeits the one-version
@@ -954,161 +773,29 @@ def forget_from_postings_index(
     folds them), so pass True ONLY when the index has seen no
     un-compacted appends since its last build/compact (e.g. the
     build-then-forget audit flows); each refresh then skips its full
-    postings+doclens dedup shuffle."""
-    import json
-    import os
+    postings+doclens dedup shuffle.
 
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        append_forget_ledger,
-        current_version_dir,
-        heal,
-        init_versioned,
-        publish,
-        vacuum_versions,
-        write_snapshot_table,
-        write_version_meta,
-        writer_lock,
-    )
-
-    with open(os.path.join(path, BM25_META)) as fh:
-        bm = json.load(fh)
-    id_col = bm["id_col"]
-    out: dict = {}
-    with writer_lock(path):
-        p_live = os.path.join(path, "postings")
-        d_live = os.path.join(path, "doclens")
-        heal(p_live)
-        heal(d_live)
-        src_p, src_d = _postings_snapshot(path)
-        ids = F.broadcast(
-            forget_ids.select(
-                F.col(forget_ids.columns[0]).alias("_forget_id")
-            ).distinct()
-        )
-        # The filtered postings' version meta NAMES the filtered
-        # doclens version (single-flip pair commit) — naming needs only
-        # the target path, so each table's anti-join-rewrite+count is
-        # an independent unit, overlapped from driver threads
-        # (indexio.overlap_jobs); publishes stay ordered after both.
-        # write_snapshot_table handles the forget-everything edge.
-        # Counts: kept sides count the WRITTEN version (compact's
-        # pattern) so each anti-join executes exactly once.
-        from lakehouse_dba_tools_spark.operators.indexio import (
-            overlap_jobs,
-            pinned_for_write,
-        )
-
-        d_target = init_versioned(d_live)
-        p_target = init_versioned(p_live)
-
-        def _forget_doclens() -> tuple[int, int]:
-            d_src = spark.read.parquet(src_d)
-            d_kept = d_src.join(
-                ids, d_src[id_col] == ids["_forget_id"], "left_anti"
-            )
-            before = d_src.count()
-            write_snapshot_table(d_kept, d_target, single_file=True)
-            return before, spark.read.parquet(d_target).count()
-
-        def _forget_postings() -> tuple[int, int]:
-            p_src = spark.read.parquet(src_p)
-            before = p_src.count()
-            # pin the anti-joined survivors: the range write's bounds
-            # sample would otherwise run the anti-join scan twice
-            # (indexio.pinned_for_write)
-            with pinned_for_write(
-                p_src.join(ids, p_src[id_col] == ids["_forget_id"], "left_anti")
-            ) as p_kept:
-                write_snapshot_table(
-                    p_kept.repartitionByRange("term").sortWithinPartitions("term"),
-                    p_target,
-                )
-            return before, spark.read.parquet(p_target).count()
-
-        (d_before, d_after), (p_before, p_after) = overlap_jobs(
-            _forget_doclens, _forget_postings
-        )
-        write_version_meta(
-            p_target, POSTINGS_META,
-            {"id_col": id_col, "text_col": bm["text_col"],
-             "doclens_dir": os.path.basename(d_target)},
-        )
-        # ledger BEFORE the pointer flips (indexio ordering contract):
-        # a published forget without a ledger entry would let a
-        # replayed epoch silently resurrect; the reverse crash is
-        # harmless (ids being deleted, retried forget completes)
-        append_forget_ledger(ids, path, id_col)
-        publish(d_live, d_target)
-        publish(p_live, p_target)
-        out["postings"] = {
-            "rows_before": p_before,
-            "rows_removed": p_before - p_after,
-            "rows_after": p_after,
-        }
-        out["doclens"] = {
-            "rows_before": d_before,
-            "rows_removed": d_before - d_after,
-            "rows_after": d_after,
-        }
-        spark.catalog.refreshByPath(p_live)
-        spark.catalog.refreshByPath(d_live)
-        spark.catalog.refreshByPath(current_version_dir(p_live))
-        spark.catalog.refreshByPath(current_version_dir(d_live))
-        # tier refresh = the fresh-build equality step (see docstring);
-        # disjoint tier dirs off the same published pair — overlap
-        try:
-            _, cm = _champ_snapshot(path)
-        except FileNotFoundError:
-            cm = None
-        try:
-            _, wm = _wand_snapshot(path)
-        except FileNotFoundError:
-            wm = None
-        tier_jobs = []
-        if cm is not None:
-            tier_jobs.append(
-                lambda: _refresh_champions(
-                    spark, path, id_col, cm["champion_n"], cm["k1"], cm["b"],
-                    assume_deduped=assume_deduped,
-                )
-            )
-        if wm is not None:
-            tier_jobs.append(
-                lambda: _refresh_wand(
-                    spark, path, id_col, wm["wand_buckets"], wm["k1"], wm["b"],
-                    assume_deduped=assume_deduped,
-                )
-            )
-        if tier_jobs:
-            overlap_jobs(*tier_jobs)
+    Cost: the caller's ``forget_ids`` lineage runs once — its distinct
+    id set is pinned for the call and released before returning."""
+    with pinned_forget_ids(forget_ids) as ids, writer_lock(path):
+        out = forget_rows(spark, path, BM25_TABLES, ids, erase=erase)
+        # tier refresh = the fresh-build equality step (see docstring)
+        tiers = _stored_tiers(path)
+        _refresh_tiers(spark, path, tiers, assume_deduped=assume_deduped)
         if erase:
-            # physical erasure AFTER the tier refreshes, so the
-            # superseded tier versions (which still hold pre-forget
-            # rows) are reclaimed along with postings/doclens
-            vacuum_versions(p_live)
-            vacuum_versions(d_live)
-            if cm is not None:
-                vacuum_versions(os.path.join(path, "champions"))
-            if wm is not None:
-                vacuum_versions(os.path.join(path, "blocked"))
+            # the superseded tier versions still hold pre-forget rows
+            for tier in tiers:
+                vacuum_versions(os.path.join(path, tier))
     return out
 
 
 def _champ_snapshot(path: str) -> tuple[str, dict]:
     """(champions version dir, champ meta) — resolved as one couple."""
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import snapshot_meta
-
     return snapshot_meta(os.path.join(path, "champions"), CHAMP_META, path)
 
 
 def _wand_snapshot(path: str) -> tuple[str, dict]:
     """(blocked version dir, wand meta) — resolved as one couple."""
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import snapshot_meta
-
     return snapshot_meta(os.path.join(path, "blocked"), WAND_META, path)
 
 
@@ -1131,12 +818,10 @@ def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
     pointer into the SAME postings version (no new version dir), so
     the stamp still matches — tier-vs-append staleness remains the
     documented compact-cadence contract."""
-    import os
-
     stamp = tm.get("postings_dir")
     if stamp is None:
         return
-    cur = os.path.basename(_postings_snapshot(path)[0])
+    cur = os.path.basename(current_version_dir(os.path.join(path, "postings")))
     if stamp != cur:
         raise RuntimeError(
             f"{tier} tier at {path!r} was derived from postings version "
@@ -1228,9 +913,6 @@ def query_postings_index(
     For champions/wand, ``k1``/``b`` default to the STORED tier
     parameters; passing explicit values that differ raises (the tier's
     ordering/bounds were computed under the stored ones)."""
-    import json
-    import os
-
     with open(os.path.join(path, BM25_META)) as fh:
         m = json.load(fh)
 
@@ -1250,14 +932,14 @@ def query_postings_index(
     # snapshot stays complete across one subsequent compact (indexio
     # retention), so a query planned pre-compact evaluates correctly
     # post-compact and can never pair tables from different builds.
-    p_dir, d_dir = _postings_snapshot(path)
+    snap = open_snapshot(path, BM25_TABLES)
     row = (
-        spark.read.parquet(d_dir)
+        read_table(spark, snap, "doclens")
         .dropDuplicates([m["id_col"]])
         .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
         .collect()[0]
     )
-    postings = spark.read.parquet(p_dir)
+    postings = read_table(spark, snap, "postings")
     terms = sorted(set(_py_tokens(query)))
     if terms:  # pre-filter BEFORE the dedup shuffle: only query-term
         # postings pay it (the same pushed IN-filter the scorer applies)
@@ -1278,10 +960,7 @@ def _query_champions(
     tier size, independent of the term's full posting-list length.
     A missing champions tier (the tier is opt-in) fails loudly;
     rebuild with ``champion_n`` set to materialize it."""
-    import os
     import warnings
-
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
 
     try:
         champ_dir, cm = _champ_snapshot(path)
@@ -1404,9 +1083,7 @@ def _wand_plan(
     true k-th score. The float-margin guard (1e-9) keeps a
     bound-achieving doc on a boundary bucket safe from
     summation-order jitter in θ or ub."""
-    import json
     import math
-    import os
 
     blocked_dir, wm = _wand_snapshot(path)
     _check_tier_stamp(path, wm, "wand")
@@ -1630,8 +1307,6 @@ def _score_kept_join(spark, plan: dict) -> DataFrame:
     forced-path test, external tooling) re-derive it from the pinned
     blockmax slice; the ub ≥ θ - 1e-9 margin keeps recomputed float
     sums agreeing with the planner's prune on that fallback path."""
-    import os
-
     kept = plan.get("_kept_frame")
     if kept is None:
         bmax = spark.read.parquet(
@@ -1706,8 +1381,10 @@ def _query_wand(
         # materialize the ≤k-row answer, then release the planner's
         # cached per-bucket frame — persist holds a strong CacheManager
         # reference, so a lazy return would leak one entry per
-        # large-kept query for the session's lifetime
-        rows = out.collect()
+        # large-kept query for the session's lifetime; the rows come
+        # back as an Arrow-backed local relation, whose consumers start
+        # no job
+        table = out.toArrow()
         per_bucket.unpersist()
-        return spark.createDataFrame(rows, out.schema)
+        return spark.createDataFrame(table, out.schema)
     return out

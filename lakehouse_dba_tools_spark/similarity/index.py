@@ -14,10 +14,16 @@ On-disk layout under ``path``:
   nprobe a PARTITION-PRUNED scan: a query batch probing p of C lists
   reads p/C of the index bytes (`query_ivf_index` pushes the probed
   cid set into the parquet read).
-- ``_ivf_meta.json``  {n_centroids, seed, id_col, vec_col, centroids}
-  — the trained quantizer itself rides in the sidecar (C × dim
-  doubles: KBs, driver-sized by construction since training already
-  samples to the driver).
+- ``_ivf_meta.json``  {n_centroids, seed, id_col, vec_col, centroids,
+  cids, schemas} — the trained quantizer itself rides in the sidecar
+  (C × dim doubles: KBs, driver-sized by construction since training
+  already samples to the driver), inside the lists version directory
+  (the root copy is informational). ``cids`` is the manifest of
+  non-empty lists. ``schemas`` holds the lists schema as its readers
+  see it (``StructType.jsonValue()``, ``cid`` last): every verb reads
+  the lists with it (``indexio.read_table``), so no read starts a
+  schema-inference job; a meta without the key reads by inference,
+  with the same results.
 
 Append semantics match FAISS/production IVF: centroids stay FIXED
 after build (assignments are a pure function of the stored quantizer,
@@ -32,7 +38,9 @@ LSH and BM25 indexes): build/append/compact hold an exclusive flock
 on the index root, and the lists table's live path is a symlink to a
 versioned directory published by one atomic pointer flip — an append
 can never vanish inside a compaction's swap window, and a crash
-mid-compact leaves the index readable. Replay-tolerant, NOT
+mid-compact leaves the index readable. The lists table is declared
+once as ``IVF_TABLES`` and written through indexio's shared
+versioned-table layer. Replay-tolerant, NOT
 update-tolerant: re-appending an id whose vector CHANGED is caller
 error (dedup keeps an arbitrary variant).
 
@@ -51,18 +59,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_dba_tools_spark.operators.indexio import (
-    append_forget_ledger,
-    compact_forget_ledger,
-    current_version_dir,
+    IndexTables,
+    Layout,
+    append_tables,
+    compact_tables,
     filter_ledgered,
-    heal,
+    forget_rows,
+    heal_tables,
     init_versioned,
-    parquet_file_count,
+    open_snapshot,
+    pinned_for_write,
+    pinned_forget_ids,
     publish,
+    read_forget_ledger,
+    read_table,
+    refresh_listings,
     snapshot_meta,
-    vacuum_versions,
-    write_snapshot_table,
     write_version_meta,
+    write_versions,
     writer_lock,
 )
 from lakehouse_dba_tools_spark.operators.partitioning import fan_out
@@ -107,6 +121,25 @@ def _list_cids(version_dir: str) -> list[int]:
     )
 
 
+IVF_TABLES = IndexTables(
+    kind="IVF",
+    primary="lists",
+    meta_name=META_NAME,
+    root_meta=META_NAME,
+    # clustered by list before the partitioned write (the Iceberg
+    # write.distribution-mode=hash analog): an unclustered partitionBy
+    # write emits one file per (input task × cid) — measured 225 files
+    # for 447 KiB at gate SF — and every probe/forget/residual read
+    # pays the per-file open cost
+    layouts={"lists": Layout(partition_by="cid")},
+    # a replay re-assigns with the same stored centroids, so duplicate
+    # rows are identical per (cid, neighbor_id)
+    dedup_keys=lambda _: {"lists": ["cid", "neighbor_id"]},
+    row_id="neighbor_id",
+    manifest=lambda vd: {"cids": _list_cids(vd)},
+)
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -128,35 +161,23 @@ def build_ivf_index(
         "vec_col": vec_col,
         "centroids": cents,
     }
+    spark = corpus.sparkSession
     with writer_lock(path):
-        live = os.path.join(path, "lists")
-        heal(live)
+        heal_tables(path, IVF_TABLES)
         # backfill-resurrection guard, under the lock: a full rebuild
         # fed a pre-erasure corpus snapshot must not re-index
         # forgotten vectors (operators/indexio.py append_forget_ledger)
-        rows = filter_ledgered(rows, path, "neighbor_id")
-        target = init_versioned(live)
-        # cluster by list before the partitioned write (the Iceberg
-        # write.distribution-mode=hash analog — compact_ivf_index
-        # already publishes this one-file-per-cid layout): an
-        # unclustered partitionBy write emits one file per (input task
-        # × cid) — measured 225 files for 447 KiB at gate SF — and
-        # every probe/forget/residual read pays the per-file open cost
-        rows.repartition("cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(target)
+        rows = filter_ledgered(
+            rows, "neighbor_id", ledger=read_forget_ledger(spark, path)
+        )
         # the quantizer + cid manifest ride INSIDE the lists version
         # directory: the pointer flip publishes lists + centroids +
         # manifest in one atomic step, so a reader can never probe new
-        # lists with old centroids (indexio.write_version_meta /
-        # snapshot_meta)
-        meta = {**meta, "cids": _list_cids(target)}
-        write_version_meta(target, META_NAME, meta)
-        publish(live, target)
+        # lists with old centroids
+        meta, _ = write_versions(spark, path, IVF_TABLES, {"lists": rows}, meta)
         # root copy is informational only; readers use snapshot_meta
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
-    corpus.sparkSession.catalog.refreshByPath(live)
     return meta
 
 
@@ -176,11 +197,13 @@ def append_to_ivf_index(vectors: DataFrame, path: str) -> None:
     # The lock keeps this append out of any concurrent compaction's
     # snapshot→publish window (it would otherwise be silently dropped
     # with the superseded version directory).
+    spark = vectors.sparkSession
     with writer_lock(path):
+        snap = open_snapshot(path, IVF_TABLES)
         # the batch was assigned OUTSIDE the lock; a rebuild landing in
         # between re-trained the quantizer, and these assignments would
         # land in the wrong lists — fail loudly (caller re-assigns)
-        if read_ivf_meta(path)["centroids"] != m["centroids"]:
+        if snap.meta["centroids"] != m["centroids"]:
             raise RuntimeError(
                 f"IVF index at {path!r} was rebuilt while this batch was "
                 f"being assigned; re-assign and retry the append"
@@ -188,24 +211,15 @@ def append_to_ivf_index(vectors: DataFrame, path: str) -> None:
         # replay-resurrection guard: a redelivered epoch whose vectors
         # were forgotten since must not re-index them (forget wins —
         # operators/indexio.py append_forget_ledger); no-op without a
-        # ledger
-        rows = filter_ledgered(rows, path, "neighbor_id")
-        vd = current_version_dir(os.path.join(path, "lists"))
-        # clustered like build/compact: one file per cid per batch
-        rows.repartition("cid").write.mode("append").partitionBy("cid").parquet(vd)
-        # refresh the cid manifest in place (atomic temp+replace): the
-        # batch may have populated previously-empty lists. A reader
-        # racing this sees either manifest — the standard
+        # ledger. The append then refreshes the cid manifest in place:
+        # the batch may have populated previously-empty lists, and a
+        # reader racing it sees either manifest — the standard
         # parquet-append prefix visibility, now including the manifest.
-        write_version_meta(vd, META_NAME, {**m, "cids": _list_cids(vd)})
-    # Invalidate cached file listings: a query created after this
-    # append must never evaluate against a pre-append snapshot left in
-    # the shared file-status cache by an earlier query (the LSH index
-    # hit exactly this — see dedup/index.py _refresh).
-    vectors.sparkSession.catalog.refreshByPath(os.path.join(path, "lists"))
-    vectors.sparkSession.catalog.refreshByPath(
-        current_version_dir(os.path.join(path, "lists"))
-    )
+        append_tables(spark, path, IVF_TABLES, snap, {
+            "lists": filter_ledgered(
+                rows, "neighbor_id", ledger=read_forget_ledger(spark, path)
+            )
+        })
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> dict:
@@ -216,35 +230,8 @@ def compact_ivf_index(spark: SparkSession, path: str) -> dict:
     Publishes the lists as a new version behind one atomic pointer
     flip under the index writer lock (appends queue behind it).
     Returns {files_before, files_after, rows}."""
-    live = os.path.join(path, "lists")
     with writer_lock(path):
-        heal(live)
-        src = current_version_dir(live)
-        df = (
-            spark.read.parquet(src)
-            .dropDuplicates(["cid", "neighbor_id"])
-            # repartition BY the partition column: one task holds each
-            # cid -> one file per list directory after the write
-            .repartition("cid")
-        )
-        n_before = parquet_file_count(live)
-        target = init_versioned(live)
-        df.write.mode("overwrite").partitionBy("cid").parquet(target)
-        # quantizer unchanged by a compact, but every published version
-        # must be self-describing (snapshot_meta) with a fresh manifest
-        m = read_ivf_meta(path)
-        write_version_meta(target, META_NAME, {**m, "cids": _list_cids(target)})
-        rows = spark.read.parquet(target).count()
-        publish(live, target)
-        out = {
-            "files_before": n_before,
-            "files_after": parquet_file_count(live),
-            "rows": rows,
-        }
-        # same cadence folds the suppression ledger's per-forget files
-        compact_forget_ledger(spark, path)
-    spark.catalog.refreshByPath(live)
-    return out
+        return compact_tables(spark, path, IVF_TABLES)["lists"]
 
 
 def forget_from_ivf_index(
@@ -280,42 +267,11 @@ def forget_from_ivf_index(
     scala:2076-2092`). Documented GDPR trade: a reader whose listing
     predates the forget fails loudly and retries instead of finishing
     against retained bytes. Returns {rows_before, rows_removed,
-    rows_after}."""
-    live = os.path.join(path, "lists")
-    with writer_lock(path):
-        heal(live)
-        m = read_ivf_meta(path)
-        ids = F.broadcast(
-            forget_ids.select(
-                F.col(forget_ids.columns[0]).alias("_forget_id")
-            ).distinct()
-        )
-        src = spark.read.parquet(current_version_dir(live))
-        kept = src.join(
-            ids, src["neighbor_id"] == ids["_forget_id"], "left_anti"
-        )
-        n_before = src.count()
-        target = init_versioned(live)
-        # write_snapshot_table handles the forget-everything edge (an
-        # empty partitionBy write would publish an unreadable dir);
-        # rows_after counts the WRITTEN version (compact's pattern) so
-        # the anti-join executes exactly once
-        write_snapshot_table(kept, target, partition_by="cid")
-        n_after = spark.read.parquet(target).count()
-        write_version_meta(target, META_NAME, {**m, "cids": _list_cids(target)})
-        # ledger BEFORE the pointer flip (indexio ordering contract)
-        append_forget_ledger(ids, path, m["id_col"])
-        publish(live, target)
-        if erase:
-            vacuum_versions(live)
-        out = {
-            "rows_before": n_before,
-            "rows_removed": n_before - n_after,
-            "rows_after": n_after,
-        }
-    spark.catalog.refreshByPath(live)
-    spark.catalog.refreshByPath(current_version_dir(live))
-    return out
+    rows_after}. The caller's ``forget_ids`` lineage runs once — its
+    distinct id set is pinned for the call and released before
+    returning."""
+    with pinned_forget_ids(forget_ids) as ids, writer_lock(path):
+        return forget_rows(spark, path, IVF_TABLES, ids, erase=erase)["lists"]
 
 
 def query_ivf_index(
@@ -348,7 +304,8 @@ def query_ivf_index(
     # below always match the exact lists tree being scanned — a rebuild
     # racing this query flips both or neither. Retention keeps this
     # snapshot complete across one subsequent compact/rebuild.
-    lists_dir, m = snapshot_meta(os.path.join(path, "lists"), META_NAME, path)
+    snap = open_snapshot(path, IVF_TABLES)
+    m = snap.meta
     cents = np.asarray(m["centroids"])
     assignN = nearest_centroids_udf(cents, nprobe)
     q = queries.select(
@@ -363,29 +320,25 @@ def query_ivf_index(
     # yet) are simply absent from it. isdir fallback for legacy indexes
     # whose meta predates the manifest.
     present = m.get("cids")
+    lists_dir = snap.dirs["lists"]
     if present is not None:
         ps = set(present)
-        probe_dirs = [
-            os.path.join(lists_dir, f"cid={c}") for c in probed if c in ps
-        ]
+        probe_parts = [f"cid={c}" for c in probed if c in ps]
     else:
-        probe_dirs = [
-            d
-            for d in (os.path.join(lists_dir, f"cid={c}") for c in probed)
-            if os.path.isdir(d)
+        probe_parts = [
+            f"cid={c}" for c in probed
+            if os.path.isdir(os.path.join(lists_dir, f"cid={c}"))
         ]
-    if not probe_dirs:
+    if not probe_parts:
         # every probed list is empty — correctness fallback, never the
         # hot path (a trained quantizer's probed lists hold vectors)
-        lists = spark.read.parquet(lists_dir).where(F.lit(False))
+        lists = read_table(spark, snap, "lists").where(F.lit(False))
     else:
         # the isin filter is a no-op over the targeted directories but
         # keeps the probe set visible in the plan as PartitionFilters
         # (the pruning contract the tests pin)
-        lists = (
-            spark.read.option("basePath", lists_dir)
-            .parquet(*probe_dirs)
-            .where(F.col("cid").isin(probed))
+        lists = read_table(spark, snap, "lists", parts=probe_parts).where(
+            F.col("cid").isin(probed)
         )
     scored = lists.join(q, "cid").select(
         "query_id", "neighbor_id", F.round(pair_dot("vec", "_qv"), 9).alias("sim")
@@ -416,13 +369,13 @@ def ivf_drift_report(spark: SparkSession, path: str) -> DataFrame:
 
     # snapshot resolve: centroids always describe the exact lists tree
     # being scanned (co-published behind one pointer flip)
-    lists_dir, m = snapshot_meta(os.path.join(path, "lists"), META_NAME, path)
+    snap = open_snapshot(path, IVF_TABLES)
     cents = []
-    for cid, c in enumerate(m["centroids"]):
+    for cid, c in enumerate(snap.meta["centroids"]):
         norm = math.sqrt(sum(x * x for x in c)) or 1.0
         cents.append((cid, [x / norm for x in c]))
     cdf = spark.createDataFrame(cents, "cid int, _cent array<double>")
-    lists = spark.read.parquet(lists_dir)
+    lists = read_table(spark, snap, "lists")
     return (
         lists.join(F.broadcast(cdf), "cid")
         .select("cid", pair_dot("vec", "_cent").alias("_sim"))
@@ -457,17 +410,13 @@ def rebuild_ivf_index(
         m = read_ivf_meta(path)
         n_c = n_centroids or m["n_centroids"]
         sd = seed if seed is not None else m["seed"]
-        heal(live)
+        heal_tables(path, IVF_TABLES)
         # pin the deduped stored vectors: both the quantizer training
         # sample and the re-assignment write consume them — without the
         # pin the dropDuplicates shuffle + scan runs twice per rebuild
         # (indexio.pinned_for_write)
-        from lakehouse_dba_tools_spark.operators.indexio import (
-            pinned_for_write,
-        )
-
         with pinned_for_write(
-            spark.read.parquet(current_version_dir(live))
+            read_table(spark, open_snapshot(path, IVF_TABLES), "lists")
             .dropDuplicates(["cid", "neighbor_id"])
             .select(F.col("neighbor_id").alias(m["id_col"]),
                     F.col("vec").alias(m["vec_col"]))
@@ -495,6 +444,5 @@ def rebuild_ivf_index(
         # root copy is informational only; readers use snapshot_meta
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
-    spark.catalog.refreshByPath(live)
-    spark.catalog.refreshByPath(current_version_dir(live))
+        refresh_listings(spark, path, IVF_TABLES.names)
     return meta

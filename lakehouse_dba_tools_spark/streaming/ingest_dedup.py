@@ -74,7 +74,10 @@ def stream_ingest_dedup(
     runs query-then-append inside ``foreachBatch``.
     """
     from lakehouse_dba_tools_spark.dedup.index import build_lsh_index
-    from lakehouse_dba_tools_spark.streaming.replay import replay_in_batches
+    from lakehouse_dba_tools_spark.streaming.replay import (
+        local_frame,
+        replay_in_batches,
+    )
 
     idx = tempfile.mkdtemp(prefix="ingest_idx_")
     try:
@@ -89,10 +92,9 @@ def stream_ingest_dedup(
             ),
             sink=make_query_then_append_sink(spark, idx, threshold, found),
         )
-        out_schema = "id_a long, id_b long, jaccard double"
-        rows = [r for epoch in sorted(found) for r in found[epoch]]
-        if rows:
-            return spark.createDataFrame(rows, out_schema).orderBy("id_a", "id_b")
-        return spark.createDataFrame([], out_schema)
+        # (id_a, id_b) is unique across epochs (id_a is in its epoch's
+        # batch), so tuple order is the (id_a, id_b) order
+        rows = sorted(r for epoch in found.values() for r in epoch)
+        return local_frame(spark, rows, "id_a long, id_b long, jaccard double")
     finally:
         shutil.rmtree(idx, ignore_errors=True)

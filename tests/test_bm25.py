@@ -244,8 +244,9 @@ def test_postings_meta_names_its_doclens_version(spark, tmp_path):
     expose) must not change a query's stats or scores."""
     import os
 
+    from lakehouse_dba_tools_spark.operators.indexio import open_snapshot
     from lakehouse_dba_tools_spark.similarity.bm25 import (
-        _postings_snapshot,
+        BM25_TABLES,
         build_postings_index,
         query_postings_index,
     )
@@ -256,7 +257,7 @@ def test_postings_meta_names_its_doclens_version(spark, tmp_path):
     )
     path = str(tmp_path / "bm25")
     build_postings_index(docs, path)
-    p_dir, d_dir = _postings_snapshot(path)
+    p_dir, d_dir = open_snapshot(path, BM25_TABLES).dirs.values()
     assert os.path.basename(d_dir) == "doclens.v0"
     want = [tuple(r) for r in query_postings_index(spark, path, "spark w3", k=5).collect()]
 
@@ -269,7 +270,7 @@ def test_postings_meta_names_its_doclens_version(spark, tmp_path):
     os.symlink("doclens.v9", live)
     spark.catalog.refreshByPath(live)
 
-    assert _postings_snapshot(path)[1].endswith("doclens.v0")
+    assert open_snapshot(path, BM25_TABLES).dirs["doclens"].endswith("doclens.v0")
     got = [tuple(r) for r in query_postings_index(spark, path, "spark w3", k=5).collect()]
     assert got == want  # the meta-named version answered, not the pointer
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_dba_tools_spark.maintenance.skew import heavy_hitters, key_skew_profile
@@ -264,9 +265,10 @@ def test_bm25_forget_equals_fresh_build_tiers_and_queries(spark, sf_dir, tmp_pat
     """Post-forget postings/doclens AND the refreshed champions +
     block-max tiers == a fresh build from the filtered corpus; queries
     in all three modes answer identically; replay is a no-op."""
+    from lakehouse_dba_tools_spark.operators.indexio import open_snapshot
     from lakehouse_dba_tools_spark.similarity.bm25 import (
+        BM25_TABLES,
         _champ_snapshot,
-        _postings_snapshot,
         _wand_snapshot,
         build_postings_index,
         forget_from_postings_index,
@@ -284,8 +286,8 @@ def test_bm25_forget_equals_fresh_build_tiers_and_queries(spark, sf_dir, tmp_pat
     assert rep["postings"]["rows_removed"] > 0
     build_postings_index(kept_docs, b, champion_n=n_kept + 10, wand_buckets=8)
 
-    pa, da = _postings_snapshot(a)
-    pb, db = _postings_snapshot(b)
+    pa, da = open_snapshot(a, BM25_TABLES).dirs.values()
+    pb, db = open_snapshot(b, BM25_TABLES).dirs.values()
     assert _rowset(spark.read.parquet(pa)) == _rowset(spark.read.parquet(pb))
     assert _rowset(spark.read.parquet(da)) == _rowset(spark.read.parquet(db))
     ca, cma = _champ_snapshot(a)
@@ -397,15 +399,18 @@ def test_forget_everything_leaves_readable_empty_indexes(spark, sf_dir, tmp_path
     """Tenant-offboarding edge: a forget set covering EVERY indexed row
     must publish readable zero-row tables, not the unreadable
     _SUCCESS-only directory an empty partitionBy write produces
-    (indexio.write_snapshot_table guards this in one place for all
+    (indexio.write_table guards this in one place for all
     three families)."""
     from lakehouse_dba_tools_spark.dedup.index import (
         build_lsh_index,
         forget_from_lsh_index,
     )
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
+    from lakehouse_dba_tools_spark.operators.indexio import (
+        current_version_dir,
+        open_snapshot,
+    )
     from lakehouse_dba_tools_spark.similarity.bm25 import (
-        _postings_snapshot,
+        BM25_TABLES,
         build_postings_index,
         forget_from_postings_index,
     )
@@ -432,7 +437,7 @@ def test_forget_everything_leaves_readable_empty_indexes(spark, sf_dir, tmp_path
 
     rep = forget_from_postings_index(spark, bm, docs.select("doc_id"))
     assert rep["postings"]["rows_after"] == 0
-    p_dir, d_dir = _postings_snapshot(bm)
+    p_dir, d_dir = open_snapshot(bm, BM25_TABLES).dirs.values()
     assert spark.read.parquet(p_dir).count() == 0
     assert spark.read.parquet(d_dir).count() == 0
 
@@ -594,10 +599,13 @@ def test_tier_stamp_detects_crashed_forget_and_writers_repair(
     repairs the tiers."""
     import pytest
 
-    from lakehouse_dba_tools_spark.operators.indexio import writer_lock
+    from lakehouse_dba_tools_spark.operators.indexio import (
+        open_snapshot,
+        writer_lock,
+    )
     from lakehouse_dba_tools_spark.similarity.bm25 import (
+        BM25_TABLES,
         _champ_snapshot,
-        _postings_snapshot,
         _wand_snapshot,
         _write_postings,
         append_to_postings_index,
@@ -613,7 +621,7 @@ def test_tier_stamp_detects_crashed_forget_and_writers_repair(
     survivors = docs.filter(F.col("doc_id") % 3 != 0)
     with writer_lock(path):
         _write_postings(survivors, path, "text", "doc_id", fresh=True)
-    cur = os.path.basename(_postings_snapshot(path)[0])
+    cur = os.path.basename(open_snapshot(path, BM25_TABLES).dirs["postings"])
     assert _champ_snapshot(path)[1]["postings_dir"] != cur
     for mode in ("champions", "wand"):
         with pytest.raises(RuntimeError, match="derived from postings version"):
@@ -644,9 +652,12 @@ def test_replayed_ingest_cannot_resurrect_forgotten_docs(spark, sf_dir, tmp_path
         forget_from_lsh_index,
         ingest_batch,
     )
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
+    from lakehouse_dba_tools_spark.operators.indexio import (
+        current_version_dir,
+        open_snapshot,
+    )
     from lakehouse_dba_tools_spark.similarity.bm25 import (
-        _postings_snapshot,
+        BM25_TABLES,
         append_to_postings_index,
         build_postings_index,
         forget_from_postings_index,
@@ -697,7 +708,7 @@ def test_replayed_ingest_cannot_resurrect_forgotten_docs(spark, sf_dir, tmp_path
     append_to_postings_index(batch, bm)                     # original epoch
     forget_from_postings_index(spark, bm, forget)
     append_to_postings_index(batch, bm)                     # replayed epoch
-    p_dir, d_dir = _postings_snapshot(bm)
+    p_dir, d_dir = open_snapshot(bm, BM25_TABLES).dirs.values()
     for d in (p_dir, d_dir):
         got = (
             spark.read.parquet(d)
@@ -785,12 +796,13 @@ def test_builds_honor_ledger_and_reconsent_reopens(spark, sf_dir, tmp_path):
     )
     from lakehouse_dba_tools_spark.operators.indexio import (
         current_version_dir,
+        open_snapshot,
         read_forget_ledger,
         remove_from_forget_ledger,
         writer_lock,
     )
     from lakehouse_dba_tools_spark.similarity.bm25 import (
-        _postings_snapshot,
+        BM25_TABLES,
         build_postings_index,
         forget_from_postings_index,
     )
@@ -820,7 +832,7 @@ def test_builds_honor_ledger_and_reconsent_reopens(spark, sf_dir, tmp_path):
     build_ivf_index(emb, ivf, n_centroids=4)
     bands = spark.read.parquet(current_version_dir(f"{lsh}/bands"))
     assert bands.filter(F.col("doc_id").isin(list(fids))).count() == 0
-    p_dir, _ = _postings_snapshot(bm)
+    p_dir, _ = open_snapshot(bm, BM25_TABLES).dirs.values()
     assert (
         spark.read.parquet(p_dir).filter(F.col("doc_id").isin(list(fids))).count()
         == 0
@@ -941,22 +953,85 @@ def test_ledger_before_publish_crash_direction_is_harmless(
         assert _rowset(got) == _rowset(want), t
 
 
-def test_lsh_forget_evaluates_forget_ids_once(spark, tmp_path):
-    """``forget_from_lsh_index`` pins its distinct id set: both table
-    rewrites and the ledger append read the pin, so each forget-id row
-    runs the caller's lineage once. Counts come from parquet footers."""
+def _family_index(spark, family: str, path: str, ids):
+    """A small ``family`` index over ``ids`` at ``path``. Returns its
+    forget verb, an ``append(ids)`` that adds rows through the family's
+    ingest verb, and the id column the forget set names."""
     from lakehouse_dba_tools_spark.dedup.index import (
         build_lsh_index,
         forget_from_lsh_index,
+        ingest_batch,
     )
+    from lakehouse_dba_tools_spark.similarity.bm25 import (
+        append_to_postings_index,
+        build_postings_index,
+        forget_from_postings_index,
+    )
+    from lakehouse_dba_tools_spark.similarity.index import (
+        append_to_ivf_index,
+        build_ivf_index,
+        forget_from_ivf_index,
+    )
+
+    def docs(ids):
+        return spark.createDataFrame(
+            [(i, f"document {i} talks about topic {i % 3} in words {i * 7}") for i in ids],
+            "doc_id long, text string",
+        )
+
+    def vecs(ids):
+        return spark.createDataFrame(
+            [(i, [float(i % 4), float(i % 3), 1.0 + i / 10]) for i in ids],
+            "vec_id long, embedding array<double>",
+        )
+
+    if family == "lsh":
+        build_lsh_index(docs(ids), path, bands=8)
+        return (
+            forget_from_lsh_index,
+            lambda ids: ingest_batch(spark, docs(ids), path).collect(),
+            "doc_id",
+        )
+    if family == "bm25":
+        build_postings_index(docs(ids), path)
+        return (
+            forget_from_postings_index,
+            lambda ids: append_to_postings_index(docs(ids), path),
+            "doc_id",
+        )
+    build_ivf_index(vecs(ids), path, n_centroids=2)
+    return (
+        forget_from_ivf_index,
+        lambda ids: append_to_ivf_index(vecs(ids), path),
+        "vec_id",
+    )
+
+
+def _removed(before: int, removed: int) -> dict:
+    return {"rows_before": before, "rows_removed": removed, "rows_after": before - removed}
+
+
+@pytest.mark.parametrize(
+    "family, report",
+    [
+        pytest.param(
+            "lsh", {"shash": _removed(12, 3), "bands": _removed(96, 24)}, id="lsh"
+        ),
+        # postings: one row per distinct term of each doc (doc 2 has 8)
+        pytest.param(
+            "bm25", {"doclens": _removed(12, 3), "postings": _removed(104, 26)}, id="bm25"
+        ),
+        pytest.param("ivf", _removed(12, 3), id="ivf"),
+    ],
+)
+def test_forget_evaluates_forget_ids_once(spark, tmp_path, family, report):
+    """Every family's forget pins its distinct id set: all table
+    rewrites and the ledger append read the pin, so each forget-id row
+    runs the caller's lineage once. Counts come from parquet footers."""
     from lakehouse_dba_tools_spark.operators.indexio import read_forget_ledger
 
-    docs = spark.createDataFrame(
-        [(i, f"document {i} talks about topic {i % 3} in words {i * 7}") for i in range(12)],
-        "doc_id long, text string",
-    )
     path = str(tmp_path / "idx")
-    build_lsh_index(docs, path, bands=8)
+    forget_verb, _, id_col = _family_index(spark, family, path, range(12))
     evaluated = spark.sparkContext.accumulator(0)
 
     def keep(doc_id):
@@ -964,12 +1039,62 @@ def test_lsh_forget_evaluates_forget_ids_once(spark, tmp_path):
         return True
 
     ids = [2, 5, 5, 9]
-    forget = spark.createDataFrame([(i,) for i in ids], "doc_id long").filter(
-        F.udf(keep, "boolean")("doc_id")
+    forget = spark.createDataFrame([(i,) for i in ids], f"{id_col} long").filter(
+        F.udf(keep, "boolean")(id_col)
     )
-    rep = forget_from_lsh_index(spark, path, forget)
+    rep = forget_verb(spark, path, forget)
     assert evaluated.value == len(ids)
-    assert rep["shash"] == {"rows_before": 12, "rows_removed": 3, "rows_after": 9}
-    assert rep["bands"] == {"rows_before": 96, "rows_removed": 24, "rows_after": 72}
+    assert rep == report
     ledger = read_forget_ledger(spark, path)
     assert sorted(r[0] for r in ledger.collect()) == [2, 5, 9]
+
+
+@pytest.mark.parametrize(
+    "family, bound",
+    [pytest.param("lsh", 2, id="lsh"), pytest.param("bm25", 1, id="bm25"),
+     pytest.param("ivf", 1, id="ivf")],
+)
+def test_ledger_adds_at_most_bound_jobs_to_an_append(spark, tmp_path, family, bound):
+    """After a forget, every append filters its rows against the
+    suppression ledger. The ledger is read on the driver once per lock
+    scope and a small one filters as a literal IN-set, so an append
+    with a ledger present starts at most ``bound`` more Spark jobs than
+    the same-sized append before the forget."""
+    path = str(tmp_path / "idx")
+    forget_verb, append, id_col = _family_index(spark, family, path, range(40))
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs(fn):
+        before = sc.dagScheduler().numTotalJobs()
+        fn()
+        return sc.dagScheduler().numTotalJobs() - before
+
+    append(range(100, 110))  # first append warms the session's caches
+    plain = jobs(lambda: append(range(200, 210)))
+    forget_verb(
+        spark, path, spark.createDataFrame([(3,), (7,)], f"{id_col} long")
+    )
+    ledgered = jobs(lambda: append(range(300, 310)))
+    assert ledgered - plain <= bound, (plain, ledgered)
+
+
+def test_filter_ledgered_inline_and_broadcast_paths_agree(spark, tmp_path, monkeypatch):
+    """A small ledger filters as a literal IN-set and one larger than
+    ``LEDGER_INLINE_MAX`` as a broadcast anti-join: both drop exactly
+    the ledgered ids and keep a null id."""
+    from lakehouse_dba_tools_spark.operators import indexio
+
+    path = str(tmp_path / "idx")
+    indexio.append_forget_ledger(
+        spark.createDataFrame([(2,), (5,), (5,)], "doc_id long"), path, "doc_id"
+    )
+    ledger = indexio.read_forget_ledger(spark, path)
+    df = spark.createDataFrame([(1,), (2,), (None,), (5,), (6,)], "doc_id long")
+
+    def kept():
+        out = indexio.filter_ledgered(df, "doc_id", ledger=ledger).collect()
+        return sorted((r[0] for r in out), key=lambda x: (x is not None, x or 0))
+
+    assert kept() == [None, 1, 6]
+    monkeypatch.setattr(indexio, "LEDGER_INLINE_MAX", 1)
+    assert kept() == [None, 1, 6]

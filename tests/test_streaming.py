@@ -197,7 +197,10 @@ def test_ingest_dedup_sink_epoch_replay_idempotent(spark, tmp_path):
 def test_replay_in_batches_rejects_null_ids(spark):
     """A null id falls in no ``id // batch_size`` slice: the replay must
     name the column and the null count instead of silently seeding and
-    replaying only the non-null rows."""
+    replaying only the non-null rows. The seed callback runs on the
+    caller's thread."""
+    import threading
+
     df = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(10)] + [(None, "orphan")],
         "doc_id long, text string",
@@ -205,6 +208,7 @@ def test_replay_in_batches_rejects_null_ids(spark):
     seen = []
 
     def seed(batch):
+        assert threading.current_thread() is threading.main_thread()
         seen.append(batch.count())
 
     def sink(batch, _epoch):

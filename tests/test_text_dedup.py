@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_dba_tools_spark.dedup.exact import content_groups, drop_exact_duplicates
@@ -963,57 +964,141 @@ def test_ingest_batch_evaluates_docs_once(spark, tmp_path):
     assert "LocalRelation" in pairs._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_lsh_legacy_meta_without_schemas_matches(spark, tmp_path):
-    """An index whose version meta predates the recorded schemas reads
-    its tables by inference, and every verb answers as it does on an
-    index that keeps them."""
-    import json
-    import os
-
+def _legacy_family(spark, family):
+    """(IndexTables, build(path), lifecycle(path)) for one index family
+    over small fixed inputs; the lifecycle queries, appends, compacts,
+    forgets and queries again, returning every answer and report."""
     from lakehouse_dba_tools_spark.dedup.index import (
-        META_NAME,
+        LSH_TABLES,
         build_lsh_index,
         compact_lsh_index,
         forget_from_lsh_index,
         ingest_batch,
         query_lsh_index,
-        read_lsh_meta,
     )
-    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
+    from lakehouse_dba_tools_spark.similarity.bm25 import (
+        BM25_TABLES,
+        append_to_postings_index,
+        build_postings_index,
+        compact_postings_index,
+        forget_from_postings_index,
+        query_postings_index,
+    )
+    from lakehouse_dba_tools_spark.similarity.index import (
+        IVF_TABLES,
+        append_to_ivf_index,
+        build_ivf_index,
+        compact_ivf_index,
+        forget_from_ivf_index,
+        query_ivf_index,
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
 
     schema = "doc_id long, text string"
     corpus = spark.createDataFrame(_NEAR_DUP_CORPUS, schema)
     batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
-    probe = spark.createDataFrame(
-        [(20, _NEAR_DUP_BATCH[0][1]), (21, _NEAR_DUP_CORPUS[2][1])], schema
-    )
     forget = spark.createDataFrame([(3,), (11,)], "doc_id long")
+    if family == "lsh":
+        probe = spark.createDataFrame(
+            [(20, _NEAR_DUP_BATCH[0][1]), (21, _NEAR_DUP_CORPUS[2][1])], schema
+        )
 
-    def pairs(df):
-        return sorted(tuple(r) for r in df.collect())
+        def lifecycle(path):
+            return (
+                rows(query_lsh_index(spark, probe, path)),
+                rows(ingest_batch(spark, batch, path)),
+                compact_lsh_index(spark, path),
+                forget_from_lsh_index(spark, path, forget),
+                rows(query_lsh_index(spark, probe, path)),
+            )
+
+        return LSH_TABLES, lambda path: build_lsh_index(corpus, path), lifecycle
+    if family == "bm25":
+
+        def queries(path):
+            return [
+                rows(query_postings_index(spark, path, "parquet row counts spark", k=3, mode=mode))
+                for mode in ("exact", "champions", "wand")
+            ]
+
+        def lifecycle(path):
+            return (
+                queries(path),
+                append_to_postings_index(batch, path),
+                compact_postings_index(spark, path),
+                forget_from_postings_index(spark, path, forget),
+                queries(path),
+            )
+
+        return (
+            BM25_TABLES,
+            lambda path: build_postings_index(corpus, path, champion_n=2, wand_buckets=2),
+            lifecycle,
+        )
+    vschema = "vec_id long, embedding array<double>"
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), float(i % 3), 1.0 + i / 10]) for i in range(12)], vschema
+    )
+    more = spark.createDataFrame([(i, [1.0, float(i % 2), 0.5]) for i in (20, 21)], vschema)
+    probe = more.withColumnRenamed("vec_id", "query_id")
 
     def lifecycle(path):
         return (
-            pairs(query_lsh_index(spark, probe, path)),
-            pairs(ingest_batch(spark, batch, path)),
-            compact_lsh_index(spark, path),
-            forget_from_lsh_index(spark, path, forget),
-            pairs(query_lsh_index(spark, probe, path)),
+            rows(query_ivf_index(spark, probe, path, k=3, nprobe=2)),
+            append_to_ivf_index(more, path),
+            compact_ivf_index(spark, path),
+            forget_from_ivf_index(
+                spark, path, forget.withColumnRenamed("doc_id", "vec_id")
+            ),
+            rows(query_ivf_index(spark, probe, path, k=3, nprobe=2)),
         )
 
+    return IVF_TABLES, lambda path: build_ivf_index(vecs, path, n_centroids=2), lifecycle
+
+
+@pytest.mark.parametrize("family", ["lsh", "bm25", "ivf"])
+def test_legacy_meta_without_schemas_matches(spark, tmp_path, family):
+    """An index whose version meta predates the recorded schemas reads
+    its tables by inference, and every verb answers as it does on an
+    index that keeps them: the same query answers and the same compact
+    and forget reports. The kept index's lifecycle starts fewer jobs,
+    because none of its table reads infers a schema."""
+    import json
+    import os
+
+    from lakehouse_dba_tools_spark.operators.indexio import (
+        current_version_dir,
+        open_snapshot,
+    )
+
+    tables, build, lifecycle = _legacy_family(spark, family)
     kept, legacy = str(tmp_path / "kept"), str(tmp_path / "legacy")
-    build_lsh_index(corpus, kept)
-    build_lsh_index(corpus, legacy)
+    build(kept)
+    build(legacy)
     for meta_path in (
-        os.path.join(current_version_dir(os.path.join(legacy, "bands")), META_NAME),
-        os.path.join(legacy, META_NAME),
+        os.path.join(current_version_dir(os.path.join(legacy, tables.primary)), tables.meta_name),
+        os.path.join(legacy, tables.root_meta),
     ):
         with open(meta_path) as fh:
             m = json.load(fh)
         m.pop("schemas", None)
         with open(meta_path, "w") as fh:
             json.dump(m, fh)
-    assert "schemas" not in read_lsh_meta(legacy)
-    want = lifecycle(kept)
-    assert want[0] == [(20, 1, 0.833333), (21, 5, 1.0)]
-    assert lifecycle(legacy) == want
+    assert "schemas" in open_snapshot(kept, tables).meta
+    assert "schemas" not in open_snapshot(legacy, tables).meta
+    sc = spark.sparkContext._jsc.sc()
+    jobs = {}
+
+    def counted(path):
+        before = sc.dagScheduler().numTotalJobs()
+        out = lifecycle(path)
+        jobs[path] = sc.dagScheduler().numTotalJobs() - before
+        return out
+
+    want = counted(kept)
+    if family == "lsh":
+        assert want[0] == [(20, 1, 0.833333), (21, 5, 1.0)]
+    assert counted(legacy) == want
+    assert jobs[kept] < jobs[legacy]
