@@ -98,7 +98,6 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     read_table,
     reader_schema,
     refresh_listings,
-    snapshot_meta,
     write_version_meta,
     write_versions,
     writer_lock,
@@ -227,7 +226,7 @@ def build_lsh_index(
             meta,
         )
         # root-level copy is informational only (humans / legacy
-        # tooling); every reader goes through snapshot_meta
+        # tooling); every reader goes through open_snapshot
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
     pinned.unpersist()
@@ -237,7 +236,7 @@ def build_lsh_index(
 def read_lsh_meta(path: str) -> dict:
     """Parameters of the CURRENT published snapshot (resolved through
     the bands pointer — atomically coupled with the band tables)."""
-    return snapshot_meta(os.path.join(path, "bands"), META_NAME, path)[1]
+    return open_snapshot(path, LSH_TABLES).meta
 
 
 def append_to_lsh_index(docs: DataFrame, path: str) -> None:
@@ -671,7 +670,7 @@ def rebuild_lsh_index(
         write_version_meta(bands_target, META_NAME, meta)
         publish(sh_live, sh_target)
         publish(bands_live, bands_target)
-        # root copy is informational only; readers use snapshot_meta
+        # root copy is informational only; readers use open_snapshot
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
         refresh_listings(spark, path, LSH_TABLES.names)

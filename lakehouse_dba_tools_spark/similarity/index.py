@@ -74,7 +74,6 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     read_forget_ledger,
     read_table,
     refresh_listings,
-    snapshot_meta,
     write_version_meta,
     write_versions,
     writer_lock,
@@ -175,7 +174,7 @@ def build_ivf_index(
         # manifest in one atomic step, so a reader can never probe new
         # lists with old centroids
         meta, _ = write_versions(spark, path, IVF_TABLES, {"lists": rows}, meta)
-        # root copy is informational only; readers use snapshot_meta
+        # root copy is informational only; readers use open_snapshot
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
     return meta
@@ -184,7 +183,7 @@ def build_ivf_index(
 def read_ivf_meta(path: str) -> dict:
     """Quantizer + params of the CURRENT published snapshot (resolved
     through the lists pointer — atomically coupled with the lists)."""
-    return snapshot_meta(os.path.join(path, "lists"), META_NAME, path)[1]
+    return open_snapshot(path, IVF_TABLES).meta
 
 
 def append_to_ivf_index(vectors: DataFrame, path: str) -> None:
@@ -300,7 +299,7 @@ def query_ivf_index(
     batch's own ids reproduces the original epoch's result instead of
     returning same-batch neighbors."""
     # Resolve the snapshot ONCE: centroids and the lists directory are
-    # co-published (indexio.snapshot_meta), so the probe assignments
+    # co-published (indexio.open_snapshot), so the probe assignments
     # below always match the exact lists tree being scanned — a rebuild
     # racing this query flips both or neither. Retention keeps this
     # snapshot complete across one subsequent compact/rebuild.
@@ -441,7 +440,7 @@ def rebuild_ivf_index(
         # versa); it sees one complete snapshot or the other
         write_version_meta(target, META_NAME, meta)
         publish(live, target)
-        # root copy is informational only; readers use snapshot_meta
+        # root copy is informational only; readers use open_snapshot
         with open(os.path.join(path, META_NAME), "w") as fh:
             json.dump(meta, fh)
         refresh_listings(spark, path, IVF_TABLES.names)

@@ -1078,23 +1078,27 @@ def test_ledger_adds_at_most_bound_jobs_to_an_append(spark, tmp_path, family, bo
     assert ledgered - plain <= bound, (plain, ledgered)
 
 
-def test_filter_ledgered_inline_and_broadcast_paths_agree(spark, tmp_path, monkeypatch):
-    """A small ledger filters as a literal IN-set and one larger than
-    ``LEDGER_INLINE_MAX`` as a broadcast anti-join: both drop exactly
-    the ledgered ids and keep a null id."""
+def test_filter_ledgered_inline_and_broadcast_paths_agree(spark, tmp_path):
+    """A ledger of at most ``LEDGER_INLINE_MAX`` ids filters as a
+    literal IN-set and a larger one as a broadcast anti-join: both
+    drop exactly the ledgered ids and keep a null id."""
     from lakehouse_dba_tools_spark.operators import indexio
 
     path = str(tmp_path / "idx")
-    indexio.append_forget_ledger(
-        spark.createDataFrame([(2,), (5,), (5,)], "doc_id long"), path, "doc_id"
-    )
-    ledger = indexio.read_forget_ledger(spark, path)
     df = spark.createDataFrame([(1,), (2,), (None,), (5,), (6,)], "doc_id long")
 
     def kept():
-        out = indexio.filter_ledgered(df, "doc_id", ledger=ledger).collect()
-        return sorted((r[0] for r in out), key=lambda x: (x is not None, x or 0))
+        ledger = indexio.read_forget_ledger(spark, path)
+        out = indexio.filter_ledgered(df, "doc_id", ledger=ledger)
+        anti = "LeftAnti" in out._jdf.queryExecution().optimizedPlan().toString()
+        ids = sorted((r[0] for r in out.collect()), key=lambda x: (x is not None, x or 0))
+        return anti, ids
 
-    assert kept() == [None, 1, 6]
-    monkeypatch.setattr(indexio, "LEDGER_INLINE_MAX", 1)
-    assert kept() == [None, 1, 6]
+    indexio.append_forget_ledger(
+        spark.createDataFrame([(2,), (5,), (5,)], "doc_id long"), path, "doc_id"
+    )
+    assert kept() == (False, [None, 1, 6])
+    # ids none of df's rows carry, enough to pass the inline limit
+    n = indexio.LEDGER_INLINE_MAX
+    indexio.append_forget_ledger(spark.range(10**6, 10**6 + n), path, "doc_id")
+    assert kept() == (True, [None, 1, 6])
