@@ -118,7 +118,6 @@ def forget_from_indexes(
     ivf_path: str | None = None,
     vector_ids: DataFrame | None = None,
     erase: bool = False,
-    assume_deduped: bool = False,
 ) -> DataFrame:
     """Extend the forget cascade into the PERSISTED INDEX family — the
     round-11 verdict's one structural 100 TB gap: `cascade_delete`
@@ -154,13 +153,7 @@ def forget_from_indexes(
 
     Scale shape: the forget set is broadcast into every anti-join; the
     only full-table work is the rewrite each index pays anyway on its
-    compact cadence. Idempotent end-to-end (each verb is).
-
-    ``assume_deduped`` passes through to the BM25 verb's tier
-    refreshes (see ``forget_from_postings_index``): True only when the
-    indexes have seen no un-compacted appends since build/compact —
-    the build-then-forget audit shape — which lets each tier refresh
-    skip its full postings+doclens dedup shuffle."""
+    compact cadence. Idempotent end-to-end (each verb is)."""
     from lakehouse_dba_tools_spark.dedup.index import forget_from_lsh_index
     from lakehouse_dba_tools_spark.similarity.bm25 import (
         forget_from_postings_index,
@@ -191,8 +184,7 @@ def forget_from_indexes(
     if bm25_path is not None:
         thunks.append(
             lambda: forget_from_postings_index(
-                spark, bm25_path, forget_ids, erase=erase,
-                assume_deduped=assume_deduped,
+                spark, bm25_path, forget_ids, erase=erase
             )
         )
         kinds.append("bm25")

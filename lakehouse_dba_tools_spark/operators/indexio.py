@@ -62,7 +62,8 @@ build, compact and forget goes through the same three parts:
 - ``write_versions`` writes every table's next version (overlapped
   across tables), records their schemas, counts their rows from the
   parquet footers (a driver-side read, no job), writes the primary's
-  version meta naming the secondary version, appends the forget
+  version meta naming the secondary version (with the counts and a
+  ``dup_free`` flag, see ``is_dup_free``), appends the forget
   ledger (forget only — BEFORE any pointer flip: a crash between the
   two leaves a harmless ledger entry, the reverse order would leave a
   published forget a replay could undo), publishes the secondary and
@@ -560,15 +561,20 @@ def pinned_for_write(*dfs):
     each is written to disk immediately afterwards anyway; the pin
     trades one transient spillable copy for a full recompute of the
     lineage (at 100 TB: a second tokenize+shuffle pass over the batch).
+
+    A frame the caller has pinned already is used as it is and left
+    pinned on exit, so a nested pin never releases an outer one.
     """
     from pyspark import StorageLevel
 
-    ps = [d.persist(StorageLevel.MEMORY_AND_DISK) for d in dfs]
+    new = [d for d in dfs if not d.is_cached]
+    for d in new:
+        d.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        yield ps[0] if len(ps) == 1 else ps
+        yield dfs[0] if len(dfs) == 1 else list(dfs)
     finally:
-        for p in ps:
-            p.unpersist()
+        for d in new:
+            d.unpersist()
 
 
 def overlap_jobs(*thunks, max_in_flight: int = 4):
@@ -621,12 +627,12 @@ def overlap_jobs(*thunks, max_in_flight: int = 4):
 @dataclass(frozen=True)
 class Layout:
     """How one index table is written: clustered into one directory per
-    ``partition_by`` value, range-partitioned and sorted on ``range_by``
-    (parquet row-group min/max on the sort key become a skip index),
-    or neither."""
+    ``partition_by`` value, range-partitioned and sorted on the
+    ``range_by`` columns (parquet row-group min/max on the sort key
+    become a skip index), or neither."""
 
     partition_by: str | None = None
-    range_by: str | None = None
+    range_by: tuple[str, ...] = ()
 
 
 def write_table(df, target: str, layout: Layout, append: bool = False,
@@ -657,10 +663,10 @@ def write_table(df, target: str, layout: Layout, append: bool = False,
         df.repartition(col).write.mode(mode).partitionBy(col).parquet(target)
         if not append and parquet_file_count(target) == 0:
             df.coalesce(1).write.mode("overwrite").parquet(target)
-    elif layout.range_by is not None:
-        col = layout.range_by
+    elif layout.range_by:
+        cols = layout.range_by
         with pinned_for_write(df) as pinned:
-            pinned.repartitionByRange(col).sortWithinPartitions(col).write.mode(
+            pinned.repartitionByRange(*cols).sortWithinPartitions(*cols).write.mode(
                 mode
             ).parquet(target)
     elif pack:
@@ -705,12 +711,13 @@ def _version_meta(version_dir: str, name: str, root_sidecar: str) -> dict:
         return json.load(fh)
 
 
-def describe_index(spark, path: str, tables: tuple[str, ...]) -> list[dict]:
+def describe_index(path: str, tables: tuple[str, ...]) -> list[dict]:
     """DESCRIBE DETAIL analog for one persisted index: per table, the
     published version number, live file count, and row count — the
     observability surface the OPTIMIZE/rebuild cadence decisions read.
     Reads only (no lock): the pointer always resolves to a complete
-    published version."""
+    published version. Rows are counted from the parquet footers on
+    the driver, so describing starts no Spark job."""
     out = []
     for t in tables:
         live = os.path.join(path, t)
@@ -721,7 +728,7 @@ def describe_index(spark, path: str, tables: tuple[str, ...]) -> list[dict]:
                 "table": t,
                 "version": int(m.group(1)) if m else -1,
                 "n_files": parquet_file_count(live),
-                "n_rows": spark.read.parquet(cur).count(),
+                "n_rows": footer_row_count(cur),
             }
         )
     return out
@@ -871,6 +878,7 @@ def write_versions(
     pack: bool = False,
     ledger_ids=None,
     erase: bool = False,
+    dup_free: bool = True,
 ) -> tuple[dict, dict[str, int]]:
     """Write and publish the next version of every table in ``frames``
     (caller holds the writer lock and has healed the tables). In order:
@@ -878,8 +886,9 @@ def write_versions(
     tables are independent jobs, overlapped from driver threads;
     ``pack`` as in ``write_table``); records the reader schemas; counts
     each version's rows from its parquet footers; writes the primary's
-    version meta (``meta`` plus ``schemas``, the secondary version under
-    ``pair_key``, and the family's ``manifest``); appends ``ledger_ids``
+    version meta (``meta`` plus ``schemas``, the counts as ``rows``,
+    ``dup_free``, the secondary version under ``pair_key``, and the
+    family's ``manifest``); appends ``ledger_ids``
     to the forget ledger BEFORE any pointer flip; publishes the
     secondary and then the primary; vacuums every superseded version
     when ``erase``; and refreshes the file listings. Returns the meta
@@ -895,6 +904,7 @@ def write_versions(
         "schemas": {t: reader_schema(frames[t], tables.layouts[t]) for t in order},
     }
     rows = {t: footer_row_count(targets[t]) for t in order}
+    meta.update(rows=rows, dup_free=dup_free)
     if tables.secondary is not None:
         meta[tables.pair_key] = os.path.basename(targets[tables.secondary])
     if tables.manifest is not None:
@@ -909,6 +919,19 @@ def write_versions(
             vacuum_versions(os.path.join(path, t))
     refresh_listings(spark, path, order)
     return meta, rows
+
+
+def is_dup_free(snap: Snapshot, rows: dict[str, int] | None = None) -> bool:
+    """Whether ``snap``'s tables hold no replay duplicates: its meta was
+    written ``dup_free`` (by a build, a compact, or a forget of a
+    dup-free snapshot) and the footer counts (``rows`` if the caller
+    has them; no job either way) still equal the recorded ``rows``, so
+    nothing was appended since. A meta without the keys is not."""
+    if not snap.meta.get("dup_free") or "rows" not in snap.meta:
+        return False
+    if rows is None:
+        rows = {t: footer_row_count(d) for t, d in snap.dirs.items()}
+    return rows == snap.meta["rows"]
 
 
 def append_tables(spark, path: str, tables: IndexTables, snap: Snapshot, frames: dict) -> None:
@@ -992,9 +1015,11 @@ def forget_rows(spark, path: str, tables: IndexTables, ids, erase: bool = False)
         src = read_table(spark, snap, t)
         frames[t] = src.join(bcast, src[col] == bcast[_FORGET_ID], "left_anti")
     before = {t: footer_row_count(snap.dirs[t]) for t in tables.names}
+    # an anti-join drops rows and never folds them: the rewrite is
+    # dup-free exactly when its source is
     _, after = write_versions(
         spark, path, tables, frames, snap.meta, pack=True, ledger_ids=ids,
-        erase=erase,
+        erase=erase, dup_free=is_dup_free(snap, before),
     )
     return {
         t: {

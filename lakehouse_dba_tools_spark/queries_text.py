@@ -1275,21 +1275,21 @@ def index_family_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_lsh_index(docs.filter(F.col("doc_id") % 10 == 5), lsh)
         append_to_lsh_index(docs.filter(F.col("doc_id") % 10 == 0), lsh)
         compact_lsh_index(spark, lsh)
-        for d in describe_index(spark, lsh, ("bands", "shash")):
+        for d in describe_index(lsh, ("bands", "shash")):
             rows.append(("lsh", d["table"], d["version"], d["n_rows"]))
 
         ivf = f"{tmp}/ivf"
         build_ivf_index(emb.filter(F.col("vec_id") % 10 == 5), ivf, n_centroids=8)
         append_to_ivf_index(emb.filter(F.col("vec_id") % 10 == 0), ivf)
         compact_ivf_index(spark, ivf)
-        for d in describe_index(spark, ivf, ("lists",)):
+        for d in describe_index(ivf, ("lists",)):
             rows.append(("ivf", d["table"], d["version"], d["n_rows"]))
 
         bm25 = f"{tmp}/bm25"
         build_postings_index(docs.filter(F.col("doc_id") % 10 == 5), bm25)
         append_to_postings_index(docs.filter(F.col("doc_id") % 10 == 0), bm25)
         compact_postings_index(spark, bm25)
-        for d in describe_index(spark, bm25, ("postings", "doclens")):
+        for d in describe_index(bm25, ("postings", "doclens")):
             rows.append(("bm25", d["table"], d["version"], d["n_rows"]))
 
         return spark.createDataFrame(
@@ -1462,7 +1462,7 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_dba_tools_spark.operators.indexio import all_version_dirs
     from lakehouse_dba_tools_spark.session import scoped_confs
     from lakehouse_dba_tools_spark.similarity.bm25 import (
-        _champ_snapshot,
+        _tier_snapshot,
         build_postings_index,
         query_postings_index,
     )
@@ -1511,10 +1511,6 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ivf_path=ivf,
                 vector_ids=forget_vecs,
                 erase=True,
-                # the indexes were built three lines up and never
-                # appended to — the champions refresh inside the BM25
-                # forget can skip its replay-dedup shuffles
-                assume_deduped=True,
             )
             for r in audit.collect():  # ≤5 rows
                 rows.append(
@@ -1569,7 +1565,7 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the opaque forgotten ids BY DESIGN (the minimal record
             # that keeps replayed epochs from resurrecting them — see
             # indexio.append_forget_ledger).
-            champ_dir, _ = _champ_snapshot(bm)
+            champ_dir = _tier_snapshot(bm, "champions").dirs["champions"]
             fd = F.broadcast(forget_docs.select("doc_id").distinct())
             fv = F.broadcast(forget_vecs.distinct())
 

@@ -152,9 +152,9 @@ def ivf_index_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_ivf_index(spark, tmp)
         out = query_ivf_index(spark, queries, tmp, k=TOP_K, nprobe=16)
         # Materialize before the index tempdir vanishes (bounded:
-        # N_QUERY × TOP_K rows).
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        # N_QUERY × TOP_K rows) as an Arrow-backed local relation,
+        # whose consumers start no job.
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -694,8 +694,7 @@ def ivf_rebuild_invariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_to_ivf_index(emb.filter(F.col("vec_id") >= n // 2), tmp)
         rebuild_ivf_index(spark, tmp)
         out = query_ivf_index(spark, queries, tmp, k=TOP_K, nprobe=16)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

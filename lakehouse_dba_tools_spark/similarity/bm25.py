@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import math
 import os
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from lakehouse_dba_tools_spark.operators.indexio import (
     IndexTables,
     Layout,
+    Snapshot,
     append_tables,
     compact_tables,
     current_version_dir,
@@ -43,6 +45,7 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     heal,
     heal_tables,
     init_versioned,
+    is_dup_free,
     open_snapshot,
     overlap_jobs,
     pinned_for_write,
@@ -50,9 +53,11 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     publish,
     read_forget_ledger,
     read_table,
+    reader_schema,
     refresh_listings,
     snapshot_meta,
     vacuum_versions,
+    write_table,
     write_version_meta,
     write_versions,
     writer_lock,
@@ -310,24 +315,33 @@ def bm25_score_scalar(
 #   postings + maxima + stats.
 # - _bm25_meta.json  {id_col, text_col}
 # - postings/<ver>/_bm25_postings_meta.json  {id_col, text_col,
-#   doclens_dir, schemas} — ``doclens_dir`` names the doclens version
-#   the postings version pairs with (the postings pointer flip is the
-#   single atomic commit for the pair; indexes from before round 10
-#   have no such meta and fall back to the two live pointers, with the
-#   root _bm25_meta.json as their meta). ``schemas`` holds both tables'
-#   schemas as their readers see them (``StructType.jsonValue()``): the
-#   verbs read postings and doclens with them (``indexio.read_table``),
-#   so no read starts a schema-inference job; a meta without the key
-#   reads by inference, with the same results.
+#   doclens_dir, schemas, rows, dup_free} — ``doclens_dir`` names the
+#   doclens version the postings version pairs with (the postings
+#   pointer flip is the single atomic commit for the pair; indexes from
+#   before round 10 have no such meta and fall back to the two live
+#   pointers, with the root _bm25_meta.json as their meta). ``schemas``
+#   holds both tables' schemas as their readers see them
+#   (``StructType.jsonValue()``): the verbs read postings and doclens
+#   with them (``indexio.read_table``), so no read starts a
+#   schema-inference job; a meta without the key reads by inference,
+#   with the same results. ``rows`` (both tables' footer counts as
+#   written) and ``dup_free`` (set by build and compact, inherited by
+#   a forget) let a tier refresh skip its dedup shuffle while no append
+#   has changed the counts (``indexio.is_dup_free``).
 # - champions/<ver>/_bm25_champ_meta.json  {champion_n, n_docs, avgdl,
-#   k1, b, impact_flatness} — the stats snapshot the tier was ordered
-#   under, riding inside the champions version dir (atomic tier+stats
-#   publish). impact_flatness = fraction of TRUNCATED terms (df >
-#   champion_n) whose champion_n-th impact ties their 1st — the
-#   regime gauge: near 1.0 the tier truncates on tie-breaks and
-#   multi-term champions answers are untrustworthy (the scorer warns).
+#   k1, b, impact_flatness, postings_dir, schemas} — the stats snapshot
+#   the tier was ordered under, riding inside the champions version dir
+#   (atomic tier+stats publish). impact_flatness = fraction of
+#   TRUNCATED terms (df > champion_n) whose champion_n-th impact ties
+#   their 1st — the regime gauge: near 1.0 the tier truncates on
+#   tie-breaks and multi-term champions answers are untrustworthy (the
+#   scorer warns).
 # - blocked/<ver>/_bm25_wand_meta.json  {wand_buckets, n_docs, avgdl,
-#   k1, b} — the stats snapshot the block maxima were computed under.
+#   k1, b, postings_dir, schemas} — the stats snapshot the block
+#   maxima were computed under. In both tier metas ``postings_dir`` is
+#   the provenance stamp (``_check_tier_stamp``) and ``schemas`` holds
+#   the tier table's and its side table's schemas, which the query
+#   paths read with (``indexio.read_table``).
 #
 # Writer semantics (operators/indexio.py, shared with the LSH and IVF
 # indexes): build/append/compact hold an exclusive flock on the index
@@ -357,12 +371,25 @@ BM25_TABLES = IndexTables(
     primary="postings",
     meta_name=POSTINGS_META,
     root_meta=BM25_META,
-    layouts={"postings": Layout(range_by="term"), "doclens": Layout()},
+    layouts={"postings": Layout(range_by=("term",)), "doclens": Layout()},
     # replays write identical rows: (term, doc_id) / (doc_id)
     dedup_keys=lambda id_col: {"postings": ["term", id_col], "doclens": [id_col]},
     secondary="doclens",
     pair_key="doclens_dir",
 )
+
+
+class _Tier(NamedTuple):
+    side: str  # the side table inside the tier's version directory
+    meta_name: str
+    param: str  # the tier's size parameter
+    layout: Layout  # both tables' write layout
+
+
+_TIERS = {
+    "champions": _Tier("_termstats", CHAMP_META, "champion_n", Layout(range_by=("term",))),
+    "blocked": _Tier("_blockmax", WAND_META, "wand_buckets", Layout(range_by=("term", "bucket"))),
+}
 
 
 def build_postings_index(
@@ -393,11 +420,7 @@ def build_postings_index(
         _write_postings(docs, path, text_col, id_col, fresh=True)
         with open(os.path.join(path, BM25_META), "w") as fh:
             json.dump({"id_col": id_col, "text_col": text_col}, fh)
-        # assume_deduped: a fresh build's postings are aggregated by
-        # (term, id) and its doclens projected from the (unique-id)
-        # corpus — the refreshes' replay-dedup shuffles have nothing to
-        # fold here
-        _refresh_tiers(docs.sparkSession, path, tiers, assume_deduped=True)
+        _refresh_tiers(docs.sparkSession, path, tiers)
 
 
 def append_to_postings_index(docs: DataFrame, path: str) -> None:
@@ -435,32 +458,12 @@ def _heal_stale_tiers(spark, path: str) -> None:
 def _stored_tiers(path: str) -> dict:
     """{tier: meta} for the opt-in tiers this index has built."""
     out = {}
-    for tier, snap in (("champions", _champ_snapshot), ("blocked", _wand_snapshot)):
+    for tier in _TIERS:
         try:
-            out[tier] = snap(path)[1]
+            out[tier] = _tier_snapshot(path, tier).meta
         except FileNotFoundError:
             pass
     return out
-
-
-def _refresh_tiers(spark, path: str, tiers: dict, assume_deduped: bool = False) -> None:
-    """Rebuild the named tiers ({"champions" / "blocked": params}) from
-    the current postings snapshot. They write disjoint live dirs off
-    the same published pair — independent refresh jobs, overlapped
-    from driver threads (indexio.overlap_jobs). Caller holds the
-    writer lock."""
-    jobs = []
-    if "champions" in tiers:
-        cm = tiers["champions"]
-        jobs.append(lambda: _refresh_champions(
-            spark, path, cm["champion_n"], cm["k1"], cm["b"], assume_deduped
-        ))
-    if "blocked" in tiers:
-        wm = tiers["blocked"]
-        jobs.append(lambda: _refresh_wand(
-            spark, path, wm["wand_buckets"], wm["k1"], wm["b"], assume_deduped
-        ))
-    overlap_jobs(*jobs)
 
 
 def _write_postings(
@@ -482,6 +485,9 @@ def _write_postings(
         "doclens": docs.select(F.col(id_col), F.size(_tokens(text_col)).alias("dl")),
     }
     if fresh:
+        # dup-free (the write_versions default): the postings are
+        # aggregated by (term, id) and the doclens projected from the
+        # unique-id corpus
         heal_tables(path, BM25_TABLES)
         write_versions(
             spark, path, BM25_TABLES, frames, {"id_col": id_col, "text_col": text_col}
@@ -504,35 +510,79 @@ def _impact(k1: float, b: float, avgdl: float) -> Column:
     )
 
 
-def _tier_source(spark, path: str, assume_deduped: bool):
-    """(postings version dir, id column, postings frame, n_docs,
-    avgdl) of the CURRENT postings snapshot — what a tier refresh
-    derives from. ``assume_deduped`` skips the replay-dedup shuffles
-    (see ``_refresh_champions``)."""
+def _refresh_tiers(spark, path: str, tiers: dict, erase: bool = False) -> None:
+    """Rebuild the named tiers ({tier: meta holding its parameters})
+    from the CURRENT postings snapshot, resolved once: every tier gets
+    the same postings frame and one (n_docs, avgdl) collect. Replayed
+    appends leave duplicate rows, so both tables are deduped first — a
+    full postings + doclens shuffle — unless `indexio.is_dup_free`
+    shows there are none. ``erase`` vacuums each tier's superseded
+    versions, which still hold pre-forget rows. Caller holds the
+    writer lock."""
+    if not tiers:
+        return
     snap = open_snapshot(path, BM25_TABLES)
     id_col = snap.meta["id_col"]
     postings = read_table(spark, snap, "postings")
     doclens = read_table(spark, snap, "doclens")
-    if not assume_deduped:
+    if not is_dup_free(snap):
         postings = postings.dropDuplicates(["term", id_col])
         doclens = doclens.dropDuplicates([id_col])
     row = doclens.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    return (snap.dirs["postings"], id_col, postings, int(row["n"]),
-            float(row["avgdl"] or 0.0))
+    stats = {
+        "n_docs": int(row["n"]),
+        "avgdl": float(row["avgdl"] or 0.0),
+        # provenance stamp: the postings VERSION the tier is derived
+        # from — readers verify it against the current postings
+        # snapshot (_check_tier_stamp), closing the crash window
+        # between a forget/compact's postings publish and this refresh
+        "postings_dir": os.path.basename(snap.dirs["postings"]),
+    }
+
+    def refresh(tier, tm):
+        param = _TIERS[tier].param
+        meta = {param: tm[param], "k1": tm["k1"], "b": tm["b"], **stats}
+        build = {"champions": _refresh_champions, "blocked": _refresh_wand}[tier]
+        build(spark, path, postings, id_col, meta, erase)
+
+    # the tiers write disjoint live dirs off the same snapshot:
+    # independent jobs, overlapped from driver threads
+    # (indexio.overlap_jobs; A/B in CHANGES.md)
+    overlap_jobs(*[lambda t=t, tm=tm: refresh(t, tm) for t, tm in tiers.items()])
+
+
+def _publish_tier(spark, path: str, tier: str, frames: dict, meta: dict,
+                  erase: bool) -> None:
+    """Publish the next version of one tier: ``frames`` holds the tier
+    table and its side table, written inside the new version directory
+    in the tier's layout, beside the tier meta (``meta`` plus both
+    tables' reader ``schemas``), so ONE pointer flip publishes tier,
+    side table and stats together. ``erase`` then vacuums the
+    superseded versions. Caller holds the writer lock."""
+    spec = _TIERS[tier]
+    live = os.path.join(path, tier)
+    heal(live)
+    target = init_versioned(live)
+    # the tier first: its overwrite write would clear a side table
+    # written before it
+    write_table(frames[tier], target, spec.layout)
+    write_table(frames[spec.side], os.path.join(target, spec.side), spec.layout)
+    meta = {
+        **meta,
+        "schemas": {t: reader_schema(df, spec.layout) for t, df in frames.items()},
+    }
+    write_version_meta(target, spec.meta_name, meta)
+    publish(live, target)
+    if erase:
+        vacuum_versions(live)
+    refresh_listings(spark, path, (tier,))
 
 
 def _refresh_champions(
-    spark, path: str, champion_n: int, k1: float, b: float,
-    assume_deduped: bool = False,
+    spark, path: str, postings: DataFrame, id_col: str, meta: dict, erase: bool
 ) -> None:
-    """(Re)build the champions tier from the CURRENT postings/doclens
-    snapshot. Caller holds the writer lock.
-
-    ``assume_deduped``: the dedup of replayed-append rows is a full
-    postings + doclens shuffle — callers whose snapshot is dup-free BY
-    CONSTRUCTION (a fresh build's aggregated postings; a compact's
-    just-folded publish) skip it. The crash-heal path keeps the dedup:
-    its snapshot state is whatever the dead writer left.
+    """(Re)build the champions tier from the snapshot's ``postings``
+    under ``meta``'s parameters and stats (`_refresh_tiers`).
 
     Skew-safe top-N: a stopword's postings all share one term key, so a
     single per-term window would funnel its whole df through one task.
@@ -548,11 +598,10 @@ def _refresh_champions(
     ``impact_flatness`` ride in the ``CHAMP_META`` sidecar."""
     from pyspark.sql import Window
 
-    p_dir, id_col, postings, n_docs, avgdl = _tier_source(spark, path, assume_deduped)
-
-    imp = postings.withColumn("_imp", _impact(k1, b, avgdl)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
+    champion_n = meta["champion_n"]
+    imp = postings.withColumn(
+        "_imp", _impact(meta["k1"], meta["b"], meta["avgdl"])
+    ).withColumn("_pid", F.spark_partition_id())
     w1 = Window.partitionBy("term", "_pid").orderBy(F.desc("_imp"), F.col(id_col))
     pre = (
         imp.withColumn("_rn", F.row_number().over(w1))
@@ -572,11 +621,6 @@ def _refresh_champions(
         ),
         postings.groupBy("term").agg(F.count("*").alias("df")),
     ) as (champs_imp, tstats):
-        champs = (
-            champs_imp.drop("_rn", "_imp")
-            .repartitionByRange("term")
-            .sortWithinPartitions("term")
-        )
         # Regime gauge (one tiny agg over the kept slice): among terms
         # the tier TRUNCATES (df > champion_n), what fraction have their
         # champion_n-th impact equal to their 1st? Near 1.0 the ordering
@@ -597,103 +641,52 @@ def _refresh_champions(
         )
         trunc = int(flat_row["trunc"] or 0)
         flatness = float(flat_row["flat"] or 0) / trunc if trunc else 0.0
-        meta = {
-            "champion_n": champion_n,
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "k1": k1,
-            "b": b,
-            "impact_flatness": round(flatness, 4),
-            # provenance stamp: the postings VERSION this tier was
-            # derived from — readers verify it against the current
-            # postings snapshot (_check_tier_stamp), closing the crash
-            # window between a forget/compact's postings publish and
-            # this refresh
-            "postings_dir": os.path.basename(p_dir),
-        }
-        live = os.path.join(path, "champions")
-        heal(live)
-        target = init_versioned(live)
-        champs.write.mode("overwrite").parquet(target)
-        # exact df + the ordering stats ride INSIDE the version dir —
-        # the single pointer flip below publishes tier + df + stats
-        # atomically
-        tstats.repartitionByRange("term").sortWithinPartitions("term").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(target, "_termstats"))
-        write_version_meta(target, CHAMP_META, meta)
-        publish(live, target)
-    refresh_listings(spark, path, ("champions",))
+        _publish_tier(
+            spark, path, "champions",
+            {"champions": champs_imp.drop("_rn", "_imp"), "_termstats": tstats},
+            {**meta, "impact_flatness": round(flatness, 4)},
+            erase,
+        )
 
 
 def _refresh_wand(
-    spark, path: str, wand_buckets: int, k1: float, b: float,
-    assume_deduped: bool = False,
+    spark, path: str, postings: DataFrame, id_col: str, meta: dict, erase: bool
 ) -> None:
-    """(Re)build the block-max tier from the CURRENT postings/doclens
-    snapshot. Caller holds the writer lock.
+    """(Re)build the block-max tier from the snapshot's ``postings``
+    under ``meta``'s parameters and stats (`_refresh_tiers`).
 
     The tier is the FULL deduped postings with a doc-hash bucket key —
     a doc's postings for every term share one bucket, so per-bucket
     maxima bound any doc's whole score and mode='wand' can prune whole
     buckets without losing exactness. One extra shuffle (the range
-    repartition on (term, bucket)); the `_blockmax` sidecar table is a
+    repartition on (term, bucket)); the `_blockmax` side table is a
     ≤ |vocab| × wand_buckets aggregate. Published like champions: one
-    pointer flip covers postings + maxima + stats. ``assume_deduped``
-    as in ``_refresh_champions`` (skips the dedup shuffles when the
-    snapshot is dup-free by construction)."""
-    p_dir, id_col, postings, n_docs, avgdl = _tier_source(spark, path, assume_deduped)
+    pointer flip covers postings + maxima + stats."""
     # pin the bucketed postings: they feed two sampled range writes
-    # (the tier itself and the _blockmax sidecar's aggregate), each of
-    # which would otherwise re-run the dedup shuffle + scan lineage
+    # (the tier itself and the _blockmax side table's aggregate), each
+    # of which would otherwise re-run the dedup shuffle + scan lineage
     # (indexio.pinned_for_write)
     with pinned_for_write(
         postings.withColumn(
             "bucket",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(wand_buckets)).cast("int"),
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(meta["wand_buckets"])).cast("int"),
         )
     ) as blocked:
-        # sort (term, bucket): the query's pushed term IN-filter prunes
-        # row groups exactly like the exact path, and within a term's
-        # range the surviving-bucket IN-filter prunes again — pruned
-        # buckets are skipped I/O, not just skipped compute
-        blocked_sorted = blocked.repartitionByRange(
-            "term", "bucket"
-        ).sortWithinPartitions("term", "bucket")
-        # ≤ one row per (term, bucket) pair with postings; term-sorted
-        # so the plan's term IN-filter row-group-skips it like the
-        # postings (at 100 TB this table is millions of rows, never
-        # collected whole — a query collects only its ≤ |terms| ×
-        # wand_buckets slice)
+        # ≤ one row per (term, bucket) pair with postings. Both tables
+        # are sorted on (term, bucket): the query's pushed term IN-filter
+        # prunes row groups exactly like the exact path, and within a
+        # term's range the surviving-bucket IN-filter prunes again —
+        # pruned buckets are skipped I/O, not just skipped compute (at
+        # 100 TB _blockmax is millions of rows, never collected whole —
+        # a query collects only its ≤ |terms| × wand_buckets slice)
         bmax = (
-            blocked.withColumn("_imp", _impact(k1, b, avgdl))
+            blocked.withColumn("_imp", _impact(meta["k1"], meta["b"], meta["avgdl"]))
             .groupBy("term", "bucket")
             .agg(F.max("_imp").alias("max_imp"), F.count("*").alias("n_docs"))
-            .repartitionByRange("term")
-            .sortWithinPartitions("term", "bucket")
         )
-
-        live = os.path.join(path, "blocked")
-        heal(live)
-        target = init_versioned(live)
-        blocked_sorted.write.mode("overwrite").parquet(target)
-        bmax.write.mode("overwrite").parquet(os.path.join(target, "_blockmax"))
-        write_version_meta(
-            target,
-            WAND_META,
-            {
-                "wand_buckets": wand_buckets,
-                "n_docs": n_docs,
-                "avgdl": avgdl,
-                "k1": k1,
-                "b": b,
-                # provenance stamp — see _refresh_champions /
-                # _check_tier_stamp
-                "postings_dir": os.path.basename(p_dir),
-            },
+        _publish_tier(
+            spark, path, "blocked", {"blocked": blocked, "_blockmax": bmax}, meta, erase
         )
-        publish(live, target)
-    refresh_listings(spark, path, ("blocked",))
 
 
 def compact_postings_index(spark, path: str) -> dict:
@@ -712,16 +705,13 @@ def compact_postings_index(spark, path: str) -> dict:
         out = compact_tables(spark, path, BM25_TABLES)
         # the tier-merge step that makes appends since the last refresh
         # visible to mode='champions'/'wand', for the tiers the build
-        # created (params carried from the current tier).
-        # assume_deduped: the pair published above was dedup-folded by
-        # this very compact.
-        _refresh_tiers(spark, path, _stored_tiers(path), assume_deduped=True)
+        # created (params carried from the current tier)
+        _refresh_tiers(spark, path, _stored_tiers(path))
     return out
 
 
 def forget_from_postings_index(
-    spark, path: str, forget_ids: DataFrame, erase: bool = False,
-    assume_deduped: bool = False,
+    spark, path: str, forget_ids: DataFrame, erase: bool = False
 ) -> dict:
     """Right-to-be-forgotten DELETE for the postings index — extends
     `operators/forget.py:41`'s table cascade into the stored lexical
@@ -734,8 +724,8 @@ def forget_from_postings_index(
     atomic pointer flip (doclens first, the new postings meta NAMES it
     — the same two-table commit as build/compact). The champions and
     block-max tiers, where built, are then REFRESHED from the filtered
-    snapshot (`_refresh_champions` / `_refresh_wand`, still under the
-    writer lock): tier contents are NOT per-doc-filterable — champion
+    snapshot (`_refresh_tiers`, still under the writer lock): tier
+    contents are NOT per-doc-filterable — champion
     selection, block maxima, and the (n_docs, avgdl) stats sidecars all
     change when docs leave — so the refresh is what makes the published
     index equal an index FRESHLY BUILT from the corpus minus the
@@ -746,7 +736,8 @@ def forget_from_postings_index(
     oracle). Idempotent: a replayed forget removes 0 rows and
     republishes identical content. Surviving docs' replay-duplicate
     rows pass through; folding them stays `compact_postings_index`'s
-    job.
+    job (the tier refresh dedups them whenever appends since the last
+    build or compact may have left any — `indexio.is_dup_free`).
 
     The forget set is also recorded in the index's suppression ledger
     (ids only — `operators/indexio.py append_forget_ledger`), so an
@@ -760,7 +751,7 @@ def forget_from_postings_index(
 
     ``erase=True`` upgrades to PHYSICAL erasure: every superseded
     version of postings/doclens is vacuumed at their publish, and of
-    the tiers after their refresh (`indexio.vacuum_versions` — the reference's
+    each tier at its refresh (`indexio.vacuum_versions` — the reference's
     ``VACUUM ... RETAIN 0 HOURS``, `resources/TPC-datagen-notebook.
     scala:2076-2092`), so no pre-forget byte survives on disk. The
     documented GDPR trade: erase-grade forget forfeits the one-version
@@ -768,35 +759,27 @@ def forget_from_postings_index(
     forget fails loudly and retries (never a partial read). Returns
     {table: {rows_before, rows_removed, rows_after}}.
 
-    ``assume_deduped``: passed through to the tier refreshes — a forget
-    preserves the snapshot's dup state (the anti-join drops rows, never
-    folds them), so pass True ONLY when the index has seen no
-    un-compacted appends since its last build/compact (e.g. the
-    build-then-forget audit flows); each refresh then skips its full
-    postings+doclens dedup shuffle.
-
     Cost: the caller's ``forget_ids`` lineage runs once — its distinct
     id set is pinned for the call and released before returning."""
     with pinned_forget_ids(forget_ids) as ids, writer_lock(path):
         out = forget_rows(spark, path, BM25_TABLES, ids, erase=erase)
         # tier refresh = the fresh-build equality step (see docstring)
-        tiers = _stored_tiers(path)
-        _refresh_tiers(spark, path, tiers, assume_deduped=assume_deduped)
-        if erase:
-            # the superseded tier versions still hold pre-forget rows
-            for tier in tiers:
-                vacuum_versions(os.path.join(path, tier))
+        _refresh_tiers(spark, path, _stored_tiers(path), erase=erase)
     return out
 
 
-def _champ_snapshot(path: str) -> tuple[str, dict]:
-    """(champions version dir, champ meta) — resolved as one couple."""
-    return snapshot_meta(os.path.join(path, "champions"), CHAMP_META, path)
-
-
-def _wand_snapshot(path: str) -> tuple[str, dict]:
-    """(blocked version dir, wand meta) — resolved as one couple."""
-    return snapshot_meta(os.path.join(path, "blocked"), WAND_META, path)
+def _tier_snapshot(path: str, tier: str) -> Snapshot:
+    """One tier's published snapshot — its version directory, the side
+    table inside it and the tier meta, from one pointer read, so the
+    stats a query plans with describe the tables it scans. Raises
+    FileNotFoundError for a tier never built. Indexes from before round
+    10 keep termstats as a live table of its own; it stands in."""
+    spec = _TIERS[tier]
+    vd, meta = snapshot_meta(os.path.join(path, tier), spec.meta_name, path)
+    side = os.path.join(vd, spec.side)
+    if tier == "champions" and not os.path.isdir(side):
+        side = current_version_dir(os.path.join(path, "termstats"))
+    return Snapshot({tier: vd, spec.side: side}, meta)
 
 
 def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
@@ -808,7 +791,7 @@ def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
     (heal() clears version debris, not tier staleness) — silently
     voiding the right-to-be-forgotten guarantee. Each tier's meta is
     stamped with the postings version it was derived from
-    (`_refresh_champions`/`_refresh_wand`); a mismatch means exactly
+    (`_refresh_tiers`); a mismatch means exactly
     that crash happened, and any locked writer verb (compact, forget,
     append — all end by refreshing stale tiers) repairs it. Tiers
     written before stamping (no ``postings_dir`` key) predate the
@@ -963,13 +946,14 @@ def _query_champions(
     import warnings
 
     try:
-        champ_dir, cm = _champ_snapshot(path)
+        snap = _tier_snapshot(path, "champions")
     except FileNotFoundError as e:
         raise RuntimeError(
             f"index at {path!r} has no champions tier (it is opt-in): "
             f"rebuild with build_postings_index(..., champion_n=N) — or "
             f"query with mode='exact'/'wand'"
         ) from e
+    cm = snap.meta
     _check_tier_stamp(path, cm, "champions")
     k1, b = _tier_params(cm, k1, b, "champions")
     terms = sorted(set(_py_tokens(query)))
@@ -988,19 +972,16 @@ def _query_champions(
             UserWarning,
             stacklevel=3,
         )
-    hits = spark.read.parquet(champ_dir).filter(F.col("term").isin(terms))
+    hits = read_table(spark, snap, "champions").filter(F.col("term").isin(terms))
     # exact df per term (idf from the truncated champion slice would be
     # wrong for any term with df > champion_n) — a ≤|terms|-row slice
     # of the term-sorted stats table riding in the SAME published
     # version dir as the tier (one pointer flip covers tier + df +
     # stats, so a query racing a compact scores one snapshot, like the
-    # exact path). Pre-round-10 indexes published termstats as its own
-    # live table — fall back to it (those metas also lack flatness).
-    ts_path = os.path.join(champ_dir, "_termstats")
-    if not os.path.isdir(ts_path):
-        ts_path = current_version_dir(os.path.join(path, "termstats"))
+    # exact path; pre-round-10 indexes resolve their live termstats
+    # table instead, see _tier_snapshot)
     df_t = (
-        spark.read.parquet(ts_path)
+        read_table(spark, snap, "_termstats")
         .filter(F.col("term").isin(terms))
         .select("term", "df")
     )
@@ -1042,7 +1023,8 @@ def _wand_plan(
     EXACT top-k. Returns a dict the scorer (and the scale-evidence
     tooling / tests) consume:
 
-    {blocked_dir, terms, idf: {term: idf}, n_docs, avgdl, k1, b,
+    {tier (the blocked tier's indexio.Snapshot), terms, idf: {term:
+     idf}, n_docs, avgdl, k1, b,
      seed: [bucket...], kept: [bucket...] | None, kept_count, theta,
      candidate_buckets, total_buckets(wand_buckets),
      postings_kept, postings_total}
@@ -1085,7 +1067,8 @@ def _wand_plan(
     summation-order jitter in θ or ub."""
     import math
 
-    blocked_dir, wm = _wand_snapshot(path)
+    snap = _tier_snapshot(path, "blocked")
+    wm = snap.meta
     _check_tier_stamp(path, wm, "wand")
     k1, b = _tier_params(wm, k1, b, "wand")
     with open(os.path.join(path, BM25_META)) as fh:
@@ -1094,9 +1077,7 @@ def _wand_plan(
     if not terms:
         raise ValueError("query produced no tokens")
     n_docs, avgdl = int(wm["n_docs"]), float(wm["avgdl"])
-    bmax = spark.read.parquet(os.path.join(blocked_dir, "_blockmax")).filter(
-        F.col("term").isin(terms)
-    )
+    bmax = read_table(spark, snap, "_blockmax").filter(F.col("term").isin(terms))
     df_t = {
         r["term"]: int(r["df"])
         for r in bmax.groupBy("term").agg(F.sum("n_docs").alias("df")).collect()
@@ -1106,7 +1087,7 @@ def _wand_plan(
         for t, df in df_t.items()
     }
     plan = {
-        "blocked_dir": blocked_dir,
+        "tier": snap,
         "id_col": id_col,
         "terms": terms,
         "idf": idf,
@@ -1287,7 +1268,7 @@ def _score_buckets(spark, plan: dict, buckets: list[int]) -> DataFrame:
     large to ride in a literal IN (sparse pruning on a huge corpus),
     use `_score_kept_join` instead."""
     hits = (
-        spark.read.parquet(plan["blocked_dir"])
+        read_table(spark, plan["tier"], "blocked")
         .filter(F.col("term").isin(plan["terms"]))
         .filter(F.col("bucket").isin([int(x) for x in buckets]))
     )
@@ -1309,14 +1290,14 @@ def _score_kept_join(spark, plan: dict) -> DataFrame:
     sums agreeing with the planner's prune on that fallback path."""
     kept = plan.get("_kept_frame")
     if kept is None:
-        bmax = spark.read.parquet(
-            os.path.join(plan["blocked_dir"], "_blockmax")
-        ).filter(F.col("term").isin(plan["terms"]))
+        bmax = read_table(spark, plan["tier"], "_blockmax").filter(
+            F.col("term").isin(plan["terms"])
+        )
         kept = _wand_per_bucket(bmax, plan["idf"])
         if plan["theta"] is not None:
             kept = kept.filter(F.col("ub") >= F.lit(plan["theta"] - 1e-9))
     hits = (
-        spark.read.parquet(plan["blocked_dir"])
+        read_table(spark, plan["tier"], "blocked")
         .filter(F.col("term").isin(plan["terms"]))
         .join(F.broadcast(kept.select("bucket")), "bucket", "left_semi")
     )
@@ -1362,7 +1343,7 @@ def _query_wand(
     if plan["kept_count"] == 0:
         # no query term occurs: empty frame, id type taken from the tier
         empty = (
-            spark.read.parquet(plan["blocked_dir"])
+            read_table(spark, plan["tier"], "blocked")
             .select(F.col(id_col), F.lit(0.0).alias("bm25_score"))
             .limit(0)
         )

@@ -18,7 +18,7 @@ import warnings
 import pytest
 
 from lakehouse_dba_tools_spark.similarity.bm25 import (
-    _champ_snapshot,
+    _tier_snapshot,
     _wand_plan,
     bm25_topk,
     build_postings_index,
@@ -33,6 +33,39 @@ def _zipf_docs(spark, n=2000):
     df.cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="module")
+def zipf_corpus(spark):
+    """``n`` -> the cached Zipf corpus of ``n`` docs, made once per
+    module and released after its last test."""
+    made = {}
+
+    def get(n):
+        if n not in made:
+            made[n] = _zipf_docs(spark, n)
+        return made[n]
+
+    yield get
+    for df in made.values():
+        df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def zipf_wand_index(zipf_corpus, tmp_path_factory):
+    """``(n, wand_buckets)`` -> the path of a wand index over the
+    ``n``-doc Zipf corpus, built once per module. The tests that use
+    it only read it."""
+    built = {}
+
+    def get(n, buckets):
+        if (n, buckets) not in built:
+            path = str(tmp_path_factory.mktemp("bm25") / "bm25")
+            build_postings_index(zipf_corpus(n), path, wand_buckets=buckets)
+            built[(n, buckets)] = path
+        return built[(n, buckets)]
+
+    return get
 
 
 def _flat_docs(spark, n=60):
@@ -57,14 +90,12 @@ def test_wand_equals_exact_on_flat_corpus(spark, tmp_path):
         assert wand == exact, q
 
 
-def test_wand_equals_exact_and_prunes_on_zipf(spark, tmp_path):
+def test_wand_equals_exact_and_prunes_on_zipf(spark, zipf_wand_index):
     """On the tier's design regime (Zipf tf + varied dl), wand answers
     are exact AND the plan proves real pruning: a stopword-grade
     single term, a common multi-term, and a rare+common mix each scan
     well under half of their postings."""
-    docs = _zipf_docs(spark)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=1024)
+    path = zipf_wand_index(2000, 1024)
     for q in ("t1", "t1 t7 t113", "t1 t1500", "t3 t9 t27 t81"):
         exact = [tuple(r) for r in query_postings_index(spark, path, q, k=10).collect()]
         wand = [
@@ -75,16 +106,13 @@ def test_wand_equals_exact_and_prunes_on_zipf(spark, tmp_path):
         plan = _wand_plan(spark, path, q, 10, None, None)
         frac = plan["postings_kept"] / plan["postings_total"]
         assert frac < 0.5, (q, frac)
-    docs.unpersist()
 
 
-def test_wand_plan_threshold_is_sound(spark, tmp_path):
+def test_wand_plan_threshold_is_sound(spark, zipf_wand_index):
     """θ must be a lower bound of the true k-th score (seed scores are
     true scores), and every kept bucket must satisfy ub ≥ θ while the
     exact top-k all live in kept buckets."""
-    docs = _zipf_docs(spark, 1000)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=256)
+    path = zipf_wand_index(1000, 256)
     plan = _wand_plan(spark, path, "t1 t5 t42", 10, None, None)
     exact = query_postings_index(spark, path, "t1 t5 t42", k=10).collect()
     assert plan["theta"] is not None
@@ -108,7 +136,6 @@ def test_wand_plan_threshold_is_sound(spark, tmp_path):
         .collect()
     }
     assert all(bk in kept for bk in buckets.values())
-    docs.unpersist()
 
 
 def test_wand_lifecycle_staleness_and_compact_refresh(spark, tmp_path):
@@ -192,14 +219,14 @@ def test_tier_param_override_guard(spark, tmp_path):
         ).count() > 0
 
 
-def test_champions_flat_impact_warns_zipf_does_not(spark, tmp_path):
+def test_champions_flat_impact_warns_zipf_does_not(spark, tmp_path, zipf_corpus):
     """The regime gate (round-9 VERDICT #5): the build measures
     impact_flatness; a MULTI-term champions query over a near-flat
     tier warns, single-term (exact by construction) does not, and a
     Zipf-skewed tier does not."""
     flat_path = str(tmp_path / "flat")
     build_postings_index(_flat_docs(spark, 60), flat_path, champion_n=4)
-    _, cm = _champ_snapshot(flat_path)
+    cm = _tier_snapshot(flat_path, "champions").meta
     assert cm["impact_flatness"] > 0.5
     with pytest.warns(UserWarning, match="near-flat"):
         query_postings_index(
@@ -210,16 +237,14 @@ def test_champions_flat_impact_warns_zipf_does_not(spark, tmp_path):
         query_postings_index(spark, flat_path, "common", mode="champions").collect()
 
     zipf_path = str(tmp_path / "zipf")
-    docs = _zipf_docs(spark, 1000)
-    build_postings_index(docs, zipf_path, champion_n=4)
-    _, zm = _champ_snapshot(zipf_path)
+    build_postings_index(zipf_corpus(1000), zipf_path, champion_n=4)
+    zm = _tier_snapshot(zipf_path, "champions").meta
     assert zm["impact_flatness"] <= 0.5
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         query_postings_index(
             spark, zipf_path, "t1 t7", mode="champions"
         ).collect()
-    docs.unpersist()
 
 
 def test_champions_termstats_ride_the_tier_version(spark, tmp_path):
@@ -232,7 +257,7 @@ def test_champions_termstats_ride_the_tier_version(spark, tmp_path):
     docs = _flat_docs(spark, 20)
     path = str(tmp_path / "bm25")
     build_postings_index(docs, path, champion_n=100)
-    champ_dir, _ = _champ_snapshot(path)
+    champ_dir = _tier_snapshot(path, "champions").dirs["champions"]
     assert os.path.isdir(os.path.join(champ_dir, "_termstats"))
     want = [
         tuple(r)
@@ -281,7 +306,7 @@ def test_wand_string_doc_ids(spark, tmp_path):
     ]
 
 
-def test_wand_large_kept_set_joins_distributed(spark, tmp_path, monkeypatch):
+def test_wand_large_kept_set_joins_distributed(spark, zipf_wand_index, monkeypatch):
     """When the kept-bucket set exceeds WAND_COLLECT_MAX the planner
     returns kept=None and the scorer broadcast-semi-joins the
     distributed kept frame instead of inlining ids — answers must be
@@ -289,9 +314,7 @@ def test_wand_large_kept_set_joins_distributed(spark, tmp_path, monkeypatch):
     dropping the collect cap to 0."""
     import lakehouse_dba_tools_spark.similarity.bm25 as bm25
 
-    docs = _zipf_docs(spark, 1000)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=256)
+    path = zipf_wand_index(1000, 256)
     q = "t1 t3 t9"
     exact = [tuple(r) for r in query_postings_index(spark, path, q, k=10).collect()]
     inline = [
@@ -306,38 +329,32 @@ def test_wand_large_kept_set_joins_distributed(spark, tmp_path, monkeypatch):
         for r in query_postings_index(spark, path, q, k=10, mode="wand").collect()
     ]
     assert joined == inline == exact
-    docs.unpersist()
 
 
-def test_wand_theta_reaches_true_kth_on_zipf(spark, tmp_path):
+def test_wand_theta_reaches_true_kth_on_zipf(spark, zipf_wand_index):
     """The round-11 seed fix's contract: scoring the FULL max(k, 8k)
     top-ub seed (never early-stopping on covered-doc count) recovers
     θ == the true k-th score whenever fewer than max(k,8k) buckets
     have ub ≥ θ* — which holds on the Zipf fixture at this scale. The
     round-10 planner's early stop left θ measurably below θ* and kept
     ~2.7× more postings than a perfect threshold."""
-    docs = _zipf_docs(spark, 2000)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=512)
+    path = zipf_wand_index(2000, 512)
     for q in ("t1", "t1 t3 t9"):
         plan = _wand_plan(spark, path, q, 10, None, None)
         exact = query_postings_index(spark, path, q, k=10).collect()
         assert plan["theta"] == pytest.approx(
             float(exact[-1]["bm25_score"]), abs=1e-3
         ), q
-    docs.unpersist()
 
 
-def test_wand_refinement_round_preserves_exactness(spark, tmp_path, monkeypatch):
+def test_wand_refinement_round_preserves_exactness(spark, zipf_wand_index, monkeypatch):
     """Force the θ-refinement round (factor 0 → any multi-term query
     with kept buckets refines) and pin that (a) the plan reports it,
     (b) θ never overshoots the true k-th score, and (c) answers stay
     hash-identical to exact mode."""
     import lakehouse_dba_tools_spark.similarity.bm25 as bm25
 
-    docs = _zipf_docs(spark, 2000)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=512)
+    path = zipf_wand_index(2000, 512)
     monkeypatch.setattr(bm25, "WAND_REFINE_FACTOR", 0)
     q = "t1 t3 t9"
     plan = _wand_plan(spark, path, q, 10, None, None)
@@ -349,10 +366,9 @@ def test_wand_refinement_round_preserves_exactness(spark, tmp_path, monkeypatch)
     assert wand == exact
     # θ is a true-score lower bound even after refinement
     assert plan["theta"] <= exact[-1][1] + 1e-4
-    docs.unpersist()
 
 
-def test_score_kept_join_fallback_rederives_without_frame(spark, tmp_path, monkeypatch):
+def test_score_kept_join_fallback_rederives_without_frame(spark, zipf_wand_index, monkeypatch):
     """_score_kept_join's compat path: a plan stripped of the
     planner's persisted kept frame (hand-built plans, external
     tooling) re-derives the kept buckets from the pinned blockmax
@@ -360,9 +376,7 @@ def test_score_kept_join_fallback_rederives_without_frame(spark, tmp_path, monke
     import lakehouse_dba_tools_spark.similarity.bm25 as bm25
     from lakehouse_dba_tools_spark.similarity.bm25 import _score_kept_join
 
-    docs = _zipf_docs(spark, 1000)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=256)
+    path = zipf_wand_index(1000, 256)
     monkeypatch.setattr(bm25, "WAND_COLLECT_MAX", 0)
     q = "t1 t3 t9"
     plan = _wand_plan(spark, path, q, 10, None, None)
@@ -382,10 +396,9 @@ def test_score_kept_join_fallback_rederives_without_frame(spark, tmp_path, monke
     plan.pop("_kept_frame")
     without_frame = topk(_score_kept_join(spark, plan))
     assert with_frame == without_frame == exact
-    docs.unpersist()
 
 
-def test_wand_refinement_fires_organically_and_stays_exact(spark, tmp_path):
+def test_wand_refinement_fires_organically_and_stays_exact(spark, zipf_wand_index):
     """VERDICT r11 directive #4: the θ-refinement round occurs WITHOUT
     monkeypatching in its natural regime — a many-common-term query
     with k small relative to the bucket count over the moderate-skew
@@ -400,9 +413,7 @@ def test_wand_refinement_fires_organically_and_stays_exact(spark, tmp_path):
     import lakehouse_dba_tools_spark.similarity.bm25 as bm25
     from lakehouse_dba_tools_spark.similarity.bm25 import _wand_plan
 
-    docs = _zipf_docs(spark, 4000)
-    path = str(tmp_path / "bm25")
-    build_postings_index(docs, path, wand_buckets=512)
+    path = zipf_wand_index(4000, 512)
     q = "t1 t2 t3 t4 t5 t6 t7 t8"
     k = 5
     plan = _wand_plan(spark, path, q, k, None, None)
@@ -418,4 +429,3 @@ def test_wand_refinement_fires_organically_and_stays_exact(spark, tmp_path):
     ]
     assert wand == exact
     assert plan["theta"] <= exact[-1][1] + 1e-4
-    docs.unpersist()

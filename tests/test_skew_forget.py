@@ -268,8 +268,7 @@ def test_bm25_forget_equals_fresh_build_tiers_and_queries(spark, sf_dir, tmp_pat
     from lakehouse_dba_tools_spark.operators.indexio import open_snapshot
     from lakehouse_dba_tools_spark.similarity.bm25 import (
         BM25_TABLES,
-        _champ_snapshot,
-        _wand_snapshot,
+        _tier_snapshot,
         build_postings_index,
         forget_from_postings_index,
         query_postings_index,
@@ -290,16 +289,20 @@ def test_bm25_forget_equals_fresh_build_tiers_and_queries(spark, sf_dir, tmp_pat
     pb, db = open_snapshot(b, BM25_TABLES).dirs.values()
     assert _rowset(spark.read.parquet(pa)) == _rowset(spark.read.parquet(pb))
     assert _rowset(spark.read.parquet(da)) == _rowset(spark.read.parquet(db))
-    ca, cma = _champ_snapshot(a)
-    cb, cmb = _champ_snapshot(b)
+    def tier(p, t):
+        snap = _tier_snapshot(p, t)
+        return snap.dirs[t], snap.meta
+
+    ca, cma = tier(a, "champions")
+    cb, cmb = tier(b, "champions")
     assert cma["n_docs"] == cmb["n_docs"] == n_kept
     assert round(cma["avgdl"], 9) == round(cmb["avgdl"], 9)
     assert _rowset(spark.read.parquet(ca)) == _rowset(spark.read.parquet(cb))
     assert _rowset(spark.read.parquet(f"{ca}/_termstats")) == _rowset(
         spark.read.parquet(f"{cb}/_termstats")
     )
-    wa, wma = _wand_snapshot(a)
-    wb, wmb = _wand_snapshot(b)
+    wa, wma = tier(a, "blocked")
+    wb, wmb = tier(b, "blocked")
     assert wma["n_docs"] == wmb["n_docs"] == n_kept
     assert _rowset(spark.read.parquet(wa)) == _rowset(spark.read.parquet(wb))
     assert _rowset(
@@ -318,6 +321,60 @@ def test_bm25_forget_equals_fresh_build_tiers_and_queries(spark, sf_dir, tmp_pat
     got = [tuple(r) for r in query_postings_index(spark, a, q, k=10).collect()]
     want = [tuple(r) for r in query_postings_index(spark, b, q, k=10).collect()]
     assert got == want
+
+
+def test_bm25_forget_after_replayed_append_dedups_tiers(spark, sf_dir, tmp_path):
+    """A forget that follows a replayed append with no compact between
+    refreshes the tiers from DEDUPED postings: the append changed the
+    footer counts the build recorded, so the snapshot is no longer
+    dup-free, and the forget's rewrite (which keeps the surviving
+    duplicates) is not marked dup-free either. Both tiers and all
+    three query modes equal a fresh build of the deduped corpus minus
+    the forgotten docs."""
+    from lakehouse_dba_tools_spark.operators.indexio import is_dup_free, open_snapshot
+    from lakehouse_dba_tools_spark.similarity.bm25 import (
+        BM25_TABLES,
+        _tier_snapshot,
+        append_to_postings_index,
+        build_postings_index,
+        forget_from_postings_index,
+        query_postings_index,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    batch = docs.filter(F.col("doc_id") % 4 == 0)
+    forget = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
+    kept_docs = docs.join(forget, "doc_id", "left_anti")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    n_kept = kept_docs.count()
+    build_postings_index(
+        docs.filter(F.col("doc_id") % 4 != 0), a, champion_n=n_kept + 10, wand_buckets=8
+    )
+    assert is_dup_free(open_snapshot(a, BM25_TABLES))
+    append_to_postings_index(batch, a)
+    append_to_postings_index(batch, a)  # replayed epoch
+    assert not is_dup_free(open_snapshot(a, BM25_TABLES))
+    forget_from_postings_index(spark, a, forget)
+    assert not is_dup_free(open_snapshot(a, BM25_TABLES))
+    build_postings_index(kept_docs, b, champion_n=n_kept + 10, wand_buckets=8)
+
+    for tier, side, floats in (
+        ("champions", "_termstats", ()),
+        ("blocked", "_blockmax", ("max_imp",)),
+    ):
+        ta, tb = _tier_snapshot(a, tier), _tier_snapshot(b, tier)
+        assert ta.meta["n_docs"] == tb.meta["n_docs"] == n_kept
+        assert round(ta.meta["avgdl"], 9) == round(tb.meta["avgdl"], 9)
+        for t, fc in ((tier, ()), (side, floats)):
+            assert _rowset(spark.read.parquet(ta.dirs[t]), float_cols=fc) == _rowset(
+                spark.read.parquet(tb.dirs[t]), float_cols=fc
+            ), t
+
+    q = "spark merge window join"
+    for mode in ("exact", "champions", "wand"):
+        got = [tuple(r) for r in query_postings_index(spark, a, q, k=10, mode=mode).collect()]
+        want = [tuple(r) for r in query_postings_index(spark, b, q, k=10, mode=mode).collect()]
+        assert got == want, mode
 
 
 def test_ivf_forget_matches_survivor_assignment_and_brute(spark, sf_dir, tmp_path):
@@ -605,8 +662,7 @@ def test_tier_stamp_detects_crashed_forget_and_writers_repair(
     )
     from lakehouse_dba_tools_spark.similarity.bm25 import (
         BM25_TABLES,
-        _champ_snapshot,
-        _wand_snapshot,
+        _tier_snapshot,
         _write_postings,
         append_to_postings_index,
         build_postings_index,
@@ -622,7 +678,7 @@ def test_tier_stamp_detects_crashed_forget_and_writers_repair(
     with writer_lock(path):
         _write_postings(survivors, path, "text", "doc_id", fresh=True)
     cur = os.path.basename(open_snapshot(path, BM25_TABLES).dirs["postings"])
-    assert _champ_snapshot(path)[1]["postings_dir"] != cur
+    assert _tier_snapshot(path, "champions").meta["postings_dir"] != cur
     for mode in ("champions", "wand"):
         with pytest.raises(RuntimeError, match="derived from postings version"):
             query_postings_index(spark, path, "spark merge", k=5, mode=mode)
@@ -633,8 +689,8 @@ def test_tier_stamp_detects_crashed_forget_and_writers_repair(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
     )
     append_to_postings_index(batch, path)
-    assert _champ_snapshot(path)[1]["postings_dir"] == cur
-    assert _wand_snapshot(path)[1]["postings_dir"] == cur
+    assert _tier_snapshot(path, "champions").meta["postings_dir"] == cur
+    assert _tier_snapshot(path, "blocked").meta["postings_dir"] == cur
     for mode in ("champions", "wand"):
         query_postings_index(spark, path, "spark merge", k=5, mode=mode).collect()
 

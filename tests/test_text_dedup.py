@@ -1077,10 +1077,17 @@ def test_legacy_meta_without_schemas_matches(spark, tmp_path, family):
     kept, legacy = str(tmp_path / "kept"), str(tmp_path / "legacy")
     build(kept)
     build(legacy)
-    for meta_path in (
-        os.path.join(current_version_dir(os.path.join(legacy, tables.primary)), tables.meta_name),
-        os.path.join(legacy, tables.root_meta),
-    ):
+    metas = [(tables.primary, tables.meta_name)]
+    if family == "bm25":
+        from lakehouse_dba_tools_spark.similarity.bm25 import CHAMP_META, WAND_META
+
+        # the champions and block-max tier metas record their tables'
+        # schemas too
+        metas += [("champions", CHAMP_META), ("blocked", WAND_META)]
+    for meta_path in [
+        os.path.join(current_version_dir(os.path.join(legacy, t)), name)
+        for t, name in metas
+    ] + [os.path.join(legacy, tables.root_meta)]:
         with open(meta_path) as fh:
             m = json.load(fh)
         m.pop("schemas", None)
@@ -1088,6 +1095,12 @@ def test_legacy_meta_without_schemas_matches(spark, tmp_path, family):
             json.dump(m, fh)
     assert "schemas" in open_snapshot(kept, tables).meta
     assert "schemas" not in open_snapshot(legacy, tables).meta
+    if family == "bm25":
+        from lakehouse_dba_tools_spark.similarity.bm25 import _tier_snapshot
+
+        for tier in ("champions", "blocked"):
+            assert "schemas" in _tier_snapshot(kept, tier).meta
+            assert "schemas" not in _tier_snapshot(legacy, tier).meta
     sc = spark.sparkContext._jsc.sc()
     jobs = {}
 
@@ -1102,3 +1115,32 @@ def test_legacy_meta_without_schemas_matches(spark, tmp_path, family):
         assert want[0] == [(20, 1, 0.833333), (21, 5, 1.0)]
     assert counted(legacy) == want
     assert jobs[kept] < jobs[legacy]
+
+
+def test_describe_index_counts_rows_from_footers(spark, tmp_path):
+    """describe_index reads each table's row count from its parquet
+    footers: it starts no Spark job and agrees with a count() of the
+    published version, for a partitioned table and a flat one, after
+    an append added files to both."""
+    from lakehouse_dba_tools_spark.dedup.index import append_to_lsh_index, build_lsh_index
+    from lakehouse_dba_tools_spark.operators.indexio import (
+        current_version_dir,
+        describe_index,
+    )
+
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i} jumps over lazy dog {i % 3}") for i in range(12)],
+        schema,
+    )
+    more = spark.createDataFrame([(100, "a wholly new document text here")], schema)
+    path = str(tmp_path / "lsh")
+    build_lsh_index(docs, path)
+    append_to_lsh_index(more, path)
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().numTotalJobs()
+    got = describe_index(path, ("bands", "shash"))
+    assert sc.dagScheduler().numTotalJobs() == before
+    for d in got:
+        live = f"{path}/{d['table']}"
+        assert d["n_rows"] == spark.read.parquet(current_version_dir(live)).count() > 0

@@ -76,14 +76,14 @@ def run_scale(spark, n: int, passes: int) -> dict:
             el = time.time() - t
             best["ingest"] = el if best["ingest"] is None else min(best["ingest"], el)
 
-            pre = describe_index(spark, path, ("bands", "shash"))
+            pre = describe_index(path, ("bands", "shash"))
             t = time.time()
             compact_lsh_index(spark, path)
             el = time.time() - t
             best["compact"] = (
                 el if best["compact"] is None else min(best["compact"], el)
             )
-            post = describe_index(spark, path, ("bands", "shash"))
+            post = describe_index(path, ("bands", "shash"))
             out["n_pairs"] = n_pairs
             out["files_pre_compact"] = {d["table"]: d["n_files"] for d in pre}
             out["files_post_compact"] = {d["table"]: d["n_files"] for d in post}
