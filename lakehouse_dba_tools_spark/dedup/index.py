@@ -18,12 +18,16 @@ as operators/upsert.py):
 - ``shash/``  (doc_id, shash array<bigint>) — distinct xxhash64'd
   shingles per doc, the compact verify-side payload (8 B/shingle;
   document TEXT never enters the index).
-- ``_lsh_meta.json``  {k, num_perm, bands, seed, id_col, text_col,
-  shash_dir, schemas} —
-  signatures only collide within one permutation family, so
-  query/append take their parameters FROM the stored meta (callers
-  cannot pass divergent ones) and a missing meta file fails loudly
-  instead of finding nothing. ``shash_dir`` names the shash VERSION
+- ``bands/<ver>/_lsh_meta.json``  {k, num_perm, bands, seed, id_col,
+  text_col, shash_dir, schemas, rows, dup_free} — the one meta copy,
+  inside each bands version directory, so the bands pointer flip
+  publishes tables and parameters together. A root-level
+  ``_lsh_meta.json`` exists only in indexes written before metas moved
+  into the version directories; readers fall back to it there, and no
+  verb writes one. Signatures only collide within one permutation
+  family, so query/append take their parameters FROM the stored meta
+  (callers cannot pass divergent ones) and a missing meta file fails
+  loudly instead of finding nothing. ``shash_dir`` names the shash VERSION
   this bands snapshot pairs with: the index spans two tables, and two
   independent pointer flips would leave a window (crash mid-build, or
   a reader racing a full rebuild over a different corpus) where new
@@ -40,10 +44,11 @@ as operators/upsert.py):
   A meta written before the key existed reads by inference instead,
   with the same results.
 
-The two tables are declared once as ``LSH_TABLES``; build, compact and
-forget write and publish them through indexio's shared versioned-table
-layer (``write_versions`` / ``compact_tables`` / ``forget_rows``), and
-every reader resolves them with ``indexio.open_snapshot``.
+The two tables are declared once as ``LSH_TABLES``; build, compact,
+forget and rebuild write and publish them through indexio's shared
+versioned-table layer (``write_versions`` / ``compact_tables`` /
+``forget_rows``), and every reader resolves them with
+``indexio.open_snapshot``.
 
 Scale notes: query cost is |batch| signatures + one join against the
 band table (shuffle carries (band_key, id) pairs only) + a verify join
@@ -74,9 +79,6 @@ adds as first-class (dedup at continuous-ingest scale).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,16 +91,11 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     filter_ledgered,
     forget_rows,
     heal_tables,
-    init_versioned,
     open_snapshot,
     overlap_jobs,
     pinned_forget_ids,
-    publish,
     read_forget_ledger,
     read_table,
-    reader_schema,
-    refresh_listings,
-    write_version_meta,
     write_versions,
     writer_lock,
 )
@@ -117,8 +114,6 @@ META_NAME = "_lsh_meta.json"
 # obvious parameter, never a confusing count mismatch.
 DEFAULT_BANDS = 16
 
-_BANDS = Layout(partition_by="band_idx")
-
 LSH_TABLES = IndexTables(
     kind="LSH",
     primary="bands",
@@ -129,7 +124,7 @@ LSH_TABLES = IndexTables(
     # write emits one file per (input task × band) — measured 512
     # files for 624 KiB at gate SF, and every later query/forget/
     # residual read pays the per-file open cost
-    layouts={"bands": _BANDS, "shash": Layout()},
+    layouts={"bands": Layout(partition_by="band_idx"), "shash": Layout()},
     # rows are idempotent per (band_idx, band_key, doc_id) / (doc_id)
     dedup_keys=lambda id_col: {
         "bands": ["band_idx", "band_key", id_col],
@@ -225,10 +220,6 @@ def build_lsh_index(
              "shash": filter_ledgered(sh, id_col, ledger=ledger)},
             meta,
         )
-        # root-level copy is informational only (humans / legacy
-        # tooling); every reader goes through open_snapshot
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
     pinned.unpersist()
     return meta
 
@@ -629,49 +620,38 @@ def rebuild_lsh_index(
     re-ingesting it. Runs under the writer lock; publishes bands (new
     parameters) and shash (replay-duplicates folded) plus the updated
     meta behind the atomic pointer flip — a query planned pre-rebuild
-    completes on the retained snapshot. Returns the new meta."""
+    completes on the retained snapshot. The meta's ``rows`` and
+    ``dup_free`` describe the rebuilt tables, as after a build. Returns
+    the new meta."""
     from lakehouse_dba_tools_spark.dedup.minhash import _signature_udf
 
     with writer_lock(path):
-        # read params under the lock: no concurrent rebuild can swap
-        # them between read and write
-        m = read_lsh_meta(path)
+        heal_tables(path, LSH_TABLES)
+        # resolve params and tables under the lock: no concurrent
+        # rebuild can swap them between read and write
+        snap = open_snapshot(path, LSH_TABLES)
+        m = snap.meta
         n_perm = num_perm or m["num_perm"]
         n_bands = bands or m["bands"]
         sd = seed if seed is not None else m["seed"]
         id_col = m["id_col"]
-        sh_live = os.path.join(path, "shash")
-        bands_live = os.path.join(path, "bands")
-        heal_tables(path, LSH_TABLES)
-        stored = read_table(
-            spark, open_snapshot(path, LSH_TABLES), "shash"
-        ).dropDuplicates([id_col])
+        # Both overlapped table writes read the deduped shash, unpinned:
+        # on a 4-core host (2,100 docs re-banded) pinning it and filling
+        # the pin with a count started 7 jobs in 1.3-1.9 s per rebuild,
+        # against 5 jobs in 1.1-1.5 s without the pin.
+        stored = read_table(spark, snap, "shash").dropDuplicates([id_col])
         signed = stored.withColumn(
             "signature", _signature_udf(n_perm, sd)(F.col("shash"))
         )
         bk = band_keys(signed, id_col, n_bands, n_perm // n_bands)
-        # shash first so the new bands meta can name it (single-flip
-        # commit, same as build/compact)
-        sh_target = init_versioned(sh_live)
-        stored.coalesce(1).write.mode("overwrite").parquet(sh_target)
-        meta = {**m, "num_perm": n_perm, "bands": n_bands, "seed": sd,
-                "shash_dir": os.path.basename(sh_target),
-                "schemas": {"bands": reader_schema(bk, _BANDS),
-                            "shash": reader_schema(stored, Layout())}}
-        bands_target = init_versioned(bands_live)
-        bk.repartition("band_idx").write.mode("overwrite").partitionBy(
-            "band_idx"
-        ).parquet(bands_target)
-        # the NEW parameters ride inside the new bands version: the
-        # pointer flip below publishes re-banded tables + params +
-        # the named shash version atomically, so no reader can pair
-        # them with the old num_perm/bands (the silent-zero-matches
-        # hazard) or a different build's shash
-        write_version_meta(bands_target, META_NAME, meta)
-        publish(sh_live, sh_target)
-        publish(bands_live, bands_target)
-        # root copy is informational only; readers use open_snapshot
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
-        refresh_listings(spark, path, LSH_TABLES.names)
+        # the NEW parameters ride inside the new bands version, which
+        # names the new shash version: one pointer flip publishes
+        # re-banded tables + params, so no reader can pair them with
+        # the old num_perm/bands (the silent-zero-matches hazard) or a
+        # different build's shash
+        meta, _ = write_versions(
+            spark, path, LSH_TABLES, {"bands": bk, "shash": stored},
+            {**m, "num_perm": n_perm, "bands": n_bands, "seed": sd},
+            pack=True,
+        )
     return meta

@@ -45,12 +45,17 @@ visibility semantics, unchanged by the versioning.
 declares its tables once (an ``IndexTables``: a primary table whose
 version directory carries the parameter meta, an optional secondary
 table the meta names, and each table's write ``Layout``), and every
-build, compact and forget goes through the same three parts:
+build, compact, forget and rebuild goes through the same three parts
+(BM25's tiers, whose side tables live inside the tier's version
+directory, publish through ``bm25._publish_tier``):
 
 - ``open_snapshot`` resolves the primary pointer ONCE and takes the
   secondary version the primary's meta names (``shash_dir`` /
   ``doclens_dir``), so the primary's pointer flip is the single atomic
-  commit for the pair. Metas older than the pairing key fall back to
+  commit for the pair. That version meta is the only meta a verb
+  reads; nothing writes a root-level copy, which is read only in
+  indexes from before metas rode the versions (``root_meta``). Metas
+  older than the pairing key fall back to
   the live secondary pointer; a named version that is gone while a
   flat live directory exists (an external flatten-in-place) reads the
   flat table with a loud ``UserWarning``.
@@ -512,28 +517,18 @@ def _reclaim(live: str, retain: int) -> None:
     if not os.path.islink(live):
         return
     cur = os.path.realpath(live)
-    cur_n = None
-    if cur:
-        m = _VER_RE.search(os.path.basename(cur))
-        cur_n = int(m.group(1)) if m else None
-    parent, base = os.path.dirname(live) or ".", os.path.basename(live)
-    versions = []
-    for name in os.listdir(parent):
-        full = os.path.join(parent, name)
-        m = _VER_RE.search(name)
-        if (
-            name.startswith(base + ".v")
-            and m
-            and os.path.isdir(full)
-            and os.path.realpath(full) != cur
-        ):
-            versions.append((int(m.group(1)), full))
-    debris = [p for n, p in versions if cur_n is None or n > cur_n]
-    superseded = sorted(
-        ((n, p) for n, p in versions if cur_n is not None and n < cur_n),
-        reverse=True,
-    )
-    for path in debris + [p for _, p in superseded[retain:]]:
+    m = _VER_RE.search(os.path.basename(cur))
+    cur_n = int(m.group(1)) if m else None
+    superseded = []
+    for path in all_version_dirs(live):  # ascending version numbers
+        if os.path.realpath(path) == cur:
+            continue
+        n = int(_VER_RE.search(path).group(1))
+        if cur_n is None or n > cur_n:
+            shutil.rmtree(path, ignore_errors=True)
+        elif n < cur_n:
+            superseded.append(path)
+    for path in superseded[::-1][retain:]:
         shutil.rmtree(path, ignore_errors=True)
 
 
@@ -696,16 +691,14 @@ def snapshot_meta(live: str, name: str, root: str) -> tuple[str, dict]:
     as a coupled pair — the reader-side half of the atomic-parameters
     contract. Callers MUST scan the returned ``version_dir`` (not
     re-resolve ``live``), so the parameters they plan with always
-    describe the exact snapshot they read. Falls back to the root-level
-    sidecar for indexes written before meta rode the version
-    directories (those never rebuilt, so the root copy is current)."""
+    describe the exact snapshot they read. A version without the meta
+    (an index from before metas rode the versions) reads ``root``'s."""
     vd = current_version_dir(live)
     return vd, _version_meta(vd, name, os.path.join(root, name))
 
 
 def _version_meta(version_dir: str, name: str, root_sidecar: str) -> dict:
-    """The meta ``name`` inside ``version_dir``, or the root-level
-    sidecar when the version carries none (a pre-version-meta index)."""
+    """``version_dir``'s meta ``name``, else the legacy root sidecar."""
     p = os.path.join(version_dir, name)
     with open(p if os.path.exists(p) else root_sidecar) as fh:
         return json.load(fh)
@@ -838,13 +831,19 @@ def read_table(spark, snap: Snapshot, table: str, parts: list[str] | None = None
 
 
 def reader_schema(df, layout: Layout) -> dict:
-    """``df``'s schema as a read of the written table lists it (a
-    partitioned read puts the partition column last), for the version
-    meta's ``schemas``."""
+    """``df``'s schema as a read of the written table lists it, for the
+    version meta's ``schemas``: a partitioned read puts the partition
+    column last, and a parquet read makes every field, array element and
+    map value nullable, whatever the writer's frame said. So a table
+    written from computed rows (a build) and one rewritten from a read
+    of itself (a compact, forget or rebuild) record the same schema."""
     cols = [c for c in df.columns if c != layout.partition_by]
     if layout.partition_by is not None:
         cols.append(layout.partition_by)
-    return df.select(cols).schema.jsonValue()
+    return json.loads(re.sub(
+        r'"(nullable|containsNull|valueContainsNull)":false', r'"\1":true',
+        df.select(cols).schema.json(),
+    ))
 
 
 def heal_tables(path: str, tables: IndexTables) -> None:

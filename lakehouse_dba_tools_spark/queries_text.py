@@ -400,11 +400,11 @@ def minhash_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the cluster_safe_split_audit pattern). try/finally: a failed
     # collect must not strand the cache either.
     try:
-        rows = out.collect()
+        table = out.toArrow()
     finally:
         for c in caches:
             c.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return spark.createDataFrame(table, out.schema)
 
 
 # with_simhash / simhash_near_dups stay exported as library operators
@@ -439,11 +439,11 @@ def simhash_verified_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leak audit; same gate-SF pair-frame boundary note as
     # minhash_verified_near_dups above)
     try:
-        rows = out.collect()
+        table = out.toArrow()
     finally:
         for c in caches:
             c.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return spark.createDataFrame(table, out.schema)
 
 
 @register(
@@ -488,12 +488,12 @@ def incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized entries per invocation (r12 leak audit; same
     # gate-SF boundary note as minhash_verified_near_dups above)
     try:
-        rows = out.collect()
+        table = out.toArrow()
     finally:
         sh.unpersist()
         for c in caches:
             c.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return spark.createDataFrame(table, out.schema)
 
 
 @register(
@@ -585,17 +585,17 @@ def lsh_index_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # API. query_lsh_index exports its pinned batch-shingle
             # frame via `caches`; the finally releases it (r12 review —
             # the same non-GC'd-cache class as the r11 ADVICE leak).
-            schema = "id_a bigint, id_b bigint, jaccard double"
-            rows1 = ingest_batch(spark, batch1, tmp, threshold=0.5).collect()
+            # ingest_batch returns its pairs already materialized
+            b1 = ingest_batch(spark, batch1, tmp, threshold=0.5)
             append_to_lsh_index(batch1, tmp)  # replayed epoch
             compact_lsh_index(spark, tmp)
-            p2 = query_lsh_index(spark, batch2, tmp, threshold=0.5, caches=caches)
-            rows2 = p2.select("id_a", "id_b", "jaccard").collect()
+            p2 = query_lsh_index(
+                spark, batch2, tmp, threshold=0.5, caches=caches
+            ).select("id_a", "id_b", "jaccard")
+            b2 = spark.createDataFrame(p2.toArrow(), p2.schema)
         return (
-            spark.createDataFrame(rows1, schema).withColumn("phase", F.lit("b1"))
-            .unionByName(
-                spark.createDataFrame(rows2, schema).withColumn("phase", F.lit("b2"))
-            )
+            b1.withColumn("phase", F.lit("b1"))
+            .unionByName(b2.withColumn("phase", F.lit("b2")))
             .select("phase", "id_a", "id_b", "jaccard")
             .orderBy("phase", "id_a", "id_b")
         )
@@ -880,8 +880,8 @@ def bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_postings_index(spark, tmp)
         out = query_postings_index(spark, tmp, _BM25_QUERY, k=20)
         # materialize before the index tempdir vanishes (bounded: k rows)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        table = out.toArrow()
+        return spark.createDataFrame(table, out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -919,8 +919,8 @@ def bm25_champions_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, tmp, _BM25_QUERY, k=20, mode="champions"
             )
             # materialize before the index tempdir vanishes (k rows)
-            rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+            table = out.toArrow()
+        return spark.createDataFrame(table, out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1006,8 +1006,8 @@ def bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = query_postings_index(spark, tmp, _BM25_QUERY, k=20, mode="wand")
             # materialize before the index tempdir vanishes (bounded:
             # k rows)
-            rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+            table = out.toArrow()
+        return spark.createDataFrame(table, out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

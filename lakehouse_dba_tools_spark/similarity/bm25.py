@@ -25,7 +25,6 @@ Scale shapes (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
-import json
 import math
 import os
 from typing import NamedTuple
@@ -313,13 +312,15 @@ def bm25_score_scalar(
 #   plan reads; df(term) = Σ_bucket n_docs (postings are deduped at
 #   refresh). Rides inside the blocked version dir: one flip publishes
 #   postings + maxima + stats.
-# - _bm25_meta.json  {id_col, text_col}
 # - postings/<ver>/_bm25_postings_meta.json  {id_col, text_col,
-#   doclens_dir, schemas, rows, dup_free} — ``doclens_dir`` names the
-#   doclens version the postings version pairs with (the postings
-#   pointer flip is the single atomic commit for the pair; indexes from
-#   before round 10 have no such meta and fall back to the two live
-#   pointers, with the root _bm25_meta.json as their meta). ``schemas``
+#   doclens_dir, schemas, rows, dup_free} — the index's one meta copy,
+#   which every verb reads through ``indexio.open_snapshot``.
+#   ``doclens_dir`` names the doclens version the postings version
+#   pairs with (the postings pointer flip is the single atomic commit
+#   for the pair). Indexes from before round 10 have no such meta: they
+#   fall back to the two live pointers, with a root-level
+#   _bm25_meta.json {id_col, text_col} as their meta, which no verb
+#   writes any more. ``schemas``
 #   holds both tables' schemas as their readers see them
 #   (``StructType.jsonValue()``): the verbs read postings and doclens
 #   with them (``indexio.read_table``), so no read starts a
@@ -418,18 +419,15 @@ def build_postings_index(
         tiers["blocked"] = {"wand_buckets": wand_buckets, "k1": k1, "b": b}
     with writer_lock(path):
         _write_postings(docs, path, text_col, id_col, fresh=True)
-        with open(os.path.join(path, BM25_META), "w") as fh:
-            json.dump({"id_col": id_col, "text_col": text_col}, fh)
         _refresh_tiers(docs.sparkSession, path, tiers)
 
 
 def append_to_postings_index(docs: DataFrame, path: str) -> None:
-    with open(os.path.join(path, BM25_META)) as fh:
-        m = json.load(fh)
     # The lock keeps this append out of any concurrent compaction's
     # snapshot→publish window (it would otherwise be silently dropped
     # with the superseded version directory).
     with writer_lock(path):
+        m = open_snapshot(path, BM25_TABLES).meta
         # replay/backfill-resurrection guard lives in _write_postings
         # (one place for append AND fresh-build paths)
         _write_postings(docs, path, m["text_col"], m["id_col"], fresh=False)
@@ -896,29 +894,27 @@ def query_postings_index(
     For champions/wand, ``k1``/``b`` default to the STORED tier
     parameters; passing explicit values that differ raises (the tier's
     ordering/bounds were computed under the stored ones)."""
-    with open(os.path.join(path, BM25_META)) as fh:
-        m = json.load(fh)
-
+    # The postings meta is the index's one meta copy. Exact mode binds
+    # both scans to the RESOLVED version pair (the postings meta names
+    # its doclens version — one flip covers both tables): the snapshot
+    # stays complete across one subsequent compact (indexio retention),
+    # so a query planned pre-compact evaluates correctly post-compact
+    # and can never pair tables from different builds.
+    snap = open_snapshot(path, BM25_TABLES)
+    id_col = snap.meta["id_col"]
     if mode == "champions":
-        return _query_champions(spark, path, query, k, k1, b, m["id_col"])
+        return _query_champions(spark, path, query, k, k1, b, id_col)
     if mode == "wand":
-        return _query_wand(spark, path, query, k, k1, b, m["id_col"])
+        return _query_wand(spark, path, query, k, k1, b, id_col)
     if mode != "exact":
         raise ValueError(
             f"unknown mode {mode!r}: expected 'exact', 'champions' or 'wand'"
         )
     k1 = 1.2 if k1 is None else k1
     b = 0.75 if b is None else b
-
-    # Bind both scans to the RESOLVED version pair (the postings meta
-    # names its doclens version — one flip covers both tables): the
-    # snapshot stays complete across one subsequent compact (indexio
-    # retention), so a query planned pre-compact evaluates correctly
-    # post-compact and can never pair tables from different builds.
-    snap = open_snapshot(path, BM25_TABLES)
     row = (
         read_table(spark, snap, "doclens")
-        .dropDuplicates([m["id_col"]])
+        .dropDuplicates([id_col])
         .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
         .collect()[0]
     )
@@ -927,10 +923,10 @@ def query_postings_index(
     if terms:  # pre-filter BEFORE the dedup shuffle: only query-term
         # postings pay it (the same pushed IN-filter the scorer applies)
         postings = postings.filter(F.col("term").isin(terms))
-    postings = postings.dropDuplicates(["term", m["id_col"]])
+    postings = postings.dropDuplicates(["term", id_col])
     return bm25_topk_from_index(
         postings, (int(row["n"]), float(row["avgdl"])), query, k,
-        id_col=m["id_col"], k1=k1, b=b,
+        id_col=id_col, k1=k1, b=b,
     )
 
 
@@ -1071,8 +1067,7 @@ def _wand_plan(
     wm = snap.meta
     _check_tier_stamp(path, wm, "wand")
     k1, b = _tier_params(wm, k1, b, "wand")
-    with open(os.path.join(path, BM25_META)) as fh:
-        id_col = json.load(fh)["id_col"]
+    id_col = open_snapshot(path, BM25_TABLES).meta["id_col"]
     terms = sorted(set(_py_tokens(query)))
     if not terms:
         raise ValueError("query produced no tokens")

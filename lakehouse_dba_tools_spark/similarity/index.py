@@ -14,16 +14,18 @@ On-disk layout under ``path``:
   nprobe a PARTITION-PRUNED scan: a query batch probing p of C lists
   reads p/C of the index bytes (`query_ivf_index` pushes the probed
   cid set into the parquet read).
-- ``_ivf_meta.json``  {n_centroids, seed, id_col, vec_col, centroids,
-  cids, schemas} — the trained quantizer itself rides in the sidecar
-  (C × dim doubles: KBs, driver-sized by construction since training
-  already samples to the driver), inside the lists version directory
-  (the root copy is informational). ``cids`` is the manifest of
-  non-empty lists. ``schemas`` holds the lists schema as its readers
-  see it (``StructType.jsonValue()``, ``cid`` last): every verb reads
-  the lists with it (``indexio.read_table``), so no read starts a
-  schema-inference job; a meta without the key reads by inference,
-  with the same results.
+- ``lists/<ver>/_ivf_meta.json``  {n_centroids, seed, id_col, vec_col,
+  centroids, cids, schemas, rows, dup_free} — the trained quantizer
+  itself rides in the sidecar (C × dim doubles: KBs, driver-sized by
+  construction since training already samples to the driver), inside
+  the lists version directory. A root-level ``_ivf_meta.json`` exists
+  only in indexes written before metas moved into the version
+  directories; readers fall back to it there, and no verb writes one.
+  ``cids`` is the manifest of non-empty lists. ``schemas`` holds the
+  lists schema as its readers see it (``StructType.jsonValue()``,
+  ``cid`` last): every verb reads the lists with it
+  (``indexio.read_table``), so no read starts a schema-inference job;
+  a meta without the key reads by inference, with the same results.
 
 Append semantics match FAISS/production IVF: centroids stay FIXED
 after build (assignments are a pure function of the stored quantizer,
@@ -39,8 +41,8 @@ on the index root, and the lists table's live path is a symlink to a
 versioned directory published by one atomic pointer flip — an append
 can never vanish inside a compaction's swap window, and a crash
 mid-compact leaves the index readable. The lists table is declared
-once as ``IVF_TABLES`` and written through indexio's shared
-versioned-table layer. Replay-tolerant, NOT
+once as ``IVF_TABLES``, and build, compact, forget and rebuild write it
+through indexio's shared versioned-table layer. Replay-tolerant, NOT
 update-tolerant: re-appending an id whose vector CHANGED is caller
 error (dedup keeps an arbitrary variant).
 
@@ -51,7 +53,6 @@ first-class (similarity search at continuous-ingest scale).
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -66,15 +67,11 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     filter_ledgered,
     forget_rows,
     heal_tables,
-    init_versioned,
     open_snapshot,
     pinned_for_write,
     pinned_forget_ids,
-    publish,
     read_forget_ledger,
     read_table,
-    refresh_listings,
-    write_version_meta,
     write_versions,
     writer_lock,
 )
@@ -174,9 +171,6 @@ def build_ivf_index(
         # manifest in one atomic step, so a reader can never probe new
         # lists with old centroids
         meta, _ = write_versions(spark, path, IVF_TABLES, {"lists": rows}, meta)
-        # root copy is informational only; readers use open_snapshot
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
     return meta
 
 
@@ -401,21 +395,22 @@ def rebuild_ivf_index(
     a query planned pre-rebuild completes on the retained snapshot.
     Full-probe (nprobe = n_centroids) answers are invariant under
     rebuild (every list is scanned either way); partial-probe recall is
-    what improves. Returns the new meta."""
-    live = os.path.join(path, "lists")
+    what improves. The meta's ``rows`` and ``dup_free`` describe the
+    rebuilt lists, as after a build. Returns the new meta."""
     with writer_lock(path):
-        # read params under the lock: no concurrent rebuild can swap
-        # them between read and write
-        m = read_ivf_meta(path)
+        heal_tables(path, IVF_TABLES)
+        # resolve params and lists under the lock: no concurrent
+        # rebuild can swap them between read and write
+        snap = open_snapshot(path, IVF_TABLES)
+        m = snap.meta
         n_c = n_centroids or m["n_centroids"]
         sd = seed if seed is not None else m["seed"]
-        heal_tables(path, IVF_TABLES)
         # pin the deduped stored vectors: both the quantizer training
         # sample and the re-assignment write consume them — without the
         # pin the dropDuplicates shuffle + scan runs twice per rebuild
         # (indexio.pinned_for_write)
         with pinned_for_write(
-            read_table(spark, open_snapshot(path, IVF_TABLES), "lists")
+            read_table(spark, snap, "lists")
             .dropDuplicates(["cid", "neighbor_id"])
             .select(F.col("neighbor_id").alias(m["id_col"]),
                     F.col("vec").alias(m["vec_col"]))
@@ -426,22 +421,13 @@ def rebuild_ivf_index(
             rows = _assigned_rows(
                 stored, np.asarray(cents), m["id_col"], m["vec_col"]
             )
-            target = init_versioned(live)
-            # clustered like build/compact: one file per cid
-            rows.repartition("cid").write.mode("overwrite").partitionBy(
-                "cid"
-            ).parquet(target)
-        meta = {**m, "n_centroids": n_c, "seed": sd, "centroids": cents,
-                "cids": _list_cids(target)}
-        # the NEW quantizer rides inside the new lists version: the
-        # pointer flip publishes re-assigned lists + centroids
-        # atomically — a query planning during the rebuild window can
-        # never probe the new lists with the old centroids (or vice
-        # versa); it sees one complete snapshot or the other
-        write_version_meta(target, META_NAME, meta)
-        publish(live, target)
-        # root copy is informational only; readers use open_snapshot
-        with open(os.path.join(path, META_NAME), "w") as fh:
-            json.dump(meta, fh)
-        refresh_listings(spark, path, IVF_TABLES.names)
+            # the NEW quantizer and cid manifest ride inside the new
+            # lists version: the pointer flip publishes re-assigned
+            # lists + centroids atomically — a query planning during the
+            # rebuild window can never probe the new lists with the old
+            # centroids (or vice versa)
+            meta, _ = write_versions(
+                spark, path, IVF_TABLES, {"lists": rows},
+                {**m, "n_centroids": n_c, "seed": sd, "centroids": cents},
+            )
     return meta

@@ -361,6 +361,35 @@ def test_ivf_drift_report_and_rebuild(spark, sf_dir, tmp_path):
     assert rebuilt_fit >= stale_fit - 1e-9
 
 
+def test_ivf_rebuild_meta_rows_match_footers(spark, sf_dir, tmp_path):
+    """A rebuild publishes through ``indexio.write_versions``: after an
+    append, the rebuilt meta's ``rows`` are the rebuilt lists' footer
+    count, the index reads as dup-free, and no root-level meta copy is
+    written."""
+    import os
+
+    from lakehouse_dba_tools_spark.maintenance.history import footer_row_count
+    from lakehouse_dba_tools_spark.operators.indexio import is_dup_free, open_snapshot
+    from lakehouse_dba_tools_spark.similarity.index import (
+        IVF_TABLES,
+        append_to_ivf_index,
+        build_ivf_index,
+        rebuild_ivf_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb.filter(F.col("vec_id") % 10 != 0), path, n_centroids=4, seed=42)
+    append_to_ivf_index(emb.filter(F.col("vec_id") % 10 == 0), path)
+    meta = rebuild_ivf_index(spark, path, n_centroids=8)
+    snap = open_snapshot(path, IVF_TABLES)
+    assert snap.meta == meta
+    assert meta["rows"] == {"lists": footer_row_count(snap.dirs["lists"])}
+    assert meta["rows"] == {"lists": emb.count()}
+    assert is_dup_free(snap)
+    assert not os.path.exists(os.path.join(path, IVF_TABLES.root_meta))
+
+
 def test_query_ivf_index_exclude_ids_replay_guard(spark, sf_dir, tmp_path):
     """The streaming-ANN replay guard (round-8 ADVICE): after a failed
     epoch's append, the batch is already in the index — querying with

@@ -377,6 +377,75 @@ def test_bm25_forget_after_replayed_append_dedups_tiers(spark, sf_dir, tmp_path)
         assert got == want, mode
 
 
+def test_bm25_append_heals_crashed_tiers_from_deduped_postings(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A compact that crashes between its postings publish and the tier
+    refresh leaves dup-free postings and stale tiers. The next append
+    delivers a replay of an already-indexed batch, so the postings now
+    hold duplicates while the meta still says ``dup_free``; the
+    append's tier heal must see from the footer counts that rows were
+    added and refresh from DEDUPED postings. After a second replay,
+    both tiers and all three query modes equal a fresh build of the
+    deduped corpus."""
+    import os
+
+    from lakehouse_dba_tools_spark.operators.indexio import is_dup_free, open_snapshot
+    from lakehouse_dba_tools_spark.similarity import bm25
+    from lakehouse_dba_tools_spark.similarity.bm25 import (
+        BM25_TABLES,
+        _tier_snapshot,
+        append_to_postings_index,
+        build_postings_index,
+        compact_postings_index,
+        query_postings_index,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    batch = docs.filter(F.col("doc_id") % 4 == 0)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    n = docs.count()
+    build_postings_index(
+        docs.filter(F.col("doc_id") % 4 != 0), a, champion_n=n + 10, wand_buckets=8
+    )
+    append_to_postings_index(batch, a)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the tier refresh")
+
+    with monkeypatch.context() as m:
+        m.setattr(bm25, "_refresh_tiers", crash)
+        with pytest.raises(RuntimeError, match="crash before the tier refresh"):
+            compact_postings_index(spark, a)
+    snap = open_snapshot(a, BM25_TABLES)
+    assert is_dup_free(snap)
+    stamp = _tier_snapshot(a, "champions").meta["postings_dir"]
+    assert stamp != os.path.basename(snap.dirs["postings"])
+    append_to_postings_index(batch, a)  # replayed epoch: heals the tiers
+    append_to_postings_index(batch, a)  # replayed again
+    snap = open_snapshot(a, BM25_TABLES)
+    assert snap.meta["dup_free"] and not is_dup_free(snap)
+    build_postings_index(docs, b, champion_n=n + 10, wand_buckets=8)
+
+    for tier, side, floats in (
+        ("champions", "_termstats", ()),
+        ("blocked", "_blockmax", ("max_imp",)),
+    ):
+        ta, tb = _tier_snapshot(a, tier), _tier_snapshot(b, tier)
+        assert ta.meta["n_docs"] == tb.meta["n_docs"] == n
+        assert round(ta.meta["avgdl"], 9) == round(tb.meta["avgdl"], 9)
+        for t, fc in ((tier, ()), (side, floats)):
+            assert _rowset(spark.read.parquet(ta.dirs[t]), float_cols=fc) == _rowset(
+                spark.read.parquet(tb.dirs[t]), float_cols=fc
+            ), t
+
+    q = "spark merge window join"
+    for mode in ("exact", "champions", "wand"):
+        got = [tuple(r) for r in query_postings_index(spark, a, q, k=10, mode=mode).collect()]
+        want = [tuple(r) for r in query_postings_index(spark, b, q, k=10, mode=mode).collect()]
+        assert got == want, mode
+
+
 def test_ivf_forget_matches_survivor_assignment_and_brute(spark, sf_dir, tmp_path):
     """Post-forget lists == assigning the surviving vectors under the
     STORED quantizer (the append contract), and full-probe queries

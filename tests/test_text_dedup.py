@@ -453,14 +453,13 @@ def test_lsh_index_lifecycle(spark, tmp_path):
     # a missing meta file fails loudly instead of silently finding
     # nothing (query/append take parameters FROM the stored meta, so
     # the API itself cannot diverge from what the index was built with).
-    # The authoritative copy rides INSIDE the published bands version
-    # (atomic params+data publish); the root copy is informational —
-    # deleting root alone must NOT break reads, deleting both must.
+    # The only copy rides INSIDE the published bands version (atomic
+    # params+data publish); no root-level copy is written.
     import os as _os
 
     from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
 
-    _os.remove(_os.path.join(path, "_lsh_meta.json"))
+    assert not _os.path.exists(_os.path.join(path, "_lsh_meta.json"))
     assert query_lsh_index(spark, batch2, path, threshold=0.5).count() >= 1
     _os.remove(
         _os.path.join(
@@ -625,6 +624,40 @@ def test_lsh_rebuild_rebands_bit_identical_to_fresh_build(spark, tmp_path):
         for r in query_lsh_index(spark, batch, p, threshold=0.5).collect()
     )
     assert q(old) == q(fresh) and {(a, b) for a, b, _ in q(old)} == {(10, 1)}
+
+
+def test_lsh_rebuild_meta_matches_fresh_build(spark, tmp_path):
+    """A rebuild publishes through ``indexio.write_versions``: after an
+    append and its replay, the rebuilt meta equals a fresh build's at
+    the same parameters (but for the shash version it names), its
+    ``rows`` are the rebuilt tables' footer counts, and the index reads
+    as dup-free."""
+    from lakehouse_dba_tools_spark.dedup.index import (
+        LSH_TABLES,
+        append_to_lsh_index,
+        build_lsh_index,
+        rebuild_lsh_index,
+    )
+    from lakehouse_dba_tools_spark.maintenance.history import footer_row_count
+    from lakehouse_dba_tools_spark.operators.indexio import is_dup_free, open_snapshot
+
+    schema = "doc_id long, text string"
+    corpus = spark.createDataFrame(_NEAR_DUP_CORPUS, schema)
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
+    old, fresh = str(tmp_path / "old"), str(tmp_path / "fresh")
+    build_lsh_index(corpus, old, num_perm=32, bands=8, seed=7)
+    append_to_lsh_index(batch, old)
+    append_to_lsh_index(batch, old)  # replayed epoch
+    meta = rebuild_lsh_index(spark, old, num_perm=64, bands=16)
+    want = build_lsh_index(
+        corpus.unionByName(batch), fresh, num_perm=64, bands=16, seed=7
+    )
+    assert {**meta, "shash_dir": None} == {**want, "shash_dir": None}
+    snap = open_snapshot(old, LSH_TABLES)
+    assert snap.meta == meta
+    footers = {t: footer_row_count(d) for t, d in snap.dirs.items()}
+    assert meta["rows"] == footers == {"bands": 16 * 6, "shash": 6}
+    assert is_dup_free(snap)
 
 
 def test_concurrent_appends_serialize_and_both_land(spark, tmp_path):
@@ -1088,6 +1121,8 @@ def test_legacy_meta_without_schemas_matches(spark, tmp_path, family):
         os.path.join(current_version_dir(os.path.join(legacy, t)), name)
         for t, name in metas
     ] + [os.path.join(legacy, tables.root_meta)]:
+        if not os.path.exists(meta_path):  # no root copy is written
+            continue
         with open(meta_path) as fh:
             m = json.load(fh)
         m.pop("schemas", None)

@@ -6,9 +6,11 @@ of the benchmark's ``lsh_lifecycle`` workload (``perfbench/``'s
 lifecycle on each: two 100-row appends, a compact, a 5-id forget and a
 third append. BM25 is built with ``champion_n=10, wand_buckets=8`` and
 queried once in each of its three modes after the forget; LSH and IVF
-are queried once after the forget too. Around every verb it reads
-``dagScheduler().numTotalJobs()``, so each count is the number of Spark
-jobs the verb started (a query's count includes its ``collect``).
+are queried once after the forget too, and rebuilt after the third
+append (LSH re-banded from 16 to 8 bands, IVF re-trained). Around every
+verb it reads ``dagScheduler().numTotalJobs()``, so each count is the
+number of Spark jobs the verb started (a query's count includes its
+``collect``).
 
 Job counts do not depend on host load; the wall seconds printed beside
 them do. Prints one JSON object: {family: {verb: {"jobs", "s"}}}.
@@ -57,6 +59,7 @@ def lsh_counts(spark, feed, root):
         forget_from_lsh_index,
         ingest_batch,
         query_lsh_index,
+        rebuild_lsh_index,
     )
 
     schema = "doc_id long, text string"
@@ -72,6 +75,7 @@ def lsh_counts(spark, feed, root):
     run("forget", lambda: forget_from_lsh_index(spark, path, forget))
     run("query", lambda: query_lsh_index(spark, query, path).collect())
     run("ingest_3", lambda: ingest_batch(spark, batches[2], path).collect())
+    run("rebuild", lambda: rebuild_lsh_index(spark, path, bands=8))
     return out
 
 
@@ -113,6 +117,7 @@ def ivf_counts(spark, n_docs, root):
         compact_ivf_index,
         forget_from_ivf_index,
         query_ivf_index,
+        rebuild_ivf_index,
     )
 
     rng = np.random.default_rng(CORPUS_SEED)
@@ -136,6 +141,7 @@ def ivf_counts(spark, n_docs, root):
     run("forget", lambda: forget_from_ivf_index(spark, path, forget))
     run("query", lambda: query_ivf_index(spark, probe, path, k=5, nprobe=2).collect())
     run("append_3", lambda: append_to_ivf_index(batches[2], path))
+    run("rebuild", lambda: rebuild_ivf_index(spark, path))
     return out
 
 
