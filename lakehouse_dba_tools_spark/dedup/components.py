@@ -1,7 +1,7 @@
 """Connected components over near-dup pairs → canonical keeper per doc.
 
 The missing last step of every dedup pipeline: pair lists (from
-MinHash/SimHash/embedding LSH) say *who matches whom*; deleting dups
+MinHash or embedding LSH) say *who matches whom*; deleting dups
 needs *groups*. Near-dup similarity is not transitive, but dedup
 treats it as an equivalence by taking connected components of the
 pair graph (standard practice in pretraining-corpus dedup).

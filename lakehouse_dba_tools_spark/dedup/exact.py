@@ -42,9 +42,7 @@ def span_hashes(
     as a shuffle-friendly hash join instead of a global sort. Only the
     16-byte digest + id ever shuffle; bodies are pruned before the
     explode. The O(window) re-hash per position is the JVM-codegen
-    price for staying UDF-free; at 100 TB swap in a Rabin-Karp rolling
-    hash over ``mapInPandas`` (same output contract) to make it O(1)
-    per position.
+    price for staying UDF-free.
     """
     from lakehouse_dba_tools_spark.functions.text import tokens
 
@@ -65,97 +63,14 @@ def span_hashes(
     )
 
 
-def span_hashes_rolling(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 20,
-) -> DataFrame:
-    """Rabin-Karp variant of ``span_hashes`` — the 100 TB scale path.
-
-    Same (id, pos, span_hash) contract, but window hashes come from a
-    polynomial (Rabin-Karp) hash over vectorized per-token hashes
-    instead of an O(window) string digest per position: token hashes
-    are pandas ``hash_array`` (C-vectorized SipHash with a FIXED key —
-    deterministic across partitions, machines and runs), and the
-    window polynomial h(p) = Σ_j th[p+j]·B^(W-1-j) mod 2⁶⁴ evaluates
-    by Horner's rule as W numpy passes over ALL positions of a doc at
-    once (the batch-vectorized equivalent of the O(1) rolling
-    recurrence). Hash VALUES differ from the md5 kernel by design; the
-    detection CONTRACT (equal windows ⇔ equal hashes) is what
-    test_rolling_kernel_matches_md5_kernel pins: both kernels must
-    yield the identical duplicate-span report on the same corpus.
-    """
-    import re as _re
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    # SINGLE tokenizer contract: both kernels split on the same
-    # WORD_SPLIT_RE constant, so the md5 and rolling kernels cannot
-    # silently desynchronize if the corpus tokenization ever changes.
-    from lakehouse_dba_tools_spark.functions.text import WORD_SPLIT_RE
-
-    split_re = _re.compile(WORD_SPLIT_RE)
-    B = np.uint64(1099511628211)  # FNV prime doubles as the base
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        old = np.seterr(over="ignore")  # mod-2^64 wrap IS the algorithm
-        try:
-            for pdf in batches:
-                frames = []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = split_re.split((text or "").strip())
-                    n = len(toks)
-                    if n < window:
-                        continue
-                    th = pd.util.hash_array(np.array(toks, dtype=object))
-                    m = n - window + 1
-                    acc = np.zeros(m, dtype=np.uint64)
-                    for j in range(window):  # Horner across all positions
-                        acc = acc * B + th[j : j + m]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                id_col: np.full(m, did, dtype=np.int64),
-                                "pos": np.arange(m, dtype=np.int32),
-                                "span_hash": acc.astype(np.int64),
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-                else:
-                    yield pd.DataFrame(
-                        {
-                            id_col: pd.Series(dtype="int64"),
-                            "pos": pd.Series(dtype="int32"),
-                            "span_hash": pd.Series(dtype="int64"),
-                        }
-                    )
-        finally:
-            np.seterr(**old)
-
-    from lakehouse_dba_tools_spark.operators.partitioning import fan_out
-
-    return fan_out(df.select(id_col, text_col)).mapInPandas(
-        kernel, schema=f"{id_col} long, pos int, span_hash long"
-    )
-
-
 def duplicate_span_report(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     window: int = 20,
-    kernel=None,
 ) -> DataFrame:
     """Per-document exact-substring duplication profile: how many of a
     doc's sliding windows also appear verbatim in ANOTHER document.
-    ``kernel`` selects the span-hash producer (default ``span_hashes``,
-    JVM md5; ``span_hashes_rolling`` is the vectorized Rabin-Karp scale
-    path — same report either way, pinned by test).
 
     Two shuffles on span_hash (group → duplicated-hash set, then the
     marker join lands on the same partitioning, so AQE reuses the
@@ -163,7 +78,7 @@ def duplicate_span_report(
     deliberately excluded (that is doc_repetition_scores' axis): a
     hash counts as duplicated only when ≥2 DISTINCT docs carry it.
     """
-    spans = (kernel or span_hashes)(df, text_col, id_col, window)
+    spans = span_hashes(df, text_col, id_col, window)
     dup = (
         spans.groupBy("span_hash")
         .agg(F.count_distinct(F.col(id_col)).alias("_nd"))

@@ -1,7 +1,7 @@
 """Exact n-gram Jaccard similarity — the brute-force near-dup baseline.
 
 O(n²) pairwise on distinct word-shingle sets. This is the CORRECTNESS
-oracle for the LSH paths (dedup/minhash.py, dedup/simhash.py), not the
+oracle for the MinHash-LSH path (dedup/minhash.py), not the
 scale path: at 100 TB you never materialize the cross join — you run
 LSH and verify only candidates. Kept because (a) small dims/corpora
 genuinely use it, (b) the driver's differential gate needs an

@@ -15,9 +15,9 @@ the knobs match what the reference tunes:
   need the interleave.
 - ``vacuum_staging``    ≈ VACUUM (TPC:2076-2092): remove leftover
   staging/temp dirs.
-- ``analyze_table``     ≈ ANALYZE TABLE COMPUTE STATISTICS (QH:260):
-  materialize table/column stats for planning (feeds CBO via catalog
-  when tables are managed; returned as a report DF here).
+
+The ANALYZE TABLE analog (QH:260) is ``maintenance/audit.py``'s
+``column_stats_report``.
 """
 
 from __future__ import annotations
@@ -26,10 +26,8 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-from lakehouse_dba_tools_spark.maintenance.audit import column_stats_report
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -162,8 +160,3 @@ def vacuum_staging(path: str) -> list[str]:
             shutil.rmtree(p, ignore_errors=True)
             removed.append(p)
     return removed
-
-
-def analyze_table(spark: SparkSession, df: DataFrame, approx: bool = True) -> DataFrame:
-    """Column statistics for planning/reporting (ANALYZE analog)."""
-    return column_stats_report(df, approx_distinct=approx)

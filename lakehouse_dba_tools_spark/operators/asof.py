@@ -5,9 +5,9 @@ origin, sort by (key, ts) once, and carry the last-seen right-side row
 forward with ``last(..., ignorenulls=True)`` over a running window.
 One shuffle on the key, no UDF, no per-group pandas.
 
-The classic alternative (`pd.merge_asof` inside ``applyInPandas``) is
-also provided for exotic tolerances; it pays Arrow transfer + per-group
-pandas and needs group-fits-in-memory — last resort at scale.
+The classic alternative (`pd.merge_asof` inside ``applyInPandas``) pays
+Arrow transfer + per-group pandas and needs group-fits-in-memory; it
+lives in tests/test_sources_asof.py as the cross-check of this join.
 """
 
 from __future__ import annotations
@@ -67,31 +67,3 @@ def asof_join(
     for c in value_cols:
         out = out.withColumnRenamed(f"_asof_{c}", c)
     return out
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    tolerance=None,
-) -> DataFrame:
-    """pd.merge_asof per group via cogrouped applyInPandas (fallback)."""
-    import pandas as pd
-
-    out_fields = left.schema.fields + [
-        f for f in right.schema.fields if f.name != on and f.name != by
-    ]
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(out_fields)
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l_pdf = l_pdf.sort_values(on)
-        r_pdf = r_pdf.sort_values(on)
-        kwargs = {"tolerance": tolerance} if tolerance is not None else {}
-        return pd.merge_asof(l_pdf, r_pdf.drop(columns=[by]), on=on, **kwargs)
-
-    return left.groupBy(by).cogroup(right.groupBy(by)).applyInPandas(merge, out_schema)

@@ -17,7 +17,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def schema_template(df: DataFrame) -> DataFrame:
@@ -42,9 +41,3 @@ def union_all(frames: Sequence[DataFrame], by_name: bool = True, allow_missing: 
                 nxt.append(frames[i])
         frames = nxt
     return frames[0]
-
-
-def tagged_union(frames: dict[str, DataFrame], tag_col: str = "source") -> DataFrame:
-    """Union with a lit() provenance tag per input (P4 tagging pattern,
-    TPC:1868-1872)."""
-    return union_all([df.withColumn(tag_col, F.lit(name)) for name, df in frames.items()])

@@ -629,29 +629,3 @@ def session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("session_id").cast("bigint").alias("n_sessions"),
         F.count("*").alias("n_events"),
     )
-
-
-# --------------------------------------------------------------------------
-# Tumbling time window over events (batch rendition of the streaming
-# rollup — F.window ↔ time_bucket). Window start exported as epoch.
-# --------------------------------------------------------------------------
-@register(
-    "hourly_event_rollup",
-    """
-    SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS hour_epoch,
-           event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-    FROM events GROUP BY hour_epoch, event_type
-    """,
-)
-def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("w.start").cast("long").alias("hour_epoch"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )

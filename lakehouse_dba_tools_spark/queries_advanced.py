@@ -343,7 +343,7 @@ def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy entity matching: candidate pairs come from a
     BLOCKING-KEY equi-join (first token), never an all-pairs cross
     join, then exact Levenshtein filters within the block — the same
-    candidates→verify contract as the MinHash/SimHash dedup tiers, for
+    candidates→verify contract as the MinHash dedup tier, for
     record linkage over dirty entity names. At 100 TB the blocking key
     generalizes (phonetic codes, sorted character n-grams); the
     equi-join shape is unchanged. Both engines implement standard

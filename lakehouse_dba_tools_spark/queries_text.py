@@ -14,10 +14,9 @@ from lakehouse_dba_tools_spark.dedup.exact import content_groups, duplicate_span
 from lakehouse_dba_tools_spark.dedup.index import DEFAULT_BANDS
 from lakehouse_dba_tools_spark.dedup.minhash import lsh_candidate_pairs, verified_near_dups
 from lakehouse_dba_tools_spark.dedup.ngram import jaccard_pairs
-from lakehouse_dba_tools_spark.dedup.simhash import simhash_verified_near_dups
 from lakehouse_dba_tools_spark.functions import text as TX
 from lakehouse_dba_tools_spark.operators.partitioning import fan_out
-from lakehouse_dba_tools_spark.registry import ORACLE, register
+from lakehouse_dba_tools_spark.registry import register
 from lakehouse_dba_tools_spark.sources.tables import load_table
 
 # DuckDB fragments mirroring functions/text.py
@@ -310,22 +309,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(docs, k=3, threshold=0.5)
 
 
-# Exact-equivalence oracle shared by the verified LSH paths: a
-# candidates→verify near-dup pipeline returns EXACTLY the all-pairs
-# Jaccard answer whenever candidate recall is 1.0 — which it is on this
-# corpus at the chosen parameters (measured; the driver's hash equality
-# IS the recall proof, re-checked every round).
-_VERIFIED_NEAR_DUP_ORACLE = f"""
-    WITH sh AS (SELECT doc_id, {_D_SHINGLES3} AS s FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s))::DOUBLE
-                 / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE, 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s))::DOUBLE
-          / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= 0.5
-    """
-
-
 # VALUES justification: a bound-contract oracle (same adjudicated class
 # as the vector tier's recall floors) — the booleans are computed
 # Spark-side against exact relational truth; the oracle states the
@@ -352,7 +335,8 @@ def minhash_candidate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped to the ngram_jaccard_pairs window: the TRUTH side is an
     O(n²) all-pairs scan, affordable only on a bounded id range (the
     uncapped generator itself is hash-checked through
-    minhash_verified_near_dups/doc_near_dup_components)."""
+    doc_near_dup_components and the checked split_leakage_audit /
+    cluster_safe_split_audit)."""
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < BRUTE_DOC_CAP
     )
@@ -378,72 +362,6 @@ def minhash_candidate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bands int, rows_per_band int, recall_floor double, "
         "precision_floor double, recall_ok boolean, precision_ok boolean",
     )
-
-
-@register("minhash_verified_near_dups", _VERIFIED_NEAR_DUP_ORACLE)
-def minhash_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-banded candidates verified with exact Jaccard: equals the
-    brute all-pairs answer at recall 1.0 (16 bands × 4 rows on this
-    corpus), so the exact SQL oracle applies digit-for-digit."""
-    docs = load_table(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    out = verified_near_dups(
-        docs, k=3, num_perm=64, bands=16, seed=42, threshold=0.5, caches=caches
-    )
-    # materialize the pair frame, then release the shingle cache the
-    # pipeline pinned (round-11 ADVICE leak class; the lazy return
-    # would strand one corpus-sized cache entry per invocation).
-    # Boundary note: this collect is PAIR-FRAME-sized — fine for this
-    # trailing gate-SF carrier (≤ a few hundred rows), not the 100 TB
-    # shape; production callers use verified_near_dups(caches=...)
-    # directly and release after their own distributed materialization
-    # (the cluster_safe_split_audit pattern). try/finally: a failed
-    # collect must not strand the cache either.
-    try:
-        table = out.toArrow()
-    finally:
-        for c in caches:
-            c.unpersist()
-    return spark.createDataFrame(table, out.schema)
-
-
-# with_simhash / simhash_near_dups stay exported as library operators
-# but are NOT registered: they are intermediate views of the pipeline
-# whose end-to-end form is hash-checked by simhash_verified_near_dups
-# below (xxhash64 has no DuckDB twin, so the raw fingerprint rows can't
-# be oracled directly). Keeping them out of the registry keeps the
-# "every registered query is oracle-checked" claim exact.
-
-
-@register("simhash_verified_near_dups", _VERIFIED_NEAR_DUP_ORACLE)
-def simhash_verified_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-ball candidates (6 chunks, ≤12 bits) verified
-    with exact Jaccard — recall 1.0 on this corpus (7.5k candidates vs
-    125k brute pairs, a 6% prune that widens with corpus scale), so the
-    exact oracle applies.
-
-    Cost attribution (round-6 directive #7, measured at sf0.1, warm):
-    fingerprint bit-fold 0.85s (runs ONCE — single consumer, verified),
-    shingle hashing 0.43s (persisted, three consumers), and the
-    remaining ~2.5s is candidate machinery: the 6-piece bucket explode
-    + distinct over 222k Hamming-ball pairs and the three verify joins.
-    That is shuffle/stage latency proportional to the candidate count,
-    not a recomputed stage — further cuts would change the
-    (chunks, max_hamming) contract the oracle equality depends on."""
-    docs = load_table(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    out = simhash_verified_near_dups(
-        docs, k=3, max_hamming=12, chunks=6, threshold=0.5, caches=caches
-    )
-    # eager-release: the verify step pins a hashed-shingle frame (r12
-    # leak audit; same gate-SF pair-frame boundary note as
-    # minhash_verified_near_dups above)
-    try:
-        table = out.toArrow()
-    finally:
-        for c in caches:
-            c.unpersist()
-    return spark.createDataFrame(table, out.schema)
 
 
 @register(
@@ -485,8 +403,12 @@ def incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = verify_pairs_exact_jaccard(pairs, sh, threshold=0.5, caches=caches)
     # materialize the pair frame, then RELEASE the shingle cache AND
     # the verify-side hashed cache — the lazy return leaked
-    # corpus-sized entries per invocation (r12 leak audit; same
-    # gate-SF boundary note as minhash_verified_near_dups above)
+    # corpus-sized entries per invocation (r12 leak audit). Boundary
+    # note: this collect is PAIR-FRAME-sized — fine for this gate-SF
+    # carrier (≤ a few hundred rows), not the 100 TB shape; production
+    # callers release after their own distributed materialization (the
+    # cluster_safe_split_audit pattern). try/finally: a failed collect
+    # must not strand the caches either.
     try:
         table = out.toArrow()
     finally:
@@ -551,8 +473,7 @@ def lsh_index_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice-invariant; both bipartite phases keep verified pairs at
     gate SF); full-corpus rows are banked green r7-r11 and the
     uncapped pipeline stays hash-checked every round through
-    cluster_safe_split_audit / split_leakage_audit /
-    minhash_verified_near_dups (diffcheck)."""
+    cluster_safe_split_audit / split_leakage_audit (diffcheck)."""
     import shutil
     import tempfile
 
@@ -787,9 +708,10 @@ _BM25_TERMS = ("join", "merge", "spark", "window")  # sorted token set
 _D_BM_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
 
-@register(
-    "bm25_keyword_topk",
-    f"""
+# Full-corpus BM25 top-20 of _BM25_QUERY: the exact answer every
+# postings-index mode (exact, champions at full coverage) must equal.
+# bm25_topk computes the same frame straight from the corpus.
+_BM25_TOPK_ORACLE = f"""
     WITH feat AS (
       SELECT doc_id, len({_D_BM_TOKS}) AS dl,
              {', '.join(f"len(list_filter({_D_BM_TOKS}, t -> t = '{t}')) AS tf_{i}" for i, t in enumerate(_BM25_TERMS))}
@@ -809,18 +731,7 @@ _D_BM_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
     WHERE score > 0
     ORDER BY score DESC, doc_id
     LIMIT 20
-    """,
-)
-def bm25_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-20 lexical retrieval (similarity/bm25.py). The corpus is
-    scanned, never shuffled: per-term tf indicators + the 1-row global
-    stats frame broadcast back, then TakeOrderedAndProject for the
-    top-k. Lexical counterpart of cosine_topk_*; the contamination-probe
-    primitive of the curation tier."""
-    from lakehouse_dba_tools_spark.similarity.bm25 import bm25_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk(docs, _BM25_QUERY, k=20)
+    """
 
 
 @register(
@@ -847,46 +758,7 @@ def term_postings_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("bm25_index_topk", ORACLE["bm25_keyword_topk"])
-def bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL persisted postings-index lifecycle (similarity/bm25.py)
-    — the lexical leg of the stored-index family: build from 90% of
-    the corpus, APPEND the rest, REPLAY that append (at-least-once
-    duplicate posting/doclens rows land on disk), COMPACT (folds the
-    replay, restores the term sort, bin-packs behind the atomic
-    pointer flip), then answer the standard query from the stored
-    postings with corpus stats recomputed from the doclens table (so
-    the append shifts N/avgdl/df and the scores stay exact). The
-    oracle is the full-corpus BM25 top-20 — equality hash-proves
-    append visibility, replay-safe stats, compaction answer
-    preservation, and postings round-trip in one report."""
-    import shutil
-    import tempfile
-
-    from lakehouse_dba_tools_spark.similarity.bm25 import (
-        append_to_postings_index,
-        build_postings_index,
-        compact_postings_index,
-        query_postings_index,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="bm25_index_")
-    try:
-        build_postings_index(docs.filter(F.col("doc_id") % 10 != 0), tmp)
-        batch = docs.filter(F.col("doc_id") % 10 == 0)
-        append_to_postings_index(batch, tmp)
-        append_to_postings_index(batch, tmp)  # replayed epoch
-        compact_postings_index(spark, tmp)
-        out = query_postings_index(spark, tmp, _BM25_QUERY, k=20)
-        # materialize before the index tempdir vanishes (bounded: k rows)
-        table = out.toArrow()
-        return spark.createDataFrame(table, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@register("bm25_champions_topk", ORACLE["bm25_keyword_topk"])
+@register("bm25_champions_topk", _BM25_TOPK_ORACLE)
 def bm25_champions_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The impact-ordered champions tier (similarity/bm25.py, Persin-
     style champion lists): per term the index stores only the top-N
@@ -927,7 +799,7 @@ def bm25_champions_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bm25_wand_topk",
-    # the bm25_keyword_topk oracle restricted to the carrier's 1/2
+    # the _BM25_TOPK_ORACLE text restricted to the carrier's 1/2
     # fixture slice (see docstring)
     f"""
     WITH feat AS (
@@ -1039,7 +911,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile of cross-document verbatim duplication — the
     suffix-array-style "repeated long substring" pass of a training
     pipeline, complementing doc-level exact dedup
-    (doc_exact_dedup_groups) and near-dup minhash/simhash. Stride-1
+    (doc_exact_dedup_groups) and MinHash near-dup detection. Stride-1
     window hashes guarantee any shared ≥20-token run is detected
     whatever its offset in each doc; only (digest, id) pairs shuffle."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))

@@ -1,8 +1,8 @@
 """Embedding similarity-search queries over the `embeddings` table.
 
-Brute-force cosine top-k is the oracle-checked baseline (DuckDB
-``list_cosine_similarity`` twin); LSH/IVF are the scale paths
-(rows-only check; recall pinned by unit tests against brute force).
+Brute-force cosine top-k is the exact truth (DuckDB
+``list_cosine_similarity`` twin); LSH/IVF are the scale paths, checked
+by recall floors against it here and in tests/test_similarity.py.
 """
 
 from __future__ import annotations
@@ -10,13 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_dba_tools_spark.registry import ORACLE, register
-from lakehouse_dba_tools_spark.similarity.search import (
-    brute_topk,
-    embedding_near_dups,
-    ivf_topk,
-    lsh_topk,
-)
+from lakehouse_dba_tools_spark.registry import register
+from lakehouse_dba_tools_spark.similarity.search import brute_topk, embedding_near_dups
 from lakehouse_dba_tools_spark.similarity.vector import as_double, l2_norm
 from lakehouse_dba_tools_spark.sources.tables import load_table
 
@@ -39,9 +34,10 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "cosine_topk_brute",
-    f"""
+# The exact cosine top-k oracle: brute-force scoring of the first
+# N_QUERY vectors against the whole corpus. The index carriers that
+# answer at full probe (ivf_rebuild_invariance_topk) must equal it.
+_TOPK_ORACLE = f"""
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
                FROM embeddings WHERE vec_id < {N_QUERY}),
     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
@@ -55,160 +51,10 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    ORDER BY sim DESC, neighbor_id) AS rank
       FROM scored
     ) WHERE rank <= {TOP_K}
-    """,
-)
-def cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return brute_topk(emb, queries, k=TOP_K)
+    """
 
-
-# The exact-equality oracle for the ANN paths: identical to the brute
-# oracle. Valid because the checked configurations are EXACT on this
-# corpus — verified every round by the driver's hash equality, which IS
-# the recall-1.0 proof (an ANN miss flips the hash loudly).
-_TOPK_ORACLE = ORACLE["cosine_topk_brute"]
-
-
-@register("cosine_topk_lsh", _TOPK_ORACLE)
-def cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH top-k at recall-1.0 parameters (3 planes × 24
-    tables, measured equal to brute force on this corpus — its weak
-    similarity structure, max cos ≈ 0.51, needs short signatures for
-    recall; a clustered production corpus takes 8-16 planes with far
-    smaller candidate sets). The plan shape is the production one
-    either way: bucket equi-join, ids-only candidate shuffle
-    (tests/test_plans.py pins the exchange payload); recall/cost at
-    sharper settings is measured in tests/test_similarity.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return lsh_topk(emb, queries, k=TOP_K, n_planes=3, n_tables=24, dim=64, seed=42)
-
-
-@register("cosine_topk_ivf", _TOPK_ORACLE)
-def cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat top-k in the exact setting (nprobe = n_centroids, the
-    FAISS nprobe=nlist semantics): centroid training, distributed list
-    assignment, and the probe equi-join all run for real while the
-    result stays oracle-equal to brute force. Recall at partial nprobe
-    (0.68@4/16, 0.96@12/16 on this corpus) is pinned in
-    tests/test_similarity.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_topk(emb, queries, k=TOP_K, n_centroids=16, nprobe=16, seed=42)
-
-
-@register("ivf_index_incremental_topk", _TOPK_ORACLE)
-def ivf_index_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL persisted-index IVF lifecycle (similarity/index.py) in
-    the exact setting (rotated to trailing in round 9, r8 row banked —
-    since round 12 the IVF row's checked carriers are
-    index_forget_audit's IVF leg (build→forget→full-probe vs the brute
-    oracle) and pq_rerank_recall; ivf_rebuild_invariance_topk,
-    streaming_ingest_ann, and index_family_describe hold banked rows
-    and stay diffchecked): build the index from 90% of the corpus (vec_id
-    % 10 != 0), APPEND the remaining 10% with the stored quantizer,
-    REPLAY that append (the at-least-once foreachBatch failure mode —
-    duplicate list rows land on disk), COMPACT (folds the replay,
-    bin-packs each cid partition behind the atomic pointer flip), then
-    answer the standard query set with nprobe = n_centroids against
-    the compacted lists. The oracle is the brute-force top-k over the
-    FULL corpus — equality hash-proves that the append landed vectors
-    in the lists a rebuild would choose (query ids 0 and 10 live in
-    the appended batch; their rank-1 self-neighbors exist ONLY via
-    appended rows), that compaction is answer-preserving under replay,
-    and that the lists round-trip parquet losslessly. Partial-nprobe
-    pruning (the scan-p/C-of-the-index scale win) and the
-    pre-compaction duplicate-tolerant query are exercised in
-    tests/test_similarity.py."""
-    import shutil
-    import tempfile
-
-    from lakehouse_dba_tools_spark.similarity.index import (
-        append_to_ivf_index,
-        build_ivf_index,
-        compact_ivf_index,
-        query_ivf_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    tmp = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
-        build_ivf_index(
-            emb.filter(F.col("vec_id") % 10 != 0), tmp, n_centroids=16, seed=42
-        )
-        batch = emb.filter(F.col("vec_id") % 10 == 0)
-        append_to_ivf_index(batch, tmp)
-        append_to_ivf_index(batch, tmp)  # replayed epoch
-        compact_ivf_index(spark, tmp)
-        out = query_ivf_index(spark, queries, tmp, k=TOP_K, nprobe=16)
-        # Materialize before the index tempdir vanishes (bounded:
-        # N_QUERY × TOP_K rows) as an Arrow-backed local relation,
-        # whose consumers start no job.
-        return spark.createDataFrame(out.toArrow(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-# Cap for the O(n²) exact baseline — no-op at sf≤0.01 (500 vectors);
-# the LSH variant below stays uncapped (it IS the scale path).
+# Cap for the O(n²) exact pair oracle — no-op at sf≤0.01 (500 vectors).
 BRUTE_VEC_CAP = 600
-
-
-@register(
-    "embedding_near_dups_exact",
-    f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-               WHERE vec_id < {BRUTE_VEC_CAP})
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(round(list_cosine_similarity(a.v, b.v), 9), 6) AS sim
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(a.v, b.v), 9) >= 0.4
-    """,
-)
-def embedding_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact threshold scan (the oracle for the LSH near-dup path).
-    Threshold 0.4 matches this corpus's similarity range (max ≈ 0.51)."""
-    from lakehouse_dba_tools_spark.similarity.vector import dot, l2_normalize
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < BRUTE_VEC_CAP)
-    v = emb.select("vec_id", l2_normalize(as_double("embedding")).alias("v"))
-    a = v.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    b = v.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.round(dot(F.col("va"), F.col("vb")), 9).alias("sim9")
-        )
-        .filter(F.col("sim9") >= 0.4)
-        .select("id_a", "id_b", F.round("sim9", 6).alias("sim"))
-    )
-
-
-@register("embedding_near_dups_lsh", ORACLE["embedding_near_dups_exact"])
-def embedding_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH near-dup pipeline at recall-1.0 parameters (3 planes × 24
-    tables — measured equal to the exact threshold scan on this
-    weak-similarity corpus, so the exact SQL oracle applies). Capped to
-    the SAME id window as that oracle: recall-1.0 on a weak-similarity
-    band means near-exhaustive candidates, so the uncapped form is the
-    operator itself at production parameters (threshold ≥0.9, 8+
-    planes — planted-dup recall pinned in tests/test_similarity.py).
-    The self-join stays bucketed (candidates shuffled as id pairs,
-    never vectors)."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < BRUTE_VEC_CAP)
-    return embedding_near_dups(
-        emb, threshold=0.4, n_planes=3, n_tables=24, dim=64, seed=42
-    )
 
 
 @register(
@@ -241,7 +87,7 @@ def embedding_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components → per-vector keeper. Same canonicalization
     operator as the document path (dedup/components.py) — the pair
     source is pluggable, which is the point: one CC/keeper stage
-    serves MinHash, SimHash, and embedding pipelines."""
+    serves MinHash and embedding pipelines."""
     from lakehouse_dba_tools_spark.dedup.components import canonicalize_near_dups
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < BRUTE_VEC_CAP)
@@ -281,8 +127,8 @@ def ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured recall clears a conservative floor; ``monotone_ok``
     asserts recall(nprobe) ≥ recall(prev nprobe), which is structurally
     guaranteed (a larger nprobe probes a superset of lists, hence a
-    candidate superset). The exhaustive nprobe=nlist config stays
-    hash-equal to brute in cosine_topk_ivf; the partial-recall CURVE is
+    candidate superset). The exhaustive nprobe=nlist config is pinned
+    equal to brute in test_similarity.py; the partial-recall CURVE is
     the scale story (nprobe trades recall for a 16/nprobe× smaller
     candidate join); exact per-SF curves live in test_similarity.py."""
     from lakehouse_dba_tools_spark.similarity.search import ivf_topk_curve
@@ -304,7 +150,7 @@ def ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the difference between 1× and 3× corpus scans.
     corpus_assign, curve = ivf_topk_curve(
         emb, q, k=TOP_K, n_centroids=16,
-        nprobes=tuple(p for p, _ in _IVF_PROBE_FLOORS), persist=True,
+        nprobes=tuple(p for p, _ in _IVF_PROBE_FLOORS),
     )
     floors = dict(_IVF_PROBE_FLOORS)
     try:
@@ -373,10 +219,9 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # smaller config exactly (tensor-prefix property, see docstring)
     handles, curve = lsh_topk_curve(
         emb, q, k=TOP_K, n_planes=6,
+        # one bucketing pass serves every config; the three recall
+        # counts fold into one union job (see ivf_recall_report)
         n_tables_list=tuple(t for t, _ in _LSH_TABLE_FLOORS),
-        persist=True,  # one bucketing pass serves every config; the
-        # three recall counts fold into one union job (see
-        # ivf_recall_report)
     )
     floors = dict(_LSH_TABLE_FLOORS)
     try:

@@ -1,7 +1,7 @@
 """Persisted IVF-Flat index: continuous-ingestion ANN search.
 
-`ivf_topk` (search.py) trains the coarse quantizer and assigns the
-whole corpus on every call. At 100 TB both steps happen ONCE: the
+`ivf_topk_curve` (search.py) trains the coarse quantizer and assigns
+the whole corpus on every call. At 100 TB both steps happen ONCE: the
 centroids and the inverted lists are stored, each ingest batch is
 assigned with the STORED centroids and appended to its lists, and a
 query reads only the lists it probes. This module is that lifecycle —

@@ -156,8 +156,9 @@ def pq_topk_rerank(
     float vectors. Stage 2 fetches full-precision vectors for just the
     |queries| × shortlist survivors (an id semi-join against the
     parquet scan — column pruning keeps the fetch to the hit rows) and
-    reranks exactly. Compose with ivf_topk's coarse lists for true
-    IVF-PQ when even scanning all codes is too much.
+    reranks exactly. Compose with the IVF index's coarse lists
+    (similarity/index.py) for true IVF-PQ when even scanning all codes
+    is too much.
     """
     from lakehouse_dba_tools_spark.similarity.search import _topk_by_sim, brute_topk
     from lakehouse_dba_tools_spark.similarity.vector import dot

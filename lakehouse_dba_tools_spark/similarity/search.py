@@ -5,16 +5,19 @@ Three tiers:
 - ``brute_topk``: exact cosine top-k, query-set × corpus join + window
   rank. The baseline — scoring is a deterministic JVM-side sequential
   double fold (oracle-comparable digit for digit).
-- ``lsh_topk``: random-hyperplane LSH — corpus bucketed by sign
+- ``lsh_topk_curve``: random-hyperplane LSH — corpus bucketed by sign
   pattern across several independent tables; queries probe their
   buckets. Equi-join on (table, bucket) replaces the cross join: the
   100 TB path. Bucket assignment and candidate scoring run as numpy
   matmuls in Arrow-batched pandas UDFs (similarity/kernels.py) — a
   literal-array Catalyst expression tree is interpreted per row and
   was the measured bottleneck.
-- ``ivf_topk``: inverted-file variant — corpus assigned to its nearest
-  of C centroids (kmeans-lite on a driver-side sample), queries probe
-  ``nprobe`` lists. Classic IVF-Flat layout.
+- ``ivf_topk_curve``: inverted-file variant — corpus assigned to its
+  nearest of C centroids (kmeans-lite on a driver-side sample), queries
+  probe ``nprobe`` lists. Classic IVF-Flat layout.
+
+Both ANN paths answer a tuple of configurations from one persisted
+corpus pass; a single configuration is a one-element tuple.
 
 Determinism: hyperplanes/centroids from seeded numpy RNG; ANN ranking
 on round(sim, 9) with neighbor-id tie-break.
@@ -87,48 +90,6 @@ def _with_buckets(df: DataFrame, vec_alias: str, planes: np.ndarray) -> DataFram
     )
 
 
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Random-hyperplane LSH ANN. Returns ≤k approx neighbors/query."""
-    planes = _hyperplane_tensor(dim, n_planes, n_tables, seed)
-    c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), l2_normalize(as_double(vec_col)).alias("_cv")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), l2_normalize(as_double(vec_col)).alias("_qv")
-    )
-    # Bucket-join on bare IDs, dedup, THEN re-attach vectors: the
-    # candidate shuffle carries 16 bytes/pair instead of two 64-dim
-    # arrays — the payload discipline that matters at 100 TB.
-    c_b = _with_buckets(c.select("neighbor_id", "_cv"), "_cv", planes).select(
-        "neighbor_id", "tbl", "bkt"
-    )
-    q_b = _with_buckets(q.select("query_id", "_qv"), "_qv", planes).select(
-        "query_id", "tbl", "bkt"
-    )
-    cand = (
-        c_b.join(q_b, on=["tbl", "bkt"])
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", F.round(pair_dot("_cv", "_qv"), 9).alias("sim"))
-    )
-    return _topk_by_sim(scored, k)
-
-
 def train_centroids(
     corpus: DataFrame, n_centroids: int = 16, vec_col: str = "embedding",
     sample_fraction: float = 1.0, iters: int = 5, seed: int = 42,
@@ -137,7 +98,7 @@ def train_centroids(
     """kmeans-lite on a driver-side sample (IVF coarse quantizer).
 
     The sample (≤ ~100k rows) is the ONLY data that touches the driver;
-    assignment of the full corpus stays distributed in ivf_topk.
+    assignment of the full corpus stays distributed in ivf_topk_curve.
 
     Run-invariance: ``toPandas()`` row order follows partition layout,
     which varies across sessions — sorting the sample by ``id_col``
@@ -169,38 +130,6 @@ def train_centroids(
     return cents.tolist()
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-Flat: corpus partitioned by nearest centroid; queries probe
-    the ``nprobe`` nearest lists. Join is an equi-join on centroid id."""
-    cents = np.asarray(
-        train_centroids(corpus, n_centroids, vec_col, seed=seed, id_col=id_col)
-    )
-    assign1 = nearest_centroids_udf(cents, 1)
-    assignN = nearest_centroids_udf(cents, nprobe)
-
-    c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), l2_normalize(as_double(vec_col)).alias("_cv")
-    ).withColumn("cid", assign1(F.col("_cv"))[0])
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), l2_normalize(as_double(vec_col)).alias("_qv")
-    ).withColumn("cid", F.explode(assignN(F.col("_qv"))))
-
-    scored = c.join(q, "cid").select(
-        "query_id", "neighbor_id", F.round(pair_dot("_cv", "_qv"), 9).alias("sim")
-    )
-    return _topk_by_sim(scored, k)
-
-
 def ivf_topk_curve(
     corpus: DataFrame,
     queries: DataFrame,
@@ -211,19 +140,16 @@ def ivf_topk_curve(
     n_centroids: int = 16,
     nprobes: tuple[int, ...] = (1, 2, 4),
     seed: int = 42,
-    persist: bool = True,
 ):
     """IVF top-k for SEVERAL nprobe configs sharing ONE centroid
     training and one corpus-wide list assignment — how a production
     recall sweep runs: the corpus pass is the expensive part and is
     identical for every nprobe (probing only changes the query side),
-    so recomputing it per config (3 separate ``ivf_topk`` calls) does
-    3× the corpus work for the same answers. Returns ``(corpus_assign,
-    [(nprobe, topk_df), ...])``; the caller unpersists ``corpus_assign``
-    after consuming the results. ``persist=True`` materializes the
-    assignment once (the 100 TB default — at real corpus scale the
-    recompute dwarfs the cache barrier); pass False at small scale
-    where the stage barrier costs more than the recompute."""
+    so recomputing it per config does 3× the corpus work for the same
+    answers. Returns ``(corpus_assign, [(nprobe, topk_df), ...])``; the
+    assignment is persisted (at real corpus scale the recompute dwarfs
+    the cache barrier), and the caller unpersists ``corpus_assign``
+    after consuming the results."""
     cents = np.asarray(
         train_centroids(corpus, n_centroids, vec_col, seed=seed, id_col=id_col)
     )
@@ -235,9 +161,8 @@ def ivf_topk_curve(
             l2_normalize(as_double(vec_col)).alias("_cv"),
         )
         .withColumn("cid", assign1(F.col("_cv"))[0])
+        .persist()
     )
-    if persist:
-        c = c.persist()
     q_base = queries.select(
         F.col(query_id_col).alias("query_id"), l2_normalize(as_double(vec_col)).alias("_qv")
     )
@@ -263,17 +188,15 @@ def lsh_topk_curve(
     n_tables_list: tuple[int, ...] = (2, 4, 12),
     dim: int = 64,
     seed: int = 42,
-    persist: bool = True,
 ):
     """LSH top-k for SEVERAL n_tables configs sharing ONE bucketing
     pass. With a fixed seed the T-table hyperplane tensor literally
     extends the (T-1)-table one (same rng draw order), so bucketing
     once at max(n_tables) and filtering ``tbl < T`` reproduces each
     smaller config EXACTLY — one corpus pass instead of one per config.
-    Returns ``(handles, [(n_tables, topk_df), ...])``; caller
-    unpersists the handles after consuming. ``persist`` as in
-    ``ivf_topk_curve``: True is the at-scale default, False skips the
-    cache barrier where the corpus is small."""
+    Returns ``(handles, [(n_tables, topk_df), ...])``; both bucket
+    frames are persisted, as in ``ivf_topk_curve``, and the caller
+    unpersists the handles after consuming."""
     t_max = max(n_tables_list)
     planes = _hyperplane_tensor(dim, n_planes, t_max, seed)
     c = fan_out(corpus).select(
@@ -282,15 +205,15 @@ def lsh_topk_curve(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), l2_normalize(as_double(vec_col)).alias("_qv")
     )
+    # Bucket-join on bare IDs, dedup, THEN re-attach vectors: the
+    # candidate shuffle carries 16 bytes/pair instead of two 64-dim
+    # arrays — the payload discipline that matters at 100 TB.
     c_b = _with_buckets(c.select("neighbor_id", "_cv"), "_cv", planes).select(
         "neighbor_id", "tbl", "bkt"
-    )
+    ).persist()
     q_b = _with_buckets(q.select("query_id", "_qv"), "_qv", planes).select(
         "query_id", "tbl", "bkt"
-    )
-    if persist:
-        c_b = c_b.persist()
-        q_b = q_b.persist()
+    ).persist()
     out = []
     for n_tables in n_tables_list:
         cand = (

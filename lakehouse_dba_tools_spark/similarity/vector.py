@@ -27,10 +27,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def l2_normalize(a: Column) -> Column:
     n = l2_norm(a)
     return F.transform(a, lambda x: x / n)

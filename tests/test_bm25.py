@@ -5,16 +5,33 @@ from __future__ import annotations
 import math
 import re
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_dba_tools_spark.similarity.bm25 import (
-    bm25_corpus_stats,
-    bm25_score_scalar,
+    _tokens,
     bm25_topk,
     bm25_topk_from_index,
     build_inverted_index,
 )
 from lakehouse_dba_tools_spark.sources.tables import load_table
+
+
+def bm25_corpus_stats(df: DataFrame, text_col: str = "text") -> tuple[int, float]:
+    """(N, avgdl) for `bm25_topk_from_index` — one tiny aggregate."""
+    row = df.select(F.size(_tokens(text_col)).alias("dl")).agg(
+        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
+    ).collect()[0]
+    return int(row["n"]), float(row["avgdl"])
+
+
+def bm25_score_scalar(
+    n: int, df_t: int, tf: int, dl: int, avgdl: float, k1: float = 1.2, b: float = 0.75
+) -> float:
+    """Pure-python transcription of one term's score — the tests cross
+    check the distributed columns against this literal formula."""
+    idf = math.log(1 + (n - df_t + 0.5) / (df_t + 0.5))
+    return idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
 
 
 def _toy_docs(spark):

@@ -12,7 +12,7 @@ from lakehouse_dba_tools_spark.operators.reconcile import (
     diff_schemas,
 )
 from lakehouse_dba_tools_spark.operators.sessionize import sessionize
-from lakehouse_dba_tools_spark.operators.unions import schema_template, tagged_union, union_all
+from lakehouse_dba_tools_spark.operators.unions import schema_template, union_all
 from lakehouse_dba_tools_spark.operators.upsert import merge_upsert
 
 
@@ -213,7 +213,9 @@ def test_union_fold_and_template(spark):
     frames = [a, a, a, a, a]
     assert union_all(frames).count() == 5
     assert schema_template(a).count() == 0
-    tagged = tagged_union({"one": a, "two": a})
+    tagged = union_all(
+        [a.withColumn("source", F.lit("one")), a.withColumn("source", F.lit("two"))]
+    )
     assert {r.source for r in tagged.collect()} == {"one", "two"}
 
 

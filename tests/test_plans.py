@@ -10,11 +10,14 @@ from lakehouse_dba_tools_spark.registry import QUERIES, load_all
 load_all()
 
 
-def _plan(spark, name, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
+def _explain(spark, df):
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, name, sf_dir):
+    return _explain(spark, QUERIES[name](spark, sf_dir))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -65,7 +68,19 @@ def test_single_shuffle_for_dedup_window(spark, sf_dir):
 
 def test_lsh_pipeline_shuffles_ids_not_vectors(spark, sf_dir):
     """The candidate dedup exchange must not carry embedding arrays."""
-    plan = _plan(spark, "embedding_near_dups_lsh", sf_dir)
+    from pyspark.sql import functions as F
+
+    from lakehouse_dba_tools_spark.similarity.search import embedding_near_dups
+    from lakehouse_dba_tools_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    plan = _explain(
+        spark,
+        embedding_near_dups(
+            emb.filter(F.col("vec_id") < 600),
+            threshold=0.4, n_planes=3, n_tables=24, dim=64, seed=42,
+        ),
+    )
     for ex in re.finditer(r"\(\d+\) Exchange\n(Input \[\d+\]: \[[^\]]*\])", plan):
         inputs = ex.group(1)
         if "id_a" in inputs and "id_b" in inputs:

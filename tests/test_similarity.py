@@ -1,10 +1,19 @@
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from lakehouse_dba_tools_spark.similarity.search import brute_topk, ivf_topk, lsh_topk
-from lakehouse_dba_tools_spark.similarity.vector import as_double, cosine, l2_norm
+from lakehouse_dba_tools_spark.similarity.search import (
+    brute_topk,
+    ivf_topk_curve,
+    lsh_topk_curve,
+)
+from lakehouse_dba_tools_spark.similarity.vector import as_double, dot, l2_norm
 from lakehouse_dba_tools_spark.sources.tables import load_table
+
+
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def test_vector_math(spark):
@@ -65,24 +74,42 @@ def test_lsh_and_ivf_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = brute_topk(emb, q, k=3)
-    lsh = lsh_topk(emb, q, k=3, n_planes=6, n_tables=8, dim=64, seed=42)
-    ivf = ivf_topk(emb, q, k=3, n_centroids=8, nprobe=4, seed=42)
-    assert _recall(lsh, exact) >= 0.5
-    assert _recall(ivf, exact) >= 0.6
-    # rank-1 self matches always survive (bucket contains the query itself)
-    assert _recall(lsh.filter("rank = 1"), exact.filter("rank = 1")) == 1.0
+    lsh_handles, [(_, lsh)] = lsh_topk_curve(
+        emb, q, k=3, n_planes=6, n_tables_list=(8,), dim=64, seed=42
+    )
+    ivf_assign, [(_, ivf)] = ivf_topk_curve(
+        emb, q, k=3, n_centroids=8, nprobes=(4,), seed=42
+    )
+    try:
+        assert _recall(lsh, exact) >= 0.5
+        assert _recall(ivf, exact) >= 0.6
+        # rank-1 self matches always survive (bucket contains the query itself)
+        assert _recall(lsh.filter("rank = 1"), exact.filter("rank = 1")) == 1.0
+    finally:
+        for h in (*lsh_handles, ivf_assign):
+            h.unpersist()
 
 
 def test_recall_one_configs_equal_brute(spark, sf_dir):
-    """The checked-query configurations are EXACT on the fixture corpus:
+    """The exhaustive configurations are EXACT on the fixture corpus:
     LSH at 3 planes x 24 tables and IVF at nprobe=n_centroids must
-    reproduce brute force bit-for-bit (this is what lets the driver
-    verify them against the exact SQL oracle)."""
+    reproduce brute force bit-for-bit (the recall-1.0 settings the
+    near-dup and full-probe index carriers rely on)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = {tuple(r) for r in brute_topk(emb, q, k=3).collect()}
-    lsh = {tuple(r) for r in lsh_topk(emb, q, k=3, n_planes=3, n_tables=24, dim=64, seed=42).collect()}
-    ivf = {tuple(r) for r in ivf_topk(emb, q, k=3, n_centroids=8, nprobe=8, seed=42).collect()}
+    lsh_handles, [(_, lsh_df)] = lsh_topk_curve(
+        emb, q, k=3, n_planes=3, n_tables_list=(24,), dim=64, seed=42
+    )
+    ivf_assign, [(_, ivf_df)] = ivf_topk_curve(
+        emb, q, k=3, n_centroids=8, nprobes=(8,), seed=42
+    )
+    try:
+        lsh = {tuple(r) for r in lsh_df.collect()}
+        ivf = {tuple(r) for r in ivf_df.collect()}
+    finally:
+        for h in (*lsh_handles, ivf_assign):
+            h.unpersist()
     assert lsh == exact
     assert ivf == exact
 
@@ -93,10 +120,13 @@ def test_ivf_recall_improves_with_nprobe(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = brute_topk(emb, q, k=3)
-    r = [
-        _recall(ivf_topk(emb, q, k=3, n_centroids=8, nprobe=p, seed=42), exact)
-        for p in (2, 4, 8)
-    ]
+    assign, curve = ivf_topk_curve(
+        emb, q, k=3, n_centroids=8, nprobes=(2, 4, 8), seed=42
+    )
+    try:
+        r = [_recall(ivf, exact) for _, ivf in curve]
+    finally:
+        assign.unpersist()
     assert r[0] <= r[1] <= r[2]
     assert r[2] == 1.0
 

@@ -1,10 +1,39 @@
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_dba_tools_spark.operators.asof import asof_join, asof_join_pandas
+from lakehouse_dba_tools_spark.operators.asof import asof_join
 from lakehouse_dba_tools_spark.sources.files import read_csv_declared, read_csv_inferred, read_csv_via_pandas
 from lakehouse_dba_tools_spark.sources.json_records import normalize_bools, paged_source, records_to_df
+
+
+def asof_join_pandas(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    by: str,
+    tolerance=None,
+) -> DataFrame:
+    """pd.merge_asof per group via cogrouped applyInPandas (fallback)."""
+    import pandas as pd
+
+    out_fields = left.schema.fields + [
+        f for f in right.schema.fields if f.name != on and f.name != by
+    ]
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType(out_fields)
+
+    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
+        if l_pdf.empty:
+            return pd.DataFrame(columns=[f.name for f in out_fields])
+        l_pdf = l_pdf.sort_values(on)
+        r_pdf = r_pdf.sort_values(on)
+        kwargs = {"tolerance": tolerance} if tolerance is not None else {}
+        return pd.merge_asof(l_pdf, r_pdf.drop(columns=[by]), on=on, **kwargs)
+
+    return left.groupBy(by).cogroup(right.groupBy(by)).applyInPandas(merge, out_schema)
 
 
 def test_normalize_bools_nested():

@@ -11,7 +11,6 @@ from lakehouse_dba_tools_spark.dedup.minhash import (
     with_shingle_set,
 )
 from lakehouse_dba_tools_spark.dedup.ngram import jaccard_pairs
-from lakehouse_dba_tools_spark.dedup.simhash import simhash_near_dups, with_simhash
 from lakehouse_dba_tools_spark.functions import text as TX
 from lakehouse_dba_tools_spark.sources.tables import load_table
 
@@ -74,16 +73,6 @@ def test_lsh_recall_vs_exact_jaccard_fixture(spark, sf_dir):
     assert lsh == exact
 
 
-def test_simhash_orders_similarity(spark):
-    docs = _docs(spark)
-    fps = {r.doc_id: r.simhash for r in with_simhash(docs).collect()}
-    assert fps[1] == fps[4]
-    ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")  # noqa: E731
-    assert ham(fps[1], fps[2]) < ham(fps[1], fps[3])
-    near = {(r.id_a, r.id_b) for r in simhash_near_dups(docs, max_hamming=3).collect()}
-    assert (1, 4) in near
-
-
 def test_text_functions(spark):
     df = spark.createDataFrame([("The quick  brown fox, it is!",)], "text string")
     row = df.select(
@@ -103,25 +92,6 @@ def test_detect_language_tie_and_zero(spark):
     df = spark.createDataFrame([("zzz qqq xxx",), ("der die das und",)], "text string")
     out = [r[0] for r in df.select(TX.detect_language("text")).collect()]
     assert out == ["und", "de"]
-
-
-def test_simhash_verified_equals_exact_jaccard(spark, sf_dir):
-    """SimHash Hamming-ball candidates + exact-Jaccard verify must equal
-    the brute all-pairs answer at the checked parameters (candidate
-    recall 1.0 on the fixture corpora -- the property the driver's
-    oracle hash re-proves every round)."""
-    from lakehouse_dba_tools_spark.dedup.ngram import jaccard_pairs
-    from lakehouse_dba_tools_spark.dedup.simhash import simhash_verified_near_dups
-
-    docs = load_table(spark, sf_dir, "documents")
-    exact = {tuple(r) for r in jaccard_pairs(docs, k=3, threshold=0.5).collect()}
-    got = {
-        tuple(r)
-        for r in simhash_verified_near_dups(
-            docs, k=3, max_hamming=12, chunks=6, threshold=0.5
-        ).collect()
-    }
-    assert got == exact
 
 
 def test_verify_prefilter_equals_naive_jaccard(spark):
@@ -332,27 +302,6 @@ def test_remove_duplicate_spans_excises_only_non_keepers(spark):
     assert out[2]["cleaned_hash"] == md5("p1 p2 p3 p4 p5 q1")
     # untouched doc round-trips
     assert out[3]["n_removed_tokens"] == 0
-
-
-def test_rolling_kernel_matches_md5_kernel(spark, sf_dir):
-    """The Rabin-Karp mapInPandas scale path and the JVM md5 path must
-    produce the IDENTICAL duplicate-span report — equal windows ⇔
-    equal hashes is the contract, whatever the hash family."""
-    from lakehouse_dba_tools_spark.dedup.exact import (
-        duplicate_span_report,
-        span_hashes,
-        span_hashes_rolling,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    md5_rep = duplicate_span_report(docs, window=20, kernel=span_hashes)
-    roll_rep = duplicate_span_report(docs, window=20, kernel=span_hashes_rolling)
-    assert md5_rep.exceptAll(roll_rep).count() == 0
-    assert roll_rep.exceptAll(md5_rep).count() == 0
-    # and the span inventories agree row-for-row on (doc, pos)
-    a = span_hashes(docs).select("doc_id", "pos")
-    b = span_hashes_rolling(docs).select("doc_id", "pos")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_span_removal_converges_to_zero_cross_doc_dups(spark, sf_dir):

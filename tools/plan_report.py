@@ -54,7 +54,6 @@ def main() -> int:
     # keeps the zero row from reading as "no plan evidence".
     pinned = {
         "lsh_index_incremental_dedup": "lifecycle; plans pinned in tests/test_text_dedup.py (no-text-shuffle, compaction idempotence)",
-        "bm25_index_topk": "lifecycle; plans pinned in tests/test_bm25.py (corpus never shuffles, replay/compaction)",
         "bm25_champions_topk": "lifecycle; tier scorer + full-coverage exactness pinned in tests/test_bm25.py + test_bm25_wand.py (flat-impact gate)",
         "bm25_wand_topk": "lifecycle; wand==exact + theta soundness + pruning fractions pinned in tests/test_bm25_wand.py + test_properties.py",
         "endpoint_lifecycle_control": "driver-side control loop (no Spark plan); transcript + request-gating pinned in tests/test_maintenance_workload.py",
