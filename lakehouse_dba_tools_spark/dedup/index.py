@@ -50,12 +50,18 @@ versioned-table layer (``write_versions`` / ``compact_tables`` /
 ``forget_rows``), and every reader resolves them with
 ``indexio.open_snapshot``.
 
-Scale notes: query cost is |batch| signatures + one join against the
-band table (shuffle carries (band_key, id) pairs only) + a verify join
-that fetches stored shash rows for candidate ids only (semi-join
-pattern — the full shash table is never materialized). Appends create
-one file per band partition per batch; `compact_lsh_index` is the
-bin-pack OPTIMIZE analog, run on the usual small-file cadence.
+Scale notes: a query or ingest signs its batch with one action into
+local relations on the driver (|batch| shash rows, |batch| × bands band
+rows), then reads the index in three bounded actions: per-bucket counts
+of the buckets the batch touches (at most |batch| × bands rows reach
+the driver), the rows of the touched buckets within
+``max_bucket_size`` (at most that many rows per key), and an
+exact-Jaccard verify of the pairs formed from them on the driver,
+which streams the shash scan against the broadcast pairs (at most one
+row per pair and stored copy). The index tables themselves never
+reach the driver and never shuffle. Appends create one file per band
+partition per batch; `compact_lsh_index` is the bin-pack OPTIMIZE
+analog, run on the usual small-file cadence.
 
 Writer semantics (operators/indexio.py): build/append/compact hold an
 exclusive flock on the index root, so an append can never land inside
@@ -79,8 +85,15 @@ adds as first-class (dedup at continuous-ingest scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from dataclasses import dataclass, replace
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from lakehouse_dba_tools_spark.operators.indexio import (
     IndexTables,
@@ -88,6 +101,7 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     Snapshot,
     append_tables,
     compact_tables,
+    drop_ledgered_rows,
     filter_ledgered,
     forget_rows,
     heal_tables,
@@ -95,11 +109,13 @@ from lakehouse_dba_tools_spark.operators.indexio import (
     overlap_jobs,
     pinned_forget_ids,
     read_forget_ledger,
+    read_forget_ledger_ids,
     read_table,
     write_versions,
     writer_lock,
 )
 from lakehouse_dba_tools_spark.dedup.minhash import (
+    band_key_array,
     band_keys,
     verify_pairs_exact_jaccard_hashed,
     with_shingle_set,
@@ -135,6 +151,31 @@ LSH_TABLES = IndexTables(
 )
 
 
+def _signed_docs(
+    docs: DataFrame, text_col: str, id_col: str, k: int, num_perm: int, seed: int
+) -> tuple[DataFrame, DataFrame]:
+    """(hashes, signed) for a document set — the only signature
+    computation in the lifecycle; every verb that signs routes here so
+    index contents cannot drift from the query side's expectations.
+    ``hashes`` is (id, _sh_hashes): the xxhash64'd shingles (8-byte
+    longs), NOT the shingle strings; ``signed`` adds the ``signature``.
+    Both index tables consume the hashes — the signature min-fold folds
+    them directly (bit-identical to hashing inside the fold;
+    rebuild_lsh_index recomputes signatures from stored hashes on that
+    guarantee) and ``shash`` is their distinct — so a verb that pins
+    ``hashes`` never persists or recomputes the strings."""
+    from lakehouse_dba_tools_spark.dedup.minhash import _signature_udf
+
+    hashes = with_shingle_set(docs, text_col, id_col, k).select(
+        F.col(id_col),
+        F.transform("shingles", lambda s: F.xxhash64(s)).alias("_sh_hashes"),
+    )
+    signed = hashes.withColumn(
+        "signature", _signature_udf(num_perm, seed)(F.col("_sh_hashes"))
+    )
+    return hashes, signed
+
+
 def _index_rows(
     docs: DataFrame,
     text_col: str,
@@ -145,39 +186,77 @@ def _index_rows(
     seed: int,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(band rows, shash rows, pinned shingle hashes) for a document
-    set — the only signature computation in the lifecycle; build and
-    append both route here so index contents cannot drift from the
-    query side's expectations. The pinned pass holds the xxhash64'd
-    shingles (8-byte longs), NOT the shingle strings: both outputs
-    consume the hashes — the signature min-fold folds them directly
-    (bit-identical to hashing inside the fold; rebuild_lsh_index
-    already recomputes signatures from stored hashes on that
-    guarantee) and shash is their distinct — so hashing once at the
-    pin makes the strings never persist and never recompute per
-    consumer. SQL-cache entries are NOT garbage collected: the caller
-    MUST unpersist the third return once its consumers are
-    materialized, or a long-running ingest loop leaks one cache entry
-    per batch."""
+    set, as Spark frames — the build and append form, whose two table
+    writes both read the pinned hashes. SQL-cache entries are NOT
+    garbage collected: the caller MUST unpersist the third return once
+    its consumers are materialized, or a long-running loop leaks one
+    cache entry per call."""
     from pyspark import StorageLevel
 
-    from lakehouse_dba_tools_spark.dedup.minhash import _signature_udf
-
-    hashed = (
-        with_shingle_set(docs, text_col, id_col, k)
-        .select(
-            F.col(id_col),
-            F.transform("shingles", lambda s: F.xxhash64(s)).alias("_sh_hashes"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    signed = hashed.withColumn(
-        "signature", _signature_udf(num_perm, seed)(F.col("_sh_hashes"))
-    )
+    hashes, signed = _signed_docs(docs, text_col, id_col, k, num_perm, seed)
+    # the cache manager substitutes the pin into ``signed``'s plan too
+    pinned = hashes.persist(StorageLevel.MEMORY_AND_DISK)
     bk = band_keys(signed, id_col, bands, num_perm // bands)
-    sh = hashed.select(
-        F.col(id_col), F.array_distinct("_sh_hashes").alias("shash")
+    sh = hashes.select(F.col(id_col), F.array_distinct("_sh_hashes").alias("shash"))
+    return bk, sh, pinned
+
+
+_BUCKET = ["band_idx", "band_key"]
+
+
+@dataclass(frozen=True)
+class _Batch:
+    """A signed batch held on the driver: its ``bands`` rows (id,
+    band_idx, band_key) and ``shash`` rows (id, shash) as pyarrow
+    tables, with the Spark schemas they load back as."""
+
+    id_col: str
+    bands: pa.Table
+    shash: pa.Table
+    schemas: dict[str, StructType]
+
+    def frame(self, spark: SparkSession, table: str) -> DataFrame:
+        """One table as a local Arrow-backed relation: reading it
+        starts no Spark job."""
+        return spark.createDataFrame(getattr(self, table), self.schemas[table])
+
+    def without_ledgered(self, path: str) -> _Batch:
+        """This batch without the docs the index's suppression ledger
+        names, read now (no Spark job)."""
+        ledger = read_forget_ledger_ids(path)
+        return replace(self, **{
+            t: drop_ledgered_rows(getattr(self, t), self.id_col, ledger=ledger)
+            for t in LSH_TABLES.names
+        })
+
+
+def _sign_batch(docs: DataFrame, m: dict) -> _Batch:
+    """Sign a batch under the meta's parameters with ONE action: the
+    per-doc signed rows (|batch| rows) are collected with ``toArrow``
+    and the band rows exploded on the driver, so the caller's ``docs``
+    lineage runs once and nothing is pinned."""
+    id_col, num_perm, bands = m["id_col"], m["num_perm"], m["bands"]
+    _, signed = _signed_docs(
+        docs, m["text_col"], id_col, m["k"], num_perm, m["seed"]
     )
-    return bk, sh, hashed
+    per_doc = signed.select(
+        F.col(id_col),
+        F.array_distinct("_sh_hashes").alias("shash"),
+        band_key_array(F.col("signature"), bands, num_perm // bands).alias("keys"),
+    )
+    t = per_doc.toArrow()
+    # every doc has exactly ``bands`` keys, in band order
+    n = t.num_rows
+    band_rows = pa.table({
+        id_col: t.column(id_col).take(np.repeat(np.arange(n), bands)),
+        "band_idx": np.tile(np.arange(bands, dtype=np.int32), n),
+        "band_key": pc.list_flatten(t.column("keys")),
+    })
+    return _Batch(
+        id_col, band_rows, t.select([id_col, "shash"]),
+        {"bands": band_keys(signed, id_col, bands, num_perm // bands).schema,
+         "shash": per_doc.select(id_col, "shash").schema},
+    )
 
 
 def build_lsh_index(
@@ -235,15 +314,23 @@ def append_to_lsh_index(docs: DataFrame, path: str) -> None:
     dedup against it. Parameters come from the stored meta — a batch
     signed under a different permutation family would never collide
     with the existing rows, so there is nothing to pass."""
+    spark = docs.sparkSession
     m = read_lsh_meta(path)
+    id_col = m["id_col"]
     bk, sh, pinned = _index_rows(
-        docs, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
+        docs, m["text_col"], id_col, m["k"], m["num_perm"], m["bands"], m["seed"]
     )
-    # materialize the shared shingle pin before _append_rows overlaps
+    # materialize the shared shingle pin before append_tables overlaps
     # the two table writes over it (first-materialization race — see
     # build_lsh_index)
     pinned.count()
-    _append_rows(docs.sparkSession, path, bk, sh, signed_under=m)
+
+    def rows():
+        ledger = read_forget_ledger(spark, path)
+        return {"bands": filter_ledgered(bk, id_col, ledger=ledger),
+                "shash": filter_ledgered(sh, id_col, ledger=ledger)}
+
+    _append_rows(spark, path, rows, signed_under=m)
     pinned.unpersist()
 
 
@@ -253,42 +340,38 @@ _FAMILY_KEYS = ("k", "num_perm", "bands", "seed")
 def _append_rows(
     spark: SparkSession,
     path: str,
-    bk: DataFrame,
-    sh: DataFrame,
-    signed_under: dict | None = None,
+    rows: Callable[[], dict[str, DataFrame]],
+    signed_under: dict,
 ) -> None:
+    """Append ``rows()`` — {table: frame}, the batch minus the docs of
+    the suppression ledger as ``rows`` reads it — into the current
+    version of each table, under the writer lock."""
     # The lock keeps this append out of any concurrent compaction's
     # snapshot→publish window (it would otherwise be silently dropped
     # with the superseded version directory).
     with writer_lock(path):
         snap = open_snapshot(path, LSH_TABLES)
         cur = snap.meta
-        if signed_under is not None:
-            # the batch was signed OUTSIDE the lock; a rebuild landing
-            # in between would make these rows a different permutation
-            # family than the published bands — fail loudly (caller
-            # re-signs and retries) instead of silently never colliding
-            if any(cur[k] != signed_under[k] for k in _FAMILY_KEYS):
-                raise RuntimeError(
-                    f"LSH index at {path!r} was rebuilt with different "
-                    f"parameters while this batch was being signed; "
-                    f"re-sign and retry the append"
-                )
+        # the batch was signed OUTSIDE the lock; a rebuild landing in
+        # between would make these rows a different permutation family
+        # than the published bands — fail loudly (caller re-signs and
+        # retries) instead of silently never colliding
+        if any(cur[k] != signed_under[k] for k in _FAMILY_KEYS):
+            raise RuntimeError(
+                f"LSH index at {path!r} was rebuilt with different "
+                f"parameters while this batch was being signed; "
+                f"re-sign and retry the append"
+            )
         # Replay-resurrection guard (forget WINS over at-least-once
         # redelivery): an epoch replayed after a forget must not
-        # re-append the forgotten docs' rows. The anti-join against
-        # the suppression ledger runs UNDER the lock, so even a forget
-        # landing between this batch's signing and its append is
-        # honored. ONE driver-side ledger read filters both frames
-        # (no job); no-op while no forget has ever run.
-        ledger = read_forget_ledger(spark, path)
-        # bands clustered like the build/compact writes: one file per
-        # band per batch; shash appends into the version the CURRENT
-        # bands snapshot names — the coupling readers resolve
-        append_tables(spark, path, LSH_TABLES, snap, {
-            "bands": filter_ledgered(bk, cur["id_col"], ledger=ledger),
-            "shash": filter_ledgered(sh, cur["id_col"], ledger=ledger),
-        })
+        # re-append the forgotten docs' rows. ``rows`` reads the
+        # suppression ledger UNDER the lock, so even a forget landing
+        # between this batch's signing and its append is honored; no-op
+        # while no forget has ever run. Bands land clustered like the
+        # build/compact writes (one file per band per batch); shash
+        # appends into the version the CURRENT bands snapshot names —
+        # the coupling readers resolve.
+        append_tables(spark, path, LSH_TABLES, snap, rows())
 
 
 def ingest_batch(
@@ -302,37 +385,40 @@ def ingest_batch(
     unit of a continuous-ingest pipeline. ``query_lsh_index`` followed
     by ``append_to_lsh_index`` computes the batch's shingles, minhash
     signatures, and band keys twice (signing text is the dominant
-    per-batch cost at scale); this fuses the two around a persisted
-    signature pass: sign, query with the signed rows, materialize the
-    (bounded) verified pairs, append the SAME signed rows, unpersist.
-    Returns the (id_a, id_b, jaccard) pairs as a stable DataFrame:
-    already materialized (safe to consume after later mutations) and
-    held as a local Arrow-backed relation, so consuming it starts no
-    Spark job and no Python worker. The caller's ``docs`` lineage runs
-    once, into the pinned shingle pass that every later step reads.
+    per-batch cost at scale); this signs with one action into local
+    Arrow-backed relations on the driver (|batch| × bands band rows,
+    |batch| shash rows), queries the index with them in three bounded
+    actions (see ``_query_signed``) and appends the SAME rows
+    alongside. Returns the (id_a, id_b, jaccard) pairs as a stable
+    DataFrame: already materialized (safe to consume after later
+    mutations) and held as a local Arrow-backed relation, so consuming
+    it starts no Spark job and no Python worker. The caller's ``docs``
+    lineage runs once, and nothing is left pinned.
 
     Replay idempotence: candidates whose id_b is IN the current batch
-    are excluded, taking the batch's ids from the pinned shingle pass.
-    On a first delivery that is a no-op (the batch is not yet
-    indexed), but on an at-least-once redelivery the failed attempt's
-    append has already indexed these rows — without the exclusion a
-    batch containing internal near-dups would emit within-batch pairs
-    the original epoch never produced. With it, a replayed epoch
+    are excluded, taking the batch's ids from its signed rows. On a
+    first delivery that is a no-op (the batch is not yet indexed), but
+    on an at-least-once redelivery the failed attempt's append has
+    already indexed these rows — without the exclusion a batch
+    containing internal near-dups would emit within-batch pairs the
+    original epoch never produced. With it, a replayed epoch
     reproduces the original cross-batch-only result.
 
     Forget composition (the GDPR × replay corner): a batch doc whose
     id is in the suppression ledger — a redelivery of an epoch whose
     docs were forgotten AFTER the original delivery — is dropped
-    WHOLESALE before signing, so the redelivered epoch re-indexes and
-    reports only the surviving docs. A forget that lands MID-FLIGHT
-    (between this signing and the append taking the lock) is honored
-    where it matters — `_append_rows` re-filters under the lock, so
-    the INDEX can never resurrect — but the already-signed pair
-    report reflects the batch as of signing; callers that persist
-    pair reports re-scrub them on their own forget cadence like any
-    other derived table (`operators/forget.py cascade_delete`).
+    WHOLESALE from the signed rows before the query, so the
+    redelivered epoch re-indexes and reports only the surviving docs.
+    A forget that lands MID-FLIGHT (between that filter and the append
+    taking the lock) is honored where it matters — the append
+    re-filters the rows under the lock, so the INDEX can never
+    resurrect — but the pair report reflects the batch as of the
+    first filter; callers that persist pair reports re-scrub them on
+    their own forget cadence like any other derived table
+    (`operators/forget.py cascade_delete`). Both filters run on the
+    driver's rows and start no Spark job.
 
-    Failure contract: the pair collect runs concurrently with the
+    Failure contract: the pair query runs concurrently with the
     append, so a call that raises may already have appended the batch
     to the index. Do not treat the exception as "nothing happened";
     the safe recovery is to call ``ingest_batch`` again with the SAME
@@ -341,58 +427,31 @@ def ingest_batch(
     compaction."""
     snap = open_snapshot(path, LSH_TABLES)
     m = snap.meta
-    docs = filter_ledgered(
-        docs, m["id_col"], ledger=read_forget_ledger(spark, path)
+    batch = _sign_batch(docs, m).without_ledgered(path)
+    # the scans list their files here, before the append can add any
+    scans = _scans(spark, snap)
+
+    def rows():
+        kept = batch.without_ledgered(path)
+        return {t: kept.frame(spark, t) for t in LSH_TABLES.names}
+
+    # The query and the batch's append are INDEPENDENT job sets —
+    # overlap them (indexio.overlap_jobs): the query's three actions
+    # are short and serial, and the append's writes fill the executor
+    # slots between them. Measured on a 4-core host (100-doc batches
+    # into a 2,000-doc index, the two forms interleaved in one
+    # session, two runs): median 2.78 / 2.95 s overlapped vs
+    # 3.22 / 3.33 s sequential, overlapped faster in 11/12 and 12/12
+    # pairs. The answer is the sequential form's: both scans listed
+    # their files before the append started, so the bucket counts
+    # never include the batch's own rows.
+    pairs, _ = overlap_jobs(
+        lambda: _query_signed(
+            spark, batch, scans, threshold, max_bucket_size, exclude_own=True
+        ),
+        lambda: _append_rows(spark, path, rows, signed_under=m),
     )
-    bk, sh, pinned = _index_rows(
-        docs, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
-    )
-    bk = bk.persist()
-    sh = sh.persist()
-    try:
-        pairs = _query_signed(
-            spark, bk, sh, snap, threshold, max_bucket_size,
-            exclude_ids=pinned.select(m["id_col"]),
-        )
-        # bounded collect: verified near-dup pairs for ONE batch —
-        # schema captured from the plan so non-default id types
-        # (string doc ids) round-trip instead of failing a literal DDL
-        sel = pairs.select("id_a", "id_b", "jaccard")
-        out_schema = sel.schema
-        # Materialize the signed pin with ONE action before the two
-        # halves consume it concurrently (the build/append-verb
-        # pattern): bk.count() fills bk AND its parent shingle pin, so
-        # neither overlapped job re-runs the signature pass racing the
-        # cache's first materialization.
-        bk.count()
-        # The query's collect and the batch's append are INDEPENDENT
-        # job sets — overlap them (guide §2.6; indexio.overlap_jobs):
-        # the sequential form left most executors idle through each
-        # half's straggler tail, and per-batch latency is the
-        # continuous-ingest hot path. Measured on a 4-core host
-        # (100-doc batches into a 2,000-doc index, the two forms
-        # interleaved in one session): median 2.23 s overlapped vs
-        # 2.41 s sequential, overlapped faster in 11 of 13 pairs.
-        # Correctness is unchanged by construction: the pair plan
-        # above binds its scans to the pre-append snapshot listing,
-        # and even a racing listing that glimpses the in-flight
-        # append's files is exactly the replay shape the machinery
-        # already absorbs — appended rows carry this batch's own ids
-        # (dropped by ``exclude_ids``) and duplicate shash rows fold
-        # in the verify's dropDuplicates.
-        # Failure composition equals the sequential form's crash
-        # window: a failed collect beside a committed append is the
-        # at-least-once epoch-replay case (re-query excludes own ids,
-        # re-append folds at compaction).
-        table, _ = overlap_jobs(
-            lambda: sel.toArrow(),
-            lambda: _append_rows(spark, path, bk, sh, signed_under=m),
-        )
-        return spark.createDataFrame(table, out_schema)
-    finally:
-        bk.unpersist()
-        sh.unpersist()
-        pinned.unpersist()
+    return pairs
 
 
 def compact_lsh_index(spark: SparkSession, path: str) -> dict:
@@ -465,6 +524,21 @@ def forget_from_lsh_index(
         return forget_rows(spark, path, LSH_TABLES, ids, erase=erase)
 
 
+def _in_buckets(keys: pa.Table) -> Column:
+    """True on the index rows of the (band_idx, band_key) buckets in
+    ``keys``: one literal IN-set per band, written as SQL text, so the
+    filter costs one call to plan and no job to ship (a broadcast
+    join with a local relation starts one job to build its side)."""
+    per_band = keys.group_by("band_idx").aggregate([("band_key", "distinct")])
+    terms = [
+        f"(band_idx = {b} AND band_key IN ({', '.join(map(str, ks))}))"
+        for b, ks in zip(
+            per_band["band_idx"].to_pylist(), per_band["band_key_distinct"].to_pylist()
+        )
+    ]
+    return F.expr(" OR ".join(terms) or "false")
+
+
 def query_lsh_index(
     spark: SparkSession,
     batch: DataFrame,
@@ -479,129 +553,114 @@ def query_lsh_index(
     payloads from ``shash/``. Self-pairs are dropped so re-ingesting
     an already-indexed document does not match itself.
 
-    The returned DataFrame is lazy; pass ``caches`` (a list) and the
-    batch's shingle pass + signed band keys are PINNED, with both
-    frames appended for the CALLER to unpersist once the pairs are
-    materialized — SQL-cache entries are not GC'd, so a session
-    querying per round (the driver shape) accumulates cache entries
-    per call without the release. Without ``caches`` there is no
-    release channel, so NOTHING is left pinned: the (batch-bounded)
-    sign pass recomputes per consumer instead of leaking one
-    unreleasable cache entry per call (loop-style callers should use
-    ``ingest_batch``, which pins AND cleans per batch)."""
+    Not lazy: the batch is signed with one action into local relations
+    on the driver and the index is queried in three bounded actions
+    (``_query_signed``), so the call runs the caller's ``batch``
+    lineage once and returns the pairs as a local Arrow-backed
+    relation — consuming it starts no Spark job, and the answer is the
+    snapshot's as of the call, whatever the index does afterwards.
+    Nothing is pinned, so nothing needs releasing: ``caches`` is
+    accepted for callers written against the lazy form, and nothing
+    is appended to it."""
     snap = open_snapshot(path, LSH_TABLES)
-    m = snap.meta
-    bk, batch_sh, pinned = _index_rows(
-        batch, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
+    return _query_signed(
+        spark, _sign_batch(batch, snap.meta), _scans(spark, snap),
+        threshold, max_bucket_size,
     )
-    if caches is not None:
-        # pin the signed band keys too: _query_signed consumes them
-        # twice (the candidate-bucket key broadcast AND the pair join)
-        # — without the pin the signature UDF runs twice per query.
-        bk = bk.persist()
-        caches.append(pinned)
-        caches.append(bk)
-    else:
-        pinned.unpersist()
-    return _query_signed(spark, bk, batch_sh, snap, threshold, max_bucket_size)
+
+
+def _scans(spark: SparkSession, snap: Snapshot) -> dict[str, DataFrame]:
+    """Both tables of ``snap``, each read once from its RESOLVED
+    version directory (the shash version the bands meta names). A
+    frame lists its files when it is created, so every action over it
+    reads that listing, and the snapshot stays complete across one
+    subsequent compact (indexio retention)."""
+    return {t: read_table(spark, snap, t) for t in LSH_TABLES.names}
 
 
 def _query_signed(
     spark: SparkSession,
-    bk: DataFrame,
-    batch_sh: DataFrame,
-    snap: Snapshot,
+    batch: _Batch,
+    scans: dict[str, DataFrame],
     threshold: float,
     max_bucket_size: int,
-    exclude_ids: DataFrame | None = None,
+    exclude_own: bool = False,
 ) -> DataFrame:
-    """Query body over a batch's precomputed (band rows, shash rows) —
-    shared by query_lsh_index (signs per call) and ingest_batch (signs
-    once for query AND append). ``snap`` is the caller's resolved
-    snapshot (params, bands version and the shash version it names are
-    co-published — indexio.open_snapshot); ``exclude_ids`` drops
-    candidates whose id_b is in the given id set (ingest_batch's
-    replay-idempotence guard)."""
-    id_col = snap.meta["id_col"]
-    # Bind the scan to the RESOLVED version directory: the snapshot
-    # stays complete across one subsequent compact (indexio retention),
-    # so a query planned pre-compact evaluates correctly post-compact.
-    idx_bands = read_table(spark, snap, "bands")
-    # Candidate-bucket pruning BEFORE the sizing window: the batch's
-    # (band_idx, band_key) set is batch-bounded (|batch| × bands keys)
-    # — broadcast it and left-semi-join the index bands first, so the
-    # bucket-size window below shuffles only the buckets this batch
-    # can touch instead of the ENTIRE bands table per query (guide
-    # §2.3: at 100 TB the window otherwise re-shuffles the index per
-    # ingest batch; buckets the batch never probes can't produce pairs,
-    # and the semi-join keeps every row OF a touched bucket, so the
-    # per-bucket counts — and therefore the boilerplate filter — are
-    # unchanged). Callers persist ``bk`` (ingest_batch pins it;
-    # query_lsh_index pins + exports via ``caches``), so the key
-    # broadcast reads the pin rather than re-running the sign pass.
-    # no distinct: the semi-join ignores duplicate probe keys, and the
-    # frame is |batch|×bands rows of two longs — smaller than the
-    # dedup shuffle (one AQE job per query) the distinct used to cost
-    batch_keys = bk.select("band_idx", "band_key")
-    idx_cand = idx_bands.join(
-        F.broadcast(batch_keys), ["band_idx", "band_key"], "left_semi"
+    """Query body over a batch signed on the driver — shared by
+    query_lsh_index and ingest_batch (which appends the same rows).
+    ``scans`` are the caller's snapshot's tables (``_scans``: params,
+    bands version and the shash version it names are co-published —
+    indexio.open_snapshot); ``exclude_own`` drops candidates whose
+    id_b is one of the batch's own ids (ingest_batch's
+    replay-idempotence guard). Returns the pairs as a local relation.
+
+    Three bounded actions, each a single scan of one index table (one
+    fused plan with AQE ran about a dozen jobs per query, most of them
+    per-job overhead on small data):
+
+    (a) per-bucket row counts of the buckets the batch touches: the
+        bands scan is filtered to the batch's (band_idx, band_key)
+        keys (``_in_buckets``) and counted with map-side partial
+        aggregation — at most |batch| × bands rows reach the driver,
+        and an oversized bucket ships only its count;
+    (b) the (band_idx, band_key, id) rows of the touched buckets within
+        ``max_bucket_size`` — at most keys × ``max_bucket_size`` rows.
+        The driver joins them to the batch's band rows into distinct
+        (id_a, id_b) pairs, dropping self-pairs and, with
+        ``exclude_own``, the batch's own ids;
+    (c) the exact-Jaccard verify of those pairs against a streamed
+        ``shash`` scan, the pair side broadcast — at most one row per
+        pair and stored copy, deduplicated on (id_a, id_b) on the
+        driver.
+
+    The boilerplate guard: a bucket holding more than
+    ``max_bucket_size`` index rows is near-identical boilerplate and
+    belongs to exact dedup, not an LSH fan-out — its rows never leave
+    the scan. A bucket is counted over every index row of the
+    snapshot, replay duplicates included."""
+    id_col = batch.id_col
+    idx_bands, idx_sh = scans["bands"], scans["shash"]
+    counts = (
+        idx_bands.filter(_in_buckets(batch.bands))
+        .groupBy(*_BUCKET).count().toArrow()
     )
-    # Boilerplate guard, same policy as the inline bipartite path: an
-    # index bucket bigger than max_bucket_size is near-identical
-    # boilerplate and belongs to exact dedup, not an LSH fan-out.
-    # Sized via partial-aggregated counts + a broadcast semi-join back,
-    # NOT a count-over-window: the window form shuffled every candidate
-    # row by bucket key before counting — the one index-side exchange
-    # left in the query path, and the skew-prone one (a boilerplate
-    # bucket's rows all funnel through one task exactly so they can be
-    # thrown away, guide §2.5). The groupBy count ships only per-bucket
-    # partial counts (map-side aggregation), its qualifying-key frame
-    # is batch-bounded (≤ touched buckets ≤ |batch| × bands) so it
-    # broadcasts, and oversized buckets now die AT THE SCAN — zero
-    # candidate rows ever cross an exchange. Per-bucket counts are
-    # computed over the same idx_cand either way, so the filter —
-    # and every result — is unchanged.
-    sized_keys = (
-        idx_cand.groupBy("band_idx", "band_key")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= max_bucket_size)
-        .select("band_idx", "band_key")
+    sized = counts.filter(pc.less_equal(counts["count"], max_bucket_size))
+    members = (
+        idx_bands.filter(_in_buckets(sized))
+        .select(*_BUCKET, F.col(id_col).alias("id_b"))
+        .toArrow()
     )
-    idx_sized = idx_cand.join(
-        F.broadcast(sized_keys), ["band_idx", "band_key"], "left_semi"
+    cand = batch.bands.rename_columns(["id_a", *_BUCKET]).join(members, _BUCKET)
+    cand = cand.filter(pc.not_equal(cand["id_a"], cand["id_b"]))
+    if exclude_own:
+        # an at-least-once replay finds the batch's own rows already
+        # indexed; dropping them reproduces the original epoch's
+        # cross-batch-only pairs
+        own = batch.shash[id_col]
+        cand = cand.filter(pc.invert(pc.is_in(cand["id_b"], value_set=own)))
+    pairs = cand.group_by(["id_a", "id_b"]).aggregate([])
+    pair_schema = StructType([
+        StructField("id_a", batch.schemas["shash"][id_col].dataType),
+        StructField("id_b", idx_bands.schema[id_col].dataType),
+    ])
+    verified = verify_pairs_exact_jaccard_hashed(
+        F.broadcast(spark.createDataFrame(pairs, pair_schema)),
+        batch.frame(spark, "shash"), idx_sh, id_col, threshold,
     )
-    pairs = (
-        bk.withColumnRenamed(id_col, "id_a")
-        .join(idx_sized.withColumnRenamed(id_col, "id_b"), ["band_idx", "band_key"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    if exclude_ids is not None:
-        # left-anti against the (bounded) batch id set BEFORE the
-        # verify join — an at-least-once replay finds the batch's own
-        # rows already indexed; dropping them here reproduces the
-        # original epoch's cross-batch-only pairs
-        # no distinct: left-anti ignores duplicate build keys, and the
-        # id set is batch-bounded — the dedup shuffle was pure cost
-        pairs = pairs.join(
-            F.broadcast(exclude_ids.select(F.col(id_col).alias("id_b"))),
-            "id_b",
-            "left_anti",
-        )
-    # the shash version PAIRED with this bands snapshot (named by its
-    # meta — one pointer flip covers both tables; legacy metas fall
-    # back to the live pointer)
-    idx_sh = read_table(spark, snap, "shash")
     # Duplicate-tolerant: an at-least-once append replay leaves
-    # duplicate shash rows until compact_lsh_index runs; the verify
-    # join would then emit the SAME pair once per copy. jaccard is a
-    # pure function of the pair, so distinct over the verified output
-    # (near-dup pairs — tiny next to the corpus) restores exactly-once
-    # results without shuffling the index.
-    return verify_pairs_exact_jaccard_hashed(
-        pairs, batch_sh, idx_sh, id_col, threshold
-    ).dropDuplicates(["id_a", "id_b"])
+    # duplicate shash rows until compact_lsh_index runs, and the verify
+    # join emits the SAME pair once per copy. jaccard is a pure
+    # function of the pair, so one row per pair is the exactly-once
+    # answer.
+    found = verified.toArrow().group_by(["id_a", "id_b"]).aggregate(
+        [("jaccard", "max")]
+    )
+    return spark.createDataFrame(
+        found.select(["id_a", "id_b", "jaccard_max"]).rename_columns(
+            ["id_a", "id_b", "jaccard"]
+        ),
+        verified.schema,
+    )
 
 
 def rebuild_lsh_index(

@@ -89,7 +89,9 @@ only, so ``read_forget_ledger`` reads them with pyarrow into a local
 relation — no Spark job — once per lock scope, and ``filter_ledgered``
 takes that frame as a required argument: a ledger of at most
 ``LEDGER_INLINE_MAX`` ids filters as a literal IN-set (no job),
-a larger one as a broadcast anti-join.
+a larger one as a broadcast anti-join. A verb that holds its rows on
+the driver filters them there instead (``read_forget_ledger_ids`` and
+``drop_ledgered_rows``), which starts no job at any ledger size.
 """
 
 from __future__ import annotations
@@ -388,6 +390,16 @@ def read_forget_ledger(spark, path: str):
     return None if table is None else spark.createDataFrame(table)
 
 
+def read_forget_ledger_ids(path: str):
+    """The suppression ledger's ids as one pyarrow array, or None when
+    no forget has ever run — ``read_forget_ledger`` for a verb that
+    filters rows it already holds on the driver
+    (``drop_ledgered_rows``). Read once per writer-lock scope, like the
+    frame."""
+    table = _ledger_table(path)
+    return None if table is None else table.column(0).combine_chunks()
+
+
 def compact_forget_ledger(spark, path: str) -> int:
     """Fold the suppression ledger's per-forget files into one distinct
     file — without this the ledger grows one small parquet file per
@@ -492,6 +504,23 @@ def filter_ledgered(df, id_col: str, *, ledger):
         return df.filter(F.col(id_col).isNull() | ~F.col(id_col).isin(ids))
     led = F.broadcast(ledger.select(F.col(ledger.columns[0]).alias("_led_id")))
     return df.join(led, df[id_col] == led["_led_id"], "left_anti")
+
+
+def drop_ledgered_rows(table, id_col: str, *, ledger):
+    """``filter_ledgered`` for a pyarrow table held on the driver: drop
+    the rows whose ``id_col`` is in ``ledger``, the array one
+    ``read_forget_ledger_ids`` returned for the current lock scope
+    (None: ``table`` comes back unchanged). A null id is kept, as
+    ``filter_ledgered`` keeps it. Starts no Spark job, at any ledger
+    size."""
+    import pyarrow.compute as pc
+
+    if ledger is None:
+        return table
+    ids = table[id_col]
+    return table.filter(pc.or_(
+        pc.is_null(ids), pc.invert(pc.is_in(ids, value_set=ledger))
+    ))
 
 
 def _newest_version(live: str) -> str | None:

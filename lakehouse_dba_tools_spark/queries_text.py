@@ -493,27 +493,20 @@ def lsh_index_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch1 = docs.filter(F.col("doc_id") % 10 == 0)
     batch2 = docs.filter(F.col("doc_id") % 10 == 5)
     tmp = tempfile.mkdtemp(prefix="lsh_index_")
-    caches: list[DataFrame] = []
     try:
         with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
             build_lsh_index(corpus, tmp, num_perm=64, bands=16, seed=42)
             # Each phase is MATERIALIZED before the index mutates again
             # — the real pipeline order (a batch's report ships before
-            # the next batch lands). Both collects are bounded (verified
-            # near-dup pairs). Batch 1 runs the fused sign-once
-            # query+append (ingest_batch — the production per-batch
-            # unit); the replay then exercises the standalone append
-            # API. query_lsh_index exports its pinned batch-shingle
-            # frame via `caches`; the finally releases it (r12 review —
-            # the same non-GC'd-cache class as the r11 ADVICE leak).
-            # ingest_batch returns its pairs already materialized
+            # the next batch lands): both verbs return their (bounded)
+            # verified pairs as local relations. Batch 1 runs the fused
+            # sign-once query+append (ingest_batch — the production
+            # per-batch unit); the replay then exercises the standalone
+            # append API.
             b1 = ingest_batch(spark, batch1, tmp, threshold=0.5)
             append_to_lsh_index(batch1, tmp)  # replayed epoch
             compact_lsh_index(spark, tmp)
-            p2 = query_lsh_index(
-                spark, batch2, tmp, threshold=0.5, caches=caches
-            ).select("id_a", "id_b", "jaccard")
-            b2 = spark.createDataFrame(p2.toArrow(), p2.schema)
+            b2 = query_lsh_index(spark, batch2, tmp, threshold=0.5)
         return (
             b1.withColumn("phase", F.lit("b1"))
             .unionByName(b2.withColumn("phase", F.lit("b2")))
@@ -521,8 +514,6 @@ def lsh_index_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("phase", "id_a", "id_b")
         )
     finally:
-        for c in caches:
-            c.unpersist()
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -1349,7 +1340,6 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     forget_vecs = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id")
     tmp = tempfile.mkdtemp(prefix="idx_forget_")
     rows: list[tuple] = []
-    caches: list[DataFrame] = []
     # the slice tables are KBs: 8 shuffle partitions sizes the index
     # exchanges to the data (the EXT-window fixture-sizing precedent);
     # at 100 TB the same lifecycle runs under the session default
@@ -1397,12 +1387,6 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 res = query_postings_index(spark, bm, _BM25_QUERY, k=10, mode=mode)
                 return res.collect()  # ≤k rows, ordered
 
-            def _lsh_rows():
-                probe = query_lsh_index(
-                    spark, forget_docs, lsh, threshold=0.5, caches=caches
-                )
-                return probe.select("id_a", "id_b", "jaccard").collect()
-
             def _ivf_rows():
                 q = emb.filter(
                     (F.col("vec_id") % 3 != 0) & (F.col("vec_id") < 40)
@@ -1412,7 +1396,9 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_r, champ_r, lsh_r, ivf_r = overlap_jobs(
                 lambda: _bm25_rows("exact"),
                 lambda: _bm25_rows("champions"),
-                _lsh_rows,
+                lambda: query_lsh_index(
+                    spark, forget_docs, lsh, threshold=0.5
+                ).collect(),
                 _ivf_rows,
             )
             for part, got in (("bm25_exact", exact_r), ("bm25_champ", champ_r)):
@@ -1481,6 +1467,4 @@ def index_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, "part string, a bigint, b bigint, c bigint, val double"
         ).orderBy("part", "a", "b", "c")
     finally:
-        for c in caches:  # the LSH probe's pinned batch shingles
-            c.unpersist()
         shutil.rmtree(tmp, ignore_errors=True)

@@ -47,8 +47,8 @@ def make_query_then_append_sink(
     from lakehouse_dba_tools_spark.dedup.index import ingest_batch
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # ingest_batch materializes the (bounded) verified pairs before
-        # appending, so the recorded rows are stable
+        # ingest_batch returns the (bounded) verified pairs as a local
+        # relation, so the recorded rows are stable
         found[int(epoch_id)] = ingest_batch(
             spark, batch_df, idx, threshold=threshold
         ).collect()

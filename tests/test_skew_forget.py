@@ -604,11 +604,8 @@ def test_forget_then_ingest_composes(spark, sf_dir, tmp_path):
     probe = batch.limit(1).select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
     )
-    caches: list = []
-    hits = query_lsh_index(spark, probe, path, threshold=0.5, caches=caches)
+    hits = query_lsh_index(spark, probe, path, threshold=0.5)
     ids_b = {r["id_b"] for r in hits.collect()}
-    for c in caches:
-        c.unpersist()
     assert ids_b & {r["doc_id"] for r in batch.limit(1).collect()}
     rep = compact_lsh_index(spark, path)
     assert rep["shash"]["rows"] > 0

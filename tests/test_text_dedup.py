@@ -905,25 +905,148 @@ def test_compact_lsh_index_with_custom_id_col(spark, tmp_path):
     assert got == {(20, 1), (20, 10)}
 
 
-def test_lsh_query_frame_starts_no_jobs(spark, tmp_path):
-    """The version meta records each table's schema, so building the
-    lazy query frame reads both tables without a schema-inference job."""
+def test_lsh_query_drops_pairs_only_through_oversized_buckets(spark, tmp_path):
+    """The boilerplate guard: an index bucket holding more than
+    ``max_bucket_size`` rows yields no candidate. With one-word shingles
+    and one permutation per band, a doc's band-j key is set by its word
+    with the smallest j-th permutation value, so the docs are built to
+    collide where wanted: every doc holds ``w0``, the vocabulary's
+    smallest word under permutation 0, and so shares one band-0 bucket
+    with the rest. ``q1`` copies ``d1`` and also collides with it in
+    bands 1-3; ``q2`` adds to ``d2`` a word ``y`` that is smaller than
+    ``d2``'s words under permutations 1-3, so the two meet in band 0
+    only. Capping that bucket drops (q2, d2) and keeps (q1, d1)."""
+    import random
+
     from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, query_lsh_index
+
+    params = {"k": 1, "num_perm": 4, "bands": 4, "seed": 7}
+    rng = random.Random(3)
+    vocab = sorted({
+        "".join(rng.choices("abcdefghijklmnopqrstuvwxyz", k=8)) for _ in range(3000)
+    })
+    # a one-word doc's signature is that word's value under each permutation
+    words = spark.createDataFrame([(i, w) for i, w in enumerate(vocab)], "doc_id long, text string")
+    h = {
+        vocab[r.doc_id]: list(r.signature)
+        for r in with_minhash_signature(
+            with_shingle_set(words, k=1), num_perm=4, seed=7
+        ).collect()
+    }
+    w0 = min(vocab, key=lambda w: h[w][0])
+    rest = [w for w in vocab if w != w0]
+    rng.shuffle(rest)
+
+    pool = rest[24:]
+
+    def smaller(doc):
+        """A word of ``pool`` smaller than every word of ``doc`` under
+        permutations 1-3, taken out of ``pool``."""
+        word = next(
+            w for w in pool
+            if all(h[w][j] < min(h[d][j] for d in doc) for j in (1, 2, 3))
+        )
+        pool.remove(word)
+        return word
+
+    # d1 keeps its own keys in bands 1-3, apart from every other doc's
+    d1 = [w0, smaller([w0])] + rest[:4]
+    d2 = [w0] + rest[4:9]
+    y = smaller(d2)
+    boiler = [[w0] + rest[9 + 5 * i:14 + 5 * i] for i in range(3)]
+
+    schema = "doc_id long, text string"
+    corpus = [(1, " ".join(d1)), (2, " ".join(d2))] + [
+        (10 + i, " ".join(b)) for i, b in enumerate(boiler)
+    ]
+    path = str(tmp_path / "idx")
+    build_lsh_index(spark.createDataFrame(corpus, schema), path, **params)
+    batch = spark.createDataFrame([(100, " ".join(d1)), (101, " ".join(d2 + [y]))], schema)
+
+    def pairs(cap):
+        return {
+            (r.id_a, r.id_b)
+            for r in query_lsh_index(spark, batch, path, max_bucket_size=cap).collect()
+        }
+
+    # the band-0 bucket holds d1, d2 and three boilerplate docs
+    assert pairs(5) == {(100, 1), (101, 2)}
+    assert pairs(4) == {(100, 1)}
+
+
+def test_lsh_query_jobs_rely_on_recorded_schemas(spark, tmp_path):
+    """A query signs its batch with one action and queries the index in
+    three bounded ones. The version meta records each table's schema,
+    so no read starts a schema-inference job: the query, its collect
+    included, starts at most 8 jobs. The same query on a meta stripped
+    of ``schemas`` starts more, with the same answer."""
+    import json
+    import os
+
+    from lakehouse_dba_tools_spark.dedup.index import (
+        META_NAME,
+        build_lsh_index,
+        query_lsh_index,
+    )
+    from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
 
     schema = "doc_id long, text string"
     path = str(tmp_path / "idx")
     build_lsh_index(spark.createDataFrame(_NEAR_DUP_CORPUS, schema), path)
     batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.numTotalJobs()
-    pairs = query_lsh_index(spark, batch, path)
-    assert dag.numTotalJobs() - before == 0
+
+    def query():
+        before = dag.numTotalJobs()
+        got = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path).collect()}
+        return got, dag.numTotalJobs() - before
+
+    got, recorded = query()
+    assert got == {(10, 1), (11, 5)}
+    assert recorded <= 8
+    meta_file = os.path.join(current_version_dir(os.path.join(path, "bands")), META_NAME)
+    with open(meta_file) as fh:
+        meta = json.load(fh)
+    del meta["schemas"]
+    with open(meta_file, "w") as fh:
+        json.dump(meta, fh)
+    got, inferred = query()
+    assert got == {(10, 1), (11, 5)}
+    assert inferred > recorded, (recorded, inferred)
+
+
+@pytest.mark.parametrize("caches", [None, []], ids=["no_caches", "caches"])
+def test_lsh_query_evaluates_batch_once(spark, tmp_path, caches):
+    """``query_lsh_index`` signs its batch with one action into local
+    relations, so each batch row runs the caller's lineage once, with
+    or without ``caches`` (nothing is appended to it), and the returned
+    pairs frame is a local Arrow-backed relation."""
+    from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, query_lsh_index
+
+    schema = "doc_id long, text string"
+    path = str(tmp_path / "idx")
+    build_lsh_index(spark.createDataFrame(_NEAR_DUP_CORPUS, schema), path)
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def keep(doc_id):
+        evaluated.add(1)
+        return True
+
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema).filter(
+        F.udf(keep, "boolean")("doc_id")
+    )
+    pairs = query_lsh_index(spark, batch, path, caches=caches)
+    assert evaluated.value == len(_NEAR_DUP_BATCH)
     assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(10, 1), (11, 5)}
+    assert evaluated.value == len(_NEAR_DUP_BATCH)
+    assert caches in (None, [])
+    assert "LocalRelation" in pairs._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_ingest_batch_evaluates_docs_once(spark, tmp_path):
-    """``ingest_batch`` takes its own-id exclusion from the pinned
-    shingle pass, so each batch row runs the caller's lineage once; the
+    """``ingest_batch`` signs its batch with one action into local
+    relations that the query, the own-id exclusion and the append all
+    read, so each batch row runs the caller's lineage once; the
     returned pairs frame is a local Arrow-backed relation."""
     from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, ingest_batch
 
