@@ -52,16 +52,21 @@ versioned-table layer (``write_versions`` / ``compact_tables`` /
 
 Scale notes: a query or ingest signs its batch with one action into
 local relations on the driver (|batch| shash rows, |batch| × bands band
-rows), then reads the index in three bounded actions: per-bucket counts
-of the buckets the batch touches (at most |batch| × bands rows reach
-the driver), the rows of the touched buckets within
-``max_bucket_size`` (at most that many rows per key), and an
+rows; the signature min-fold runs there too, |batch| × shingles ×
+num_perm integer products), then reads the index in three bounded
+actions: per-bucket counts of the buckets the batch touches (at most
+|batch| × bands rows reach the driver), the rows of the touched buckets
+within ``max_bucket_size`` (at most that many rows per key), and an
 exact-Jaccard verify of the pairs formed from them on the driver,
 which streams the shash scan against the broadcast pairs (at most one
-row per pair and stored copy). The index tables themselves never
-reach the driver and never shuffle. Appends create one file per band
-partition per batch; `compact_lsh_index` is the bin-pack OPTIMIZE
-analog, run on the usual small-file cadence.
+row per pair and stored copy). The touched buckets filter the bands
+scan as literal IN-sets up to ``BUCKETS_INLINE_MAX`` keys and as a
+broadcast semi-join beyond, so the plan stays small at any batch size.
+The index tables themselves never reach the driver and never shuffle;
+build, append, compact, forget and rebuild sign and write on the
+executors. Appends create one file per band partition per batch;
+`compact_lsh_index` is the bin-pack OPTIMIZE analog, run on the usual
+small-file cadence.
 
 Writer semantics (operators/indexio.py): build/append/compact hold an
 exclusive flock on the index root, so an append can never land inside
@@ -85,15 +90,14 @@ adds as first-class (dedup at continuous-ingest scale).
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass, replace
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from lakehouse_dba_tools_spark.operators.indexio import (
     IndexTables,
@@ -117,6 +121,7 @@ from lakehouse_dba_tools_spark.operators.indexio import (
 from lakehouse_dba_tools_spark.dedup.minhash import (
     band_key_array,
     band_keys,
+    min_fold,
     verify_pairs_exact_jaccard_hashed,
     with_shingle_set,
 )
@@ -151,29 +156,20 @@ LSH_TABLES = IndexTables(
 )
 
 
-def _signed_docs(
-    docs: DataFrame, text_col: str, id_col: str, k: int, num_perm: int, seed: int
-) -> tuple[DataFrame, DataFrame]:
-    """(hashes, signed) for a document set — the only signature
-    computation in the lifecycle; every verb that signs routes here so
-    index contents cannot drift from the query side's expectations.
-    ``hashes`` is (id, _sh_hashes): the xxhash64'd shingles (8-byte
-    longs), NOT the shingle strings; ``signed`` adds the ``signature``.
-    Both index tables consume the hashes — the signature min-fold folds
-    them directly (bit-identical to hashing inside the fold;
-    rebuild_lsh_index recomputes signatures from stored hashes on that
-    guarantee) and ``shash`` is their distinct — so a verb that pins
-    ``hashes`` never persists or recomputes the strings."""
-    from lakehouse_dba_tools_spark.dedup.minhash import _signature_udf
-
-    hashes = with_shingle_set(docs, text_col, id_col, k).select(
+def _shingle_hashes(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(id, _sh_hashes) for a document set: the xxhash64'd shingles
+    (8-byte longs), NOT the shingle strings. Both index tables consume
+    the hashes — the signature min-fold folds them directly
+    (bit-identical to hashing inside the fold; rebuild_lsh_index
+    recomputes signatures from stored hashes on that guarantee) and
+    ``shash`` is their distinct — so a verb that pins them never
+    persists or recomputes the strings. Every verb that signs starts
+    here, and every signature is ``minhash.min_fold``'s, so index
+    contents cannot drift from the query side's expectations."""
+    return with_shingle_set(docs, text_col, id_col, k).select(
         F.col(id_col),
         F.transform("shingles", lambda s: F.xxhash64(s)).alias("_sh_hashes"),
     )
-    signed = hashes.withColumn(
-        "signature", _signature_udf(num_perm, seed)(F.col("_sh_hashes"))
-    )
-    return hashes, signed
 
 
 def _index_rows(
@@ -193,12 +189,17 @@ def _index_rows(
     cache entry per call."""
     from pyspark import StorageLevel
 
-    hashes, signed = _signed_docs(docs, text_col, id_col, k, num_perm, seed)
-    # the cache manager substitutes the pin into ``signed``'s plan too
-    pinned = hashes.persist(StorageLevel.MEMORY_AND_DISK)
+    from lakehouse_dba_tools_spark.dedup.minhash import _signature_udf
+
+    hashes = _shingle_hashes(docs, text_col, id_col, k).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    signed = hashes.withColumn(
+        "signature", _signature_udf(num_perm, seed)(F.col("_sh_hashes"))
+    )
     bk = band_keys(signed, id_col, bands, num_perm // bands)
     sh = hashes.select(F.col(id_col), F.array_distinct("_sh_hashes").alias("shash"))
-    return bk, sh, pinned
+    return bk, sh, hashes
 
 
 _BUCKET = ["band_idx", "band_key"]
@@ -231,31 +232,44 @@ class _Batch:
 
 
 def _sign_batch(docs: DataFrame, m: dict) -> _Batch:
-    """Sign a batch under the meta's parameters with ONE action: the
-    per-doc signed rows (|batch| rows) are collected with ``toArrow``
-    and the band rows exploded on the driver, so the caller's ``docs``
-    lineage runs once and nothing is pinned."""
+    """Sign a batch under the meta's parameters with ONE action over
+    the caller's ``docs``: the per-doc distinct shingle hashes (|batch|
+    rows) are collected with ``toArrow``, the signatures min-folded on
+    the driver with the executors' kernel (``minhash.min_fold``), and
+    the band keys hashed by the build's own expression
+    (``band_key_array``) over a local relation, whose projection Spark
+    evaluates while planning. So signing starts no Python worker of
+    its own, nothing is pinned, and the band rows are exploded on the
+    driver."""
+    spark = docs.sparkSession
     id_col, num_perm, bands = m["id_col"], m["num_perm"], m["bands"]
-    _, signed = _signed_docs(
-        docs, m["text_col"], id_col, m["k"], num_perm, m["seed"]
+    sh = _shingle_hashes(docs, m["text_col"], id_col, m["k"]).select(
+        F.col(id_col), F.array_distinct("_sh_hashes").alias("shash")
     )
-    per_doc = signed.select(
-        F.col(id_col),
-        F.array_distinct("_sh_hashes").alias("shash"),
-        band_key_array(F.col("signature"), bands, num_perm // bands).alias("keys"),
+    t = sh.toArrow()
+    sigs = min_fold(num_perm, m["seed"])(t.column("shash").to_pylist())
+    signed = spark.createDataFrame(
+        t.select([id_col]).append_column(
+            "signature", pa.array(sigs, pa.list_(pa.int64()))
+        ),
+        StructType([
+            sh.schema[id_col], StructField("signature", ArrayType(LongType()))
+        ]),
     )
-    t = per_doc.toArrow()
+    keys = signed.select(
+        band_key_array(F.col("signature"), bands, num_perm // bands)
+    ).collect()
     # every doc has exactly ``bands`` keys, in band order
     n = t.num_rows
     band_rows = pa.table({
         id_col: t.column(id_col).take(np.repeat(np.arange(n), bands)),
         "band_idx": np.tile(np.arange(bands, dtype=np.int32), n),
-        "band_key": pc.list_flatten(t.column("keys")),
+        "band_key": pa.array([k for (ks,) in keys for k in ks], pa.int64()),
     })
     return _Batch(
-        id_col, band_rows, t.select([id_col, "shash"]),
+        id_col, band_rows, t,
         {"bands": band_keys(signed, id_col, bands, num_perm // bands).schema,
-         "shash": per_doc.select(id_col, "shash").schema},
+         "shash": sh.schema},
     )
 
 
@@ -314,23 +328,15 @@ def append_to_lsh_index(docs: DataFrame, path: str) -> None:
     dedup against it. Parameters come from the stored meta — a batch
     signed under a different permutation family would never collide
     with the existing rows, so there is nothing to pass."""
-    spark = docs.sparkSession
     m = read_lsh_meta(path)
-    id_col = m["id_col"]
     bk, sh, pinned = _index_rows(
-        docs, m["text_col"], id_col, m["k"], m["num_perm"], m["bands"], m["seed"]
+        docs, m["text_col"], m["id_col"], m["k"], m["num_perm"], m["bands"], m["seed"]
     )
     # materialize the shared shingle pin before append_tables overlaps
     # the two table writes over it (first-materialization race — see
     # build_lsh_index)
     pinned.count()
-
-    def rows():
-        ledger = read_forget_ledger(spark, path)
-        return {"bands": filter_ledgered(bk, id_col, ledger=ledger),
-                "shash": filter_ledgered(sh, id_col, ledger=ledger)}
-
-    _append_rows(spark, path, rows, signed_under=m)
+    _append_rows(docs.sparkSession, path, {"bands": bk, "shash": sh}, signed_under=m)
     pinned.unpersist()
 
 
@@ -340,12 +346,14 @@ _FAMILY_KEYS = ("k", "num_perm", "bands", "seed")
 def _append_rows(
     spark: SparkSession,
     path: str,
-    rows: Callable[[], dict[str, DataFrame]],
+    rows: _Batch | dict[str, DataFrame],
     signed_under: dict,
 ) -> None:
-    """Append ``rows()`` — {table: frame}, the batch minus the docs of
-    the suppression ledger as ``rows`` reads it — into the current
-    version of each table, under the writer lock."""
+    """Append a batch's rows into the current version of each table,
+    under the writer lock, minus the docs the suppression ledger names
+    as read under that lock. ``rows`` is a batch held on the driver
+    (``_Batch``, filtered there) or {table: frame} (filtered in
+    Spark)."""
     # The lock keeps this append out of any concurrent compaction's
     # snapshot→publish window (it would otherwise be silently dropped
     # with the superseded version directory).
@@ -364,14 +372,23 @@ def _append_rows(
             )
         # Replay-resurrection guard (forget WINS over at-least-once
         # redelivery): an epoch replayed after a forget must not
-        # re-append the forgotten docs' rows. ``rows`` reads the
-        # suppression ledger UNDER the lock, so even a forget landing
-        # between this batch's signing and its append is honored; no-op
-        # while no forget has ever run. Bands land clustered like the
+        # re-append the forgotten docs' rows. The suppression ledger is
+        # read UNDER the lock, so even a forget landing between this
+        # batch's signing and its append is honored; no-op while no
+        # forget has ever run. Bands land clustered like the
         # build/compact writes (one file per band per batch); shash
         # appends into the version the CURRENT bands snapshot names —
         # the coupling readers resolve.
-        append_tables(spark, path, LSH_TABLES, snap, rows())
+        if isinstance(rows, _Batch):
+            kept = rows.without_ledgered(path)
+            frames = {t: kept.frame(spark, t) for t in LSH_TABLES.names}
+        else:
+            ledger = read_forget_ledger(spark, path)
+            frames = {
+                t: filter_ledgered(df, signed_under["id_col"], ledger=ledger)
+                for t, df in rows.items()
+            }
+        append_tables(spark, path, LSH_TABLES, snap, frames)
 
 
 def ingest_batch(
@@ -387,9 +404,9 @@ def ingest_batch(
     signatures, and band keys twice (signing text is the dominant
     per-batch cost at scale); this signs with one action into local
     Arrow-backed relations on the driver (|batch| × bands band rows,
-    |batch| shash rows), queries the index with them in three bounded
-    actions (see ``_query_signed``) and appends the SAME rows
-    alongside. Returns the (id_a, id_b, jaccard) pairs as a stable
+    |batch| shash rows; ``_sign_batch``), queries the index with them
+    in three bounded actions (see ``_query_signed``) and appends the
+    SAME rows alongside. Returns the (id_a, id_b, jaccard) pairs as a stable
     DataFrame: already materialized (safe to consume after later
     mutations) and held as a local Arrow-backed relation, so consuming
     it starts no Spark job and no Python worker. The caller's ``docs``
@@ -430,11 +447,6 @@ def ingest_batch(
     batch = _sign_batch(docs, m).without_ledgered(path)
     # the scans list their files here, before the append can add any
     scans = _scans(spark, snap)
-
-    def rows():
-        kept = batch.without_ledgered(path)
-        return {t: kept.frame(spark, t) for t in LSH_TABLES.names}
-
     # The query and the batch's append are INDEPENDENT job sets —
     # overlap them (indexio.overlap_jobs): the query's three actions
     # are short and serial, and the append's writes fill the executor
@@ -449,7 +461,7 @@ def ingest_batch(
         lambda: _query_signed(
             spark, batch, scans, threshold, max_bucket_size, exclude_own=True
         ),
-        lambda: _append_rows(spark, path, rows, signed_under=m),
+        lambda: _append_rows(spark, path, batch, signed_under=m),
     )
     return pairs
 
@@ -524,11 +536,29 @@ def forget_from_lsh_index(
         return forget_rows(spark, path, LSH_TABLES, ids, erase=erase)
 
 
-def _in_buckets(keys: pa.Table) -> Column:
-    """True on the index rows of the (band_idx, band_key) buckets in
-    ``keys``: one literal IN-set per band, written as SQL text, so the
-    filter costs one call to plan and no job to ship (a broadcast
-    join with a local relation starts one job to build its side)."""
+# The bands scan keeps the buckets a batch touches through one literal
+# IN-set per band up to this many keys, and through a broadcast
+# left-semi join above it. Timed on a 4-core host against a 50,000-doc
+# index (the bucket-counts action, best of 3): level at 800 and 1,600
+# keys (0.39 / 0.38 s as IN-sets, 0.47 / 0.36 s joined), the IN-set
+# slower from 4,000 keys on (0.57 vs 0.36 s; 5.7 vs 0.64 s at 80,000),
+# since its SQL text is parsed and planned whole. The join's broadcast
+# build starts one job more.
+BUCKETS_INLINE_MAX = 2048
+
+
+def _in_buckets(
+    spark: SparkSession, idx_bands: DataFrame, keys: pa.Table
+) -> DataFrame:
+    """The rows of ``idx_bands`` in the (band_idx, band_key) buckets of
+    ``keys`` — at most ``BUCKETS_INLINE_MAX`` key rows as a literal
+    IN-set per band, written as SQL text (one call to plan, no job to
+    ship), more as a broadcast left-semi join."""
+    keys = keys.select(_BUCKET)
+    if keys.num_rows > BUCKETS_INLINE_MAX:
+        return idx_bands.join(
+            F.broadcast(spark.createDataFrame(keys)), _BUCKET, "left_semi"
+        )
     per_band = keys.group_by("band_idx").aggregate([("band_key", "distinct")])
     terms = [
         f"(band_idx = {b} AND band_key IN ({', '.join(map(str, ks))}))"
@@ -536,7 +566,7 @@ def _in_buckets(keys: pa.Table) -> Column:
             per_band["band_idx"].to_pylist(), per_band["band_key_distinct"].to_pylist()
         )
     ]
-    return F.expr(" OR ".join(terms) or "false")
+    return idx_bands.filter(F.expr(" OR ".join(terms) or "false"))
 
 
 def query_lsh_index(
@@ -600,11 +630,13 @@ def _query_signed(
 
     (a) per-bucket row counts of the buckets the batch touches: the
         bands scan is filtered to the batch's (band_idx, band_key)
-        keys (``_in_buckets``) and counted with map-side partial
-        aggregation — at most |batch| × bands rows reach the driver,
+        keys (``_in_buckets``: literal IN-sets, or a broadcast
+        semi-join past ``BUCKETS_INLINE_MAX`` keys) and counted with
+        map-side partial aggregation — at most |batch| × bands rows reach the driver,
         and an oversized bucket ships only its count;
     (b) the (band_idx, band_key, id) rows of the touched buckets within
-        ``max_bucket_size`` — at most keys × ``max_bucket_size`` rows.
+        ``max_bucket_size`` — at most keys × ``max_bucket_size`` rows,
+        each one index row sharing a bucket with the batch.
         The driver joins them to the batch's band rows into distinct
         (id_a, id_b) pairs, dropping self-pairs and, with
         ``exclude_own``, the batch's own ids;
@@ -621,16 +653,18 @@ def _query_signed(
     id_col = batch.id_col
     idx_bands, idx_sh = scans["bands"], scans["shash"]
     counts = (
-        idx_bands.filter(_in_buckets(batch.bands))
+        _in_buckets(spark, idx_bands, batch.bands)
         .groupBy(*_BUCKET).count().toArrow()
     )
     sized = counts.filter(pc.less_equal(counts["count"], max_bucket_size))
     members = (
-        idx_bands.filter(_in_buckets(sized))
+        _in_buckets(spark, idx_bands, sized)
         .select(*_BUCKET, F.col(id_col).alias("id_b"))
         .toArrow()
     )
-    cand = batch.bands.rename_columns(["id_a", *_BUCKET]).join(members, _BUCKET)
+    cand = batch.bands.rename_columns(["id_a", *_BUCKET]).join(
+        members, _BUCKET, join_type="inner"
+    )
     cand = cand.filter(pc.not_equal(cand["id_a"], cand["id_b"]))
     if exclude_own:
         # an at-least-once replay finds the batch's own rows already

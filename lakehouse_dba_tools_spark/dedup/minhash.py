@@ -81,12 +81,28 @@ def _signature_udf(num_perm: int, seed: int):
     shingles. Factored out so signatures can be recomputed from a
     STORED shingle-hash column (dedup/index.py rebuild — `shash` holds
     exactly these hashes) bit-identically to the text path."""
+    fold = min_fold(num_perm, seed)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def signature(hash_arrays: pd.Series) -> pd.Series:
+        return pd.Series(fold(hash_arrays))
+
+    return signature
+
+
+def min_fold(num_perm: int, seed: int):
+    """The signature kernel: a function from arrays of xxhash64'd
+    shingles to their ``num_perm`` permutation minima (lists of ints;
+    an empty array signs as zeros). The pandas UDF runs it on the
+    executors, and a verb holding a micro-batch on the driver runs the
+    same function there. The minimum of a hash multiset is the minimum
+    of its distinct set, so the distinct ``shash`` arrays sign like the
+    raw hashes."""
     coeffs = _perm_coeffs(num_perm, seed)
     A = np.array([a for a, _ in coeffs], dtype=np.int64)  # (H,)
     B = np.array([b for _, b in coeffs], dtype=np.int64)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def signature(hash_arrays: pd.Series) -> pd.Series:
+    def fold(hash_arrays) -> list[list[int]]:
         out = []
         for hashes in hash_arrays:
             if hashes is None or len(hashes) == 0:
@@ -95,9 +111,9 @@ def _signature_udf(num_perm: int, seed: int):
             x = np.abs(np.asarray(hashes, dtype=np.int64)) % MERSENNE_P  # (S,)
             sig = ((x[:, None] * A[None, :] + B[None, :]) % MERSENNE_P).min(axis=0)
             out.append(sig.tolist())
-        return pd.Series(out)
+        return out
 
-    return signature
+    return fold
 
 
 def band_key_array(signature: Column, bands: int, rows_per_band: int) -> Column:

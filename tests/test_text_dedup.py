@@ -905,7 +905,10 @@ def test_compact_lsh_index_with_custom_id_col(spark, tmp_path):
     assert got == {(20, 1), (20, 10)}
 
 
-def test_lsh_query_drops_pairs_only_through_oversized_buckets(spark, tmp_path):
+@pytest.mark.parametrize("inline_max", [None, 0], ids=["in_set", "semi_join"])
+def test_lsh_query_drops_pairs_only_through_oversized_buckets(
+    spark, tmp_path, monkeypatch, inline_max
+):
     """The boilerplate guard: an index bucket holding more than
     ``max_bucket_size`` rows yields no candidate. With one-word shingles
     and one permutation per band, a doc's band-j key is set by its word
@@ -915,10 +918,17 @@ def test_lsh_query_drops_pairs_only_through_oversized_buckets(spark, tmp_path):
     with the rest. ``q1`` copies ``d1`` and also collides with it in
     bands 1-3; ``q2`` adds to ``d2`` a word ``y`` that is smaller than
     ``d2``'s words under permutations 1-3, so the two meet in band 0
-    only. Capping that bucket drops (q2, d2) and keeps (q1, d1)."""
+    only. Capping that bucket drops (q2, d2) and keeps (q1, d1). It holds
+    with the touched buckets kept by literal IN-sets (the default at
+    this batch size) and by the broadcast semi-join that larger batches
+    take (``BUCKETS_INLINE_MAX`` forced to 0)."""
     import random
 
+    from lakehouse_dba_tools_spark.dedup import index
     from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, query_lsh_index
+
+    if inline_max is not None:
+        monkeypatch.setattr(index, "BUCKETS_INLINE_MAX", inline_max)
 
     params = {"k": 1, "num_perm": 4, "bands": 4, "seed": 7}
     rng = random.Random(3)
@@ -1067,6 +1077,32 @@ def test_ingest_batch_evaluates_docs_once(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(10, 1), (11, 5)}
     assert evaluated.value == len(_NEAR_DUP_BATCH)
     assert "LocalRelation" in pairs._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_batch_signed_on_driver_matches_index_rows(spark):
+    """A batch signed on the driver (the query and ingest form) has the
+    band and shash rows the build writes for the same docs: both fold
+    signatures with ``minhash.min_fold`` and band them with
+    ``band_key_array``. An empty doc is included."""
+    from lakehouse_dba_tools_spark.dedup.index import _index_rows, _sign_batch
+
+    docs = spark.createDataFrame(
+        _NEAR_DUP_CORPUS + _NEAR_DUP_BATCH + [(99, "")], "doc_id long, text string"
+    )
+    bk, sh, pinned = _index_rows(docs, "text", "doc_id", 3, 64, 16, 42)
+    try:
+        want_bands = sorted(tuple(r) for r in bk.collect())
+        want_shash = sorted((r.doc_id, tuple(r.shash)) for r in sh.collect())
+    finally:
+        pinned.unpersist()
+    batch = _sign_batch(docs, {"id_col": "doc_id", "text_col": "text", "k": 3,
+                               "num_perm": 64, "bands": 16, "seed": 42})
+    assert sorted(
+        zip(*(batch.bands[c].to_pylist() for c in ("doc_id", "band_idx", "band_key")))
+    ) == want_bands
+    assert sorted(
+        (i, tuple(h)) for i, h in zip(*(batch.shash[c].to_pylist() for c in ("doc_id", "shash")))
+    ) == want_shash
 
 
 def _legacy_family(spark, family):
