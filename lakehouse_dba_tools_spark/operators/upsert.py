@@ -36,6 +36,17 @@ from pyspark.sql import functions as F
 from lakehouse_dba_tools_spark.operators.dedup import dedup_by_key
 
 
+def _duplicate_keys(verb: str, keys: Sequence[str]) -> ValueError:
+    """The error a MERGE verb raises for a source that holds some key
+    more than once when no ``source_order`` picks the surviving row."""
+    return ValueError(
+        f"{verb}: source has duplicate keys on {list(keys)} and no "
+        "source_order was given; pass source_order to dedup, or (to "
+        "merge_upsert) validate_unique=False if uniqueness is guaranteed "
+        "upstream"
+    )
+
+
 def merge_upsert(
     target: DataFrame,
     source: DataFrame,
@@ -66,11 +77,7 @@ def merge_upsert(
             .limit(1)
         )
         if dup.count() > 0:
-            raise ValueError(
-                f"merge_upsert: source has duplicate keys on {list(keys)} and no "
-                "source_order was given; pass source_order to dedup, or "
-                "validate_unique=False if uniqueness is guaranteed upstream"
-            )
+            raise _duplicate_keys("merge_upsert", keys)
     source = source.select(*[F.col(f"`{c.name}`") for c in target.schema.fields])
     kept_target = target.join(source.select(*keys), on=list(keys), how="left_anti")
     return kept_target.unionByName(source)
@@ -160,23 +167,35 @@ def create_or_upsert_partitioned(
 
     Returns the list of rewritten/created partition directory names.
 
+    One action decides the MERGE: over the source it counts the rows
+    per key and, per partition value, keeps the largest such count.
+    That collect names the affected partitions and checks key
+    uniqueness together. A count above 1 raises ``ValueError``
+    ("duplicate keys") before anything is written — only possible
+    without ``source_order``, which dedups the source first — and
+    ``merge_upsert`` then runs without its own uniqueness pass. NULL
+    partition values are kept as a partition value of their own. When
+    the source comes from ``dedup_by_key`` on the same keys, the per-key
+    group reuses the window's hash partitioning and adds no shuffle.
+
     One pass over the source: the MERGE branch pins ``source``
-    (``pinned_for_write``) from the affected-partition collect through
-    the staging write, so the collect, ``merge_upsert``'s uniqueness
-    check and both arms of the merged write read one materialised copy
-    instead of re-running the source lineage (JSON parse, dedup window)
-    each time; the pin is released when the verb returns. The merged
-    rows are repartitioned on ``partition_col`` before the write, so
-    each rewritten partition dir holds exactly one parquet file.
+    (``pinned_for_write``) from that action through the staging write,
+    so the action and both arms of the merged write read one
+    materialised copy instead of re-running the source lineage (JSON
+    parse, dedup window) each time; the pin is released when the verb
+    returns. The merged rows are repartitioned on ``partition_col``
+    before the write, so each rewritten partition dir holds exactly one
+    parquet file.
 
     The commit log records the CREATE's row count, and for a MERGE the
     rows written into the rewritten partitions (Delta's
     ``numOutputRows``: bounded by the rewrite, not the table).
 
-    Scale: the distinct-partition collect is bounded by the SOURCE's
-    partition cardinality (a look-back window: tens of values, never
-    fact-row cardinality); the merge join shuffles only the affected
-    partitions' rows, and the pin holds only the source.
+    Scale: the driver receives at most one row per partition value of
+    the SOURCE (a look-back window: tens of values, never fact-row
+    cardinality); the per-key count is a partial aggregation on the
+    executors. The merge join shuffles only the affected partitions'
+    rows, and the pin holds only the source.
     """
     import os
     import shutil
@@ -202,9 +221,23 @@ def create_or_upsert_partitioned(
     staging = path.rstrip("/") + "._staging"
     shutil.rmtree(staging, ignore_errors=True)
     with pinned_for_write(source) as source:
-        affected = [
-            r[0] for r in source.select(partition_col).distinct().collect()
-        ]
+        # One action: rows per key, then per partition value the most
+        # rows any of its keys has. The struct keeps NULL partition
+        # values, which collect_set would drop.
+        per_partition = (
+            source.groupBy(*[F.col(f"`{k}`") for k in keys])
+            .agg(
+                F.count(F.lit(1)).alias("_n"),
+                F.collect_set(F.struct(F.col(f"`{partition_col}`").alias("_p"))).alias("_ps"),
+            )
+            .select("_n", F.explode("_ps._p").alias("_p"))
+            .groupBy("_p")
+            .agg(F.max("_n").alias("_n"))
+            .collect()
+        )
+        if any(r._n > 1 for r in per_partition):
+            raise _duplicate_keys("create_or_upsert_partitioned", keys)
+        affected = [r._p for r in per_partition]
         # Partition pruning keeps the target read to the affected dirs
         # only. NULL partition values need an explicit isNull arm: isin()
         # is three-valued and never matches NULL, yet the staging write
@@ -216,13 +249,7 @@ def create_or_upsert_partitioned(
         if any(a is None for a in affected):
             prune = prune | F.col(partition_col).isNull()
         target = spark.read.option("basePath", path).parquet(path).where(prune)
-        # source already deduped above when source_order was given;
-        # without it, keep merge_upsert's uniqueness guard
-        merged = merge_upsert(
-            target, source, keys,
-            source_order=None,
-            validate_unique=source_order is None,
-        )
+        merged = merge_upsert(target, source, keys, validate_unique=False)
         (
             merged.repartition(partition_col)
             .write.mode("overwrite").partitionBy(partition_col).parquet(staging)

@@ -3,10 +3,14 @@
 The reference ingests paginated REST payloads by round-tripping through
 ``spark.read.json(sc.parallelize(json_strings))`` with a driver-side
 walk that stringifies booleans first (`tasks/Query History API to
-Delta_withmetrics.py:61-69,89-96,153-204`). We rebuild that as:
+Delta_withmetrics.py:61-69,89-96,153-204`). We keep its parser and its
+schema inference but not the round trip:
 
 - ``records_to_df``: list-of-dicts → DataFrame with inferred (or
-  declared) nested schema, optional bool normalization;
+  declared) nested schema, optional bool normalization. The JSON lines
+  are held as a local Arrow-backed relation and parsed by the JVM
+  reader's ``json(Dataset[String])`` overload, so the pull crosses into
+  the JVM once and no pickled RDD or Python worker is involved;
 - ``paged_source``: a generator-of-pages source that gathers every page
   into one record list and parses it ONCE — one schema-inference job
   and one parse lineage for the whole pull, instead of the reference's
@@ -26,6 +30,7 @@ from collections.abc import Callable, Iterable
 from itertools import islice
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -53,23 +58,35 @@ def records_to_df(
 ) -> DataFrame:
     """Parse a list of JSON-able records into a DataFrame.
 
-    With ``schema=None`` the nested schema is inferred exactly as the
-    reference's ``spark.read.json(sc.parallelize(...))`` does (QH:96).
-    Prefer passing a declared schema in production — inference scans the
-    data twice and is sensitive to missing/None-only fields.
+    The records become JSON lines in a local Arrow-backed relation (one
+    ``value`` string column), which ``spark.read.json`` parses as a
+    ``Dataset[String]`` — the same reader, options and inference as the
+    reference's ``spark.read.json(sc.parallelize(...))`` (QH:96), with
+    no Python worker on the path. With ``schema=None`` inference is one
+    Spark job; columns come in alphabetical order, a field missing from
+    a record reads as null, and conflicting types widen (long + string
+    → string). Prefer passing a declared schema in production —
+    inference scans the data twice and is sensitive to missing/None-only
+    fields. An empty record list needs ``schema`` and yields an empty
+    frame of it.
     """
     if stringify_bools:
         records = [normalize_bools(r) for r in records]
-    payload = [json.dumps(r) for r in records]
-    rdd = spark.sparkContext.parallelize(payload or [""], max(1, len(payload) // 5000 + 1))
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if not payload:
+    if not records:
         if schema is None:
             raise ValueError("empty record set requires an explicit schema")
         return spark.createDataFrame([], schema)
-    return reader.json(rdd)
+    lines = spark.createDataFrame(
+        pa.table({"value": [json.dumps(r) for r in records]}), "value string"
+    )
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    # The JVM reader's json(Dataset[String]) overload: PySpark's own
+    # json() takes only paths and RDDs.
+    return reader._df(
+        reader._jreader.json(getattr(lines._jdf, "as")(spark._jvm.Encoders.STRING()))
+    )
 
 
 def paged_source(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_dba_tools_spark.operators.dedup import dedup_by_key, latest_per_group
@@ -182,6 +183,68 @@ def test_partitioned_merge_evaluates_source_once(spark, tmp_path):
     got = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert len(got) == 50 + len([k for k in range(0, 3 * n, 3) if k >= 50])
     assert got[3] == "u3" and got[4] == "v4"
+
+
+@pytest.mark.parametrize(
+    "dup_partitions", [(1, 1), (1, 2)], ids=["same_partition", "two_partitions"]
+)
+def test_partitioned_merge_rejects_duplicate_source_keys(spark, tmp_path, dup_partitions):
+    """A source holding one key twice, in one partition or in two,
+    raises before anything is written: the table, its files and its
+    commit log are unchanged, and no staging dir is left."""
+    import os
+
+    from lakehouse_dba_tools_spark.maintenance.history import read_log
+    from lakehouse_dba_tools_spark.operators.upsert import (
+        create_or_upsert_partitioned,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(i, f"v{i}", i % 3) for i in range(9)], "k int, v string, p int"
+    )
+    create_or_upsert_partitioned(spark, base, path, ["k"], "p")
+
+    def files():
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+        )
+
+    rows_before, files_before = sorted(spark.read.parquet(path).collect()), files()
+    pa, pb = dup_partitions
+    src = spark.createDataFrame(
+        [(4, "x", pa), (4, "y", pb), (20, "z", 0)], "k int, v string, p int"
+    )
+    with pytest.raises(ValueError, match="duplicate keys"):
+        create_or_upsert_partitioned(spark, src, path, ["k"], "p")
+    assert not os.path.exists(path + "._staging")
+    assert files() == files_before
+    assert sorted(spark.read.parquet(path).collect()) == rows_before
+    assert [e["operation"] for e in read_log(path)] == ["CREATE"]
+
+
+def test_partitioned_merge_job_count(spark, tmp_path):
+    """A 20-row MERGE into an existing table starts at most 8 Spark
+    jobs: the affected partitions and the key-uniqueness check come
+    from one action, not from a collect plus a separate duplicate-key
+    pass (which cost 10 jobs here)."""
+    from lakehouse_dba_tools_spark.operators.upsert import (
+        create_or_upsert_partitioned,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(i, f"v{i}", i % 5) for i in range(50)], "k int, v string, p int"
+    )
+    create_or_upsert_partitioned(spark, base, path, ["k"], "p")
+    src = spark.createDataFrame(
+        [(k, f"u{k}", k % 5) for k in range(0, 60, 3)], "k int, v string, p int"
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    create_or_upsert_partitioned(spark, src, path, ["k"], "p")
+    assert dag.numTotalJobs() - before <= 8
+    assert spark.read.parquet(path).count() == 50 + 3
 
 
 def test_partitioned_merge_writes_one_file_per_partition(spark, tmp_path):

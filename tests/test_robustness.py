@@ -2,7 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lakehouse_dba_tools_spark.sources.json_records import paged_source, records_to_df
+from lakehouse_dba_tools_spark.sources.json_records import normalize_bools, paged_source, records_to_df
 
 
 def test_corrupt_json_records_permissive(spark, tmp_path):
@@ -62,6 +62,34 @@ def test_paged_source_infers_schema_in_one_job(spark):
     assert dag.numTotalJobs() - before == 1
     assert [f.name for f in df.schema.fields] == ["a", "b"]
     assert sorted(r.a for r in df.collect()) == [0, 1, 2, 3, 4]
+
+
+def test_records_to_df_parses_like_read_json_without_python_worker(spark):
+    """``records_to_df`` parses in the JVM: over a mixed payload (nested
+    struct, stringified bools, a missing field, a long/string conflict)
+    its schema and rows equal ``spark.read.json`` over a parallelized
+    RDD of the same lines, and its physical lineage has no PythonRDD."""
+    import json
+
+    recs = [
+        {"id": 1, "ok": True, "m": {"a": 1, "b": {"c": "x"}}, "v": 5},
+        {"id": 2, "ok": False, "m": {"a": 2}, "v": "five"},
+        {"id": 3, "m": {"b": {"c": "y"}}},
+    ]
+    df = records_to_df(spark, recs, stringify_bools=True)
+    payload = [json.dumps(normalize_bools(r)) for r in recs]
+    expected = spark.read.json(spark.sparkContext.parallelize(payload))
+    assert df.schema == expected.schema
+    assert dict(df.dtypes)["ok"] == "string" and dict(df.dtypes)["v"] == "string"
+    got = sorted(df.collect(), key=lambda r: r.id)
+    assert got == sorted(expected.collect(), key=lambda r: r.id)
+    assert got[2].ok is None
+
+    def lineage(frame):
+        return frame._jdf.queryExecution().toRdd().toDebugString()
+
+    assert "PythonRDD" in lineage(expected)
+    assert "PythonRDD" not in lineage(df)
 
 
 def test_empty_inputs(spark):
