@@ -21,28 +21,24 @@ as operators/upsert.py):
 - ``bands/<ver>/_lsh_meta.json``  {k, num_perm, bands, seed, id_col,
   text_col, shash_dir, schemas, rows, dup_free} — the one meta copy,
   inside each bands version directory, so the bands pointer flip
-  publishes tables and parameters together. A root-level
-  ``_lsh_meta.json`` exists only in indexes written before metas moved
-  into the version directories; readers fall back to it there, and no
-  verb writes one. Signatures only collide within one permutation
-  family, so query/append take their parameters FROM the stored meta
-  (callers cannot pass divergent ones) and a missing meta file fails
-  loudly instead of finding nothing. ``shash_dir`` names the shash VERSION
-  this bands snapshot pairs with: the index spans two tables, and two
-  independent pointer flips would leave a window (crash mid-build, or
-  a reader racing a full rebuild over a different corpus) where new
-  bands pair with old shash — candidates verifying against absent
-  shash rows are dropped SILENTLY. Riding the pairing inside the
-  bands version meta makes the bands flip the single atomic commit
-  for the whole index (the same pattern as the IVF cid manifest and
-  the champions _termstats); readers resolve bands ONCE and take the
-  shash version that snapshot names. Pre-round-10 indexes lack the
-  key and fall back to the live shash pointer. ``schemas`` holds each
-  table's schema as its readers see it (``StructType.jsonValue()``,
+  publishes tables and parameters together. Signatures only collide
+  within one permutation family, so query/append take their
+  parameters FROM the stored meta (callers cannot pass divergent ones)
+  and a missing meta file fails loudly instead of finding nothing.
+  ``shash_dir`` names the shash VERSION this bands snapshot pairs with:
+  the index spans two tables, and two independent pointer flips would
+  leave a window (crash mid-build, or a reader racing a full rebuild
+  over a different corpus) where new bands pair with old shash —
+  candidates verifying against absent shash rows are dropped SILENTLY.
+  Riding the pairing inside the bands version meta makes the bands flip
+  the single atomic commit for the whole index (the same pattern as the
+  IVF cid manifest and the champions _termstats); readers resolve bands
+  ONCE and take the shash version that snapshot names. ``schemas`` holds
+  each table's schema as its readers see it (``StructType.jsonValue()``,
   keyed ``bands`` / ``shash``): every verb reads the tables with it
-  (``indexio.read_table``), so no read starts a schema-inference job.
-  A meta written before the key existed reads by inference instead,
-  with the same results.
+  (``indexio.read_table``), so no read starts a schema-inference job. An
+  index whose meta lacks these keys is rejected and must be rebuilt (the
+  one on-disk format, see ``operators/indexio.py``).
 
 The two tables are declared once as ``LSH_TABLES``; build, compact,
 forget and rebuild write and publish them through indexio's shared
@@ -136,10 +132,8 @@ META_NAME = "_lsh_meta.json"
 DEFAULT_BANDS = 16
 
 LSH_TABLES = IndexTables(
-    kind="LSH",
     primary="bands",
     meta_name=META_NAME,
-    root_meta=META_NAME,
     # bands clustered by band before the partitioned write (the Iceberg
     # write.distribution-mode=hash analog): an unclustered partitionBy
     # write emits one file per (input task × band) — measured 512

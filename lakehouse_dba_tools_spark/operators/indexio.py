@@ -53,17 +53,11 @@ directory, publish through ``bm25._publish_tier``):
   secondary version the primary's meta names (``shash_dir`` /
   ``doclens_dir``), so the primary's pointer flip is the single atomic
   commit for the pair. That version meta is the only meta a verb
-  reads; nothing writes a root-level copy, which is read only in
-  indexes from before metas rode the versions (``root_meta``). Metas
-  older than the pairing key fall back to
-  the live secondary pointer; a named version that is gone while a
-  flat live directory exists (an external flatten-in-place) reads the
-  flat table with a loud ``UserWarning``.
+  reads.
 - ``read_table`` reads a table with the schema its version meta
   records under ``schemas`` (``StructType.jsonValue()``, partition
   column last, as a partitioned read lists it), so planning the read
-  starts no schema-inference job. A meta written before the key
-  existed reads by inference, with the same results.
+  starts no schema-inference job.
 - ``write_versions`` writes every table's next version (overlapped
   across tables), records their schemas, counts their rows from the
   parquet footers (a driver-side read, no job), writes the primary's
@@ -84,6 +78,17 @@ top of them; a family supplies only its row transform (its
 ``dedup_keys``, or the pinned forget-id set from
 ``pinned_forget_ids``) and runs them under its own ``writer_lock``.
 
+**One on-disk format.** Every published version directory of a
+primary table carries its version meta, and that meta records
+``schemas``, ``rows``, ``dup_free`` and, for a family with a secondary
+table, the pair key. It is the only place a reader learns a table's
+version and schema, the stand-in for a Delta table's transaction log.
+An index without them is rejected, never read another way: a plain
+directory at a live path fails the next locked writer's ``heal``, a
+version without its meta fails on opening the meta file, and a table
+the meta records no schema for fails in ``read_table``. Such an index
+must be rebuilt: delete it and build it again.
+
 **The suppression ledger is read on the driver.** Its files hold ids
 only, so ``read_forget_ledger`` reads them with pyarrow into a local
 relation — no Spark job — once per lock scope, and ``filter_ledgered``
@@ -102,7 +107,6 @@ import os
 import re
 import shutil
 import socket
-import warnings
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -233,36 +237,29 @@ def heal(live: str, retain: int = 1) -> None:
     the newest ``retain`` superseded published snapshots for in-flight
     readers. Call under ``writer_lock`` before mutating. A reader
     never needs this — the pointer always resolves to a complete
-    version."""
+    version.
+
+    Raises ``ValueError`` when ``live`` is a plain directory: a table
+    from before versioned tables, which this layer does not read."""
     tmp = live + "._ptr"
     if os.path.islink(tmp) or os.path.exists(tmp):
         os.remove(tmp)
     if os.path.isdir(live) and not os.path.islink(live):
-        # Legacy flat layout (a table written before versioning, or by
-        # an external tool): publish() cannot os.replace a symlink over
-        # a non-empty real directory, so migrate it under the writer
-        # lock — rename the directory to <live>.v0 and point a fresh
-        # symlink at it. Builds/compactions over legacy indexes then
-        # proceed normally (the next version is .v1).
-        target = live + ".v0"
-        # a same-named .v0 here was never published (no pointer exists
-        # to it) — crash debris, safe to clear
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(live, target)
-        os.symlink(os.path.basename(target), tmp)
-        os.replace(tmp, live)
-    elif not os.path.islink(live) and not os.path.exists(live):
-        # Dangling-migration recovery: a crash BETWEEN the rename above
-        # and its pointer publish leaves the table's only copy as an
-        # unpointered version dir with no live path at all. Without
-        # this re-point, _reclaim (cur_n=None) would treat every
-        # version dir as never-published debris and delete the legacy
-        # table permanently. Re-point at the NEWEST version sibling —
-        # for the migration crash that is the renamed .v0 itself; for a
-        # crashed-before-first-publish fresh build it may resurrect a
-        # possibly-partial .v0, which the imminent build overwrites
-        # (init_versioned) — resurrecting is recoverable, deleting the
-        # only copy is not.
+        raise ValueError(
+            f"index table {live!r} is a plain directory, not a pointer to "
+            f"a version directory: the index predates versioned tables. "
+            f"Rebuild the index (delete it and build it again)."
+        )
+    if not os.path.lexists(live):
+        # Lost-pointer recovery: a crash that leaves version dirs but
+        # no live path (a first publish that died before its pointer
+        # landed) must not lose them — without this re-point, _reclaim
+        # (no pointer) could not tell debris from the table's only
+        # copy. Re-point at the NEWEST version sibling (publishing is
+        # monotonic). For a crashed-before-first-publish fresh build
+        # it may resurrect a possibly-partial .v0, which the imminent
+        # build overwrites (init_versioned) — resurrecting is
+        # recoverable, deleting the only copy is not.
         newest = _newest_version(live)
         if newest is not None:
             os.symlink(os.path.basename(newest), tmp)
@@ -538,7 +535,7 @@ def _reclaim(live: str, retain: int) -> None:
     published snapshots. Versions numbered ABOVE the current pointer
     were never published (publishing is monotonic) — always debris.
 
-    Safety interlock (the dangling-migration hazard): when ``live`` is
+    Safety interlock (the lost-pointer hazard): when ``live`` is
     not a symlink, there is no pointer to distinguish debris from a
     table whose publish crashed mid-flight — deleting on a guess could
     destroy the only copy, so this refuses to delete anything; heal()
@@ -715,22 +712,16 @@ def write_version_meta(version_dir: str, name: str, meta: dict) -> None:
     os.replace(tmp, os.path.join(version_dir, name))
 
 
-def snapshot_meta(live: str, name: str, root: str) -> tuple[str, dict]:
+def snapshot_meta(live: str, name: str) -> tuple[str, dict]:
     """Resolve the live pointer ONCE and return ``(version_dir, meta)``
     as a coupled pair — the reader-side half of the atomic-parameters
     contract. Callers MUST scan the returned ``version_dir`` (not
     re-resolve ``live``), so the parameters they plan with always
     describe the exact snapshot they read. A version without the meta
-    (an index from before metas rode the versions) reads ``root``'s."""
+    raises ``FileNotFoundError`` naming the meta file."""
     vd = current_version_dir(live)
-    return vd, _version_meta(vd, name, os.path.join(root, name))
-
-
-def _version_meta(version_dir: str, name: str, root_sidecar: str) -> dict:
-    """``version_dir``'s meta ``name``, else the legacy root sidecar."""
-    p = os.path.join(version_dir, name)
-    with open(p if os.path.exists(p) else root_sidecar) as fh:
-        return json.load(fh)
+    with open(os.path.join(vd, name)) as fh:
+        return vd, json.load(fh)
 
 
 def describe_index(path: str, tables: tuple[str, ...]) -> list[dict]:
@@ -761,19 +752,16 @@ class IndexTables:
     """One index family's versioned tables.
 
     ``primary``'s version directory carries the parameter meta
-    ``meta_name`` (``root_meta`` names the root-level sidecar indexes
-    from before in-version meta fall back to); ``secondary``, when the
-    family has one, is the table that meta names under ``pair_key``.
+    ``meta_name``; ``secondary``, when the family has one, is the table
+    that meta names under ``pair_key``.
     ``layouts`` gives each table's write layout. ``row_id`` is the id
     column of the tables when it is fixed (otherwise the meta's
     ``id_col``); ``dedup_keys`` maps that id column to each table's
     replay-duplicate key; ``manifest`` derives extra meta keys from
     the primary's written version directory."""
 
-    kind: str
     primary: str
     meta_name: str
-    root_meta: str
     layouts: dict[str, Layout]
     dedup_keys: Callable[[str], dict[str, list[str]]]
     secondary: str | None = None
@@ -804,54 +792,34 @@ def open_snapshot(path: str, tables: IndexTables) -> Snapshot:
     version its meta names — the reader-side half of the single-flip
     commit. Callers scan the returned directories (never re-resolve the
     live paths), so the parameters and the paired table always come
-    from one publish. A meta without the pairing key (written before
-    the key existed) falls back to the live secondary pointer, and to a
-    FLAT live directory when the named version is gone because an
-    external tool flattened the layout (the legacy migration ``heal``
-    recovers) — loudly, since anything else that produced that state
-    could pair tables from different builds. A named version reclaimed
-    while the live path is still versioned (a reader ≥2 compacts stale,
-    or post-vacuum) stays pointed-at and fails loudly on first file
-    access — the retention contract, never a silent re-pair."""
-    vd = current_version_dir(os.path.join(path, tables.primary))
-    meta = _version_meta(vd, tables.meta_name, os.path.join(path, tables.root_meta))
+    from one publish. A named version reclaimed while the live path is
+    still versioned (a reader ≥2 compacts stale, or post-vacuum) stays
+    pointed-at and fails loudly on first file access — the retention
+    contract, never a silent re-pair."""
+    vd, meta = snapshot_meta(os.path.join(path, tables.primary), tables.meta_name)
     dirs = {tables.primary: vd}
     if tables.secondary is not None:
-        live = os.path.join(path, tables.secondary)
-        named = meta.get(tables.pair_key)
-        flat = os.path.isdir(live) and not os.path.islink(live)
-        if named is None:
-            dirs[tables.secondary] = current_version_dir(live)
-        elif flat and not os.path.isdir(os.path.join(path, named)):
-            warnings.warn(
-                f"{tables.kind} index at {path!r}: paired {tables.secondary} "
-                f"version {named!r} is gone and a flat live directory "
-                f"exists — assuming an external layout migration and "
-                f"reading the flat table. If anything other than a "
-                f"flatten-in-place produced this state, {tables.primary} "
-                f"and {tables.secondary} may come from different builds.",
-                UserWarning,
-                stacklevel=3,
-            )
-            dirs[tables.secondary] = live
-        else:
-            dirs[tables.secondary] = os.path.join(path, named)
+        dirs[tables.secondary] = os.path.join(path, meta[tables.pair_key])
     return Snapshot(dirs, meta)
 
 
 def read_table(spark, snap: Snapshot, table: str, parts: list[str] | None = None):
     """Read one table of ``snap`` with the schema its version meta
     records, so planning the read starts no schema-inference job; a
-    meta without ``schemas`` falls back to inference. ``parts`` reads
-    only those partition subdirectories (the partition column is kept,
-    taken from the directory names)."""
+    meta that records no schema for ``table`` raises ``ValueError``.
+    ``parts`` reads only those partition subdirectories (the partition
+    column is kept, taken from the directory names)."""
     from pyspark.sql.types import StructType
 
-    schema = snap.meta.get("schemas", {}).get(table)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(StructType.fromJson(schema))
     vd = snap.dirs[table]
+    schema = snap.meta.get("schemas", {}).get(table)
+    if schema is None:
+        raise ValueError(
+            f"index at {os.path.dirname(next(iter(snap.dirs.values())))!r}: "
+            f"the version meta records no 'schemas' entry for table "
+            f"{table!r}. Rebuild the index (delete it and build it again)."
+        )
+    reader = spark.read.schema(StructType.fromJson(schema))
     if parts is None:
         return reader.parquet(vd)
     return reader.option("basePath", vd).parquet(
@@ -954,8 +922,8 @@ def is_dup_free(snap: Snapshot, rows: dict[str, int] | None = None) -> bool:
     written ``dup_free`` (by a build, a compact, or a forget of a
     dup-free snapshot) and the footer counts (``rows`` if the caller
     has them; no job either way) still equal the recorded ``rows``, so
-    nothing was appended since. A meta without the keys is not."""
-    if not snap.meta.get("dup_free") or "rows" not in snap.meta:
+    nothing was appended since."""
+    if not snap.meta["dup_free"]:
         return False
     if rows is None:
         rows = {t: footer_row_count(d) for t, d in snap.dirs.items()}

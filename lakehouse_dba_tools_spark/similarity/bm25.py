@@ -276,8 +276,6 @@ def bm25_topk_from_index(
 #   underscore prefix hides it from the champions parquet scan — so
 #   ONE pointer flip publishes tier + df + stats together and a query
 #   racing a compact can never pair a tier with another snapshot's df.
-#   (Indexes built before round 10 published termstats as a separate
-#   live table; readers fall back to it.)
 # - blocked/ (bucket, term, doc_id, tf, dl) — the BLOCK-MAX tier
 #   (Ding & Suel's Block-Max WAND, re-expressed for a batch engine):
 #   the full postings partitioned into ``wand_buckets`` doc_id-hash
@@ -300,18 +298,15 @@ def bm25_topk_from_index(
 #   which every verb reads through ``indexio.open_snapshot``.
 #   ``doclens_dir`` names the doclens version the postings version
 #   pairs with (the postings pointer flip is the single atomic commit
-#   for the pair). Indexes from before round 10 have no such meta: they
-#   fall back to the two live pointers, with a root-level
-#   _bm25_meta.json {id_col, text_col} as their meta, which no verb
-#   writes any more. ``schemas``
-#   holds both tables' schemas as their readers see them
-#   (``StructType.jsonValue()``): the verbs read postings and doclens
-#   with them (``indexio.read_table``), so no read starts a
-#   schema-inference job; a meta without the key reads by inference,
-#   with the same results. ``rows`` (both tables' footer counts as
-#   written) and ``dup_free`` (set by build and compact, inherited by
-#   a forget) let a tier refresh skip its dedup shuffle while no append
-#   has changed the counts (``indexio.is_dup_free``).
+#   for the pair). ``schemas`` holds both tables' schemas as their
+#   readers see them (``StructType.jsonValue()``): the verbs read
+#   postings and doclens with them (``indexio.read_table``), so no
+#   read starts a schema-inference job. ``rows`` (both tables' footer
+#   counts as written) and ``dup_free`` (set by build and compact,
+#   inherited by a forget) let a tier refresh skip its dedup shuffle
+#   while no append has changed the counts (``indexio.is_dup_free``).
+#   An index whose meta lacks these keys is rejected and must be
+#   rebuilt (the one on-disk format, see ``operators/indexio.py``).
 # - champions/<ver>/_bm25_champ_meta.json  {champion_n, n_docs, avgdl,
 #   k1, b, impact_flatness, postings_dir, schemas} — the stats snapshot
 #   the tier was ordered under, riding inside the champions version dir
@@ -344,17 +339,14 @@ def bm25_topk_from_index(
 # replay-tolerant, NOT update-tolerant: re-appending a doc_id whose
 # text CHANGED is caller error (dedup keeps an arbitrary variant).
 
-BM25_META = "_bm25_meta.json"
 POSTINGS_META = "_bm25_postings_meta.json"
 CHAMP_META = "_bm25_champ_meta.json"
 WAND_META = "_bm25_wand_meta.json"
 
 
 BM25_TABLES = IndexTables(
-    kind="BM25",
     primary="postings",
     meta_name=POSTINGS_META,
-    root_meta=BM25_META,
     layouts={"postings": Layout(range_by=("term",)), "doclens": Layout()},
     # replays write identical rows: (term, doc_id) / (doc_id)
     dedup_keys=lambda id_col: {"postings": ["term", id_col], "doclens": [id_col]},
@@ -431,7 +423,7 @@ def _heal_stale_tiers(spark, path: str) -> None:
     stale = {
         tier: tm
         for tier, tm in _stored_tiers(path).items()
-        if tm.get("postings_dir") is not None and tm["postings_dir"] != cur
+        if tm["postings_dir"] != cur
     }
     _refresh_tiers(spark, path, stale)
 
@@ -753,14 +745,10 @@ def _tier_snapshot(path: str, tier: str) -> Snapshot:
     """One tier's published snapshot — its version directory, the side
     table inside it and the tier meta, from one pointer read, so the
     stats a query plans with describe the tables it scans. Raises
-    FileNotFoundError for a tier never built. Indexes from before round
-    10 keep termstats as a live table of its own; it stands in."""
+    FileNotFoundError for a tier never built."""
     spec = _TIERS[tier]
-    vd, meta = snapshot_meta(os.path.join(path, tier), spec.meta_name, path)
-    side = os.path.join(vd, spec.side)
-    if tier == "champions" and not os.path.isdir(side):
-        side = current_version_dir(os.path.join(path, "termstats"))
-    return Snapshot({tier: vd, spec.side: side}, meta)
+    vd, meta = snapshot_meta(os.path.join(path, tier), spec.meta_name)
+    return Snapshot({tier: vd, spec.side: os.path.join(vd, spec.side)}, meta)
 
 
 def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
@@ -774,17 +762,13 @@ def _check_tier_stamp(path: str, tm: dict, tier: str) -> None:
     stamped with the postings version it was derived from
     (`_refresh_tiers`); a mismatch means exactly
     that crash happened, and any locked writer verb (compact, forget,
-    append — all end by refreshing stale tiers) repairs it. Tiers
-    written before stamping (no ``postings_dir`` key) predate the
-    forget verb entirely — nothing to verify, documented legacy pass.
+    append — all end by refreshing stale tiers) repairs it.
 
     NOT a staleness check for APPENDS: appends write through the
     pointer into the SAME postings version (no new version dir), so
     the stamp still matches — tier-vs-append staleness remains the
     documented compact-cadence contract."""
-    stamp = tm.get("postings_dir")
-    if stamp is None:
-        return
+    stamp = tm["postings_dir"]
     cur = os.path.basename(current_version_dir(os.path.join(path, "postings")))
     if stamp != cur:
         raise RuntimeError(
@@ -938,8 +922,8 @@ def _query_champions(
     terms = sorted(set(_py_tokens(query)))
     if not terms:
         raise ValueError("query produced no tokens")
-    flatness = cm.get("impact_flatness")
-    if len(terms) > 1 and flatness is not None and flatness > 0.5:
+    flatness = cm["impact_flatness"]
+    if len(terms) > 1 and flatness > 0.5:
         warnings.warn(
             f"champions tier at {path!r} has near-flat impacts "
             f"(impact_flatness={flatness}: that fraction of truncated "
@@ -957,8 +941,7 @@ def _query_champions(
     # of the term-sorted stats table riding in the SAME published
     # version dir as the tier (one pointer flip covers tier + df +
     # stats, so a query racing a compact scores one snapshot, like the
-    # exact path; pre-round-10 indexes resolve their live termstats
-    # table instead, see _tier_snapshot)
+    # exact path)
     df_t = (
         read_table(spark, snap, "_termstats")
         .filter(F.col("term").isin(terms))

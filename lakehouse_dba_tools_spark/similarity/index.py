@@ -18,14 +18,13 @@ On-disk layout under ``path``:
   centroids, cids, schemas, rows, dup_free} — the trained quantizer
   itself rides in the sidecar (C × dim doubles: KBs, driver-sized by
   construction since training already samples to the driver), inside
-  the lists version directory. A root-level ``_ivf_meta.json`` exists
-  only in indexes written before metas moved into the version
-  directories; readers fall back to it there, and no verb writes one.
-  ``cids`` is the manifest of non-empty lists. ``schemas`` holds the
-  lists schema as its readers see it (``StructType.jsonValue()``,
-  ``cid`` last): every verb reads the lists with it
-  (``indexio.read_table``), so no read starts a schema-inference job;
-  a meta without the key reads by inference, with the same results.
+  the lists version directory. ``cids`` is the manifest of non-empty
+  lists. ``schemas`` holds the lists schema as its readers see it
+  (``StructType.jsonValue()``, ``cid`` last): every verb reads the
+  lists with it (``indexio.read_table``), so no read starts a
+  schema-inference job. An index whose meta lacks these keys is
+  rejected and must be rebuilt (the one on-disk format, see
+  ``operators/indexio.py``).
 
 Append semantics match FAISS/production IVF: centroids stay FIXED
 after build (assignments are a pure function of the stored quantizer,
@@ -118,10 +117,8 @@ def _list_cids(version_dir: str) -> list[int]:
 
 
 IVF_TABLES = IndexTables(
-    kind="IVF",
     primary="lists",
     meta_name=META_NAME,
-    root_meta=META_NAME,
     # clustered by list before the partitioned write (the Iceberg
     # write.distribution-mode=hash analog): an unclustered partitionBy
     # write emits one file per (input task × cid) — measured 225 files
@@ -310,18 +307,9 @@ def query_ivf_index(
     # The cid MANIFEST rides in the version meta (refreshed by every
     # locked writer), so the reader does zero filesystem listing/stat
     # calls at any nlist; empty lists (a centroid that owns no vectors
-    # yet) are simply absent from it. isdir fallback for legacy indexes
-    # whose meta predates the manifest.
-    present = m.get("cids")
-    lists_dir = snap.dirs["lists"]
-    if present is not None:
-        ps = set(present)
-        probe_parts = [f"cid={c}" for c in probed if c in ps]
-    else:
-        probe_parts = [
-            f"cid={c}" for c in probed
-            if os.path.isdir(os.path.join(lists_dir, f"cid={c}"))
-        ]
+    # yet) are simply absent from it.
+    present = set(m["cids"])
+    probe_parts = [f"cid={c}" for c in probed if c in present]
     if not probe_parts:
         # every probed list is empty — correctness fallback, never the
         # hot path (a trained quantizer's probed lists hold vectors)

@@ -292,66 +292,6 @@ def test_postings_meta_names_its_doclens_version(spark, tmp_path):
     assert got == want  # the meta-named version answered, not the pointer
 
 
-def test_legacy_root_meta_index_appends_and_answers(spark, tmp_path):
-    """An index from before metas rode the version directories: its
-    postings version has no ``_bm25_postings_meta.json`` and its only
-    meta is the root ``_bm25_meta.json``. Every verb reads it through
-    ``indexio.open_snapshot``'s root fallback, so the index (here with a
-    non-default id and text column) still appends and answers exact,
-    champions and wand queries exactly as an index with the version
-    meta does."""
-    import json
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import open_snapshot
-    from lakehouse_dba_tools_spark.similarity.bm25 import (
-        BM25_TABLES,
-        POSTINGS_META,
-        append_to_postings_index,
-        build_postings_index,
-        query_postings_index,
-    )
-
-    schema = "id int, body string"
-    docs = spark.createDataFrame(
-        [(i, f"spark shuffles data w{i} " + "merge " * (i % 3)) for i in range(12)],
-        schema,
-    )
-    batch = spark.createDataFrame(
-        [(i, f"merge window join w{i}") for i in range(20, 24)], schema
-    )
-    kept, legacy = str(tmp_path / "kept"), str(tmp_path / "legacy")
-    for path in (kept, legacy):
-        build_postings_index(
-            docs, path, text_col="body", id_col="id", champion_n=20, wand_buckets=3
-        )
-    root_meta = {"id_col": "id", "text_col": "body"}
-    postings = open_snapshot(legacy, BM25_TABLES).dirs["postings"]
-    os.remove(os.path.join(postings, POSTINGS_META))
-    with open(os.path.join(legacy, BM25_TABLES.root_meta), "w") as fh:
-        json.dump(root_meta, fh)
-    assert open_snapshot(legacy, BM25_TABLES).meta == root_meta
-
-    def answers(path):
-        return [
-            [
-                tuple(r)
-                for r in query_postings_index(
-                    spark, path, "spark merge w3", k=5, mode=mode
-                ).collect()
-            ]
-            for mode in ("exact", "champions", "wand")
-        ]
-
-    before = answers(kept)
-    assert answers(legacy) == before
-    for path in (kept, legacy):
-        append_to_postings_index(batch, path)
-    after = answers(kept)
-    assert after[0] != before[0]  # exact mode sees the append
-    assert answers(legacy) == after
-
-
 def test_tied_docs_break_by_id_in_every_mode(spark, tmp_path):
     """Two docs with IDENTICAL (tf, dl) per query term have exactly
     equal true scores; the deterministic term-ordered score fold

@@ -252,34 +252,22 @@ def test_champions_flat_impact_warns_zipf_does_not(spark, tmp_path, zipf_corpus)
 def test_champions_termstats_ride_the_tier_version(spark, tmp_path):
     """Round-9 ADVICE: df must be co-published with the tier under ONE
     pointer flip — the stats table lives INSIDE the champions version
-    dir; an index laid out the legacy way (separate termstats live
-    table) still answers via the fallback."""
-    import shutil
-
+    dir, and a champions query reads it from there."""
     docs = _flat_docs(spark, 20)
     path = str(tmp_path / "bm25")
     build_postings_index(docs, path, champion_n=100)
-    champ_dir = _tier_snapshot(path, "champions").dirs["champions"]
-    assert os.path.isdir(os.path.join(champ_dir, "_termstats"))
-    want = [
-        tuple(r)
-        for r in query_postings_index(
-            spark, path, "common", k=5, mode="champions"
-        ).collect()
-    ]
-    # degrade to the legacy layout: move the stats out to a top-level
-    # versioned termstats table and drop the in-version copy
-    legacy = os.path.join(path, "termstats.v0")
-    shutil.move(os.path.join(champ_dir, "_termstats"), legacy)
-    os.symlink(os.path.basename(legacy), os.path.join(path, "termstats"))
-    spark.catalog.refreshByPath(os.path.join(champ_dir, "_termstats"))
-    got = [
-        tuple(r)
-        for r in query_postings_index(
-            spark, path, "common", k=5, mode="champions"
-        ).collect()
-    ]
-    assert got == want
+    snap = _tier_snapshot(path, "champions")
+    champ_dir = snap.dirs["champions"]
+    assert snap.dirs["_termstats"] == os.path.join(champ_dir, "_termstats")
+    assert os.path.isdir(snap.dirs["_termstats"])
+
+    def answer(mode):
+        return [
+            tuple(r)
+            for r in query_postings_index(spark, path, "common", k=5, mode=mode).collect()
+        ]
+
+    assert answer("champions") == answer("exact")
 
 
 def test_wand_string_doc_ids(spark, tmp_path):

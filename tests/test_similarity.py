@@ -394,10 +394,7 @@ def test_ivf_drift_report_and_rebuild(spark, sf_dir, tmp_path):
 def test_ivf_rebuild_meta_rows_match_footers(spark, sf_dir, tmp_path):
     """A rebuild publishes through ``indexio.write_versions``: after an
     append, the rebuilt meta's ``rows`` are the rebuilt lists' footer
-    count, the index reads as dup-free, and no root-level meta copy is
-    written."""
-    import os
-
+    count and the index reads as dup-free."""
     from lakehouse_dba_tools_spark.maintenance.history import footer_row_count
     from lakehouse_dba_tools_spark.operators.indexio import is_dup_free, open_snapshot
     from lakehouse_dba_tools_spark.similarity.index import (
@@ -417,7 +414,6 @@ def test_ivf_rebuild_meta_rows_match_footers(spark, sf_dir, tmp_path):
     assert meta["rows"] == {"lists": footer_row_count(snap.dirs["lists"])}
     assert meta["rows"] == {"lists": emb.count()}
     assert is_dup_free(snap)
-    assert not os.path.exists(os.path.join(path, IVF_TABLES.root_meta))
 
 
 def test_query_ivf_index_exclude_ids_replay_guard(spark, sf_dir, tmp_path):

@@ -724,58 +724,6 @@ def test_ingest_batch_supports_string_doc_ids(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in got.collect()} == {("c3", "a1")}
 
 
-def test_lsh_index_migrates_legacy_flat_layout_end_to_end(spark, tmp_path):
-    """A pre-versioning index (plain directories at the live paths) is
-    migrated by the first locked writer: compaction heals each table to
-    <live>.v0 + pointer and publishes v1, and queries keep answering
-    identically before and after (round-8 ADVICE: publish over a
-    non-symlink live dir used to crash ENOTEMPTY)."""
-    import os
-    import shutil
-
-    from lakehouse_dba_tools_spark.dedup.index import (
-        build_lsh_index,
-        compact_lsh_index,
-        query_lsh_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again and again today"),
-            (3, "completely different text about spark query engines and shuffles"),
-        ],
-        "doc_id int, text string",
-    )
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog again and again tonight")],
-        "doc_id int, text string",
-    )
-    path = str(tmp_path / "idx")
-    build_lsh_index(corpus, path, num_perm=32, bands=8, seed=7)
-    # simulate the legacy flat layout: replace each live symlink with a
-    # real directory holding the same files
-    for sub in ("bands", "shash"):
-        live = os.path.join(path, sub)
-        resolved = os.path.realpath(live)
-        os.remove(live)
-        shutil.copytree(resolved, live, symlinks=False)
-        shutil.rmtree(resolved)
-    assert not os.path.islink(os.path.join(path, "bands"))
-
-    # the flat fallback is assumed-migration territory — it must be
-    # LOUD (round-10 ADVICE: a wrong flat table silently standing in
-    # for the named version would void the single-flip pairing)
-    import pytest as _pytest
-
-    with _pytest.warns(UserWarning, match="layout migration"):
-        want = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path, threshold=0.5).collect()}
-    assert want == {(10, 1)}
-    compact_lsh_index(spark, path)  # first locked writer migrates
-    assert os.path.islink(os.path.join(path, "bands"))
-    got = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path, threshold=0.5).collect()}
-    assert got == want
-
-
 def test_lsh_query_planned_before_rebuild_completes_on_its_snapshot(spark, tmp_path):
     """The LSH half of the rebuild-race contract (round-8 ADVICE): the
     permutation-family params ride the bands version directory, so a
@@ -988,14 +936,35 @@ def test_lsh_query_jobs_rely_on_recorded_schemas(spark, tmp_path):
     """A query signs its batch with one action and queries the index in
     three bounded ones. The version meta records each table's schema,
     so no read starts a schema-inference job: the query, its collect
-    included, starts at most 8 jobs. The same query on a meta stripped
-    of ``schemas`` starts more, with the same answer."""
+    included, starts at most 8 jobs."""
+    from lakehouse_dba_tools_spark.dedup.index import build_lsh_index, query_lsh_index
+
+    schema = "doc_id long, text string"
+    path = str(tmp_path / "idx")
+    build_lsh_index(spark.createDataFrame(_NEAR_DUP_CORPUS, schema), path)
+    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    got = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path).collect()}
+    assert got == {(10, 1), (11, 5)}
+    assert dag.numTotalJobs() - before <= 8
+
+
+@pytest.mark.parametrize("case", ["flat_live_dir", "meta_without_schemas", "version_without_meta"])
+def test_index_outside_the_one_format_is_rejected(spark, tmp_path, case):
+    """An index is read only in the one on-disk format: every live path
+    a pointer to a version dir whose meta records ``schemas``. A plain
+    live directory fails the next locked writer, naming the path; a
+    meta without ``schemas`` fails the query, naming the key and the
+    table; a version dir without its meta fails, naming the meta file."""
     import json
     import os
+    import re
 
     from lakehouse_dba_tools_spark.dedup.index import (
         META_NAME,
         build_lsh_index,
+        compact_lsh_index,
         query_lsh_index,
     )
     from lakehouse_dba_tools_spark.operators.indexio import current_version_dir
@@ -1004,25 +973,28 @@ def test_lsh_query_jobs_rely_on_recorded_schemas(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_lsh_index(spark.createDataFrame(_NEAR_DUP_CORPUS, schema), path)
     batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-
-    def query():
-        before = dag.numTotalJobs()
-        got = {(r.id_a, r.id_b) for r in query_lsh_index(spark, batch, path).collect()}
-        return got, dag.numTotalJobs() - before
-
-    got, recorded = query()
-    assert got == {(10, 1), (11, 5)}
-    assert recorded <= 8
-    meta_file = os.path.join(current_version_dir(os.path.join(path, "bands")), META_NAME)
-    with open(meta_file) as fh:
-        meta = json.load(fh)
-    del meta["schemas"]
-    with open(meta_file, "w") as fh:
-        json.dump(meta, fh)
-    got, inferred = query()
-    assert got == {(10, 1), (11, 5)}
-    assert inferred > recorded, (recorded, inferred)
+    bands = os.path.join(path, "bands")
+    meta_file = os.path.join(current_version_dir(bands), META_NAME)
+    if case == "flat_live_dir":
+        # a table from before versioned tables: a plain directory
+        vd = current_version_dir(bands)
+        os.remove(bands)
+        os.rename(vd, bands)
+        with pytest.raises(ValueError, match=re.escape(repr(bands)) + ".*Rebuild"):
+            compact_lsh_index(spark, path)
+        return
+    if case == "meta_without_schemas":
+        with open(meta_file) as fh:
+            meta = json.load(fh)
+        del meta["schemas"]
+        with open(meta_file, "w") as fh:
+            json.dump(meta, fh)
+        err, match = ValueError, "'schemas'.*'bands'"
+    else:
+        os.remove(meta_file)
+        err, match = FileNotFoundError, re.escape(meta_file)
+    with pytest.raises(err, match=match):
+        query_lsh_index(spark, batch, path)
 
 
 @pytest.mark.parametrize("caches", [None, []], ids=["no_caches", "caches"])
@@ -1103,161 +1075,6 @@ def test_batch_signed_on_driver_matches_index_rows(spark):
     assert sorted(
         (i, tuple(h)) for i, h in zip(*(batch.shash[c].to_pylist() for c in ("doc_id", "shash")))
     ) == want_shash
-
-
-def _legacy_family(spark, family):
-    """(IndexTables, build(path), lifecycle(path)) for one index family
-    over small fixed inputs; the lifecycle queries, appends, compacts,
-    forgets and queries again, returning every answer and report."""
-    from lakehouse_dba_tools_spark.dedup.index import (
-        LSH_TABLES,
-        build_lsh_index,
-        compact_lsh_index,
-        forget_from_lsh_index,
-        ingest_batch,
-        query_lsh_index,
-    )
-    from lakehouse_dba_tools_spark.similarity.bm25 import (
-        BM25_TABLES,
-        append_to_postings_index,
-        build_postings_index,
-        compact_postings_index,
-        forget_from_postings_index,
-        query_postings_index,
-    )
-    from lakehouse_dba_tools_spark.similarity.index import (
-        IVF_TABLES,
-        append_to_ivf_index,
-        build_ivf_index,
-        compact_ivf_index,
-        forget_from_ivf_index,
-        query_ivf_index,
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    schema = "doc_id long, text string"
-    corpus = spark.createDataFrame(_NEAR_DUP_CORPUS, schema)
-    batch = spark.createDataFrame(_NEAR_DUP_BATCH, schema)
-    forget = spark.createDataFrame([(3,), (11,)], "doc_id long")
-    if family == "lsh":
-        probe = spark.createDataFrame(
-            [(20, _NEAR_DUP_BATCH[0][1]), (21, _NEAR_DUP_CORPUS[2][1])], schema
-        )
-
-        def lifecycle(path):
-            return (
-                rows(query_lsh_index(spark, probe, path)),
-                rows(ingest_batch(spark, batch, path)),
-                compact_lsh_index(spark, path),
-                forget_from_lsh_index(spark, path, forget),
-                rows(query_lsh_index(spark, probe, path)),
-            )
-
-        return LSH_TABLES, lambda path: build_lsh_index(corpus, path), lifecycle
-    if family == "bm25":
-
-        def queries(path):
-            return [
-                rows(query_postings_index(spark, path, "parquet row counts spark", k=3, mode=mode))
-                for mode in ("exact", "champions", "wand")
-            ]
-
-        def lifecycle(path):
-            return (
-                queries(path),
-                append_to_postings_index(batch, path),
-                compact_postings_index(spark, path),
-                forget_from_postings_index(spark, path, forget),
-                queries(path),
-            )
-
-        return (
-            BM25_TABLES,
-            lambda path: build_postings_index(corpus, path, champion_n=2, wand_buckets=2),
-            lifecycle,
-        )
-    vschema = "vec_id long, embedding array<double>"
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 4), float(i % 3), 1.0 + i / 10]) for i in range(12)], vschema
-    )
-    more = spark.createDataFrame([(i, [1.0, float(i % 2), 0.5]) for i in (20, 21)], vschema)
-    probe = more.withColumnRenamed("vec_id", "query_id")
-
-    def lifecycle(path):
-        return (
-            rows(query_ivf_index(spark, probe, path, k=3, nprobe=2)),
-            append_to_ivf_index(more, path),
-            compact_ivf_index(spark, path),
-            forget_from_ivf_index(
-                spark, path, forget.withColumnRenamed("doc_id", "vec_id")
-            ),
-            rows(query_ivf_index(spark, probe, path, k=3, nprobe=2)),
-        )
-
-    return IVF_TABLES, lambda path: build_ivf_index(vecs, path, n_centroids=2), lifecycle
-
-
-@pytest.mark.parametrize("family", ["lsh", "bm25", "ivf"])
-def test_legacy_meta_without_schemas_matches(spark, tmp_path, family):
-    """An index whose version meta predates the recorded schemas reads
-    its tables by inference, and every verb answers as it does on an
-    index that keeps them: the same query answers and the same compact
-    and forget reports. The kept index's lifecycle starts fewer jobs,
-    because none of its table reads infers a schema."""
-    import json
-    import os
-
-    from lakehouse_dba_tools_spark.operators.indexio import (
-        current_version_dir,
-        open_snapshot,
-    )
-
-    tables, build, lifecycle = _legacy_family(spark, family)
-    kept, legacy = str(tmp_path / "kept"), str(tmp_path / "legacy")
-    build(kept)
-    build(legacy)
-    metas = [(tables.primary, tables.meta_name)]
-    if family == "bm25":
-        from lakehouse_dba_tools_spark.similarity.bm25 import CHAMP_META, WAND_META
-
-        # the champions and block-max tier metas record their tables'
-        # schemas too
-        metas += [("champions", CHAMP_META), ("blocked", WAND_META)]
-    for meta_path in [
-        os.path.join(current_version_dir(os.path.join(legacy, t)), name)
-        for t, name in metas
-    ] + [os.path.join(legacy, tables.root_meta)]:
-        if not os.path.exists(meta_path):  # no root copy is written
-            continue
-        with open(meta_path) as fh:
-            m = json.load(fh)
-        m.pop("schemas", None)
-        with open(meta_path, "w") as fh:
-            json.dump(m, fh)
-    assert "schemas" in open_snapshot(kept, tables).meta
-    assert "schemas" not in open_snapshot(legacy, tables).meta
-    if family == "bm25":
-        from lakehouse_dba_tools_spark.similarity.bm25 import _tier_snapshot
-
-        for tier in ("champions", "blocked"):
-            assert "schemas" in _tier_snapshot(kept, tier).meta
-            assert "schemas" not in _tier_snapshot(legacy, tier).meta
-    sc = spark.sparkContext._jsc.sc()
-    jobs = {}
-
-    def counted(path):
-        before = sc.dagScheduler().numTotalJobs()
-        out = lifecycle(path)
-        jobs[path] = sc.dagScheduler().numTotalJobs() - before
-        return out
-
-    want = counted(kept)
-    if family == "lsh":
-        assert want[0] == [(20, 1, 0.833333), (21, 5, 1.0)]
-    assert counted(legacy) == want
-    assert jobs[kept] < jobs[legacy]
 
 
 def test_describe_index_counts_rows_from_footers(spark, tmp_path):
